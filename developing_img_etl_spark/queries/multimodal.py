@@ -46,11 +46,11 @@ def _pin_for_sort(df: DataFrame) -> DataFrame:
 
 
 def _fake_images(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r12: widen like every other codec corpus — without it the whole
-    # FAKEIMG decode/resize/encode UDF chain ran as ONE task on a
-    # single-split local part scan (m1 noop profiled at 2.46 s on 1 of
-    # 32 cores).
-    part = _widen(load(spark, sf_dir, "part"))
+    # Not widened: the payload is built JVM-side, m1's codec runs in
+    # compress_pipeline, which spreads its own input, and m2/m7's
+    # header-only image_dims ran faster without the exchange in a paired
+    # probe.
+    part = load(spark, sf_dir, "part")
     w = F.when(F.col("p_size") > 48, 1200 + F.col("p_size")).otherwise(32 + F.col("p_size"))
     h = (w * 3 / 4).cast("int")
     payload_len = F.least(w * h, F.lit(4096))
@@ -429,7 +429,9 @@ def _gen_bmp(w: pd.Series, h: pd.Series, seed: pd.Series) -> pd.Series:
 
 def _widen(df: DataFrame) -> DataFrame:
     """Small local scans are 1-2 splits; the pandas-UDF pixel work would
-    run on 1 of 32 cores without this. No-op at real scan sizes."""
+    run on 1 of 32 cores without this. No-op at real scan sizes. The
+    pixel corpora below widen before their Python generators run, and
+    compress_pipeline keeps that spread instead of adding its own."""
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)

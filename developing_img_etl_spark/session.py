@@ -29,7 +29,11 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def cpu_count() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """Task slots for the local master: SPARK_GRAFT_CPUS when set, else
+    the CPUs this process may run on (a container's affinity mask, not
+    the machine's core count)."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
 
 
 def get_spark(app_name: str = "developing_img_etl_spark", *, cpus: int | None = None) -> SparkSession:

@@ -37,8 +37,13 @@ def write_partitioned(
 def overwrite_catalog(catalog: DataFrame, path: str, *, fmt: TableFormat = DEFAULT_FORMAT) -> None:
     """The catalog overwrite-save (test.py:200-201); see
     ParquetFormat.overwrite for the read-then-overwrite-same-path
-    hazard the default implementation defuses."""
-    fmt.overwrite(catalog, path)
+    hazard the default implementation defuses. The catalog holds
+    metadata rows only, so it is written as one file whatever the
+    partitioning of the rows it came from (e.g. compress_pipeline's
+    spread): one partition per core would write one tiny file each.
+    A one-partition exchange rather than coalesce(1), which would pull
+    the upstream work into one task and measured slower per save."""
+    fmt.overwrite(catalog.repartition(1), path)
 
 
 def read_catalog(

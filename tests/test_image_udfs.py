@@ -624,3 +624,91 @@ def test_m19_phash_dedup_ground_truth(spark, sf_dir):
             wb, hb, sb = truth[r.id_b]
             cls = lambda s: (s % 5, (s // 5) % 7)  # noqa: E731
             assert (wa, ha, sa) == (wb, hb, sb) or cls(sa) == cls(sb), r
+
+
+# --------------------------------------------------------------------------
+# compress_pipeline's plan: the codec runs once per joined row, after the
+# join, spread over the session's cores
+# --------------------------------------------------------------------------
+def _plan_nodes(spark, df, name):
+    """The nodes called `name` in df's executed plan, through adaptive
+    query stages (the plan as run, so SQL metrics are filled in)."""
+    conv = spark._jvm.scala.jdk.javaapi.CollectionConverters
+    found, todo = [], [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        if node.nodeName() == name:
+            found.append(node)
+        kind = node.getClass().getSimpleName()
+        if kind == "AdaptiveSparkPlanExec":
+            todo.append(node.executedPlan())
+        elif kind.endswith("QueryStageExec"):
+            todo.append(node.plan())
+        else:
+            todo.extend(conv.asJava(node.children()))
+    return found
+
+
+@pytest.fixture(scope="module")
+def joined_photos(spark):
+    """Records joined to staged binary rows, the weekly pipeline's
+    shape: 2 x parallelism + 1 photos (the last one corrupt) plus staged
+    files no record names. Both sides sit in one partition, as the
+    week's small join does after AQE coalescing."""
+    n = 2 * spark.sparkContext.defaultParallelism + 1
+    payloads = [bmp.make_bmp(1100 + i, 6, seed=i) for i in range(n - 1)] + [b"BMcorrupt"]
+    records = spark.createDataFrame(
+        [(i, f"p{i}.bmp") for i in range(n)], "id long, file string"
+    ).coalesce(1)
+    staged = spark.createDataFrame(
+        [(f"p{i}.bmp", p) for i, p in enumerate(payloads)]
+        + [(f"other{i}.bmp", bmp.make_bmp(40, 4, seed=i)) for i in range(5)],
+        "file string, content binary",
+    ).coalesce(1)
+    return records.join(staged, "file")
+
+
+def test_compress_pipeline_codec_once_after_join(spark, joined_photos):
+    n = joined_photos.count()
+    ok = (
+        IMG.compress_pipeline(joined_photos)
+        .filter(F.col("status") == "ok")
+        .withColumn("pid", F.spark_partition_id())
+    )
+    rows = ok.collect()
+    # the status filter stays above the codec: one evaluation per joined
+    # row, none on the staged scan
+    evals = _plan_nodes(spark, ok, "ArrowEvalPython")
+    assert len(evals) == 1
+    assert evals[0].metrics().apply("pythonNumRowsReceived").value() == n
+    # spread over the cores, even though the join ran in one partition
+    parallelism = spark.sparkContext.defaultParallelism
+    assert len({r.pid for r in rows}) == min(parallelism, len(rows))
+    # the barrier copy encodes exactly what the public UDF does
+    public = joined_photos.select("id", IMG.compress_image("content").alias("out")).collect()
+    assert {r.id: bytes(r.content_out) for r in rows} == {
+        r.id: bytes(r.out) for r in public if r.out is not None
+    }
+    assert len(rows) == n - 1
+    # and the public UDF is still deterministic
+    assert IMG.compress_image._unwrapped.deterministic
+
+
+def test_compress_pipeline_keeps_an_existing_spread(spark):
+    """Rows that already leave a repartition over the cores are not
+    exchanged a second time."""
+    n = spark.sparkContext.defaultParallelism
+    df = spark.createDataFrame(
+        [(i, bmp.make_bmp(20, 4, seed=i)) for i in range(8)], "id long, content binary"
+    )
+    out = IMG.compress_pipeline(df.repartition(n).select("id", "content"))
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("RoundRobinPartitioning") == 1
+    assert {r.status for r in out.collect()} == {"ok"}
+
+
+def test_compress_pipeline_keeps_unreadable_rows(joined_photos):
+    statuses = {r.id: r.status for r in IMG.compress_pipeline(joined_photos).collect()}
+    n = len(statuses)
+    assert statuses[n - 1] == "unreadable"
+    assert all(s == "ok" for i, s in statuses.items() if i != n - 1)

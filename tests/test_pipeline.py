@@ -167,3 +167,19 @@ def test_catalog_read_union_overwrite_roundtrip(spark, tmp_path):
     out = PS.read_catalog(spark, path, schema)
     assert out.count() == 2
     assert {r.nama_file for r in out.collect()} == {"a.jpg", "b.jpg"}
+
+
+def test_catalog_overwrite_writes_one_file(spark, tmp_path):
+    """The catalog is metadata rows: one parquet file per save, however
+    many partitions the new rows arrive in."""
+    from developing_img_etl_spark.sinks import partitioned as PS
+
+    rows = [("PRJ1", "7", f"u{i}", "d", f"{i}.jpg", 1.0) for i in range(12)]
+    schema = (
+        "kode_proyek string, minggu string, link_foto string, "
+        "deskripsi_foto string, nama_file string, size_gambar_kb double"
+    )
+    path = tmp_path / "catalog"
+    PS.overwrite_catalog(spark.createDataFrame(rows, schema).repartition(6), str(path))
+    assert len(list(path.glob("*.parquet"))) == 1
+    assert PS.read_catalog(spark, str(path), schema).count() == 12
