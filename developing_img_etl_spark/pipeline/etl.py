@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from ..functions.strings import composite_key, normalize_name, raw_url, url_basename
 from ..operators.fuzzy import fuzzy_resolve
 from ..operators.unpivot import unpivot_groups
+from ..session import local_frame
 
 # Reference constants (test.py:21-36). The folder map is the 8-row
 # dimension FOTO_FOLDER_MAP (test.py:23-32).
@@ -56,7 +57,7 @@ CATALOG_COLUMNS = [
 def folder_map_df(spark: SparkSession) -> DataFrame:
     """The FOTO_FOLDER_MAP dimension as a broadcastable DataFrame."""
     rows = list(zip(PHOTO_COLS, FOLDER_NAMES))
-    return spark.createDataFrame(rows, "foto_col string, folder_name string")
+    return local_frame(spark, rows, "foto_col string, folder_name string")
 
 
 def unpivot_photos(forms: DataFrame) -> DataFrame:

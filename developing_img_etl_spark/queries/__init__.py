@@ -72,6 +72,17 @@ _MODULES = (
 # these. Rotate next round: drop names once a CORRECTNESS artifact
 # shows them green, so the uncovered tail keeps surfacing.
 _DRIVER_PRIORITY = (
+    # Certification first: the r12 JPEG/codec rework (a1a9a98, in no
+    # CORRECTNESS artifact since) and the queries whose driver-held
+    # frames now build as local relations.
+    "m1_image_compress",
+    "m12_bmp_compress",
+    "m14_png_compress",
+    "m18_jpeg_compress",
+    "q119_kmeans_fixed_point",
+    "q133_zonemap_skipping",
+    "q145_kcore_peel",
+    "st18_streaming_zonemap",
     # r11 rotation: (a) queries NEW or REWORKED this round — q151
     # composition flagship, the q17/q23 hash-promotions (VERDICT r10
     # #6), the q147 top-K replan (ADVICE r10), the MKV unknown-size fix
@@ -93,7 +104,6 @@ _DRIVER_PRIORITY = (
     "st13_streaming_hll_registers",
     "st16_streaming_cms_counts",
     "st17_streaming_exact_quantiles",
-    "st18_streaming_zonemap",
     "st19_streaming_benford",
     "st20_streaming_ewma",
     # (b) stalest driver certification first

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..functions.vectors import dot, norm
+from ..session import local_frame
 
 N_PROBES = 10
 TOP_K = 5
@@ -1071,7 +1072,8 @@ def q119_kmeans_fixed_point(spark: SparkSession, sf_dir: str) -> DataFrame:
             for j in range(_Q119_K)
         ]
 
-    fps = spark.createDataFrame(
+    fps = local_frame(
+        spark,
         [(j + 1, sum(c)) for j, c in enumerate(cents)],
         "cluster long, centroid_sum long",
     )

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load, register_views
+from ..session import local_frame
 
 
 # ---------------------------------------------------------------------------
@@ -945,8 +946,10 @@ def q145_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_edges = st.two_m // 2
         n_nodes = st.nn
         rows.append((r, n_before - n_kept, n_nodes, n_edges))
-    return spark.createDataFrame(
-        rows, "round INT, n_removed BIGINT, n_nodes_after BIGINT, n_edges_after BIGINT"
+    return local_frame(
+        spark,
+        rows,
+        "round INT, n_removed BIGINT, n_nodes_after BIGINT, n_edges_after BIGINT",
     ).orderBy("round")
 
 

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..operators.asof import asof_join, range_join_buckets
+from ..session import local_frame
 from ._det import davg, dsum
 
 WEEK_SECONDS = 7 * 86400
@@ -2106,7 +2107,8 @@ def st18_streaming_zonemap(spark: SparkSession, sf_dir: str) -> DataFrame:
             _dt.datetime.fromisoformat(iso).replace(tzinfo=_dt.timezone.utc).timestamp()
         )
 
-    preds = spark.createDataFrame(
+    preds = local_frame(
+        spark,
         [(pid, _ep(lo), _ep(hi)) for pid, lo, hi in _ST18_PREDS],
         "pred_id long, lo_s long, hi_s long",
     )

@@ -25,6 +25,7 @@ from ..functions import pii as PII
 from ..operators.merge import merge_upsert
 from ..operators.packing import pack_sequences
 from ..operators.zorder import zvalue
+from ..session import local_frame
 from ._det import dec, dsum, sql_dsum
 
 # ---------------------------------------------------------------------------
@@ -2546,7 +2547,8 @@ def q133_zonemap_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     epoch = _dt.date.fromisoformat(_Q133_EPOCH)
-    preds = spark.createDataFrame(
+    preds = local_frame(
+        spark,
         [
             (
                 pid,

@@ -22,8 +22,10 @@ get their session, so scale-relevant config is uniform:
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -94,3 +96,34 @@ def get_spark(app_name: str = "developing_img_etl_spark", *, cpus: int | None = 
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(
+    spark: SparkSession, rows: Sequence[Sequence], schema: T.StructType | str
+) -> DataFrame:
+    """A DataFrame over driver-held rows (tuples in schema order), built
+    as a JVM ``LocalRelation`` through Arrow.
+
+    Classic ``spark.createDataFrame(list, schema)`` parallelizes the
+    rows into a Python RDD, so every scan of the frame starts one
+    Python task per core even when it holds no rows. A LocalRelation
+    is scanned inside the JVM, and an empty one lets Catalyst drop the
+    joins and unions it feeds at plan time. Rows are checked with the
+    same verifier the classic path uses, so a value that does not fit
+    its column raises the same error.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T._parse_datatype_string(schema)
+    verify = T._make_type_verifier(schema)
+    for r in rows:
+        verify(r)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(schema.fields)
+    table = pa.table(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)

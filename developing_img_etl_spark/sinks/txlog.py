@@ -61,6 +61,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 _LOG_DIR = "_txlog"
 
 
@@ -603,7 +605,7 @@ class TxLogFormat:
             kept = [a["path"] for a in actions if _file_may_match(a, where)]
             if not kept:  # provably empty: no data file opened at all
                 if schema is not None:
-                    return spark.createDataFrame([], schema)
+                    return local_frame(spark, [], schema)
                 one = spark.read.option("basePath", path).parquet(
                     os.path.join(path, files[0])
                 )
@@ -625,7 +627,7 @@ class TxLogFormat:
             raise ValueError(f"{path}: empty live set at version {version}; pass a schema")
         if schema is None:
             raise FileNotFoundError(path)
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
 
     def exists(self, spark: SparkSession, path: str) -> bool:
         return bool(_versions(path))

@@ -28,6 +28,8 @@ from typing import Protocol, runtime_checkable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import local_frame
+
 
 @runtime_checkable
 class TableFormat(Protocol):
@@ -72,7 +74,7 @@ class ParquetFormat:
             return spark.read.schema(schema).parquet(path) if schema else spark.read.parquet(path)
         if schema is None:
             raise FileNotFoundError(path)
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
 
     def exists(self, spark: SparkSession, path: str) -> bool:
         jvm = spark._jvm
@@ -105,7 +107,7 @@ class OrcFormat(ParquetFormat):
             return spark.read.schema(schema).orc(path) if schema else spark.read.orc(path)
         if schema is None:
             raise FileNotFoundError(path)
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
 
 
 DEFAULT_FORMAT: TableFormat = ParquetFormat()

@@ -2,8 +2,9 @@
 (/root/reference/test.py:113) and catalog reader (test.py:100-111).
 
 Excel files are small driver-local artifacts by nature (a Forms export
-is thousands of rows, not billions) — the right Spark shape is
-driver-side parse → createDataFrame with an explicit schema, NOT a
+is thousands of rows, not billions) — the right Spark shape is a
+driver-side parse into a ``session.local_frame`` with an explicit
+schema (a JVM LocalRelation, scanned without Python tasks), NOT a
 distributed source.
 
 Two engines, tried in order:
@@ -23,6 +24,8 @@ from xml.etree import ElementTree as ET
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from ..session import local_frame
 
 _NS = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"
 
@@ -151,9 +154,9 @@ def read_excel(
             raise ValueError(f"xlsx {path}: missing columns {missing}; has {header}")
         data = [tuple(r[pos[f.name]] for f in schema.fields) for r in rows]
         str_schema = T.StructType([T.StructField(f.name, T.StringType()) for f in schema.fields])
-        df = spark.createDataFrame(data, str_schema)
+        df = local_frame(spark, data, str_schema)
         return df.select(
             *[df[f.name].cast(f.dataType).alias(f.name) for f in schema.fields]
         )
     str_schema = T.StructType([T.StructField(h, T.StringType()) for h in header])
-    return spark.createDataFrame([tuple(r) for r in rows], str_schema)
+    return local_frame(spark, rows, str_schema)

@@ -183,3 +183,55 @@ def test_catalog_overwrite_writes_one_file(spark, tmp_path):
     PS.overwrite_catalog(spark.createDataFrame(rows, schema).repartition(6), str(path))
     assert len(list(path.glob("*.parquet"))) == 1
     assert PS.read_catalog(spark, str(path), schema).count() == 12
+
+
+def _assert_no_python_scan(df):
+    """Driver-held rows must reach the plan as a LocalRelation: a
+    LogicalRDD is a Python RDD, one Python task per core on every scan."""
+    plan = df._jdf.queryExecution().analyzed().toString()
+    assert "LogicalRDD" not in plan, plan
+
+
+def test_week_frames_are_local_relations(spark, tmp_path):
+    """The Forms export, the folder map, a first-run catalog and what
+    run_incremental builds from them are scanned without Python tasks."""
+    from pyspark.sql import types as T
+
+    from developing_img_etl_spark.sinks import partitioned as PS
+    from developing_img_etl_spark.sinks.txlog import TxLogFormat
+    from developing_img_etl_spark.sinks.xlsx_writer import write_xlsx
+    from developing_img_etl_spark.sources.excel import read_excel
+
+    cols = [etl.PROJECT_COL, etl.WEEK_COL, *etl.PHOTO_COLS, *etl.DESC_COLS]
+    row = dict.fromkeys(cols)
+    row.update(
+        {
+            etl.PROJECT_COL: "KDJMI_PROVINSI JAMBI",
+            etl.WEEK_COL: "7",
+            etl.PHOTO_COLS[0]: "https://x/KDJMI%20week7%20img1.jpg",
+            etl.DESC_COLS[0]: "kegiatan 1",
+        }
+    )
+    string_schema = T.StructType([T.StructField(c, T.StringType()) for c in cols])
+    xlsx = str(tmp_path / "forms.xlsx")
+    write_xlsx(spark.createDataFrame([row], string_schema), xlsx)
+
+    forms = read_excel(spark, xlsx)
+    typed = read_excel(spark, xlsx, schema=string_schema)
+    folder_map = etl.folder_map_df(spark)
+    catalog_ddl = (
+        "kode_proyek string, minggu string, link_foto string, "
+        "deskripsi_foto string, nama_file string, size_gambar_kb double"
+    )
+    parquet_cat = PS.read_catalog(spark, str(tmp_path / "missing"), catalog_ddl)
+    txlog_cat = PS.read_catalog(
+        spark, str(tmp_path / "missing_tx"), catalog_ddl, fmt=TxLogFormat()
+    )
+    files = spark.range(1).select(F.lit("KDJMI_week7_img1.jpg").alias("file_name"))
+    records, new_catalog = etl.run_incremental(forms, parquet_cat, files, folder_map)
+
+    for df in (forms, typed, folder_map, parquet_cat, txlog_cat, records, new_catalog):
+        _assert_no_python_scan(df)
+    assert forms.count() == typed.count() == 1
+    assert parquet_cat.count() == txlog_cat.count() == 0
+    assert [r.nama_file for r in new_catalog.collect()] == ["KDJMI_week7_img1.jpg"]
