@@ -13,7 +13,7 @@ Layout:
   operators/  — relational + LLM-pipeline operators (dedup, similarity, asof, fuzzy)
   sources/    — parquet / binary-file / excel sources
   sinks/      — partitioned, catalog, idempotent REST sinks
-  multimodal/ — image pandas-UDF surface (decode stubbed; plumbing real)
+  multimodal/ — real image/audio/video codecs behind pandas-UDF surfaces
   streaming/  — Structured Streaming incremental pipeline + event windows
   pipeline/   — reference-pipeline parity ETL graph
 """

@@ -2,24 +2,21 @@
 audio/video as opaque binary columns with typed metadata; decode /
 feature-extract / frame-sample as pandas UDFs).
 
-Codec strategy mirrors image.py: no audio/video *library* ships in
-this container, so the deterministic fake formats —
+Codec strategy mirrors image.py: real formats are routed ahead of the
+fake seams. Audio has one, RIFF/WAV 16-bit PCM (wav.py). Video has one
+table row per real MJPEG container (`_CONTAINERS`: match, meta,
+frames): RIFF AVI (avi.py), the ISO-BMFF box tree as monolithic
+MOV/QuickTime (mov.py) and fragmented MP4 (fmp4.py), and EBML Matroska
+(mkv.py). The deterministic fake formats —
 `FAKEAUD:{rate}:{n_samples}:` and `FAKEVID:{w}:{h}:{fps}:{n_frames}:`
 headers — carry the plumbing contract (BinaryType columns, Arrow batch
-shape, null-on-unreadable guard semantics, the mapInPandas
-row-explosion for frame sampling, typed metadata structs). BOTH paths
-additionally have REAL container formats routed ahead of the fake
-seam exactly as BMP/PNG are routed ahead of FAKEIMG in image.py:
-RIFF/WAV 16-bit PCM for audio (wav.py) and, for video, BOTH dominant
-container families — RIFF MJPEG-in-AVI (avi.py, r8) and box-tree
-MJPEG-in-MOV/QuickTime (mov.py, r9; MP4 is the ISO-BMFF descendant of
-the same box walk). Remaining real formats (mp3/flac, fragmented mp4,
-mkv/EBML) hit the decoder seam (soundfile / PyAV would slot in at
-_decode_*) and until one is importable return null (the M3 guard),
-never a wrong answer.
+shape, null-on-unreadable guard, the mapInPandas row-explosion for
+frame sampling, typed metadata structs) for queries whose oracle
+replays the whole pipeline in SQL. Bytes no parser reads return null
+(the M3 guard), never a wrong answer.
 
 Frame sampling emits frames as FAKEIMG bytes on the fake path and as
-the raw per-frame JPEG payloads on the AVI path, so the image UDF
+the raw per-frame JPEG payloads of a real container, so the image UDF
 surface (image_dims, compress_image, jpeg decode) composes directly
 with sampled frames — the video path IS the image path after
 sampling.
@@ -33,18 +30,19 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from . import avi, fmp4, mkv, mov
 from .image import make_fake_image
+from .jpeg import jpeg_decode
 
 _AUD_MAGIC = b"FAKEAUD:"
 _VID_MAGIC = b"FAKEVID:"
-# top-level QuickTime/ISO-BMFF box types that can legally open a file
-_MOV_HEADS = (b"ftyp", b"moov", b"mdat", b"wide", b"skip", b"free")
 # the EBML header magic every Matroska/WebM file opens with
 _MKV_MAGIC = b"\x1a\x45\xdf\xa3"
 
@@ -76,40 +74,67 @@ def _decode_audio_meta(data: bytes | None) -> tuple[int, int] | None:
         return None
 
 
-def _decode_video_meta(data: bytes | None) -> tuple[int, int, int, int] | None:
-    """(width, height, fps, n_frames) or None if unreadable."""
-    if data is None:
-        return None
-    data = bytes(data)
-    if data[:4] == b"RIFF" and data[8:12] == b"AVI ":
-        # real container format: MJPEG-in-AVI (avi.py), routed ahead of
-        # the fake seam exactly as WAV is for FAKEAUD above
-        from .avi import avi_meta
+# One row per real container: (match, meta, frames), tried in order. A
+# container's frames come from the parser that produced its metadata.
+# MOV and fragmented MP4 share the ISO-BMFF box walk: mov_meta abstains
+# on a sample-table-less moov, so the fragmented parser only reads what
+# the monolithic one abstains on.
+_CONTAINERS = (
+    (lambda d: d[:4] == b"RIFF" and d[8:12] == b"AVI ", avi.avi_meta, avi.avi_frames),
+    (lambda d: d[4:8] in mov.BOX_HEADS, mov.mov_meta, mov.mov_frames),
+    (lambda d: d[4:8] in mov.BOX_HEADS, fmp4.fmp4_meta, fmp4.fmp4_frames),
+    (lambda d: d[:4] == _MKV_MAGIC, mkv.mkv_meta, mkv.mkv_frames),
+)
 
-        return avi_meta(data)
-    if len(data) >= 8 and data[4:8] in _MOV_HEADS:
-        # real container formats #2/#3, same box-tree family: monolithic
-        # MJPEG-in-MOV/QuickTime (mov.py, r9), else fragmented MP4
-        # (fmp4.py, r10 — moof/tfhd/trun sample addressing). mov_meta
-        # returns None on a sample-table-less moov, so the fragmented
-        # walker only runs where the monolithic one abstains.
-        from .fmp4 import fmp4_meta
-        from .mov import mov_meta
 
-        m = mov_meta(data)
-        return m if m is not None else fmp4_meta(data)
-    if data[:4] == _MKV_MAGIC:
-        # real container family #4: EBML/Matroska V_MJPEG (mkv.py, r10)
-        from .mkv import mkv_meta
+def _container(data: bytes):
+    """(row, (width, height, fps, n_frames)) of the first `_CONTAINERS`
+    row that reads `data`, or None."""
+    for row in _CONTAINERS:
+        if row[0](data):
+            meta = row[1](data)
+            if meta is not None:
+                return row, meta
+    return None
 
-        return mkv_meta(data)
+
+def _fake_video_meta(data: bytes) -> tuple[int, int, int, int] | None:
     if not data.startswith(_VID_MAGIC):
-        return None  # seam for remaining real decoders (mp3/flac): av.open here
+        return None  # seam for further real decoders: av.open would go here
     try:
         parts = data.split(b":", 5)
         return int(parts[1]), int(parts[2]), int(parts[3]), int(parts[4])
     except Exception:  # noqa: BLE001
         return None
+
+
+def _decode_video_meta(data: bytes | None) -> tuple[int, int, int, int] | None:
+    """(width, height, fps, n_frames) or None if unreadable."""
+    if data is None:
+        return None
+    data = bytes(data)
+    found = _container(data)
+    return found[1] if found is not None else _fake_video_meta(data)
+
+
+def decode_video(data: bytes) -> tuple[int, list[np.ndarray]] | None:
+    """Real container bytes → (fps, decoded RGB frames); None if no
+    container reads them or any frame fails the JPEG decode."""
+    data = bytes(data)
+    found = _container(data)
+    if found is None:
+        return None
+    (_match, _meta, frames_of), (_w, _h, fps, _n) = found
+    payloads = frames_of(data)
+    if payloads is None:
+        return None
+    frames = []
+    for p in payloads:
+        arr = jpeg_decode(p)
+        if arr is None:
+            return None
+        frames.append(arr)
+    return fps, frames
 
 
 @pandas_udf(
@@ -181,8 +206,9 @@ def sample_frames(
 ) -> DataFrame:
     """Frame sampling as mapInPandas row explosion: one input video row
     → one output row per sampled frame, map-side (no shuffle touches
-    frame bytes). Output frames are FAKEIMG binaries, so image UDFs
-    compose downstream. Unreadable videos yield zero rows (M3 guard)."""
+    frame bytes). Output frames are the container's JPEG payloads (or
+    FAKEIMG binaries for FAKEVID), so image UDFs compose downstream.
+    Unreadable videos yield zero rows (M3 guard)."""
     out_schema = T.StructType(
         [
             T.StructField("video_id", T.LongType()),
@@ -194,42 +220,30 @@ def sample_frames(
     )
 
     def explode_frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .avi import avi_frames
-        from .fmp4 import fmp4_frames
-        from .mkv import mkv_frames
-        from .mov import mov_frames
-
         for pdf in batches:
             rows = []
             for vid, data in zip(pdf[id_col], pdf[content_col]):
-                meta = _decode_video_meta(data)
-                if meta is None:
+                if data is None:
                     continue
-                w, h, _fps, n = meta
                 raw = bytes(data)
-                if (
-                    raw[:4] == b"RIFF"
-                    or raw[4:8] in _MOV_HEADS
-                    or raw[:4] == _MKV_MAGIC
-                ):
+                found = _container(raw)
+                if found is not None:
                     # real MJPEG container (AVI '00dc' chunks / MOV
-                    # stsz+stco samples / MKV SimpleBlocks): each
-                    # payload is a complete JPEG, so the sampled frame
-                    # IS the payload — no re-encode, and skipped frames
-                    # are never decoded
-                    if raw[:4] == b"RIFF":
-                        payloads = avi_frames(raw)
-                    elif raw[:4] == _MKV_MAGIC:
-                        payloads = mkv_frames(raw)
-                    else:
-                        payloads = mov_frames(raw)
-                        if payloads is None:
-                            payloads = fmp4_frames(raw)
+                    # stsz+stco samples / fMP4 trun samples / MKV
+                    # SimpleBlocks): each payload is a complete JPEG, so
+                    # the sampled frame IS the payload — no re-encode,
+                    # and skipped frames are never decoded
+                    (_match, _meta, frames_of), (w, h, _fps, n) = found
+                    payloads = frames_of(raw)
                     if payloads is None:
                         continue
                     for idx in range(0, min(n, len(payloads)), every_n):
                         rows.append((vid, idx, w, h, payloads[idx]))
                     continue
+                meta = _fake_video_meta(raw)
+                if meta is None:
+                    continue
+                w, h, _fps, n = meta
                 for idx in range(0, n, every_n):
                     rows.append(
                         (vid, idx, w, h, make_fake_image(w, h, seed=b"%d:%d" % (vid, idx)))

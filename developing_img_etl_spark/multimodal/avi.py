@@ -2,10 +2,9 @@
 a REAL container format decoded and encoded in-container with zero
 dependencies, composing the two codecs the repo already proves out:
 the RIFF chunk walk (wav.py) for the container and the baseline JFIF
-codec (jpeg.py) for the per-frame payload. This retires the last fake
-decoder seam (`FAKEVID`, av.py): real AVI bytes now decode for real;
-other real containers (mp4/mkv) still hit the decoder seam and return
-null (the M3 guard), never a wrong answer.
+codec (jpeg.py) for the per-frame payload. av.py routes RIFF 'AVI '
+bytes here; unreadable ones come out null (the M3 guard), never a
+wrong answer.
 
 Layout notes (RIFF/AVI spec, public):
 
@@ -191,24 +190,6 @@ def avi_frames(data: bytes) -> list[bytes] | None:
                     out.append(data[b2 : b2 + s2])
             return out
     return None
-
-
-def avi_decode(data: bytes) -> tuple[int, list[np.ndarray]] | None:
-    """AVI bytes → (fps, decoded RGB frames); None if unreadable or any
-    frame fails the JPEG decode."""
-    from .jpeg import jpeg_decode
-
-    meta = avi_meta(data)
-    payloads = avi_frames(data)
-    if meta is None or payloads is None:
-        return None
-    frames = []
-    for p in payloads:
-        arr = jpeg_decode(p)
-        if arr is None:
-            return None
-        frames.append(arr)
-    return meta[2], frames
 
 
 def make_avi(width: int, height: int, fps: int, n_frames: int, seed: int = 0) -> bytes:

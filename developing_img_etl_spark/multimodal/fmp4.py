@@ -395,23 +395,3 @@ def fmp4_frames(data: bytes) -> list[bytes] | None:
     samples = _fragments(data, trex)
     assert samples is not None
     return [data[o : o + s] for o, s in samples]
-
-
-def fmp4_decode(data: bytes) -> tuple[int, list[np.ndarray]] | None:
-    """fMP4 bytes → (fps, decoded RGB frames); None if unreadable or
-    any sample payload fails JPEG decode."""
-    from .jpeg import jpeg_decode
-
-    meta = fmp4_meta(data)
-    if meta is None:
-        return None
-    payloads = fmp4_frames(data)
-    if payloads is None:
-        return None
-    frames = []
-    for p in payloads:
-        dec = jpeg_decode(p)
-        if dec is None:
-            return None
-        frames.append(dec)
-    return meta[2], frames

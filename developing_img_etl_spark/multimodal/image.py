@@ -2,29 +2,28 @@
 unreadable-guard — the reference's core custom compute
 (/root/reference/test.py:44-59) as vectorized pandas UDFs.
 
-Codec strategy, four tiers:
-  1. BMP (24-bit uncompressed): the stdlib+numpy codec in bmp.py —
-     a REAL raster decode → nearest-neighbor downscale → re-encode
-     that runs in any container, always routed here for determinism
-     (BMP is lossless, so quality is a no-op on this branch);
-  2. PNG (8-bit gray/RGB/RGBA, non-interlaced): the stdlib zlib codec
-     in png.py — a real *compressed* format through the same pixel
-     pipeline, also container-independent and deterministic (PNG out
-     is lossless; quality is a no-op). Exotic PNGs (palette, 16-bit,
-     interlaced) fall through to PIL where importable;
-  3. GIF (single-image, non-interlaced): the stdlib LZW codec in
-     gif.py — dictionary coding, the third compression family; GIF out
-     is lossless at ≤256 colors (nn_resize only gathers existing
-     pixels, so the palette never grows). Animations/interlace fall
-     through to PIL where importable;
-  4. PIL/cv2 when importable: JPEG/etc. full decode+re-encode;
-  5. FAKEIMG (`FAKEIMG:{w}:{h}:` header + payload): the synthetic
-     seam for formats whose codec is absent — plus stdlib JPEG-SOF
-     header parsing so real files still get real metadata.
+Codecs, one table row per natively coded format (`_CODECS`: magic,
+header dims, decode, encode), all stdlib + numpy, so every container
+runs the same real decode → nearest-neighbor downscale → re-encode:
+  - BMP (24-bit uncompressed, bmp.py): raster, lossless;
+  - PNG (8-bit gray/RGB/RGBA, non-interlaced, png.py): DEFLATE,
+    lossless;
+  - GIF (single-image, non-interlaced, gif.py): LZW, lossless at ≤256
+    colors (nn_resize only gathers existing pixels, so the palette
+    never grows);
+  - JPEG (baseline JFIF, jpeg.py): the reference's actual format,
+    DCT transform coding, re-encoded at `quality`.
+Quality applies to JPEG only. Metadata (M2) reads the row's header,
+no pixel decode. Two cases sit outside the table:
+  - a shape the native decoder rejects (palette/16-bit/interlaced PNG,
+    animated GIF, progressive JPEG, ...) and any other format go to
+    PIL where it is importable (re-encoded as JPEG), else unreadable;
+  - FAKEIMG (`FAKEIMG:{w}:{h}:` header + payload): a synthetic format
+    whose "codec" is integer arithmetic, so the DuckDB oracle can
+    replay the whole pipeline in SQL (m1, m2, m7).
 The Spark-side plumbing — BinaryType columns, Arrow batch shape,
 null-on-unreadable semantics, aspect-preserving resize arithmetic,
-quality knob — is identical across tiers, which is what the engine
-actually owns.
+quality knob — is the same for every format.
 
 Scale rules (SURVEY.md §4.2): the codec is the expensive step of a
 week, so `compress_pipeline` runs it exactly once per input row, after
@@ -56,35 +55,21 @@ import io
 
 import pandas as pd
 
+from ..functions.strings import size_kb
 from . import bmp, gif, jpeg, png
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+try:  # reads what no `_CODECS` row reads, where installed
+    from PIL import Image
+except ImportError:
+    Image = None
+
 MAX_DIM = 1024  # MAX_WIDTH, test.py:35
 JPEG_QUALITY = 65  # QUALITY, test.py:36
 
 _FAKE_MAGIC = b"FAKEIMG:"
-
-
-# --------------------------------------------------------------------------
-# codec seam — real codec if available, deterministic fake otherwise
-# --------------------------------------------------------------------------
-def _try_real_codec():
-    try:
-        from PIL import Image  # noqa: F401
-
-        return "pil"
-    except Exception:  # noqa: BLE001
-        try:
-            import cv2  # noqa: F401
-
-            return "cv2"
-        except Exception:  # noqa: BLE001
-            return None
-
-
-_CODEC = _try_real_codec()
 
 
 def make_fake_image(width: int, height: int, seed: bytes = b"x") -> bytes:
@@ -94,14 +79,18 @@ def make_fake_image(width: int, height: int, seed: bytes = b"x") -> bytes:
     return b"FAKEIMG:%d:%d:" % (width, height) + payload
 
 
-def _jpeg_dims(data: bytes) -> tuple[int, int] | None:
-    """Stdlib JPEG dimension parse (ITU T.81 §B.2.2 SOF walk).
-    Delegates to the codec's single marker walker — one implementation,
-    stricter than the pre-m18 copy (stops at SOS instead of walking
-    into entropy bytes, rejects zero dims). Headers only; no pixel
-    decode, so real JPEGs get real metadata (M2) even in codec-less
-    containers."""
-    return jpeg.jpeg_dims(data)
+# (magic, header_dims, decode, encode(pixels, quality)) per native format
+_CODECS = (
+    (b"BM", bmp.bmp_dims, bmp.bmp_decode, lambda arr, _q: bmp.bmp_encode(arr)),
+    (b"\x89PNG", png.png_dims, png.png_decode, lambda arr, _q: png.png_encode(arr)),
+    (b"GIF8", gif.gif_dims, gif.gif_decode, lambda arr, _q: gif.gif_encode(arr)),
+    (b"\xff\xd8", jpeg.jpeg_dims, jpeg.jpeg_decode, jpeg.jpeg_encode),
+)
+
+
+def _codec(data: bytes):
+    """The `_CODECS` row whose magic opens `data`, or None."""
+    return next((row for row in _CODECS if data.startswith(row[0])), None)
 
 
 def _decode_dims(data: bytes | None) -> tuple[int, int] | None:
@@ -115,22 +104,15 @@ def _decode_dims(data: bytes | None) -> tuple[int, int] | None:
             return int(parts[1]), int(parts[2])
         except Exception:  # noqa: BLE001
             return None
-    if data.startswith(b"BM"):
-        return bmp.bmp_dims(data)
-    if data.startswith(b"\x89PNG"):
-        return png.png_dims(data)  # IHDR parse — exact for every PNG shape
-    if data.startswith(b"GIF8"):
-        return gif.gif_dims(data)  # logical-screen-descriptor parse
-    if _CODEC == "pil":
-        from PIL import Image
-
-        try:
-            with Image.open(io.BytesIO(data)) as im:
-                return im.size
-        except Exception:  # noqa: BLE001
-            return None
-    # codec-less: header-level metadata for the remaining common formats
-    return _jpeg_dims(data)
+    row = _codec(data)
+    dims = row[1](data) if row is not None else None
+    if dims is not None or Image is None:
+        return dims
+    try:
+        with Image.open(io.BytesIO(data)) as im:
+            return im.size
+    except Exception:  # noqa: BLE001
+        return None
 
 
 def _recompress(data: bytes | None, max_dim: int, quality: int) -> bytes | None:
@@ -139,6 +121,7 @@ def _recompress(data: bytes | None, max_dim: int, quality: int) -> bytes | None:
     dims = _decode_dims(data)
     if dims is None:
         return None
+    data = bytes(data)
     w, h = dims
     if max(w, h) > max_dim:
         scale = max_dim / float(max(w, h))
@@ -148,58 +131,23 @@ def _recompress(data: bytes | None, max_dim: int, quality: int) -> bytes | None:
     if data.startswith(_FAKE_MAGIC):
         # fake "encode": payload shrinks to w*h * quality%
         body_len = int(w * h * (quality / 100.0))
-        payload = bytes(data).split(b":", 3)[3][:body_len]
+        payload = data.split(b":", 3)[3][:body_len]
         return b"FAKEIMG:%d:%d:" % (w, h) + payload
-    if data.startswith(b"BM"):
-        # real raster path: decode → nearest-neighbor downscale →
-        # re-encode. BMP out (lossless); quality does not apply.
-        arr = bmp.bmp_decode(bytes(data))
-        if arr is None:
-            return None
+    row = _codec(data)
+    arr = row[2](data) if row is not None else None
+    if arr is not None:
         if (w, h) != (arr.shape[1], arr.shape[0]):
             arr = bmp.nn_resize(arr, w, h)
-        return bmp.bmp_encode(arr)
-    if data.startswith(b"\x89PNG"):
-        # real compressed path: inflate+unfilter → downscale →
-        # refilter+deflate. PNG out (lossless); quality does not apply.
-        # Unsupported PNG shapes fall through to PIL when importable.
-        arr = png.png_decode(bytes(data))
-        if arr is not None:
-            if (w, h) != (arr.shape[1], arr.shape[0]):
-                arr = bmp.nn_resize(arr, w, h)
-            return png.png_encode(arr)
-    if data.startswith(b"GIF8"):
-        # real dictionary-coded path: LZW decode → downscale → LZW
-        # re-encode. GIF out (lossless at ≤256 colors — nn_resize only
-        # gathers existing pixels, so the palette never grows); quality
-        # does not apply. Interlaced/animated GIFs fall through to PIL.
-        arr = gif.gif_decode(bytes(data))
-        if arr is not None:
-            if (w, h) != (arr.shape[1], arr.shape[0]):
-                arr = bmp.nn_resize(arr, w, h)
-            return gif.gif_encode(arr)
-    if data.startswith(b"\xff\xd8"):
-        # the reference's ACTUAL format (test.py:44-59 cv2 jpg->jpg):
-        # real transform-coded path — Huffman+DCT decode -> downscale ->
-        # re-encode at `quality` through the baseline JFIF codec.
-        # Progressive/exotic shapes fall through to PIL when importable.
-        arr = jpeg.jpeg_decode(bytes(data))
-        if arr is not None:
-            if (w, h) != (arr.shape[1], arr.shape[0]):
-                arr = bmp.nn_resize(arr, w, h)
-            return jpeg.jpeg_encode(arr, quality)
-    if _CODEC == "pil":
-        from PIL import Image
-
-        try:
-            with Image.open(io.BytesIO(data)) as im:
-                im = im.resize((w, h))
-                out = io.BytesIO()
-                im.convert("RGB").save(out, "JPEG", quality=quality)
-                return out.getvalue()
-        except Exception:  # noqa: BLE001 — per-record guard, never fail the job
-            return None
-    return None
+        return row[3](arr, quality)
+    if Image is None:
+        return None
+    try:
+        with Image.open(io.BytesIO(data)) as im:
+            out = io.BytesIO()
+            im.resize((w, h)).convert("RGB").save(out, "JPEG", quality=quality)
+            return out.getvalue()
+    except Exception:  # noqa: BLE001 — per-record guard, never fail the job
+        return None
 
 
 # --------------------------------------------------------------------------
@@ -235,14 +183,14 @@ def image_dims(content: pd.Series) -> pd.DataFrame:
 
 def with_image_stats(df, content_col: str = "content"):
     """Attach dims + size-KB + readable flag to a binary-image frame.
-    size_gambar_kb = round(length/1024, 2) (test.py:58-59) — computed
+    size_gambar_kb is `size_kb` of the payload length — computed
     JVM-side, no Python round-trip."""
     c = F.col(content_col)
     return (
         df.withColumn("__dims", image_dims(c))
         .withColumn("width", F.col("__dims.width"))
         .withColumn("height", F.col("__dims.height"))
-        .withColumn("size_gambar_kb", F.round(F.length(c) / 1024.0, 2))
+        .withColumn("size_gambar_kb", size_kb(F.length(c)))
         .withColumn("readable", F.col("width").isNotNull())
         .drop("__dims")
     )

@@ -358,7 +358,7 @@ def _blocks(data: bytes, seg: tuple[int, int], track: int):
 
 
 def _parse(data: bytes) -> tuple[int, int, int, list[bytes]] | None:
-    """Single internal walk shared by mkv_meta/mkv_frames/mkv_decode:
+    """Single internal walk shared by mkv_meta and mkv_frames:
     (width, height, fps, payloads), else None. Each public call parses
     the element tree exactly once."""
     data = bytes(data)
@@ -415,21 +415,3 @@ def mkv_frames(data: bytes) -> list[bytes] | None:
     container is unreadable."""
     parsed = _parse(data)
     return None if parsed is None else parsed[3]
-
-
-def mkv_decode(data: bytes) -> tuple[int, list[np.ndarray]] | None:
-    """MKV bytes → (fps, decoded RGB frames); None if unreadable or any
-    frame payload fails JPEG decode."""
-    from .jpeg import jpeg_decode
-
-    parsed = _parse(data)
-    if parsed is None:
-        return None
-    _w, _h, fps, payloads = parsed
-    frames = []
-    for p in payloads:
-        dec = jpeg_decode(p)
-        if dec is None:
-            return None
-        frames.append(dec)
-    return fps, frames

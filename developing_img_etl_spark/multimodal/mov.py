@@ -3,9 +3,7 @@ container after avi.py, covering the box-tree container family
 (QuickTime/MP4) the way avi.py covers RIFF. Zero dependencies: the
 container is a hand-walked box tree and the per-frame payload is the
 repo's own baseline JPEG codec (jpeg.py). Real .mov bytes decode for
-real; remaining containers (fragmented mp4, mkv/EBML) stay behind the
-av.py decoder seam and return null (the M3 guard), never a wrong
-answer.
+real; av.py routes them here by their first box type.
 
 Layout notes (Apple QuickTime File Format spec, public; MP4 is the
 ISO-BMFF descendant of this structure):
@@ -50,6 +48,8 @@ import struct
 import numpy as np
 
 _LANG_UND = 0x55C4  # packed ISO-639 'und'
+# top-level QuickTime/ISO-BMFF box types that can legally open a file
+BOX_HEADS = (b"ftyp", b"moov", b"mdat", b"wide", b"skip", b"free")
 
 
 def _box(btype: bytes, payload: bytes) -> bytes:
@@ -272,8 +272,7 @@ def mov_meta(data: bytes) -> tuple[int, int, int, int] | None:
     data = bytes(data)
     if len(data) < 16:
         return None
-    head = data[4:8]
-    if head not in (b"ftyp", b"moov", b"mdat", b"wide", b"skip", b"free"):
+    if data[4:8] not in BOX_HEADS:
         return None
     found = _video_stbl(data)
     if found is None:
@@ -330,23 +329,3 @@ def mov_frames(data: bytes) -> list[bytes] | None:
     if si != n:
         return None
     return out
-
-
-def mov_decode(data: bytes) -> tuple[int, list[np.ndarray]] | None:
-    """MOV bytes → (fps, decoded RGB frames); None if unreadable or any
-    frame payload fails JPEG decode."""
-    from .jpeg import jpeg_decode
-
-    meta = mov_meta(data)
-    if meta is None:
-        return None
-    payloads = mov_frames(data)
-    if payloads is None:
-        return None
-    frames = []
-    for p in payloads:
-        dec = jpeg_decode(p)
-        if dec is None:
-            return None
-        frames.append(dec)
-    return meta[2], frames

@@ -23,10 +23,12 @@ from ..functions import text as TXT
 
 def _widen(df: DataFrame) -> DataFrame:
     """Raise partition count to the session default when the input scan
-    yields fewer (a small local parquet = 1 split, so the interpreted
-    shingle HOF below would run on 1 of 32 cores). At 100 TB the scan
-    already produces thousands of splits and this is a no-op — no
-    unconditional repartition shuffle is ever paid on big inputs."""
+    yields fewer (a small local parquet = 1 split, so per-row heavy work
+    after it — the interpreted shingle HOF below, the Python corpus
+    generators of queries/multimodal.py — would run on 1 of 32 cores).
+    At 100 TB the scan already produces thousands of splits and this is
+    a no-op — no unconditional repartition shuffle is ever paid on big
+    inputs."""
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)

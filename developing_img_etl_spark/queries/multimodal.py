@@ -15,13 +15,21 @@ rows-only here, recall-checked against exact ground truth in tests/.
 
 from __future__ import annotations
 
+import functools
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.functions import pandas_udf
 
 from ..catalog import load
+from ..multimodal import avi, bmp, fmp4, gif, jpeg, mkv, mov, phash, png, wav
 from ..multimodal.image import compress_pipeline, with_image_stats
 from ..operators import dedup as DD
 from ..operators import similarity as SIM
+from ..operators.dedup import _widen
 
 
 def _pin_for_sort(df: DataFrame) -> DataFrame:
@@ -36,6 +44,39 @@ def _pin_for_sort(df: DataFrame) -> DataFrame:
     frame holds only ids/stats/flags — kilobytes at any scale — and
     the sampler reads the cached rows instead of re-decoding."""
     return df.localCheckpoint(eager=False)
+
+
+def _generator(name: str, make):
+    """Binary pandas UDF `name`: one `make(*int args)` payload per row,
+    null where the first argument is null. The pixel, audio and video
+    corpora widen before it runs (the generators are the Python work),
+    and compress_pipeline keeps that spread instead of adding its own."""
+
+    def gen(*cols: pd.Series) -> pd.Series:
+        return pd.Series(
+            [None if pd.isna(a[0]) else make(*map(int, a)) for a in zip(*cols)],
+            dtype=object,
+        )
+
+    gen.__name__ = name
+    return pandas_udf(gen, T.BinaryType())
+
+
+def _digest(name: str, decode, digest=png.pixel_checksum):
+    """Long pandas UDF `name`: `digest` of each payload's decoded pixels,
+    null where `decode` rejects the payload."""
+
+    def one(b):
+        if b is None:
+            return None
+        arr = decode(bytes(b))
+        return None if arr is None else digest(arr)
+
+    def dig(content: pd.Series) -> pd.Series:
+        return content.map(one)
+
+    dig.__name__ = name
+    return pandas_udf(dig, T.LongType())
 
 
 # --------------------------------------------------------------------------
@@ -409,33 +450,7 @@ ORACLES["m11_video_frame_sample"] = M11_SQL
 # Unlike m1 this is not a header-format seam — pixels really move.
 # Over-cap rows are kept short (h=8) so the corpus stays KB-sized.
 # --------------------------------------------------------------------------
-import pandas as pd
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
-
-
-@pandas_udf(T.BinaryType())
-def _gen_bmp(w: pd.Series, h: pd.Series, seed: pd.Series) -> pd.Series:
-    from ..multimodal.bmp import make_bmp
-
-    return pd.Series(
-        [
-            None if pd.isna(a) else make_bmp(int(a), int(b), int(s))
-            for a, b, s in zip(w, h, seed)
-        ],
-        dtype=object,
-    )
-
-
-def _widen(df: DataFrame) -> DataFrame:
-    """Small local scans are 1-2 splits; the pandas-UDF pixel work would
-    run on 1 of 32 cores without this. No-op at real scan sizes. The
-    pixel corpora below widen before their Python generators run, and
-    compress_pipeline keeps that spread instead of adding its own."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
+_gen_bmp = _generator("_gen_bmp", bmp.make_bmp)
 
 
 def _bmp_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -521,30 +536,8 @@ ORACLES["m12_bmp_compress"] = M12_SQL
 # Corpus is every 10th part so the oracle's per-pixel UNNEST stays
 # bounded (~1.5 M rows at sf0.1).
 # --------------------------------------------------------------------------
-@pandas_udf(T.BinaryType())
-def _gen_png(w: pd.Series, h: pd.Series, seed: pd.Series) -> pd.Series:
-    from ..multimodal.png import make_png
-
-    return pd.Series(
-        [
-            None if pd.isna(a) else make_png(int(a), int(b), int(s))
-            for a, b, s in zip(w, h, seed)
-        ],
-        dtype=object,
-    )
-
-
-@pandas_udf(T.LongType())
-def _png_pixel_checksum(content: pd.Series) -> pd.Series:
-    from ..multimodal.png import pixel_checksum, png_decode
-
-    def chk(b):
-        if b is None:
-            return None
-        arr = png_decode(bytes(b))
-        return None if arr is None else pixel_checksum(arr)
-
-    return content.map(chk)
+_gen_png = _generator("_gen_png", png.make_png)
+_png_pixel_checksum = _digest("_png_pixel_checksum", png.png_decode)
 
 
 def _png_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -647,33 +640,21 @@ ORACLES["m14_png_compress"] = M14_SQL
 # truncated body — the guard exercised INSIDE the real chunk walker,
 # not at a magic-byte shortcut.
 # --------------------------------------------------------------------------
-import numpy as np
-
-
-@pandas_udf(T.BinaryType())
-def _gen_wav(rate: pd.Series, n: pd.Series, seed: pd.Series) -> pd.Series:
-    from ..multimodal.wav import make_wav
-
-    return pd.Series(
-        [make_wav(int(r), int(a), int(s)) for r, a, s in zip(rate, n, seed)],
-        dtype=object,
-    )
+_gen_wav = _generator("_gen_wav", wav.make_wav)
 
 
 @pandas_udf(T.BinaryType())
 def _wav_resample_quarter(content: pd.Series) -> pd.Series:
-    from ..multimodal.wav import resample_nearest, wav_decode, wav_encode
-
     def go(b):
         if b is None:
             return None
-        decoded = wav_decode(bytes(b))
+        decoded = wav.wav_decode(bytes(b))
         if decoded is None:
             return None
         rate, channels, samples = decoded
         if channels != 1:
             return None
-        return wav_encode(rate, resample_nearest(samples, max(len(samples) // 4, 1)))
+        return wav.wav_encode(rate, wav.resample_nearest(samples, max(len(samples) // 4, 1)))
 
     return content.map(go)
 
@@ -690,11 +671,9 @@ def _wav_resample_quarter(content: pd.Series) -> pd.Series:
     )
 )
 def _wav_features(content: pd.Series) -> pd.DataFrame:
-    from ..multimodal.wav import wav_decode
-
     rows = []
     for b in content:
-        decoded = wav_decode(bytes(b)) if b is not None else None
+        decoded = wav.wav_decode(bytes(b)) if b is not None else None
         if decoded is None or len(decoded[2]) == 0:
             rows.append((None, None, None, None, None))
             continue
@@ -801,31 +780,8 @@ ORACLES["m16_wav_resample"] = M16_SQL
 # header whose body ends before any image descriptor — the guard
 # exercised INSIDE the block walker.
 # --------------------------------------------------------------------------
-@pandas_udf(T.BinaryType())
-def _gen_gif(w: pd.Series, h: pd.Series, seed: pd.Series) -> pd.Series:
-    from ..multimodal.gif import make_gif
-
-    return pd.Series(
-        [
-            None if pd.isna(a) else make_gif(int(a), int(b), int(s))
-            for a, b, s in zip(w, h, seed)
-        ],
-        dtype=object,
-    )
-
-
-@pandas_udf(T.LongType())
-def _gif_pixel_checksum(content: pd.Series) -> pd.Series:
-    from ..multimodal.gif import gif_decode
-    from ..multimodal.png import pixel_checksum
-
-    def chk(b):
-        if b is None:
-            return None
-        arr = gif_decode(bytes(b))
-        return None if arr is None else pixel_checksum(arr)
-
-    return content.map(chk)
+_gen_gif = _generator("_gen_gif", gif.make_gif)
+_gif_pixel_checksum = _digest("_gif_pixel_checksum", gif.gif_decode)
 
 
 def _gif_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -934,41 +890,26 @@ _JPEG_GEN_QUALITY = 80
 _JPEG_FIDELITY_BOUND = 32.0
 
 
-@pandas_udf(T.BinaryType())
-def _gen_jpeg(w: pd.Series, h: pd.Series, seed: pd.Series) -> pd.Series:
-    from ..multimodal.jpeg import jpeg_encode, make_photo
-
-    return pd.Series(
-        [
-            None
-            if pd.isna(a)
-            else jpeg_encode(make_photo(int(a), int(b), int(s)), _JPEG_GEN_QUALITY)
-            for a, b, s in zip(w, h, seed)
-        ],
-        dtype=object,
-    )
+_gen_jpeg = _generator(
+    "_gen_jpeg", lambda w, h, seed: jpeg.jpeg_encode(jpeg.make_photo(w, h, seed), _JPEG_GEN_QUALITY)
+)
 
 
 @pandas_udf(T.BooleanType())
 def _jpeg_fidelity_ok(
     content: pd.Series, w: pd.Series, h: pd.Series, seed: pd.Series
 ) -> pd.Series:
-    import numpy as np
-
-    from ..multimodal.bmp import nn_resize
-    from ..multimodal.jpeg import jpeg_decode, make_photo
-
     def ok(args):
         b, ow, oh, s = args
         if b is None or pd.isna(ow):
             return None
-        dec = jpeg_decode(bytes(b))
+        dec = jpeg.jpeg_decode(bytes(b))
         if dec is None:
             return False
-        expected = make_photo(int(ow), int(oh), int(s))
+        expected = jpeg.make_photo(int(ow), int(oh), int(s))
         eh, ew = dec.shape[0], dec.shape[1]
         if (ew, eh) != (int(ow), int(oh)):
-            expected = nn_resize(expected, ew, eh)
+            expected = bmp.nn_resize(expected, ew, eh)
         err = float(
             np.abs(dec.astype(np.int64) - expected.astype(np.int64)).mean()
         )
@@ -1073,34 +1014,11 @@ _PHASH_HAMMING = 10
 _PHASH_BANDS = 8
 
 
-@pandas_udf(T.BinaryType())
-def _gen_textured_jpeg(
-    w: pd.Series, h: pd.Series, seed: pd.Series, quality: pd.Series
-) -> pd.Series:
-    from ..multimodal.jpeg import jpeg_encode
-    from ..multimodal.phash import make_textured
-
-    return pd.Series(
-        [
-            jpeg_encode(make_textured(int(a), int(b), int(s)), int(q))
-            for a, b, s, q in zip(w, h, seed, quality)
-        ],
-        dtype=object,
-    )
-
-
-@pandas_udf(T.LongType())
-def _phash_udf(content: pd.Series) -> pd.Series:
-    from ..multimodal.jpeg import jpeg_decode
-    from ..multimodal.phash import phash64
-
-    def go(b):
-        if b is None:
-            return None
-        arr = jpeg_decode(bytes(b))
-        return None if arr is None else phash64(arr)
-
-    return content.map(go)
+_gen_textured_jpeg = _generator(
+    "_gen_textured_jpeg",
+    lambda w, h, seed, quality: jpeg.jpeg_encode(phash.make_textured(w, h, seed), quality),
+)
+_phash_udf = _digest("_phash_udf", jpeg.jpeg_decode, phash.phash64)
 
 
 def _phash_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1177,42 +1095,41 @@ QUERIES["m19_phash_dedup"] = m19_phash_dedup
 
 
 # --------------------------------------------------------------------------
-# M20 — REAL video frame sampling: MJPEG-in-AVI (multimodal/avi.py,
-# the RIFF walk of wav.py composed with the baseline JPEG codec of
-# jpeg.py) generated per part row, routed through the SAME
-# sample_frames surface m11 drives over FAKEVID — the last fake
-# decoder seam now has a real-bytes twin. JPEG is lossy, so decoded
-# pixels are not SQL arithmetic; the m18 discipline applies: the
-# oracle checks what IS exact — container metadata (w/h/fps/n_frames
-# from the AVI headers), the sampled-index set (every_n = 2 → indices
-# 0,2,4,..., count ceil(n/2), sum k(k-1)), the per-frame dimension
-# contract (JPEG SOF of each emitted payload == container dims), and
-# a per-frame FIDELITY GATE (mean |decoded − expected photo| <= the
-# m18 bound; measured max 8.0 on this corpus, a mismatched frame
-# scores ~85). Pixel arithmetic itself is pinned by avi/jpeg pytest.
-# Corrupt rows carry a RIFF header whose AVI body is garbage — the
-# guard exercised inside the chunk walker; they surface as
-# 'unreadable' with zero sampled frames, never a wrong answer.
+# M20-M23 — REAL video frame sampling, one query per MJPEG container
+# layout, all routed through the SAME sample_frames surface m11 drives
+# over FAKEVID:
+#   m20 AVI (multimodal/avi.py — the RIFF walk of wav.py composed with
+#       the baseline JPEG codec of jpeg.py);
+#   m21 MOV/QuickTime (mov.py — the hand-walked ftyp/mdat/moov box tree
+#       with stsd/stts/stsc/stsz/stco sample tables; MP4 is the ISO-BMFF
+#       descendant of this structure);
+#   m22 fragmented MP4 (fmp4.py — the moof/mfhd/tfhd/tfdt/trun movie
+#       fragments over the same box walk; VERDICT r9 #6). This is the
+#       layout streaming corpora actually arrive in (DASH/HLS/CMAF
+#       segments): the moov's sample tables are EMPTY and every sample
+#       is addressed by per-fragment trun entries relative to a tfhd
+#       base;
+#   m23 MKV (mkv.py — the EBML/Matroska tag-length-value element tree,
+#       the third container *family* after RIFF and ISO-BMFF).
+# JPEG is lossy, so decoded pixels are not SQL arithmetic; the m18
+# discipline applies: the oracle checks what IS exact — container
+# metadata (w/h/fps/n_frames from the container headers), the
+# sampled-index set (every_n = 2 → indices 0,2,4,..., count ceil(n/2),
+# sum k(k-1)), the per-frame dimension contract (JPEG SOF of each
+# emitted payload == container dims), and a per-frame FIDELITY GATE
+# (mean |decoded − expected photo| <= the m18 bound; measured max 8.0
+# on this corpus, a mismatched frame scores ~85). Pixel arithmetic
+# itself is pinned by the container and jpeg pytest. The four makers
+# share make_avi's seed contract, so one frame-check UDF serves all.
+# Corrupt rows surface as 'unreadable' with zero sampled frames, never
+# a wrong answer; each container's literal exercises a guard INSIDE
+# its parser, not a magic-byte shortcut (table below). The queries read
+# disjoint part slices (p_partkey % 25) with distinct corrupt stripes.
 # Scale shape: generation, frame explosion, dim parse, and the
 # fidelity decode are ALL map-side (frame bytes never shuffle); the
 # only shuffles carry (video_id, small longs/bools).
 # --------------------------------------------------------------------------
 _AVI_FIDELITY_BOUND = 32.0
-
-
-@pandas_udf(T.BinaryType())
-def _gen_avi(w: pd.Series, h: pd.Series, fps: pd.Series, n: pd.Series, seed: pd.Series) -> pd.Series:
-    from ..multimodal.avi import make_avi
-
-    return pd.Series(
-        [
-            None
-            if pd.isna(a)
-            else make_avi(int(a), int(b), int(f), int(k), int(s))
-            for a, b, f, k, s in zip(w, h, fps, n, seed)
-        ],
-        dtype=object,
-    )
 
 
 @pandas_udf(
@@ -1226,29 +1143,58 @@ def _gen_avi(w: pd.Series, h: pd.Series, fps: pd.Series, n: pd.Series, seed: pd.
 def _avi_frame_checks(
     frame: pd.Series, w: pd.Series, h: pd.Series, vid: pd.Series, idx: pd.Series
 ) -> pd.DataFrame:
-    from ..multimodal.jpeg import jpeg_decode, jpeg_dims, make_photo
-
     rows = []
     for b, ow, oh, v, i in zip(frame, w, h, vid, idx):
         payload = bytes(b)
-        dims = jpeg_dims(payload)
+        dims = jpeg.jpeg_dims(payload)
         dims_ok = dims == (int(ow), int(oh))
-        dec = jpeg_decode(payload)
+        dec = jpeg.jpeg_decode(payload)
         if dec is None:
             rows.append((dims_ok, False))
             continue
         # the corpus seed is derived from the id (make_avi contract)
-        expected = make_photo(int(ow), int(oh), (int(v) % 251 + 31 * int(i)) % 251)
+        expected = jpeg.make_photo(int(ow), int(oh), (int(v) % 251 + 31 * int(i)) % 251)
         err = float(np.abs(dec.astype(np.int64) - expected.astype(np.int64)).mean())
         rows.append((dims_ok, err <= _AVI_FIDELITY_BOUND))
     return pd.DataFrame(rows, columns=["dims_ok", "fidelity_ok"])
 
 
-def _avi_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+# query name: (part slice, corrupt stripe, generator UDF, corrupt
+# literal). The literals are built when the query is, not at import.
+_VIDEO_FAMILY = {
+    "m20_avi_frame_sample": (
+        0, 97, _generator("_gen_avi", avi.make_avi),
+        # RIFF header whose AVI body is garbage: the chunk walker's guard
+        lambda: b"RIFF\x00\x00\x00\x00AVI corrupt-body",
+    ),
+    "m21_mov_frame_sample": (
+        7, 89, _generator("_gen_mov", mov.make_mov),
+        # valid ftyp box + truncated garbage moov: exercises the box
+        # walker's structural guards, not just the magic check
+        lambda: b"\x00\x00\x00\x14ftypqt  \x00\x00\x02\x00qt  \x00\x00\x00\x20moovgarbage",
+    ),
+    "m22_fmp4_frame_sample": (
+        11, 83, _generator("_gen_fmp4", fmp4.make_fmp4),
+        # a REAL fmp4 truncated mid-mdat: ftyp/moov/mvex all parse, the
+        # last trun's sample slice points past EOF — the deepest
+        # unreadable path in fmp4._fragments
+        lambda: fmp4.make_fmp4(16, 12, 12, 3, seed=7)[:-10],
+    ),
+    "m23_mkv_frame_sample": (
+        14, 79, _generator("_gen_mkv", mkv.make_mkv),
+        # a REAL mkv truncated mid-cluster: the Segment's declared size
+        # points past EOF, so the EBML walker's size-bound guard abstains
+        lambda: mkv.make_mkv(16, 12, 12, 3, seed=5)[:-40],
+    ),
+}
+
+
+def _video_corpus(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    part_slice, stripe, gen, corrupt_literal = _VIDEO_FAMILY[name]
     # every 25th part: each video is n_frames full JPEG encode+decode
     # passes — the per-row cost of m18 multiplied by the frame count
-    part = _widen(load(spark, sf_dir, "part").filter(F.col("p_partkey") % 25 == 0))
-    corrupt = F.col("p_partkey") % 97 == 0
+    part = _widen(load(spark, sf_dir, "part").filter(F.col("p_partkey") % 25 == part_slice))
+    corrupt = F.col("p_partkey") % stripe == 0
     w = (16 + F.pmod(F.col("p_size"), F.lit(12)) * 4).cast("int")
     h = (12 + F.pmod(F.col("p_size"), F.lit(8)) * 4).cast("int")
     fps = (12 + F.pmod(F.col("p_size"), F.lit(3)) * 6).cast("int")
@@ -1256,25 +1202,23 @@ def _avi_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     seed = F.pmod(F.col("p_partkey"), F.lit(251)).cast("int")
     return part.select(
         F.col("p_partkey").alias("video_id"),
-        F.when(corrupt, F.lit(b"RIFF\x00\x00\x00\x00AVI corrupt-body"))
-        .otherwise(_gen_avi(w, h, fps, n, seed))
+        F.when(corrupt, F.lit(corrupt_literal()))
+        .otherwise(gen(w, h, fps, n, seed))
         .alias("content"),
     )
 
 
-def m20_avi_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _video_frame_sample(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     from ..multimodal.av import sample_frames, video_metadata
 
     # Generation is the query's dominant cost (every frame is a full
-    # JPEG encode in _gen_avi); meta and frames both branch off `vids`,
-    # and without a pin the optimizer re-expands the scan+gen subtree
-    # into BOTH branches — the corpus was synthesized twice per run
-    # (plan-audited: two ArrowEvalPython gen nodes over two scans).
+    # JPEG encode in the generator); meta and frames both branch off
+    # `vids`, and without a pin the optimizer re-expands the scan+gen
+    # subtree into BOTH branches — the corpus was synthesized twice per
+    # run (plan-audited: two ArrowEvalPython gen nodes over two scans).
     # The lazy localCheckpoint materializes it once and shares blocks.
-    vids = _avi_corpus(spark, sf_dir).localCheckpoint(eager=False)
-    meta = vids.select(
-        "video_id", video_metadata(F.col("content")).alias("m")
-    )
+    vids = _video_corpus(spark, sf_dir, name).localCheckpoint(eager=False)
+    meta = vids.select("video_id", video_metadata(F.col("content")).alias("m"))
     frames = sample_frames(vids, id_col="video_id", every_n=2)
     checked = frames.select(
         "video_id",
@@ -1311,17 +1255,17 @@ def m20_avi_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-M20_SQL = """
+_VIDEO_SQL = """
 WITH base AS (
   SELECT p_partkey,
-         CASE WHEN p_partkey % 97 = 0 THEN NULL
+         CASE WHEN p_partkey % {stripe} = 0 THEN NULL
               ELSE CAST(16 + (p_size % 12) * 4 AS INT) END AS w,
-         CASE WHEN p_partkey % 97 = 0 THEN NULL
+         CASE WHEN p_partkey % {stripe} = 0 THEN NULL
               ELSE CAST(12 + (p_size % 8) * 4 AS INT) END AS h,
          CAST(12 + (p_size % 3) * 6 AS INT) AS fps,
          CAST(3 + p_size % 6 AS INT) AS n
   FROM part
-  WHERE p_partkey % 25 = 0
+  WHERE p_partkey % 25 = {part_slice}
 )
 SELECT p_partkey,
        CASE WHEN w IS NULL THEN 'unreadable' ELSE 'ok' END AS status,
@@ -1342,391 +1286,6 @@ FROM base
 ORDER BY p_partkey
 """
 
-QUERIES["m20_avi_frame_sample"] = m20_avi_frame_sample
-ORACLES["m20_avi_frame_sample"] = M20_SQL
-
-
-# --------------------------------------------------------------------------
-# M21 — REAL video frame sampling in the SECOND container family:
-# MJPEG-in-MOV/QuickTime (multimodal/mov.py — the hand-walked
-# ftyp/mdat/moov box tree with stsd/stts/stsc/stsz/stco sample
-# tables; MP4 is the ISO-BMFF descendant of this structure). Same
-# m20 discipline end-to-end: container metadata, sampled-index set,
-# per-frame JPEG dims, and the fidelity gate are oracle-exact; the
-# frame payload contract (stsz/stco slices are complete JPEGs whose
-# decoded pixels match the deterministic photo) is checked by the same
-# _avi_frame_checks UDF because make_mov shares make_avi's seed
-# contract. Corrupt rows open with a plausible 'ftyp' box whose moov
-# is garbage — the guard exercised inside the box walker. Disjoint
-# part slice from m20 (% 25 == 7 vs == 0).
-# --------------------------------------------------------------------------
-@pandas_udf(T.BinaryType())
-def _gen_mov(w: pd.Series, h: pd.Series, fps: pd.Series, n: pd.Series, seed: pd.Series) -> pd.Series:
-    from ..multimodal.mov import make_mov
-
-    return pd.Series(
-        [
-            None
-            if pd.isna(a)
-            else make_mov(int(a), int(b), int(f), int(k), int(s))
-            for a, b, f, k, s in zip(w, h, fps, n, seed)
-        ],
-        dtype=object,
-    )
-
-
-def _mov_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = _widen(load(spark, sf_dir, "part").filter(F.col("p_partkey") % 25 == 7))
-    corrupt = F.col("p_partkey") % 89 == 0
-    w = (16 + F.pmod(F.col("p_size"), F.lit(12)) * 4).cast("int")
-    h = (12 + F.pmod(F.col("p_size"), F.lit(8)) * 4).cast("int")
-    fps = (12 + F.pmod(F.col("p_size"), F.lit(3)) * 6).cast("int")
-    n = (3 + F.pmod(F.col("p_size"), F.lit(6))).cast("int")
-    seed = F.pmod(F.col("p_partkey"), F.lit(251)).cast("int")
-    return part.select(
-        F.col("p_partkey").alias("video_id"),
-        F.when(
-            corrupt,
-            # valid ftyp box + truncated garbage moov: exercises the
-            # box walker's structural guards, not just the magic check
-            F.lit(b"\x00\x00\x00\x14ftypqt  \x00\x00\x02\x00qt  \x00\x00\x00\x20moovgarbage"),
-        )
-        .otherwise(_gen_mov(w, h, fps, n, seed))
-        .alias("content"),
-    )
-
-
-def m21_mov_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..multimodal.av import sample_frames, video_metadata
-
-    # single-generation pin — see m20 (two branches, one gen pass)
-    vids = _mov_corpus(spark, sf_dir).localCheckpoint(eager=False)
-    meta = vids.select("video_id", video_metadata(F.col("content")).alias("m"))
-    frames = sample_frames(vids, id_col="video_id", every_n=2)
-    checked = frames.select(
-        "video_id",
-        "frame_idx",
-        _avi_frame_checks(
-            F.col("frame"), F.col("width"), F.col("height"),
-            F.col("video_id"), F.col("frame_idx"),
-        ).alias("c"),
-    )
-    per_vid = checked.groupBy("video_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_sampled"),
-        F.sum("frame_idx").cast("long").alias("idx_sum"),
-        F.min("c.dims_ok").alias("dims_ok"),
-        F.min("c.fidelity_ok").alias("fidelity_ok"),
-    )
-    return (
-        meta.join(per_vid, "video_id", "left")
-        .select(
-            F.col("video_id").alias("p_partkey"),
-            F.when(F.col("m.width").isNull(), F.lit("unreadable"))
-            .otherwise(F.lit("ok"))
-            .alias("status"),
-            F.col("m.width").alias("width"),
-            F.col("m.height").alias("height"),
-            F.col("m.fps").alias("fps"),
-            F.col("m.n_frames").alias("n_frames"),
-            "n_sampled",
-            "idx_sum",
-            "dims_ok",
-            "fidelity_ok",
-        )
-        .transform(_pin_for_sort)
-        .orderBy("p_partkey")
-    )
-
-
-M21_SQL = """
-WITH base AS (
-  SELECT p_partkey,
-         CASE WHEN p_partkey % 89 = 0 THEN NULL
-              ELSE CAST(16 + (p_size % 12) * 4 AS INT) END AS w,
-         CASE WHEN p_partkey % 89 = 0 THEN NULL
-              ELSE CAST(12 + (p_size % 8) * 4 AS INT) END AS h,
-         CAST(12 + (p_size % 3) * 6 AS INT) AS fps,
-         CAST(3 + p_size % 6 AS INT) AS n
-  FROM part
-  WHERE p_partkey % 25 = 7
-)
-SELECT p_partkey,
-       CASE WHEN w IS NULL THEN 'unreadable' ELSE 'ok' END AS status,
-       w AS width,
-       h AS height,
-       CASE WHEN w IS NULL THEN NULL ELSE fps END AS fps,
-       CASE WHEN w IS NULL THEN NULL ELSE n END AS n_frames,
-       CAST(CASE WHEN w IS NULL THEN NULL ELSE (n + 1) // 2 END AS BIGINT)
-         AS n_sampled,
-       CAST(CASE WHEN w IS NULL THEN NULL
-                 ELSE ((n + 1) // 2) * ((n + 1) // 2 - 1) END AS BIGINT)
-         AS idx_sum,
-       CASE WHEN w IS NULL THEN NULL ELSE TRUE END AS dims_ok,
-       CASE WHEN w IS NULL THEN NULL ELSE TRUE END AS fidelity_ok
-FROM base
-ORDER BY p_partkey
-"""
-
-QUERIES["m21_mov_frame_sample"] = m21_mov_frame_sample
-ORACLES["m21_mov_frame_sample"] = M21_SQL
-
-
-# --------------------------------------------------------------------------
-# M22 — REAL video frame sampling in the THIRD container layout:
-# MJPEG-in-FRAGMENTED-MP4 (multimodal/fmp4.py — the moof/mfhd/tfhd/
-# tfdt/trun movie-fragment machinery over the same ISO-BMFF box walk
-# mov.py hand-parses; VERDICT r9 #6). This is the layout streaming
-# corpora actually arrive in (DASH/HLS/CMAF segments): the moov's
-# sample tables are EMPTY and every sample is addressed by per-
-# fragment trun entries relative to a tfhd base. Same m20/m21
-# discipline end-to-end: container metadata, sampled-index set,
-# per-frame JPEG dims, and the fidelity gate are oracle-exact; the
-# same _avi_frame_checks UDF applies because make_fmp4 shares the
-# make_avi/make_mov seed contract. Corrupt rows are a REAL fmp4
-# truncated mid-mdat — the final trun's (offset, size) slice lands
-# past EOF, exercising the fragment walker's bounds guard (deeper
-# than a garbage-moov magic check). Disjoint part slice (% 25 == 11
-# vs m20's == 0 and m21's == 7); corrupt stripe % 83.
-# --------------------------------------------------------------------------
-@pandas_udf(T.BinaryType())
-def _gen_fmp4(w: pd.Series, h: pd.Series, fps: pd.Series, n: pd.Series, seed: pd.Series) -> pd.Series:
-    from ..multimodal.fmp4 import make_fmp4
-
-    return pd.Series(
-        [
-            None
-            if pd.isna(a)
-            else make_fmp4(int(a), int(b), int(f), int(k), int(s))
-            for a, b, f, k, s in zip(w, h, fps, n, seed)
-        ],
-        dtype=object,
-    )
-
-
-def _fmp4_corrupt_literal() -> bytes:
-    """A structurally plausible fragmented MP4 whose final mdat is
-    truncated: ftyp/moov/mvex all parse, the last trun's sample slice
-    points past EOF — the deepest unreadable path in fmp4._fragments."""
-    from ..multimodal.fmp4 import make_fmp4
-
-    return make_fmp4(16, 12, 12, 3, seed=7)[:-10]
-
-
-def _fmp4_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = _widen(load(spark, sf_dir, "part").filter(F.col("p_partkey") % 25 == 11))
-    corrupt = F.col("p_partkey") % 83 == 0
-    w = (16 + F.pmod(F.col("p_size"), F.lit(12)) * 4).cast("int")
-    h = (12 + F.pmod(F.col("p_size"), F.lit(8)) * 4).cast("int")
-    fps = (12 + F.pmod(F.col("p_size"), F.lit(3)) * 6).cast("int")
-    n = (3 + F.pmod(F.col("p_size"), F.lit(6))).cast("int")
-    seed = F.pmod(F.col("p_partkey"), F.lit(251)).cast("int")
-    return part.select(
-        F.col("p_partkey").alias("video_id"),
-        F.when(corrupt, F.lit(_fmp4_corrupt_literal()))
-        .otherwise(_gen_fmp4(w, h, fps, n, seed))
-        .alias("content"),
-    )
-
-
-def m22_fmp4_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..multimodal.av import sample_frames, video_metadata
-
-    # single-generation pin — see m20 (two branches, one gen pass)
-    vids = _fmp4_corpus(spark, sf_dir).localCheckpoint(eager=False)
-    meta = vids.select("video_id", video_metadata(F.col("content")).alias("m"))
-    frames = sample_frames(vids, id_col="video_id", every_n=2)
-    checked = frames.select(
-        "video_id",
-        "frame_idx",
-        _avi_frame_checks(
-            F.col("frame"), F.col("width"), F.col("height"),
-            F.col("video_id"), F.col("frame_idx"),
-        ).alias("c"),
-    )
-    per_vid = checked.groupBy("video_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_sampled"),
-        F.sum("frame_idx").cast("long").alias("idx_sum"),
-        F.min("c.dims_ok").alias("dims_ok"),
-        F.min("c.fidelity_ok").alias("fidelity_ok"),
-    )
-    return (
-        meta.join(per_vid, "video_id", "left")
-        .select(
-            F.col("video_id").alias("p_partkey"),
-            F.when(F.col("m.width").isNull(), F.lit("unreadable"))
-            .otherwise(F.lit("ok"))
-            .alias("status"),
-            F.col("m.width").alias("width"),
-            F.col("m.height").alias("height"),
-            F.col("m.fps").alias("fps"),
-            F.col("m.n_frames").alias("n_frames"),
-            "n_sampled",
-            "idx_sum",
-            "dims_ok",
-            "fidelity_ok",
-        )
-        .transform(_pin_for_sort)
-        .orderBy("p_partkey")
-    )
-
-
-M22_SQL = """
-WITH base AS (
-  SELECT p_partkey,
-         CASE WHEN p_partkey % 83 = 0 THEN NULL
-              ELSE CAST(16 + (p_size % 12) * 4 AS INT) END AS w,
-         CASE WHEN p_partkey % 83 = 0 THEN NULL
-              ELSE CAST(12 + (p_size % 8) * 4 AS INT) END AS h,
-         CAST(12 + (p_size % 3) * 6 AS INT) AS fps,
-         CAST(3 + p_size % 6 AS INT) AS n
-  FROM part
-  WHERE p_partkey % 25 = 11
-)
-SELECT p_partkey,
-       CASE WHEN w IS NULL THEN 'unreadable' ELSE 'ok' END AS status,
-       w AS width,
-       h AS height,
-       CASE WHEN w IS NULL THEN NULL ELSE fps END AS fps,
-       CASE WHEN w IS NULL THEN NULL ELSE n END AS n_frames,
-       CAST(CASE WHEN w IS NULL THEN NULL ELSE (n + 1) // 2 END AS BIGINT)
-         AS n_sampled,
-       CAST(CASE WHEN w IS NULL THEN NULL
-                 ELSE ((n + 1) // 2) * ((n + 1) // 2 - 1) END AS BIGINT)
-         AS idx_sum,
-       CASE WHEN w IS NULL THEN NULL ELSE TRUE END AS dims_ok,
-       CASE WHEN w IS NULL THEN NULL ELSE TRUE END AS fidelity_ok
-FROM base
-ORDER BY p_partkey
-"""
-
-QUERIES["m22_fmp4_frame_sample"] = m22_fmp4_frame_sample
-ORACLES["m22_fmp4_frame_sample"] = M22_SQL
-
-
-# --------------------------------------------------------------------------
-# M23 — REAL video frame sampling in the FOURTH container layout:
-# MJPEG-in-MKV (multimodal/mkv.py — the EBML/Matroska tag-length-value
-# element tree, the third container *family* after RIFF and ISO-BMFF;
-# VERDICT r9 "what's missing" #3 closes here). Same m20/m21/m22
-# discipline end-to-end: container metadata, sampled-index set,
-# per-frame JPEG dims, and the fidelity gate are oracle-exact; the
-# same _avi_frame_checks UDF applies because make_mkv shares the
-# make_avi/make_mov seed contract. Corrupt rows are a REAL mkv
-# truncated mid-cluster — the Segment's declared size lands past EOF,
-# exercising the EBML walker's size-bound guard (deeper than a magic
-# check). Disjoint part slice (% 25 == 14 vs m20's == 0, m21's == 7,
-# m22's == 11); corrupt stripe % 79.
-# --------------------------------------------------------------------------
-@pandas_udf(T.BinaryType())
-def _gen_mkv(w: pd.Series, h: pd.Series, fps: pd.Series, n: pd.Series, seed: pd.Series) -> pd.Series:
-    from ..multimodal.mkv import make_mkv
-
-    return pd.Series(
-        [
-            None
-            if pd.isna(a)
-            else make_mkv(int(a), int(b), int(f), int(k), int(s))
-            for a, b, f, k, s in zip(w, h, fps, n, seed)
-        ],
-        dtype=object,
-    )
-
-
-def _mkv_corrupt_literal() -> bytes:
-    """A REAL mkv truncated mid-cluster: the Segment's declared size
-    points past EOF, so the EBML walker's bound guard abstains."""
-    from ..multimodal.mkv import make_mkv
-
-    whole = make_mkv(16, 12, 12, 3, seed=5)
-    return whole[: len(whole) - 40]
-
-
-def _mkv_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = _widen(load(spark, sf_dir, "part").filter(F.col("p_partkey") % 25 == 14))
-    corrupt = F.col("p_partkey") % 79 == 0
-    w = (16 + F.pmod(F.col("p_size"), F.lit(12)) * 4).cast("int")
-    h = (12 + F.pmod(F.col("p_size"), F.lit(8)) * 4).cast("int")
-    fps = (12 + F.pmod(F.col("p_size"), F.lit(3)) * 6).cast("int")
-    n = (3 + F.pmod(F.col("p_size"), F.lit(6))).cast("int")
-    seed = F.pmod(F.col("p_partkey"), F.lit(251)).cast("int")
-    return part.select(
-        F.col("p_partkey").alias("video_id"),
-        F.when(corrupt, F.lit(_mkv_corrupt_literal()))
-        .otherwise(_gen_mkv(w, h, fps, n, seed))
-        .alias("content"),
-    )
-
-
-def m23_mkv_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..multimodal.av import sample_frames, video_metadata
-
-    # single-generation pin — see m20 (two branches, one gen pass)
-    vids = _mkv_corpus(spark, sf_dir).localCheckpoint(eager=False)
-    meta = vids.select("video_id", video_metadata(F.col("content")).alias("m"))
-    frames = sample_frames(vids, id_col="video_id", every_n=2)
-    checked = frames.select(
-        "video_id",
-        "frame_idx",
-        _avi_frame_checks(
-            F.col("frame"), F.col("width"), F.col("height"),
-            F.col("video_id"), F.col("frame_idx"),
-        ).alias("c"),
-    )
-    per_vid = checked.groupBy("video_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_sampled"),
-        F.sum("frame_idx").cast("long").alias("idx_sum"),
-        F.min("c.dims_ok").alias("dims_ok"),
-        F.min("c.fidelity_ok").alias("fidelity_ok"),
-    )
-    return (
-        meta.join(per_vid, "video_id", "left")
-        .select(
-            F.col("video_id").alias("p_partkey"),
-            F.when(F.col("m.width").isNull(), F.lit("unreadable"))
-            .otherwise(F.lit("ok"))
-            .alias("status"),
-            F.col("m.width").alias("width"),
-            F.col("m.height").alias("height"),
-            F.col("m.fps").alias("fps"),
-            F.col("m.n_frames").alias("n_frames"),
-            "n_sampled",
-            "idx_sum",
-            "dims_ok",
-            "fidelity_ok",
-        )
-        .transform(_pin_for_sort)
-        .orderBy("p_partkey")
-    )
-
-
-M23_SQL = """
-WITH base AS (
-  SELECT p_partkey,
-         CASE WHEN p_partkey % 79 = 0 THEN NULL
-              ELSE CAST(16 + (p_size % 12) * 4 AS INT) END AS w,
-         CASE WHEN p_partkey % 79 = 0 THEN NULL
-              ELSE CAST(12 + (p_size % 8) * 4 AS INT) END AS h,
-         CAST(12 + (p_size % 3) * 6 AS INT) AS fps,
-         CAST(3 + p_size % 6 AS INT) AS n
-  FROM part
-  WHERE p_partkey % 25 = 14
-)
-SELECT p_partkey,
-       CASE WHEN w IS NULL THEN 'unreadable' ELSE 'ok' END AS status,
-       w AS width,
-       h AS height,
-       CASE WHEN w IS NULL THEN NULL ELSE fps END AS fps,
-       CASE WHEN w IS NULL THEN NULL ELSE n END AS n_frames,
-       CAST(CASE WHEN w IS NULL THEN NULL ELSE (n + 1) // 2 END AS BIGINT)
-         AS n_sampled,
-       CAST(CASE WHEN w IS NULL THEN NULL
-                 ELSE ((n + 1) // 2) * ((n + 1) // 2 - 1) END AS BIGINT)
-         AS idx_sum,
-       CASE WHEN w IS NULL THEN NULL ELSE TRUE END AS dims_ok,
-       CASE WHEN w IS NULL THEN NULL ELSE TRUE END AS fidelity_ok
-FROM base
-ORDER BY p_partkey
-"""
-
-QUERIES["m23_mkv_frame_sample"] = m23_mkv_frame_sample
-ORACLES["m23_mkv_frame_sample"] = M23_SQL
+for _name, (_slice, _stripe, _gen, _corrupt) in _VIDEO_FAMILY.items():
+    QUERIES[_name] = functools.partial(_video_frame_sample, name=_name)
+    ORACLES[_name] = _VIDEO_SQL.format(stripe=_stripe, part_slice=_slice)

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.strings import size_kb
+
 IMAGE_GLOB = "*.{jpg,jpeg,png,webp,bmp}"  # EXTENSIONS, test.py:38
 
 
@@ -38,5 +40,5 @@ def with_partition_keys(files: DataFrame) -> DataFrame:
         files.withColumn("nama_file", F.element_at(parts, -1))
         .withColumn("minggu", F.element_at(parts, -2))
         .withColumn("kode_proyek", F.element_at(parts, -3))
-        .withColumn("size_gambar_kb", F.round(F.col("length") / 1024.0, 2))
+        .withColumn("size_gambar_kb", size_kb(F.col("length")))
     )

@@ -7,13 +7,14 @@ driver-side parse into a ``session.local_frame`` with an explicit
 schema (a JVM LocalRelation, scanned without Python tasks), NOT a
 distributed source.
 
-Two engines, tried in order:
-  1. pandas + openpyxl when importable (full xlsx feature coverage);
-  2. a stdlib fallback (zipfile + xml.etree) good enough for the plain
-     tabular sheets Forms exports produce — shared strings, inline
-     strings, numeric cells; first row is the header. This keeps the
-     source usable (and the reference fixture ingestible) in containers
-     without an xlsx engine.
+One parser, stdlib only (zipfile + xml.etree), good enough for the
+plain tabular sheets Forms exports produce: shared strings, inline
+strings, numeric cells; first row is the header. No xlsx engine is
+needed, and every container renders a workbook the same way, so the
+composite keys built from its cells do not depend on what is
+installed (pandas+openpyxl would name a blank header `Unnamed: N`
+where this parser says `colN`, and render a date cell as a timestamp
+where this parser keeps the serial number).
 """
 
 from __future__ import annotations
@@ -130,6 +131,18 @@ def _read_xlsx_stdlib(path: str, sheet_name: int | str = 0) -> tuple[list[str], 
     return header, grid[1:]
 
 
+def _check_no_duplicate_headers(header: list[str]) -> None:
+    """Duplicate header names would silently resolve to the LAST
+    occurrence in the positional lookup — fail loudly instead
+    (ADVICE r3)."""
+    dups = sorted({h for h in header if header.count(h) > 1})
+    if dups:
+        raise ValueError(
+            f"duplicate xlsx header names {dups}: rename the columns or "
+            "provide an explicit schema selecting distinct names"
+        )
+
+
 def read_excel(
     spark: SparkSession,
     path: str,
@@ -137,16 +150,8 @@ def read_excel(
     schema: T.StructType | None = None,
     sheet_name: int | str = 0,
 ) -> DataFrame:
-    try:
-        import openpyxl  # noqa: F401
-        import pandas as pd
-
-        pdf = pd.read_excel(path, sheet_name=sheet_name, dtype=str)
-        header = list(pdf.columns)
-        rows = [[None if pd.isna(v) else str(v) for v in r] for r in pdf.itertuples(index=False)]
-    except ImportError:
-        header, rows = _read_xlsx_stdlib(path, sheet_name)
-
+    header, rows = _read_xlsx_stdlib(path, sheet_name)
+    _check_no_duplicate_headers(header)
     if schema is not None:
         pos = {name: i for i, name in enumerate(header)}
         missing = [f.name for f in schema.fields if f.name not in pos]

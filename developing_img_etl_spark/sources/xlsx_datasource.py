@@ -47,7 +47,7 @@ class XlsxDataSource(DataSource):
         # stops at the first </row> — ADVICE r3: the earlier form parsed
         # the whole workbook driver-side). Runs driver-side once;
         # executors re-parse their own files only.
-        from .excel import read_xlsx_header
+        from .excel import _check_no_duplicate_headers, read_xlsx_header
 
         header = read_xlsx_header(_paths(self.options)[0])
         _check_no_duplicate_headers(header)
@@ -55,18 +55,6 @@ class XlsxDataSource(DataSource):
 
     def reader(self, schema: StructType) -> DataSourceReader:
         return _XlsxReader(schema, _paths(self.options))
-
-
-def _check_no_duplicate_headers(header: list[str]) -> None:
-    """Duplicate header names would silently resolve to the LAST
-    occurrence in the positional lookup — fail loudly instead
-    (ADVICE r3)."""
-    dups = sorted({h for h in header if header.count(h) > 1})
-    if dups:
-        raise ValueError(
-            f"duplicate xlsx header names {dups}: rename the columns or "
-            "provide an explicit schema selecting distinct names"
-        )
 
 
 def _paths(options) -> list[str]:
@@ -92,7 +80,7 @@ class _XlsxReader(DataSourceReader):
         return [_XlsxPartition(p) for p in self.paths]
 
     def read(self, partition: _XlsxPartition):
-        from .excel import _read_xlsx_stdlib
+        from .excel import _check_no_duplicate_headers, _read_xlsx_stdlib
 
         header, rows = _read_xlsx_stdlib(partition.path)
         _check_no_duplicate_headers(header)

@@ -8,8 +8,8 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from developing_img_etl_spark.multimodal.av import decode_video
 from developing_img_etl_spark.multimodal.avi import (
-    avi_decode,
     avi_encode,
     avi_frames,
     avi_meta,
@@ -37,7 +37,7 @@ def test_avi_header_roundtrip(w, h, fps, n, seed):
 
 def test_avi_decode_fidelity():
     data = make_avi(48, 32, 24, 5, seed=9)
-    fps, frames = avi_decode(data)
+    fps, frames = decode_video(data)
     assert fps == 24 and len(frames) == 5
     for i, dec in enumerate(frames):
         expected = make_photo(48, 32, (9 + 31 * i) % 251)
@@ -55,7 +55,7 @@ def test_avi_guards():
     assert avi_meta(b"RIFF\x00\x00\x00\x00WAVE") is None  # wrong RIFF form
     assert avi_meta(b"RIFF\x00\x00\x00\x00AVI corrupt-body") is None
     assert avi_meta(good[:40]) is None  # truncated inside hdrl
-    assert avi_decode(good[: len(good) // 3]) is None
+    assert decode_video(good[: len(good) // 3]) is None
     # a non-MJPG stream must be unreadable, not misdecoded
     bad = bytearray(good)
     i = good.find(b"MJPG")

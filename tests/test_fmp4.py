@@ -10,8 +10,8 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from developing_img_etl_spark.multimodal.av import decode_video
 from developing_img_etl_spark.multimodal.fmp4 import (
-    fmp4_decode,
     fmp4_encode,
     fmp4_frames,
     fmp4_meta,
@@ -42,7 +42,7 @@ def test_fmp4_header_roundtrip(w, h, fps, n, seed):
 
 def test_fmp4_decode_fidelity():
     data = make_fmp4(48, 32, 24, 5, seed=9)
-    fps, frames = fmp4_decode(data)
+    fps, frames = decode_video(data)
     assert fps == 24 and len(frames) == 5
     for k, dec in enumerate(frames):
         expected = make_photo(48, 32, (9 + 31 * k) % 251)

@@ -90,6 +90,22 @@ def test_excel_source_stdlib_fallback(spark, tmp_path):
     assert got == {("1", "x"), ("2", None)}
 
 
+def test_excel_source_rejects_duplicate_headers(spark, tmp_path):
+    """A repeated header name is an error, with or without a schema:
+    the by-name lookup would otherwise read the last duplicate."""
+    from pyspark.sql import types as T
+
+    from developing_img_etl_spark.sources.excel import read_excel
+
+    p = str(tmp_path / "dup.xlsx")
+    _write_minimal_xlsx(p, ["a", "b", "a"], [["1", "x", "2"]])
+    schema = T.StructType([T.StructField("a", T.StringType())])
+    with pytest.raises(ValueError, match="duplicate xlsx header names"):
+        read_excel(spark, p, schema=schema)
+    with pytest.raises(ValueError, match="duplicate xlsx header names"):
+        read_excel(spark, p)
+
+
 def test_excel_source_cells_without_refs(spark, tmp_path):
     """Cells may legally omit the r= reference; the parser must fall
     back to a running column index instead of crashing."""

@@ -6,20 +6,25 @@ from __future__ import annotations
 import struct
 
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from developing_img_etl_spark.multimodal.av import _CONTAINERS, _decode_video_meta, decode_video
+from developing_img_etl_spark.multimodal.avi import avi_meta
+from developing_img_etl_spark.multimodal.fmp4 import fmp4_meta
 from developing_img_etl_spark.multimodal.jpeg import jpeg_dims, jpeg_encode, make_photo
 from developing_img_etl_spark.multimodal.mkv import (
     _el,
     _esize,
     _read_vint,
     make_mkv,
-    mkv_decode,
     mkv_encode,
     mkv_frames,
     mkv_meta,
 )
+from developing_img_etl_spark.multimodal.mov import mov_meta
+from developing_img_etl_spark.queries.multimodal import _VIDEO_FAMILY
 
 
 # ------------------------------------------------------- EBML primitives
@@ -62,7 +67,7 @@ def test_mkv_payloads_byte_exact():
 
 def test_mkv_decode_fidelity():
     data = make_mkv(48, 32, 24, 5, seed=9)
-    fps, frames = mkv_decode(data)
+    fps, frames = decode_video(data)
     assert fps == 24 and len(frames) == 5
     for k, dec in enumerate(frames):
         expected = make_photo(48, 32, (9 + 31 * k) % 251)
@@ -204,16 +209,28 @@ def test_webm_doctype_accepted():
     assert mkv_meta(patched) == (16, 12, 12, 2)
 
 
-def test_mkv_corrupt_literal_abstains():
-    from developing_img_etl_spark.queries.multimodal import _mkv_corrupt_literal
+_OWN_META = {
+    "m20_avi_frame_sample": avi_meta,
+    "m21_mov_frame_sample": mov_meta,
+    "m22_fmp4_frame_sample": fmp4_meta,
+    "m23_mkv_frame_sample": mkv_meta,
+}
 
-    assert mkv_meta(_mkv_corrupt_literal()) is None
+
+@pytest.mark.parametrize("name", list(_VIDEO_FAMILY))
+def test_video_corrupt_literal_abstains(name):
+    """Each m20-m23 corrupt literal opens like its container, so the
+    guard it exercises is inside that container's parser, which rejects
+    it; the routed metadata path then rejects it too."""
+    literal = _VIDEO_FAMILY[name][3]()
+    own_meta = _OWN_META[name]
+    assert any(match(literal) for match, meta, _frames in _CONTAINERS if meta is own_meta)
+    assert own_meta(literal) is None
+    assert _decode_video_meta(literal) is None
 
 
 # -------------------------------------------------------------- routing
 def test_av_surface_routes_mkv():
-    from developing_img_etl_spark.multimodal.av import _decode_video_meta
-
     data = make_mkv(20, 16, 18, 3, seed=11)
     assert _decode_video_meta(data) == (20, 16, 18, 3)
     # the other families still route to their own decoders

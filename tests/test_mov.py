@@ -9,10 +9,10 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from developing_img_etl_spark.multimodal.av import decode_video
 from developing_img_etl_spark.multimodal.jpeg import jpeg_dims, make_photo
 from developing_img_etl_spark.multimodal.mov import (
     make_mov,
-    mov_decode,
     mov_encode,
     mov_frames,
     mov_meta,
@@ -38,7 +38,7 @@ def test_mov_header_roundtrip(w, h, fps, n, seed):
 
 def test_mov_decode_fidelity():
     data = make_mov(48, 32, 24, 5, seed=9)
-    fps, frames = mov_decode(data)
+    fps, frames = decode_video(data)
     assert fps == 24 and len(frames) == 5
     for k, dec in enumerate(frames):
         expected = make_photo(48, 32, (9 + 31 * k) % 251)

@@ -11,6 +11,7 @@ per-example-deterministic in time).
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -119,6 +120,20 @@ def test_stdlib_xlsx_roundtrip(spark, tmp_path_factory, tbl):
     assert got_norm == norm
 
 
+def _assert_capped(out: bytes, w: int, h: int, max_dim: int) -> None:
+    """_recompress output obeys the cap and preserves aspect within the
+    reference's int-truncation arithmetic (test.py:52-53)."""
+    from developing_img_etl_spark.multimodal import image as IMG
+
+    ow, oh = IMG._decode_dims(out)
+    assert max(ow, oh) <= max_dim
+    if max(w, h) <= max_dim:
+        assert (ow, oh) == (w, h)
+    else:
+        scale = max_dim / float(max(w, h))
+        assert (ow, oh) == (max(int(w * scale), 1), max(int(h * scale), 1))
+
+
 @given(st.integers(1, 3000), st.integers(1, 3000), st.integers(0, 1000))
 @SET
 def test_bmp_recompress_properties(w, h, seed):
@@ -134,13 +149,35 @@ def test_bmp_recompress_properties(w, h, seed):
     assert np.array_equal(bmp.bmp_decode(bmp.bmp_encode(bmp.bmp_decode(data))), bmp.bmp_decode(data))
 
     out = IMG._recompress(data, IMG.MAX_DIM, IMG.JPEG_QUALITY)
-    ow, oh = IMG._decode_dims(out)
-    assert max(ow, oh) <= IMG.MAX_DIM
+    _assert_capped(out, w, h, IMG.MAX_DIM)
     if max(w, h) <= IMG.MAX_DIM:
-        assert (ow, oh) == (w, h) and bytes(out) == data  # lossless no-op
-    else:
-        scale = IMG.MAX_DIM / float(max(w, h))
-        assert (ow, oh) == (max(int(w * scale), 1), max(int(h * scale), 1))
+        assert bytes(out) == data  # lossless no-op
+
+
+@pytest.mark.parametrize("fmt", ["png", "gif", "jpeg"])
+@given(st.integers(1, 48), st.integers(1, 48), st.integers(1, 32), st.integers(0, 250))
+@SET
+def test_recompress_properties_per_format(fmt, w, h, max_dim, seed):
+    """The same cap/aspect property for the other `_CODECS` rows, at
+    small sizes under a small cap. Output keeps the input's format;
+    the lossless rows keep every pixel when under the cap."""
+    import numpy as np
+
+    from developing_img_etl_spark.multimodal import gif, jpeg, png
+    from developing_img_etl_spark.multimodal import image as IMG
+
+    make, decode = {
+        "png": (png.make_png, png.png_decode),
+        "gif": (gif.make_gif, gif.gif_decode),
+        "jpeg": (lambda w, h, s: jpeg.jpeg_encode(jpeg.make_photo(w, h, s)), jpeg.jpeg_decode),
+    }[fmt]
+    data = make(w, h, seed)
+    out = IMG._recompress(data, max_dim, IMG.JPEG_QUALITY)
+    _assert_capped(out, w, h, max_dim)
+    arr = decode(out)
+    assert arr is not None and arr.shape[:2] == IMG._decode_dims(out)[::-1]
+    if fmt != "jpeg" and max(w, h) <= max_dim:
+        assert np.array_equal(arr, decode(data))
 
 
 @given(
