@@ -24,12 +24,26 @@ quantization), standard Annex K Huffman tables, quality via the IJG
 scaling curve — deterministic bytes for fixed pixels, so encoded
 output is stable across runs/partitions.
 
-Entropy coding is per-symbol Python over a peek-16 LUT (decode) and a
-dict-coded bit writer (encode); DCT/IDCT, color transforms, sampling
-and quantization are vectorized numpy over all blocks at once. In the
-engine this runs inside Arrow-batched pandas UDFs (mapInPandas), so
-the per-image cost parallelizes across executors exactly like the
-real libjpeg path a deployment would plug into the same seam.
+Entropy decoding has two paths with one answer. Every baseline scan
+is cut into chunks of about 256 bits with one numpy lane each (a
+shorter scan is one lane), and every step moves all lanes by one
+Huffman symbol (state: bit position, MCU slot, coefficient index) with
+one packed-table gather. Lanes start from a guess; runs from the exits
+they leave go on until they reach a state some run recorded, after
+which the decode is that run's. Huffman codes resynchronize on their
+own (Weißenberger & Schmidt, ICPP 2018), so no restart markers are
+needed.
+The true path is then read off the recorded steps and scattered into
+the coefficient grids in one vectorized pass. Only DC tables past
+baseline's size limit, and paths still not joined after a few rounds,
+fall back to the sequential walk, one symbol at a time over a peek-16
+LUT. Both give the same coefficients, so the pixels are identical
+whichever path ran. The encoder's entropy coder is vectorized too;
+DCT/IDCT, color transforms, sampling and quantization are numpy over
+all blocks at once. In the engine this runs inside Arrow-batched
+pandas UDFs (mapInPandas), so the per-image cost parallelizes across
+executors exactly like the real libjpeg path a deployment would plug
+into the same seam.
 """
 
 from __future__ import annotations
@@ -136,8 +150,11 @@ _AC_CHROMA = (
 # decoder's PERSISTENT per-pixel footprint is larger: int32 coefficient
 # grids (4 B) + float64 plane (8 B) per component ≈ 36 B/pixel for
 # 4:4:4 color vs PNG's ~4 B — 24 MP bounds the decode at ~0.9 GB while
-# still covering any sane photo corpus (the IDCT temporaries are
-# chunk-bounded separately, see _decode_scan).
+# still covering any sane photo corpus. The lane entropy decoder adds
+# an 8 B/block index table (~0.4 B/pixel at 4:4:4); its per-bit arrays
+# and step records live for one window of _LANE_WINDOW lanes (about
+# 1 Mbit of scan, tens of MB) whatever the image size, and the IDCT
+# temporaries are chunk-bounded (see _pixels).
 _MAX_PIXELS = 24_000_000
 
 # orthonormal DCT-II basis: _DCT_M[u, x] = a(u) cos((2x+1)uπ/16)
@@ -228,37 +245,29 @@ def jpeg_dims(data: bytes) -> tuple[int, int] | None:
 # --------------------------------------------------------------------------
 # Decoder
 # --------------------------------------------------------------------------
-def _extend(v: int, s: int) -> int:
-    return v if v >= (1 << (s - 1)) else v - (1 << s) + 1
-
-
-def _split_scan(data: bytes, start: int) -> tuple[list[bytes], int] | None:
+def _split_scan(data: bytes, start: int) -> tuple[list[bytes], int]:
     """Destuff the entropy-coded scan from ``start``; split at RST
-    markers. Returns (segments, pos_after_scan)."""
-    segs: list[bytes] = []
-    cur = bytearray()
-    i = start
-    n = len(data)
-    while i < n:
-        b = data[i]
-        if b != 0xFF:
-            cur.append(b)
-            i += 1
-            continue
-        if i + 1 >= n:
-            break
-        m = data[i + 1]
-        if m == 0x00:
-            cur.append(0xFF)
-            i += 2
-        elif 0xD0 <= m <= 0xD7:
-            segs.append(bytes(cur))
-            cur = bytearray()
-            i += 2
-        else:  # real marker: end of scan
-            break
-    segs.append(bytes(cur))
-    return segs, i
+    markers. Returns (segments, pos_after_scan).
+
+    Every 0xFF in the scan is read in order: FF00 is a stuffed 0xFF,
+    FFD0-FFD7 a restart marker, anything else (or a trailing lone FF,
+    which sees itself as its successor) ends the scan. The bytes a pair
+    skips (00, D0-D7) are never 0xFF, so classifying every 0xFF
+    position at once gives the byte loop's answer."""
+    buf = np.frombuffer(data, dtype=np.uint8)[start:]
+    ff = np.flatnonzero(buf == 0xFF)
+    nxt = buf[np.minimum(ff + 1, len(buf) - 1)]
+    rst = (nxt >= 0xD0) & (nxt <= 0xD7)
+    stop = np.flatnonzero((nxt != 0x00) & ~rst)
+    end = int(ff[stop[0]]) if len(stop) else len(buf)
+    stuffed, rst = ff[(ff < end) & (nxt == 0x00)], ff[(ff < end) & rst]
+    keep = np.ones(end, dtype=bool)
+    keep[np.concatenate((stuffed + 1, rst, rst + 1))] = False
+    # restart markers become cut points in the destuffed bytes
+    cuts = np.cumsum(keep)[rst].tolist()
+    body = buf[:end][keep].tobytes()
+    bounds = [0, *cuts, len(body)]
+    return [body[a:b] for a, b in zip(bounds[:-1], bounds[1:])], start + end
 
 
 def jpeg_decode(data: bytes) -> np.ndarray | None:
@@ -274,7 +283,7 @@ def _decode_inner(data: bytes) -> np.ndarray | None:
     if len(data) < 4 or data[0:2] != b"\xff\xd8":
         return None
     qt: dict[int, np.ndarray] = {}
-    huff: dict[tuple[int, int], np.ndarray] = {}
+    huff: dict[tuple[int, int], tuple[list[int], list[int]]] = {}  # (BITS, HUFFVAL)
     frame = None  # (w, h, comps) with comps = [(cid, hi, vi, tq)]
     restart = 0
     i = 2
@@ -309,7 +318,7 @@ def _decode_inner(data: bytes) -> np.ndarray | None:
                 vals = list(seg[p + 17 : p + 17 + nv])
                 if len(vals) < nv:
                     return None
-                huff[(tc, th)] = _decode_lut(bits, vals)
+                huff[(tc, th)] = (bits, vals)
                 p += 17 + nv
         elif marker == 0xC0 or marker == 0xC1:  # baseline / ext sequential
             prec = seg[0]
@@ -365,46 +374,75 @@ def _decode_scan(frame, scomp, qt, huff, restart, segs) -> np.ndarray | None:
     vmax = max(c[2] for c in comps)
     mcux = -(-w // (8 * hmax))
     mcuy = -(-h // (8 * vmax))
-    # per-component coefficient grids in MCU-padded block units
-    grids = []
     tables = []
     for (cid, hi, vi, tq), (scs, td, ta) in zip(comps, scomp):
         if scs != cid or tq not in qt or (0, td) not in huff or (1, ta) not in huff:
             return None
-        # int32 grids: baseline coefficients fit in 16 bits; int32
-        # halves the footprint of the naive int64 choice (bomb-cap math
-        # below assumes this)
-        grids.append(np.zeros((mcuy * vi, mcux * hi, 64), dtype=np.int32))
         tables.append((huff[(0, td)], huff[(1, ta)], qt[tq]))
-
-    # Tight inlined entropy walk (r12, guide §1.2 per-task work): the
-    # method-call _BitReader/_decode_block shape spent ~70% of decode
-    # in Python call overhead (981k calls for a 648x490 photo). Here
-    # the bit reader lives in local variables, the peek-16 LUTs are
-    # plain lists, and coefficients accumulate as (block, k, value)
-    # triplets scattered into the int32 grids with ONE numpy assignment
-    # per component — behavior (including None on corrupt streams) is
-    # unchanged and pinned by the parity suite in tests/test_jpeg.py.
-    n_mcu = mcux * mcuy
-    per_seg = restart if restart else n_mcu
-    luts = [(t[0].tolist(), t[1].tolist()) for t in tables]
-    # flat (bi, k, v) triplets per component
-    tri_b: list[list[int]] = [[] for _ in comps]
-    tri_k: list[list[int]] = [[] for _ in comps]
-    tri_v: list[list[int]] = [[] for _ in comps]
-    comp_geo = [
-        (ci, hi, vi, mcux * hi) for ci, (cid, hi, vi, tq) in enumerate(comps)
+    # per-component coefficient grids in MCU-padded block units, views
+    # of one buffer. int32: baseline coefficients fit in 16 bits; int32
+    # halves the footprint of the naive int64 choice (the _MAX_PIXELS
+    # budget assumes this)
+    shapes = [(mcuy * vi, mcux * hi) for _cid, hi, vi, _tq in comps]
+    block0 = np.cumsum([0] + [r * c for r, c in shapes])
+    buf = np.zeros(int(block0[-1]) * 64, dtype=np.int32)
+    grids = [
+        buf[64 * b0 : 64 * b1].reshape(r, c, 64)
+        for (r, c), b0, b1 in zip(shapes, block0[:-1], block0[1:])
     ]
+
+    scan = _Scan(comps, tables, mcux, mcuy * mcux, restart or mcuy * mcux, segs)
+    ok = _lane_decode(scan, buf, block0)
+    if ok is None:  # a DC table past baseline, or lanes that never met:
+        buf[:] = 0  # the walk decides
+        ok = _walk(scan, [g.reshape(-1, 64) for g in grids])
+    if not ok:
+        return None
+    return _pixels(w, h, comps, tables, grids, hmax, vmax)
+
+
+class _Scan:
+    """One scan's geometry: the MCU slots (one per data unit), the
+    segments the MCUs need and how many blocks each must yield."""
+
+    def __init__(self, comps, tables, mcux, n_mcu, per_seg, segs):
+        self.tables = tables
+        self.mcux = mcux
+        # slot -> (component, row and column inside the MCU)
+        self.slots = [
+            (ci, by, bx)
+            for ci, (_cid, hi, vi, _tq) in enumerate(comps)
+            for by in range(vi)
+            for bx in range(hi)
+        ]
+        self.geo = [(ci, hi, vi, mcux * hi) for ci, (_cid, hi, vi, _tq) in enumerate(comps)]
+        self.n_mcu = n_mcu
+        self.per_seg = per_seg
+        self.segs = segs[: -(-n_mcu // per_seg)]
+        self.complete = len(self.segs) * per_seg >= n_mcu
+
+
+def _walk(scan: _Scan, flat: list[np.ndarray]) -> bool:
+    """The sequential entropy decode: one symbol at a time over a
+    peek-16 LUT, the bit reader in local variables, coefficients kept
+    as (block, k, value) triplets and scattered into the grids with one
+    numpy assignment per component. False on a corrupt stream."""
+    mcux, n_mcu, per_seg = scan.mcux, scan.n_mcu, scan.per_seg
+    specs = {id(spec): spec for t in scan.tables for spec in t[:2]}
+    made = {key: _decode_lut(*spec).tolist() for key, spec in specs.items()}
+    luts = [(made[id(t[0])], made[id(t[1])]) for t in scan.tables]
+    # flat (bi, k, v) triplets per component
+    tri_b: list[list[int]] = [[] for _ in flat]
+    tri_k: list[list[int]] = [[] for _ in flat]
+    tri_v: list[list[int]] = [[] for _ in flat]
     mcu = 0
-    for seg in segs:
-        if mcu >= n_mcu:
-            break
+    for seg in scan.segs:
         data, ld, pos, acc, nb = seg, len(seg), 0, 0, 0
-        preds = [0] * len(comps)
+        preds = [0] * len(flat)
         end = min(mcu + per_seg, n_mcu)
         while mcu < end:
             my, mx = divmod(mcu, mcux)
-            for ci, hi, vi, rowblocks in comp_geo:
+            for ci, hi, vi, rowblocks in scan.geo:
                 dc_lut, ac_lut = luts[ci]
                 tb, tk, tv = tri_b[ci], tri_k[ci], tri_v[ci]
                 pred = preds[ci]
@@ -423,7 +461,7 @@ def _decode_scan(frame, scomp, qt, huff, restart, segs) -> np.ndarray | None:
                                 nb += 8
                         t = dc_lut[(acc >> (nb - 16)) & 0xFFFF]
                         if t < 0:
-                            return None
+                            return False
                         nb -= t & 31
                         acc &= (1 << nb) - 1
                         s = t >> 5
@@ -456,7 +494,7 @@ def _decode_scan(frame, scomp, qt, huff, restart, segs) -> np.ndarray | None:
                                     nb += 8
                             t = ac_lut[(acc >> (nb - 16)) & 0xFFFF]
                             if t < 0:
-                                return None
+                                return False
                             nb -= t & 31
                             acc &= (1 << nb) - 1
                             rs = t >> 5
@@ -468,7 +506,7 @@ def _decode_scan(frame, scomp, qt, huff, restart, segs) -> np.ndarray | None:
                                 break  # EOB
                             k += r
                             if k > 63:
-                                return None
+                                return False
                             if nb < s:
                                 while nb <= 24:
                                     if pos < ld:
@@ -487,30 +525,357 @@ def _decode_scan(frame, scomp, qt, huff, restart, segs) -> np.ndarray | None:
                 preds[ci] = pred
             mcu += 1
     if mcu < n_mcu:
-        return None
-    for ci in range(len(comps)):
+        return False
+    for ci, f in enumerate(flat):
         if tri_b[ci]:
-            grids[ci].reshape(-1, 64)[tri_b[ci], tri_k[ci]] = tri_v[ci]
+            f[tri_b[ci], tri_k[ci]] = tri_v[ci]
+    return True
 
+
+# Lane decoder. A scan is decoded by many numpy lanes in lockstep
+# instead of one Python loop: a lane's state is (bit position, MCU
+# slot, coefficient index k), and one step moves every lane by one
+# Huffman symbol with one packed-table gather.
+_LANE_BITS = 256  # destuffed scan bits per lane
+_LANE_ROUNDS = 8  # rounds of runs from open exits before the walk takes over
+_LANE_REACH = 2048  # bits a run from an exit goes before the next round
+_LANE_STEPS = 16  # steps between checks for lanes that are done
+# bytes a lane may read past the bit it stops at: the rest of one
+# check block of steps of at most 31 bits, and the 8-byte word it peeks
+_SLACK = 4 * _LANE_STEPS + 8
+_LANE_WINDOW = 4096  # lanes decoded together (about 1 Mbit of scan)
+_PAD = 24  # 0xFF bytes after each segment: the walk's fill past its end
+# A step-table entry is T | s << 6 | adv << 11: T the bits the symbol
+# takes (code and value), s its value bits, adv how far it moves k (64
+# ends the block). A prefix that is no code gets s = 31, which the
+# assembly reports as corrupt; it still moves the lane, so stepping is
+# total and deterministic.
+_BAD_STEP = 16 | (31 << 6) | (64 << 11)
+
+
+def _lane_steps(bits: list[int], vals: list[int], dc: bool) -> np.ndarray | None:
+    """A DHT table as lane step entries by peek-16 prefix, or None for a
+    DC table with sizes past baseline's 11 (such streams take the walk:
+    the lanes' int64 DC sums would wrap where the walk's Python ints
+    overflow the int32 grid and fail). Canonical codes cover the prefix
+    space from 0 up in code order, each 1 << (16 - length) prefixes, so
+    the entries are one repeat; codes past 16 bits start at or after
+    1 << 16 and are dropped, as _decode_lut drops them."""
+    ln = np.repeat(np.arange(1, 17), bits)
+    span = 1 << (16 - ln)
+    keep = np.cumsum(span) - span < 1 << 16
+    ln, span = ln[keep], span[keep]
+    sym = np.array(vals[: len(ln)], dtype=np.int64)
+    if dc:
+        if (sym > 11).any():
+            return None
+        s, adv = sym, 1
+    else:
+        r, s = sym >> 4, sym & 15
+        adv = np.where(s > 0, r + 1, np.where(r == 15, 16, 64))  # coefficient, ZRL, EOB
+    entry = np.append((ln + s) | (s << 6) | (adv << 11), _BAD_STEP)  # the rest is no code
+    return np.repeat(entry.astype(np.int32), np.append(span, (1 << 16) - span.sum()))
+
+
+def _words(chunk: bytes, n: int) -> np.ndarray:
+    """The big-endian 64-bit word that starts at each of the first n
+    bytes of ``chunk`` (which holds at least n + 7 bytes)."""
+    out = np.empty(n, dtype=np.int64)
+    for o in range(8):
+        out[o::8] = np.frombuffer(chunk, dtype=">i8", count=len(range(o, n, 8)), offset=o)
+    return out
+
+
+def _lane_decode(scan: _Scan, grid: np.ndarray, block0) -> bool | None:
+    """Entropy-decode ``scan`` into ``grid`` (every component's blocks,
+    the c-th from ``block0[c]`` on) with lockstep lanes. False on a
+    corrupt stream (the walk would fail too), None when the lanes cannot
+    decide (the caller then runs the walk).
+
+    Each destuffed segment is cut into chunks of about _LANE_BITS, one
+    lane per chunk; the first lane of a segment starts where a block
+    does, the others guess so. Lanes are decoded a window at a time
+    (_lane_window), and the window's true path is scattered into the
+    grids (_Assembly) before the next window starts from its exit."""
+    if not scan.complete:
+        return False
+    bpm = len(scan.slots)
+    parts: list[np.ndarray] = []
+    offs: dict[int, int] = {}
+    comp_off = []
+    for dc, ac, _q in scan.tables:
+        pair = []
+        for spec, is_dc in ((dc, True), (ac, False)):
+            if id(spec) not in offs:
+                steps = _lane_steps(*spec, is_dc)
+                if steps is None:
+                    return None
+                offs[id(spec)] = 65536 * len(parts)
+                parts.append(steps)
+            pair.append(offs[id(spec)])
+        comp_off.append(pair)
+    lut = np.concatenate(parts)
+    st = np.arange(bpm * 64)
+    slot_comp = np.array([s[0] for s in scan.slots])
+    toff = np.array(comp_off, dtype=np.int32)[slot_comp[st >> 6], ((st & 63) > 0).astype(np.int64)]
+    kn = (st & 63)[:, None] + np.arange(65)
+    nxt = np.where(kn >= 64, (((st >> 6) + 1) % bpm * 64)[:, None], st[:, None] + np.arange(65))
+    # lanes carry a state s (slot << 6 | k) as s * 65: the row of the
+    # next-state table that a step's k advance (0..64) indexes into
+    tabs = (lut, np.repeat(toff, 65), (nxt * 65).astype(np.int32).ravel())
+
+    pad = b"\xff" * _PAD
+    buf = pad.join(scan.segs) + b"\xff" * (_PAD + 16 + _SLACK)
+    seg_len = np.array([len(s) for s in scan.segs], dtype=np.int64)
+    seg_lo = 8 * (np.cumsum(seg_len + _PAD) - seg_len - _PAD)
+    seg_hi = seg_lo + 8 * seg_len
+    n_lanes = np.maximum(1, (seg_hi - seg_lo) // _LANE_BITS)
+    lane_seg = np.repeat(np.arange(len(seg_len)), n_lanes)
+    first = np.cumsum(n_lanes) - n_lanes
+    lane_lo = seg_lo[lane_seg] + _LANE_BITS * (np.arange(len(lane_seg)) - first[lane_seg])
+    lane_hi = np.append(lane_lo[1:], 0)
+    last = first + n_lanes - 1
+    lane_hi[last] = seg_hi + 64  # the walk reads the fill past a segment's end
+    lane_first = np.zeros(len(lane_seg), dtype=bool)
+    lane_first[first] = True
+
+    seg_mcu0 = np.arange(len(seg_len)) * scan.per_seg
+    needed = np.minimum(scan.per_seg, scan.n_mcu - seg_mcu0) * bpm
+    asm = _Assembly(scan, grid, block0, seg_lo, needed)
+    carry = (0, 0)
+    for a in range(0, len(lane_seg), _LANE_WINDOW):
+        b = min(a + _LANE_WINDOW, len(lane_seg))
+        base = int(lane_lo[a]) & ~7
+        n = ((int(lane_hi[b - 1]) + 7) >> 3) - (base >> 3) + _SLACK
+        words = _words(buf[base >> 3 : (base >> 3) + n + 8], n)
+        path = _lane_window(
+            tabs, words, lane_lo[a:b] - base, lane_hi[a:b] - base,
+            lane_first[a:b], (carry[0] - base, carry[1]),
+        )
+        if path is None:
+            return None
+        pos, steps, exit_p, exit_st = path
+        carry = (exit_p + base, exit_st)
+        ok = asm.add(pos, steps, words, base, np.arange(lane_seg[a], lane_seg[b - 1] + 1))
+        if not ok:
+            return False
+    return asm.done()
+
+
+def _lane_window(tabs, words, lo, hi, first, carry):
+    """Decode one window of lanes. Returns the bit position and
+    ``state << 18 | step entry`` of every symbol on the true path, in
+    stream order, and the state at which the path leaves the window;
+    None if the path is not joined up after _LANE_ROUNDS rounds.
+
+    Round 0 runs every lane over its own chunk from its guess. Each
+    later round starts a run at every exit that no run has recorded
+    yet; such a run goes on past chunk ends until it reaches a state
+    some run recorded (from there on the decode is that run's), its
+    segment's end, or _LANE_REACH bits (then the next round goes on
+    from there). The true path is read off by following these links
+    from the first lane of each segment."""
+    lut, toff, nxt = tabs
+    n = len(words)
+    peek = np.empty((n, 8), dtype=np.uint16)
+    for o in range(8):
+        peek[:, o] = (words >> (48 - o)) & 0xFFFF
+    peek = peek.ravel()
+    # (run << 16) | (state + 1) recorded at a bit: one array, so a bit
+    # two runs pass in one round keeps one run's state and link together
+    mark = np.zeros(8 * n, dtype=np.int64)
+    # where each lane's segment ends inside the window
+    last = np.append(np.flatnonzero(first[1:]), len(lo) - 1)
+    cap = np.repeat(hi[last], np.diff(np.append(-1, last))).astype(np.int32)
+    start = lo.astype(np.int32)
+    entry_p, entry_st = start.copy(), np.zeros(len(lo), dtype=np.int32)
+    if not first[0]:
+        entry_p[0], entry_st[0] = carry
+    limit = hi.astype(np.int32)
+    stop_p, stop_st, link = [], [], []  # link: hit run, -1 segment end, -2 open
+    succ = []  # the run started at an open exit, or -1
+    recs = []
+    n_runs = 0
+    for rnd in range(_LANE_ROUNDS + 1):
+        base = n_runs
+        n_runs += len(entry_p)
+        out_p = np.empty(len(entry_p), dtype=np.int32)
+        out_st = np.empty(len(entry_p), dtype=np.int32)
+        out_link = np.full(len(entry_p), -1, dtype=np.int32)
+        p, st, end = entry_p, entry_st, limit
+        run = np.arange(len(entry_p), dtype=np.int32)
+        rows_r, rows_p, rows_s, rows_t = [], [], [], []
+        while run.size:
+            # row i: every lane's bit position, state and step entry
+            # before its i-th step; the last rows are where they go on
+            bp = np.empty((_LANE_STEPS + 1, run.size), dtype=np.int32)
+            bs = np.empty_like(bp)
+            bt = np.empty_like(bp[1:])
+            bp[0], bs[0] = p, st
+            for i in range(_LANE_STEPS):
+                t = lut.take(toff[bs[i]] + peek[bp[i]], out=bt[i])
+                np.add(bp[i], t & 63, out=bp[i + 1])
+                nxt.take(bs[i] + (t >> 11), out=bs[i + 1])
+            p, st, bp, bs = bp[-1], bs[-1], bp[:-1], bs[:-1]
+            stop = bp >= end
+            if rnd:
+                hit = ((mark[bp] & 0xFFFF) == bs + 1) & ~stop
+                stop |= hit
+            done = stop.any(0)
+            d = np.flatnonzero(done)
+            f = stop.argmax(0)[d]
+            out_p[run[d]] = bp[f, d]
+            out_st[run[d]] = bs[f, d]
+            if rnd:
+                h = hit[f, d]
+                out_link[run[d[h]]] = mark[bp[f[h], d[h]]] >> 16
+            rows_r.append(np.broadcast_to(run, bp.shape).ravel())
+            rows_p.append(bp.ravel())
+            rows_s.append(bs.ravel())
+            rows_t.append(bt.ravel())
+            keep = ~done
+            run, p, st, end = run[keep], p[keep], st[keep], end[keep]
+        rr, rp = np.concatenate(rows_r), np.concatenate(rows_p)
+        inrun = rp < out_p[rr]
+        rr, rp = rr[inrun] + base, rp[inrun]
+        rs, rt = np.concatenate(rows_s)[inrun], np.concatenate(rows_t)[inrun]
+        mark[rp] = (rr.astype(np.int64) << 16) | (rs + 1)
+        recs.append((rr, rp, rs // 65, rt))
+        # an exit short of its segment's end is open: the next round
+        # starts a run there
+        open_ = (out_link == -1) & (out_p < cap)
+        out_link[open_] = -2
+        stop_p.append(out_p)
+        stop_st.append(out_st)
+        link.append(out_link)
+        nxt_ids = np.full(len(out_p), -1, dtype=np.int32)
+        if rnd < _LANE_ROUNDS:
+            nxt_ids[open_] = np.arange(n_runs, n_runs + int(open_.sum()))
+        succ.append(nxt_ids)
+        entry_p, entry_st, cap = out_p[open_], out_st[open_], cap[open_]
+        if not entry_p.size or rnd == _LANE_ROUNDS:
+            break
+        limit = np.minimum(entry_p + _LANE_REACH, cap).astype(np.int32)
+    stop_p, stop_st, link, succ = (np.concatenate(a).tolist() for a in (stop_p, stop_st, link, succ))
+    # Follow the links: a hit goes on with the run it hit, from the hit
+    # position; an open exit with the run started there.
+    run_lo = np.full(n_runs, 8 * n, dtype=np.int64)
+    run_hi = np.zeros(n_runs, dtype=np.int64)
+    out = (0, 0)
+    for r in ([] if first[0] else [0]) + np.flatnonzero(first).tolist():
+        at = int(start[r]) if first[r] else int(carry[0])
+        while True:
+            run_lo[r], run_hi[r] = at, stop_p[r]
+            j = link[r]
+            if j == -1:
+                out = (stop_p[r], stop_st[r])
+                break
+            at = stop_p[r]
+            r = j if j >= 0 else succ[r]
+            if r < 0:
+                return None
+    packed = np.full(8 * n, -1, dtype=np.int32)
+    for rr, rp, rs, rt in recs:
+        on = (rp >= run_lo[rr]) & (rp < run_hi[rr])
+        packed[rp[on]] = (rs[on] << 18) | rt[on]
+    pos = np.flatnonzero(packed >= 0)
+    return pos, packed[pos], out[0], out[1]
+
+
+class _Assembly:
+    """Turns the true path's steps into coefficients, window by window:
+    block ordinals and DC predictions carry across windows per segment."""
+
+    def __init__(self, scan: _Scan, grid: np.ndarray, block0, seg_lo, needed):
+        self.grid = grid.reshape(-1)  # every component's grid, one buffer
+        bpm = len(scan.slots)
+        self.bpm = bpm
+        self.comp = np.array([s[0] for s in scan.slots])
+        # block[mcu * bpm + slot]: that block's index in the buffer
+        my, mx = np.divmod(np.arange(scan.n_mcu), scan.mcux)
+        self.block = np.empty(scan.n_mcu * bpm, dtype=np.int64)
+        for slot, (ci, by, bx) in enumerate(scan.slots):
+            _ci, hi, vi, rb = scan.geo[ci]
+            self.block[slot::bpm] = block0[ci] + (my * vi + by) * rb + mx * hi + bx
+        self.seg_lo = seg_lo
+        self.needed = needed
+        self.first = np.arange(len(needed)) * scan.per_seg * bpm  # o of a segment's first block
+        self.blocks = np.zeros(len(needed), dtype=np.int64)
+        self.preds = np.zeros((len(needed), len(scan.geo)), dtype=np.int64)
+
+    def add(self, pos, steps, words, base, segs) -> bool:
+        """Scatter one window's path (segments ``segs`` in it); False if
+        it is corrupt before its segment has all its blocks."""
+        if not pos.size:
+            return True
+        heads = np.searchsorted(pos, self.seg_lo[segs] - base)
+        spans = np.diff(np.append(heads, len(pos)))
+        seg = np.repeat(segs, spans)
+        st, t = (steps >> 18).astype(np.int64), (steps & 0x3FFFF).astype(np.int64)
+        k = st & 63
+        s, adv = (t >> 6) & 31, t >> 11
+        kn = k + adv
+        ends = kn >= 64
+        before = np.cumsum(ends) - ends
+        ordinal = before - np.repeat(np.append(before, 0)[heads] - self.blocks[segs], spans)
+        live = ordinal < self.needed[seg]
+        if (live & ((s == 31) | ((s > 0) & (kn > 64)))).any():
+            return False
+        self.blocks += np.bincount(seg[live & ends], minlength=len(self.blocks))
+        if not live.all():
+            pos, seg, k, st, t, s, adv, ordinal = (
+                a[live] for a in (pos, seg, k, st, t, s, adv, ordinal)
+            )
+        v = (words[pos >> 3] >> (64 - (pos & 7) - (t & 63))) & ((1 << s) - 1)
+        v = np.where(v < (1 << s) >> 1, v - (1 << s) + 1, v)
+        block = self.block[self.first[seg] + ordinal]
+        dc = k == 0
+        comp = self.comp[st >> 6]
+        for ci in range(self.preds.shape[1]):
+            m = np.flatnonzero(dc & (comp == ci))
+            if not m.size:
+                continue
+            d, sg = v[m], seg[m]
+            head = np.searchsorted(sg, segs)
+            span = np.diff(np.append(head, len(sg)))
+            acc = np.cumsum(d)
+            start = np.append(acc - d, 0)[head] - self.preds[segs, ci]
+            v[m] = acc - np.repeat(start, span)
+            tail = head + span - 1
+            self.preds[segs[span > 0], ci] = v[m][tail[span > 0]]
+        m = np.flatnonzero(dc | (s > 0))
+        self.grid[block[m] * 64 + (k + adv - 1)[m]] = v[m]
+        return True
+
+    def done(self) -> bool | None:
+        """True once every segment yielded its blocks; None if a path ran
+        out of fill first (the walk then decides)."""
+        return True if (self.blocks == self.needed).all() else None
+
+
+# natural (row-major) index j of a block holds zigzag position _UNZIG[j]
+_UNZIG = np.argsort(ZIGZAG)
+
+
+def _pixels(w, h, comps, tables, grids, hmax, vmax) -> np.ndarray:
+    """Coefficient grids -> (h, w, 3) uint8 RGB."""
     planes = []
     for ci, (cid, hi, vi, tq) in enumerate(comps):
-        _, _, q = tables[ci]
+        q = tables[ci][2][_UNZIG].astype(np.float64)
         grid = grids[ci]
         by, bx, _ = grid.shape
         n_blk = by * bx
-        # dequant + de-zigzag + IDCT in bounded CHUNKS: the float64
-        # einsum temporaries are ~24 B/pixel, so chunking keeps the
-        # transient peak at ~8 MB regardless of image size (the
-        # _MAX_PIXELS cap then only has to budget the persistent
+        # dequantize + de-zigzag as one gather and multiply (the
+        # products are exact in float64), then the IDCT, in bounded
+        # CHUNKS: the float64 temporaries are ~24 B/pixel, so chunking
+        # keeps the transient peak at ~8 MB regardless of image size
+        # (the _MAX_PIXELS cap then only has to budget the persistent
         # int32 grid + float64 plane, ~12 B/pixel/component).
         pix = np.empty((n_blk, 8, 8), dtype=np.float64)
         zz = grid.reshape(n_blk, 64)
         for lo in range(0, n_blk, 4096):
             hi_ = min(lo + 4096, n_blk)
-            coeffs = zz[lo:hi_].astype(np.int64) * q[None, :]
-            nat = np.zeros_like(coeffs)
-            nat[:, ZIGZAG] = coeffs  # de-zigzag
-            blocks = nat.reshape(-1, 8, 8).astype(np.float64)
+            blocks = (np.take(zz[lo:hi_], _UNZIG, axis=1) * q).reshape(-1, 8, 8)
             pix[lo:hi_] = _batched_8x8(blocks, _DCT_M.T, _DCT_M) + 128.0
         plane = (
             pix.reshape(by, bx, 8, 8)
@@ -531,39 +896,28 @@ def _decode_scan(frame, scomp, qt, huff, restart, segs) -> np.ndarray | None:
         y = np.clip(planes[0], 0, 255)
         return np.repeat(y[:, :, None], 3, axis=2).astype(np.uint8)
     y, cb, cr = planes
-    r = y + 1.402 * (cr - 128.0)
-    g = y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0)
-    b = y + 1.772 * (cb - 128.0)
-    return np.clip(np.stack([r, g, b], axis=2), 0, 255).astype(np.uint8)
+    cb = cb - 128.0
+    cr = cr - 128.0
+    # r = y + 1.402 cr', g = y - 0.344136 cb' - 0.714136 cr',
+    # b = y + 1.772 cb' (same float expressions, written in place into
+    # one planar buffer), clipped in place, cast per channel into RGB
+    rgb = np.empty((3, h, w), dtype=np.float64)
+    r, g, b = rgb
+    np.add(y, np.multiply(cr, 1.402, out=r), out=r)
+    np.subtract(y, np.multiply(cb, 0.344136, out=g), out=g)
+    np.subtract(g, np.multiply(cr, 0.714136, out=cr), out=g)
+    np.add(y, np.multiply(cb, 1.772, out=b), out=b)
+    np.maximum(rgb, 0, out=rgb)
+    np.minimum(rgb, 255, out=rgb)
+    out = np.empty((h, w, 3), dtype=np.uint8)
+    for c in range(3):
+        out[:, :, c] = rgb[c]
+    return out
 
 
 # --------------------------------------------------------------------------
 # Encoder (4:4:4 baseline JFIF)
 # --------------------------------------------------------------------------
-class _BitWriter:
-    __slots__ = ("out", "acc", "n")
-
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def write(self, code: int, length: int) -> None:
-        self.acc = (self.acc << length) | (code & ((1 << length) - 1))
-        self.n += length
-        while self.n >= 8:
-            b = (self.acc >> (self.n - 8)) & 0xFF
-            self.out.append(b)
-            if b == 0xFF:
-                self.out.append(0x00)  # byte stuffing
-            self.n -= 8
-        self.acc &= (1 << self.n) - 1
-
-    def flush(self) -> None:
-        if self.n:
-            self.write(0x7F, 8 - self.n)  # pad with 1s
-
-
 def _blocks_of(plane: np.ndarray) -> np.ndarray:
     """(h, w) float plane → (n_blocks, 8, 8), edge-padded to 8-multiples."""
     h, w = plane.shape
@@ -593,43 +947,13 @@ def _encode_plane_coeffs(plane: np.ndarray, q: np.ndarray) -> np.ndarray:
     blocks = _blocks_of(plane.astype(np.float64) - 128.0)
     freq = _batched_8x8(blocks, _DCT_M, _DCT_M.T)
     nat = freq.reshape(-1, 64)
-    qnat = nat[:, ZIGZAG]  # to zigzag order first, q is kept in zigzag
+    qnat = np.take(nat, ZIGZAG, axis=1)  # to zigzag order first, q is kept in zigzag
     return np.round(qnat / q[None, :]).astype(np.int64)
-
-
-def _emit_block(zz: np.ndarray, pred: int, dc_codes, ac_codes, bw: _BitWriter) -> int:
-    dc = int(zz[0])
-    diff = dc - pred
-    s = abs(diff).bit_length()
-    bw.write(*dc_codes[s])
-    if s:
-        v = diff if diff > 0 else diff + (1 << s) - 1
-        bw.write(v, s)
-    run = 0
-    last = 63
-    while last > 0 and zz[last] == 0:
-        last -= 1
-    for k in range(1, last + 1):
-        v = int(zz[k])
-        if v == 0:
-            run += 1
-            continue
-        while run > 15:
-            bw.write(*ac_codes[0xF0])
-            run -= 16
-        s = abs(v).bit_length()
-        bw.write(*ac_codes[(run << 4) | s])
-        bw.write(v if v > 0 else v + (1 << s) - 1, s)
-        run = 0
-    if last < 63:
-        bw.write(*ac_codes[0x00])  # EOB
-    return dc
 
 
 def _code_arrays(codes: dict[int, tuple[int, int]], size: int) -> tuple[np.ndarray, np.ndarray]:
     """Dict symbol -> (code, len) as two dense lookup arrays; absent
-    symbols get length 0 (checked at emit time — the scalar path would
-    KeyError on them, the vector path raises ValueError)."""
+    symbols get length 0 (checked at emit time: ValueError)."""
     c = np.zeros(size, dtype=np.int64)
     ln = np.zeros(size, dtype=np.int64)
     for sym, (code, length) in codes.items():
@@ -646,12 +970,10 @@ def _bit_length(v: np.ndarray) -> np.ndarray:
 
 
 def _entropy_encode(coeffs: list[np.ndarray], tabs) -> bytes:
-    """Vectorized baseline entropy coder: same symbol stream, same
-    canonical codes, same MCU interleave, stuffing and 1-padding as the
-    scalar _emit_block/_BitWriter path — byte-identical output (pinned
-    by tests), ~5x faster (the per-symbol Python loop was 80% of
-    jpeg_encode; guide §4.2 — the heavy lifting belongs in vectorized
-    native code inside the UDF).
+    """Vectorized baseline entropy coder: the symbol stream, canonical
+    codes, MCU interleave, stuffing and 1-padding of a per-symbol bit
+    writer — byte-identical to one (tests/jpeg_streams.py keeps that
+    writer as the parity oracle), ~5x faster than it.
 
     Every Huffman item (codeword or appended value bits) becomes one
     (code, nbits) pair with a (block, component, within-block) sort
@@ -803,19 +1125,6 @@ def jpeg_encode(arr: np.ndarray, quality: int = 65) -> bytes:
     out += _entropy_encode(coeffs, tabs)
     out += b"\xff\xd9"  # EOI
     return bytes(out)
-
-
-def _entropy_encode_scalar(coeffs: list[np.ndarray], dicts) -> bytes:
-    """The original per-symbol reference path (_emit_block/_BitWriter),
-    kept as the parity oracle for _entropy_encode: the vectorized coder
-    must produce byte-identical streams (tests/test_multimodal_codecs)."""
-    bw = _BitWriter()
-    preds = [0, 0, 0]
-    for i in range(coeffs[0].shape[0]):  # 4:4:4 → one block/component/MCU
-        for ci in range(3):
-            preds[ci] = _emit_block(coeffs[ci][i], preds[ci], *dicts[ci], bw)
-    bw.flush()
-    return bytes(bw.out)
 
 
 def make_photo(width: int, height: int, seed: int = 0) -> np.ndarray:

@@ -30,3 +30,15 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def reference_standin(tmp_path_factory) -> str:
+    """Root of a generated, reference-shaped corpus (foto_metadata.xlsx
+    plus compressed/<kode_proyek>/<minggu>/*.jpg); tests use it where
+    the reference run's own artifacts are not on disk."""
+    from tests.reference_standin import write_reference_standin
+
+    root = str(tmp_path_factory.mktemp("reference"))
+    write_reference_standin(root)
+    return root
