@@ -1,17 +1,42 @@
-"""Shared word-3-gram shingle inverted index over ``documents``.
+"""Word-3-gram shingles and the MinHash-LSH generator shared by the
+near-dup queries, each decision written once per engine.
 
-q14c (Jaccard pairs), q27 (decontamination), q30 (dedup clusters) and
-q48 (edit-distance verification) all consume the IDENTICAL exploded
-index ``(doc_id, source, n_sh, s)``. Building it per-query re-pays the
-tokenize→shingle→explode scan four times (VERDICT r3: ~6-8 s of pure
-waste at sf0.1). Here it is built once per (session, sf_dir, n) and
-persisted MEMORY_AND_DISK; every consumer reuses the cached blocks.
+The near-dup family (q14c, q27, q30, q48, q63, q74, q103, q108, q122,
+q148, q152–q155, st15; q83, q97 and a few corpus and similarity
+queries read the Spark index too) rests on one shingle definition —
+lowercase, split on ``\\s+``, distinct word 3-grams joined by one
+space — and q122, q152 and st15 on one MinHash-LSH generator (Broder
+1997). Each query keeps its own candidate and verdict step; everything
+below is shared. Queries whose CTEs read another table or group by
+another key (the similarity trio over ``embeddings``, q97 by ``lang``,
+the corpus query over ``cur``, st15 over its doubled ``d0``) keep their
+own copy of the shingle CTEs.
 
-Scale note (100 TB): in a deployed pipeline this frame is a *staged
-table* — written once to bucketed parquet (bucketed by ``s`` so the
-downstream self-joins are shuffle-free) and reused by every dedup
-consumer. The in-session persist is the sandbox equivalent of that
-stage; the consumers are agnostic to which one backs them.
+Spark side:
+
+- ``shingle_index``: the exploded inverted index
+  ``(doc_id, source, n_sh, s)`` over ``documents``, built once per
+  (session, sf_dir) and persisted MEMORY_AND_DISK, pre-partitioned on
+  (source, s) so every pair-generating self-join on that key is
+  exchange-free. Scale note (100 TB): in a deployed pipeline this frame
+  is a *staged table* — written once to parquet bucketed by (source, s)
+  and reused by every dedup consumer; the in-session persist is the
+  sandbox equivalent.
+- ``doubled_index``: that index plus an exact copy of every document
+  under a data-derived id offset, so exact duplicates exist at every SF.
+- ``lsh_signatures`` → ``lsh_bands`` → ``lsh_capped_buckets``: 16
+  universal-hash permutations over ``md5_prefix_int(s, 7)``, 4 bands of
+  4 rows, and the band buckets of 2.._LSH_BAND_CAP docs.
+
+DuckDB side (CTE text the oracles splice in; same names, same order):
+
+- ``sql_shingle_index()``: the ``toks``/``sh`` CTEs over ``documents``;
+  each query unnests ``sh`` into the ``inv`` shape it needs.
+- ``sql_doubled_index()``: those plus ``inv0``/``inv``, the doubled
+  index with ``n_sh``.
+- ``sql_lsh_signatures()`` (``hashed``, ``sigs`` over ``inv``),
+  ``sql_lsh_bands()`` (``bands``) and ``sql_lsh_capped_buckets()``
+  (``bkeep``, ``bb``).
 """
 
 from __future__ import annotations
@@ -25,57 +50,23 @@ from pyspark.sql import functions as F
 from ..catalog import load
 from ..functions import text as TXT
 from ..operators.dedup import _widen
+from .classify import md5_prefix_int, sql_md5_prefix_int
 
-_CACHE: dict[tuple[str, str, int, str], DataFrame] = {}
-
-# Layout used when the consumer doesn't pass one explicitly. Module-
-# level so the layout A/B harness (scripts/ab_shingle_layout.py) can
-# toggle it for a whole query without touching consumer code.
-DEFAULT_LAYOUT = "source_s"
+_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
-def shingle_index(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    n: int = 3,
-    layout: str | None = None,
-) -> DataFrame:
+def shingle_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exploded shingle inverted index: (doc_id, source, n_sh, s).
 
     ``n_sh`` is the per-document distinct-shingle count (q14c's Jaccard
-    denominator); ``s`` is one distinct word-n-gram per row. Documents
-    with fewer than ``n`` tokens contribute no rows.
-
-    ``layout`` picks the persisted partitioning — the staged-table
-    bucketing choice, made PER CONSUMER (r10, VERDICT r9 #1):
-
-    - ``"source_s"``: one build-time repartition pins
-      HashPartitioning(source, s) into the cached blocks, so every
-      pair-generating self-join on (source, s) skips BOTH of its
-      exchanges. Right for the q14c family (self-join dominated).
-    - ``"natural"``: no build shuffle; blocks keep the scan's
-      doc-contiguous layout. Right for consumers whose dominant
-      aggregation is PER DOCUMENT (q108's (doc_id, i) signature
-      reduce, q30/q125's per-doc frames): doc-contiguity is what
-      makes their map-side partial aggregation collapse to ~1 row per
-      doc per partition — scattering docs across partitions (what
-      source_s does) multiplies those shuffles' volume, which is
-      invisible at sf0.1 but dominated the sf10 probe (q108 169→309 s
-      under source_s; see AB_SHINGLE_LAYOUT_R10.json).
-
-    Each layout caches independently; consumers sharing a layout share
-    the build.
-    """
-    if layout is None:
-        layout = DEFAULT_LAYOUT
-    assert layout in ("source_s", "natural"), layout
+    denominator); ``s`` is one distinct word-3-gram per row. Documents
+    with fewer than 3 tokens contribute no rows."""
     app = spark.sparkContext.applicationId
     # evict entries from previous SparkSessions: their DataFrames are
     # dead weight pinning a stopped session's JVM references
     for stale in [k for k in _CACHE if k[0] != app]:
         del _CACHE[stale]
-    key = (app, os.path.normpath(sf_dir), n, layout)
+    key = (app, os.path.normpath(sf_dir))
     df = _CACHE.get(key)
     if df is None:
         # A small local parquet is 1-2 splits; without widening, the
@@ -92,22 +83,223 @@ def shingle_index(
         # pins HashPartitioning(source, s) into the cached blocks, so
         # each self-join's two requirements are satisfied for free —
         # the sandbox equivalent of bucketing the staged table by the
-        # join key (the 100 TB deployment noted above). Width follows
-        # spark.sql.shuffle.partitions (NOT a hardcoded multiple of
-        # core count): the consumers' own exchanges use that number, so
-        # the cached layout slots in where the per-consumer exchange
-        # used to be — a fixed 64 measured +32% at sf0.1 from task
-        # overhead AQE would otherwise have coalesced away.
-        df = docs.select(
-            "doc_id", "source", TXT.shingles(F.col("text"), n).alias("sh")
-        ).filter(F.size("sh") > 0).select(
-            "doc_id",
-            "source",
-            F.size("sh").alias("n_sh"),
-            F.explode("sh").alias("s"),
+        # join key. Width follows spark.sql.shuffle.partitions (NOT a
+        # hardcoded multiple of core count): the consumers' own
+        # exchanges use that number, so the cached layout slots in
+        # where the per-consumer exchange used to be — a fixed 64
+        # measured +32% at sf0.1 from task overhead AQE would otherwise
+        # have coalesced away.
+        df = (
+            docs.select(
+                "doc_id", "source", TXT.shingles(F.col("text"), 3).alias("sh")
+            )
+            .filter(F.size("sh") > 0)
+            .select(
+                "doc_id",
+                "source",
+                F.size("sh").alias("n_sh"),
+                F.explode("sh").alias("s"),
+            )
+            .repartition("source", "s")
+            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        if layout == "source_s":
-            df = df.repartition("source", "s")
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
         _CACHE[key] = df
     return df
+
+
+def doubled_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The shingle index unioned with a copy of itself under
+    doc_id + (max(doc_id) + 1), so exact duplicates exist at every SF.
+
+    The offset is derived from the data (a 1-row broadcast scalar; the
+    oracle uses the same scalar subquery): a fixed offset would collide
+    with organic ids once the corpus outgrew it.
+
+    Invariant: each doc_id here maps to exactly one (source, n_sh).
+    ``documents.doc_id`` is unique and non-negative, so every original
+    id has one text (one source, one n_sh), and every copy's id is at
+    least the offset, which exceeds max(doc_id): copies never collide
+    with originals or with each other. q122's and q152's
+    ``F.first("n_sh")`` and q152's per-doc n_sh joins rely on it
+    (tests/test_audit_ops.py checks it on the test data)."""
+    sh = shingle_index(spark, sf_dir)
+    off = load(spark, sf_dir, "documents").agg(
+        (F.max("doc_id") + 1).cast("long").alias("off")
+    )
+    return sh.unionByName(
+        sh.join(F.broadcast(off)).select(  # 1-row scalar: dup-id offset
+            (F.col("doc_id") + F.col("off")).alias("doc_id"), "source", "n_sh", "s"
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# MinHash-LSH generator, portable integer arithmetic on both engines:
+#
+#   base(s)  = md5_prefix_int(s, 7)            (28-bit shingle hash)
+#   h_i(s)   = (A[i]*base + B[i]) mod (2^31-1) (universal hash family,
+#              fixed LCG-derived A/B — 1 md5 + K multiplies per
+#              shingle instead of K md5s)
+#   sig[i]   = min over shingles               (ONE grouped agg, K
+#              min-columns — no K-times row inflation, map-side
+#              partial aggregation)
+#   bands    = K=16 rows -> 4 bands x 4 rows; a band key is
+#              (source, band, r0..r3)
+#
+# Band buckets are capped at _LSH_BAND_CAP docs — the LSH analogue of
+# dedup._PAIR_DF_CAP (a degenerate bucket, e.g. the all-identical
+# template shingle set at 100 TB, would otherwise go quadratic).
+# ---------------------------------------------------------------------------
+_LSH_K = 16
+_LSH_BANDS = 4
+_LSH_R = 4
+_LSH_BAND_CAP = 64
+_LSH_P = 2_147_483_647  # 2^31 - 1, Mersenne
+_LSH_BAND_KEY = ["source", "band", "r0", "r1", "r2", "r3"]
+
+
+def _lsh_ab() -> list[tuple[int, int]]:
+    """Fixed universal-hash coefficients via a seeded LCG (portable:
+    plain integer arithmetic, embedded in both engines' plans)."""
+    out, x = [], 42
+    for _ in range(_LSH_K):
+        x = (1103515245 * x + 12345) % _LSH_P
+        a = x or 1
+        x = (1103515245 * x + 12345) % _LSH_P
+        out.append((a, x))
+    return out
+
+
+_LSH_AB = _lsh_ab()
+
+
+def lsh_signatures(index: DataFrame, *carry: str) -> DataFrame:
+    """One row per (doc_id, source) with mh0..mh15 over the (doc_id,
+    source, s) rows of ``index``. Each column named in ``carry`` must be
+    constant per document; it rides the same aggregation via first()."""
+    hashed = index.select(
+        "doc_id", "source", *carry, md5_prefix_int(F.col("s"), 7).alias("base")
+    )
+    return hashed.groupBy("doc_id", "source").agg(
+        *[F.first(c).alias(c) for c in carry],
+        *[
+            F.min((F.lit(a) * F.col("base") + F.lit(b)) % _LSH_P).alias(f"mh{i}")
+            for i, (a, b) in enumerate(_LSH_AB)
+        ],
+    )
+
+
+def lsh_bands(sigs: DataFrame) -> DataFrame:
+    """(doc_id, source, band, r0..r3): one row per document and band."""
+    return sigs.select(
+        "doc_id",
+        "source",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band"),
+                        *[
+                            F.col(f"mh{_LSH_R * b + r}").alias(f"r{r}")
+                            for r in range(_LSH_R)
+                        ],
+                    )
+                    for b in range(_LSH_BANDS)
+                ]
+            )
+        ).alias("bk"),
+    ).select("doc_id", "source", "bk.*")
+
+
+def lsh_capped_buckets(bands: DataFrame) -> DataFrame:
+    """The band rows whose bucket holds 2.._LSH_BAND_CAP documents."""
+    keep = (
+        bands.groupBy(*_LSH_BAND_KEY)
+        .agg(F.count(F.lit(1)).alias("bsz"))
+        .filter((F.col("bsz") >= 2) & (F.col("bsz") <= _LSH_BAND_CAP))
+        .select(*_LSH_BAND_KEY)
+    )
+    return bands.join(keep, _LSH_BAND_KEY)
+
+
+def sql_shingle_index() -> str:
+    """DuckDB mirror of the word-3-gram shingling as the ``toks`` and
+    ``sh(doc_id, source, s)`` CTEs over ``documents``; documents with
+    fewer than 3 tokens have no ``sh`` row.
+
+    Agrees with ``TXT.shingles`` on mixed case, accented and CJK text,
+    repeated and edge whitespace, and the empty string, except where
+    Unicode lowercasing is special-cased: Spark lowercases ``İ`` to
+    ``i̇`` and a word-final ``Σ`` to ``ς``, DuckDB gives ``i`` and ``σ``
+    (tests/test_properties.py pins both). The test data never holds
+    such text."""
+    return r"""toks AS (
+  SELECT doc_id, source, string_split_regex(lower(text), '\s+') AS t
+  FROM documents
+),
+sh AS (
+  SELECT doc_id, source,
+         list_distinct(list_transform(range(1, greatest(len(t) - 1, 1)),
+           i -> concat_ws(' ', t[i], t[i+1], t[i+2]))) AS s
+  FROM toks
+  WHERE len(t) >= 3
+)"""
+
+
+def sql_doubled_index() -> str:
+    """DuckDB mirror of ``doubled_index``: ``sql_shingle_index()`` plus
+    ``inv0`` (the index with n_sh) and ``inv(doc_id, source, n_sh,
+    shingle)``, the doubled index."""
+    return f"""{sql_shingle_index()},
+inv0 AS (
+  SELECT doc_id, source, len(s) AS n_sh, UNNEST(s) AS shingle FROM sh
+),
+inv AS (
+  SELECT * FROM inv0
+  UNION ALL
+  SELECT doc_id + (SELECT MAX(doc_id) + 1 FROM documents), source, n_sh, shingle
+  FROM inv0
+)"""
+
+
+def sql_lsh_signatures() -> str:
+    """DuckDB mirror of ``lsh_signatures``: ``hashed`` and
+    ``sigs(doc_id, source, mh0..mh15)`` over an upstream ``inv``."""
+    mins = ",\n         ".join(
+        f"MIN(({a} * base + {b}) % {_LSH_P}) AS mh{i}"
+        for i, (a, b) in enumerate(_LSH_AB)
+    )
+    return f"""hashed AS (
+  SELECT doc_id, source, {sql_md5_prefix_int(7)} AS base
+  FROM (SELECT doc_id, source, md5(shingle) AS h FROM inv)
+),
+sigs AS (
+  SELECT doc_id, source,
+         {mins}
+  FROM hashed GROUP BY doc_id, source
+)"""
+
+
+def sql_lsh_bands() -> str:
+    """DuckDB mirror of ``lsh_bands``: ``bands`` over ``sigs``."""
+    rows = "\n  UNION ALL ".join(
+        f"SELECT doc_id, source, {b} AS band, "
+        + ", ".join(f"mh{_LSH_R * b + r} AS r{r}" for r in range(_LSH_R))
+        + " FROM sigs"
+        for b in range(_LSH_BANDS)
+    )
+    return f"""bands AS (
+  {rows}
+)"""
+
+
+def sql_lsh_capped_buckets() -> str:
+    """DuckDB mirror of ``lsh_capped_buckets``: ``bkeep`` and ``bb``
+    over ``bands``."""
+    return f"""bkeep AS (
+  SELECT source, band, r0, r1, r2, r3 FROM bands
+  GROUP BY ALL HAVING COUNT(*) BETWEEN 2 AND {_LSH_BAND_CAP}
+),
+bb AS (
+  SELECT b.* FROM bands b JOIN bkeep USING (source, band, r0, r1, r2, r3)
+)"""

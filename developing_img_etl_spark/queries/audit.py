@@ -35,17 +35,20 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
-from ._shingle import shingle_index
-from .classify import md5_prefix_int, sql_md5_prefix_int
-from .dedup import (
-    _Q122_AB,
-    _Q122_BAND_CAP,
-    _Q122_BANDS,
-    _Q122_P,
-    _Q122_R,
-    _capped_pair_edges,
-    _sql_capped_pairs,
+from ._shingle import (
+    _LSH_BAND_KEY,
+    doubled_index,
+    lsh_bands,
+    lsh_capped_buckets,
+    lsh_signatures,
+    shingle_index,
+    sql_doubled_index,
+    sql_lsh_bands,
+    sql_lsh_capped_buckets,
+    sql_lsh_signatures,
+    sql_shingle_index,
 )
+from .dedup import _capped_pair_edges, _sql_capped_pairs
 from .sampling import _BUCKETS as _SPL_BUCKETS
 from .sampling import _K as _SPL_K
 from .sampling import _SEED as _SPL_SEED
@@ -68,22 +71,6 @@ _TOP_TOK_PPM = 200_000
 _DUP_BIGRAM_PPM = 100_000
 
 
-def _doubled_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q122's corpus-doubling idiom over the shared shingle index:
-    every doc reappears under doc_id + (max_id + 1), so exact
-    duplicates exist at every SF and the audit's truth set is never
-    vacuous."""
-    sh = shingle_index(spark, sf_dir)
-    off = load(spark, sf_dir, "documents").agg(
-        (F.max("doc_id") + 1).cast("long").alias("off")
-    )
-    return sh.unionByName(
-        sh.join(F.broadcast(off)).select(  # 1-row scalar: dup-id offset
-            (F.col("doc_id") + F.col("off")).alias("doc_id"), "source", "n_sh", "s"
-        )
-    )
-
-
 def q152_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source confusion table of banded MinHash-LSH candidates vs
     exact capped-pair Jaccard truth (>= _TRUTH_PPM).
@@ -94,7 +81,7 @@ def q152_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit itself. The expected 100 TB reading: recall_strong_ppm at or
     near 1e6 (banding keeps real near-dups), recall_all_ppm well below
     it (the measured cost of skipping the low-overlap tail)."""
-    shd = _doubled_index(spark, sf_dir).localCheckpoint(eager=False)
+    shd = doubled_index(spark, sf_dir).localCheckpoint(eager=False)
 
     # r12 continuation: n_sh rides the signature agg (the q122 move —
     # it is constant per doc, so F.first in the same groupBy is free);
@@ -105,20 +92,7 @@ def q152_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 5.324/5.486 vs 5.330/5.259 — a local wash (the deleted pass ran
     # on idle cores), kept for the structural win, matching q122's
     # generator shape. Oracle MATCH sf0.01 + sf0.1.
-    hashed = shd.select(
-        "doc_id", "source", "n_sh", md5_prefix_int(F.col("s"), 7).alias("base")
-    )
-    sigs = (
-        hashed.groupBy("doc_id", "source")
-        .agg(
-            F.first("n_sh").alias("n_sh"),
-            *[
-                F.min((F.lit(a) * F.col("base") + F.lit(b)) % _Q122_P).alias(f"mh{i}")
-                for i, (a, b) in enumerate(_Q122_AB)
-            ],
-        )
-        .localCheckpoint(eager=False)
-    )
+    sigs = lsh_signatures(shd, "n_sh").localCheckpoint(eager=False)
     nsh = sigs.select("doc_id", "n_sh")
 
     # truth: exact Jaccard over df-capped pairs (q14c's generator)
@@ -142,35 +116,12 @@ def q152_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # candidates: q122's 16-perm / 4x4-band / capped-bucket generator
-    bands = sigs.select(
-        "doc_id",
-        "source",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        *[
-                            F.col(f"mh{_Q122_R * b + r}").alias(f"r{r}")
-                            for r in range(_Q122_R)
-                        ],
-                    )
-                    for b in range(_Q122_BANDS)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "source", "bk.*").localCheckpoint(eager=False)
+    bands = lsh_bands(sigs).localCheckpoint(eager=False)
     # ^ the q122 pin: bands feeds THREE branches (keep + both bucket-join
     # sides); unpinned, the optimizer re-expands the explode subtree
     # into each (r11 — q122 carries the same pin for the same reason)
-    bkey = ["source", "band", "r0", "r1", "r2", "r3"]
-    keep = (
-        bands.groupBy(*bkey)
-        .agg(F.count(F.lit(1)).alias("bsz"))
-        .filter((F.col("bsz") >= 2) & (F.col("bsz") <= _Q122_BAND_CAP))
-        .select(*bkey)
-    )
-    bb = bands.join(keep, bkey)
+    bkey = _LSH_BAND_KEY
+    bb = lsh_capped_buckets(bands)
     cand = (
         bb.select(*bkey, F.col("doc_id").alias("id_a"))
         .join(bb.select(*bkey, F.col("doc_id").alias("id_b")), bkey)
@@ -306,38 +257,8 @@ def q153_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_q152() -> str:
-    mins = ",\n         ".join(
-        f"MIN(({a} * base + {b}) % {_Q122_P}) AS mh{i}"
-        for i, (a, b) in enumerate(_Q122_AB)
-    )
-    band_rows = "\n  UNION ALL ".join(
-        "SELECT doc_id, source, {b} AS band, mh{i0} AS r0, mh{i1} AS r1, "
-        "mh{i2} AS r2, mh{i3} AS r3 FROM sigs".format(
-            b=b, i0=4 * b, i1=4 * b + 1, i2=4 * b + 2, i3=4 * b + 3
-        )
-        for b in range(_Q122_BANDS)
-    )
-    return rf"""
-WITH toks AS (
-  SELECT doc_id, source, string_split_regex(lower(text), '\s+') AS t
-  FROM documents
-),
-sh AS (
-  SELECT doc_id, source,
-         list_distinct(list_transform(range(1, greatest(len(t) - 1, 1)),
-           i -> concat_ws(' ', t[i], t[i+1], t[i+2]))) AS s
-  FROM toks
-  WHERE len(t) >= 3
-),
-inv0 AS (
-  SELECT doc_id, source, len(s) AS n_sh, UNNEST(s) AS shingle FROM sh
-),
-inv AS (
-  SELECT * FROM inv0
-  UNION ALL
-  SELECT doc_id + (SELECT MAX(doc_id) + 1 FROM documents), source, n_sh, shingle
-  FROM inv0
-),
+    return f"""
+WITH {sql_doubled_index()},
 {_sql_capped_pairs(2)},
 nsh AS (SELECT DISTINCT doc_id, n_sh FROM inv),
 truth AS (
@@ -350,25 +271,9 @@ truth AS (
   WHERE p.n_common * 1000000 // (na.n_sh + nb.n_sh - p.n_common)
         >= {_TRUTH_PPM_ALL}
 ),
-hashed AS (
-  SELECT doc_id, source, {sql_md5_prefix_int(7)} AS base
-  FROM (SELECT doc_id, source, md5(shingle) AS h FROM inv)
-),
-sigs AS (
-  SELECT doc_id, source,
-         {mins}
-  FROM hashed GROUP BY doc_id, source
-),
-bands AS (
-  {band_rows}
-),
-bkeep AS (
-  SELECT source, band, r0, r1, r2, r3 FROM bands
-  GROUP BY ALL HAVING COUNT(*) BETWEEN 2 AND {_Q122_BAND_CAP}
-),
-bb AS (
-  SELECT b.* FROM bands b JOIN bkeep USING (source, band, r0, r1, r2, r3)
-),
+{sql_lsh_signatures()},
+{sql_lsh_bands()},
+{sql_lsh_capped_buckets()},
 cand AS (
   SELECT DISTINCT a.source, a.doc_id AS id_a, b.doc_id AS id_b
   FROM bb a JOIN bb b
@@ -478,7 +383,7 @@ def _split_of(idcol):
 
 
 def q154_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    shd = _doubled_index(spark, sf_dir).localCheckpoint(eager=False)
+    shd = doubled_index(spark, sf_dir).localCheckpoint(eager=False)
     nsh = shd.select("doc_id", "n_sh").distinct()
     pairs = (
         _capped_pair_edges(shd, min_common=2)
@@ -542,27 +447,8 @@ def q154_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_Q154 = rf"""
-WITH toks AS (
-  SELECT doc_id, source, string_split_regex(lower(text), '\s+') AS t
-  FROM documents
-),
-sh AS (
-  SELECT doc_id, source,
-         list_distinct(list_transform(range(1, greatest(len(t) - 1, 1)),
-           i -> concat_ws(' ', t[i], t[i+1], t[i+2]))) AS s
-  FROM toks
-  WHERE len(t) >= 3
-),
-inv0 AS (
-  SELECT doc_id, source, len(s) AS n_sh, UNNEST(s) AS shingle FROM sh
-),
-inv AS (
-  SELECT * FROM inv0
-  UNION ALL
-  SELECT doc_id + (SELECT MAX(doc_id) + 1 FROM documents), source, n_sh, shingle
-  FROM inv0
-),
+_SQL_Q154 = f"""
+WITH {sql_doubled_index()},
 {_sql_capped_pairs(2)},
 nsh AS (SELECT DISTINCT doc_id, n_sh FROM inv),
 sp AS (
@@ -682,18 +568,8 @@ def q155_jaccard_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_Q155 = rf"""
-WITH toks AS (
-  SELECT doc_id, source, string_split_regex(lower(text), '\s+') AS t
-  FROM documents
-),
-sh AS (
-  SELECT doc_id, source,
-         list_distinct(list_transform(range(1, greatest(len(t) - 1, 1)),
-           i -> concat_ws(' ', t[i], t[i+1], t[i+2]))) AS s
-  FROM toks
-  WHERE len(t) >= 3
-),
+_SQL_Q155 = f"""
+WITH {sql_shingle_index()},
 inv AS (
   SELECT doc_id, source, len(s) AS n_sh, UNNEST(s) AS shingle FROM sh
 ),

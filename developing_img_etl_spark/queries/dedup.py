@@ -15,7 +15,20 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..functions import text as TXT
-from ._shingle import shingle_index
+from ._shingle import (
+    _LSH_BAND_KEY,
+    _LSH_K,
+    doubled_index,
+    lsh_bands,
+    lsh_capped_buckets,
+    lsh_signatures,
+    shingle_index,
+    sql_doubled_index,
+    sql_lsh_bands,
+    sql_lsh_capped_buckets,
+    sql_lsh_signatures,
+    sql_shingle_index,
+)
 
 
 def _doubled_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -119,18 +132,8 @@ def q14c_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # UNNEST + (source, shingle) self-join produces the identical rows
 # (verified: byte-identical result at sf0.01 and sf0.1) in <1 s.
 # common/(n_a + n_b - common) == set Jaccard because `s` is distinct.
-Q14C_SQL = r"""
-WITH toks AS (
-  SELECT doc_id, source, string_split_regex(lower(text), '\s+') AS t
-  FROM documents
-),
-sh AS (
-  SELECT doc_id, source,
-         list_distinct(list_transform(range(1, greatest(len(t) - 1, 1)),
-           i -> concat_ws(' ', t[i], t[i+1], t[i+2]))) AS s
-  FROM toks
-  WHERE len(t) >= 3
-),
+Q14C_SQL = f"""
+WITH {sql_shingle_index()},
 inv AS (
   SELECT doc_id, source, len(s) AS n_sh, UNNEST(s) AS shingle FROM sh
 ),
@@ -195,18 +198,8 @@ def q27_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-Q27_SQL = r"""
-WITH toks AS (
-  SELECT doc_id, source, string_split_regex(lower(text), '\s+') AS t
-  FROM documents
-),
-sh AS (
-  SELECT doc_id, source,
-         list_distinct(list_transform(range(1, greatest(len(t) - 1, 1)),
-           i -> concat_ws(' ', t[i], t[i+1], t[i+2]))) AS s
-  FROM toks
-  WHERE len(t) >= 3
-),
+Q27_SQL = f"""
+WITH {sql_shingle_index()},
 inv AS (SELECT doc_id, UNNEST(s) AS shingle FROM sh),
 flagged AS (
   SELECT DISTINCT d.doc_id
@@ -327,18 +320,8 @@ def q30_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_clusters(docs, edges).orderBy("doc_id")
 
 
-Q30_SQL = rf"""
-WITH RECURSIVE toks AS (
-  SELECT doc_id, source, string_split_regex(lower(text), '\s+') AS t
-  FROM documents
-),
-sh AS (
-  SELECT doc_id, source,
-         list_distinct(list_transform(range(1, greatest(len(t) - 1, 1)),
-           i -> concat_ws(' ', t[i], t[i+1], t[i+2]))) AS s
-  FROM toks
-  WHERE len(t) >= 3
-),
+Q30_SQL = f"""
+WITH RECURSIVE {sql_shingle_index()},
 inv AS (SELECT doc_id, source, UNNEST(s) AS shingle FROM sh),
 {_sql_capped_pairs(2)},
 und AS (
@@ -406,15 +389,9 @@ def q48_edit_distance_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return verified.orderBy("source", "id_a", "id_b")
 
 
-Q48_SQL = rf"""
-WITH toks AS (
-  SELECT doc_id, source, string_split_regex(lower(text), '\s+') AS t FROM documents
-), sh AS (
-  SELECT doc_id, source,
-         list_distinct(list_transform(range(1, greatest(len(t) - 1, 1)),
-           i -> concat_ws(' ', t[i], t[i+1], t[i+2]))) AS s
-  FROM toks WHERE len(t) >= 3
-), inv AS (
+Q48_SQL = f"""
+WITH {sql_shingle_index()},
+inv AS (
   SELECT doc_id, source, UNNEST(s) AS shingle FROM sh
 ),
 {_sql_capped_pairs(3, "cand")}
@@ -469,18 +446,8 @@ def q63_repeated_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-Q63_SQL = r"""
-WITH toks AS (
-  SELECT doc_id, source, string_split_regex(lower(text), '\s+') AS t
-  FROM documents
-),
-sh AS (
-  SELECT doc_id, source,
-         list_distinct(list_transform(range(1, greatest(len(t) - 1, 1)),
-           i -> concat_ws(' ', t[i], t[i+1], t[i+2]))) AS s
-  FROM toks
-  WHERE len(t) >= 3
-),
+Q63_SQL = f"""
+WITH {sql_shingle_index()},
 inv AS (
   SELECT doc_id, source, len(s) AS n_sh, UNNEST(s) AS shingle FROM sh
 ),
@@ -553,18 +520,8 @@ def q74_canonical_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-Q74_SQL = rf"""
-WITH RECURSIVE toks AS (
-  SELECT doc_id, source, string_split_regex(lower(text), '\s+') AS t
-  FROM documents
-),
-sh AS (
-  SELECT doc_id, source,
-         list_distinct(list_transform(range(1, greatest(len(t) - 1, 1)),
-           i -> concat_ws(' ', t[i], t[i+1], t[i+2]))) AS s
-  FROM toks
-  WHERE len(t) >= 3
-),
+Q74_SQL = f"""
+WITH RECURSIVE {sql_shingle_index()},
 inv AS (SELECT doc_id, source, UNNEST(s) AS shingle FROM sh),
 {_sql_capped_pairs(2)},
 und AS (
@@ -829,18 +786,8 @@ lab{r} AS (
   SELECT * FROM {prev} UNION ALL SELECT * FROM new{r}
 )""")
         prev = f"lab{r}"
-    return rf"""
-WITH toks AS (
-  SELECT doc_id, source, string_split_regex(lower(text), '\s+') AS t
-  FROM documents
-),
-sh AS (
-  SELECT doc_id, source,
-         list_distinct(list_transform(range(1, greatest(len(t) - 1, 1)),
-           i -> concat_ws(' ', t[i], t[i+1], t[i+2]))) AS s
-  FROM toks
-  WHERE len(t) >= 3
-),
+    return f"""
+WITH {sql_shingle_index()},
 inv AS (
   SELECT doc_id, source, UNNEST(s) AS shingle FROM sh
 ),
@@ -974,18 +921,8 @@ def q108_minhash_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 from .classify import sql_md5_prefix_int as _sql_md5p  # noqa: E402
 
-Q108_SQL = rf"""
-WITH toks AS (
-  SELECT doc_id, source, string_split_regex(lower(text), '\s+') AS t
-  FROM documents
-),
-sh AS (
-  SELECT doc_id, source,
-         list_distinct(list_transform(range(1, greatest(len(t) - 1, 1)),
-           i -> concat_ws(' ', t[i], t[i+1], t[i+2]))) AS s
-  FROM toks
-  WHERE len(t) >= 3
-),
+Q108_SQL = f"""
+WITH {sql_shingle_index()},
 inv AS (
   SELECT doc_id, source, len(s) AS n_sh, UNNEST(s) AS shingle FROM sh
 ),
@@ -1043,17 +980,9 @@ ORACLES["q108_minhash_audit"] = Q108_SQL
 # q108 certifies the minhash ESTIMATOR on externally-mined pairs. This
 # query certifies the WHOLE LSH pipeline hash-exact — signature build,
 # banding, bucket join, candidate generation, estimate AND exact
-# verification — by making every stage portable integer arithmetic:
-#
-#   base(s)  = md5_prefix_int(s, 7)            (28-bit shingle hash)
-#   h_i(s)   = (A[i]*base + B[i]) mod (2^31-1) (universal hash family,
-#              fixed LCG-derived A/B — 1 md5 + K multiplies per
-#              shingle, the production trick vs q108's K md5s)
-#   sig[i]   = min over shingles               (ONE grouped agg, K
-#              min-columns — no K-times row inflation, map-side
-#              partial aggregation)
-#   bands    = K=16 rows -> 4 bands x 4 rows; candidates = pairs
-#              sharing >= 1 exact band key
+# verification — by making every stage portable integer arithmetic
+# (the generator: _shingle.lsh_signatures / lsh_bands /
+# lsh_capped_buckets; candidates = pairs sharing >= 1 exact band key).
 #
 # Corpus is DOUBLED (m4's discipline, mirrored in the oracle): every
 # doc gets an exact dup at doc_id + OFF where OFF = max(doc_id)+1 is
@@ -1063,101 +992,25 @@ ORACLES["q108_minhash_audit"] = Q108_SQL
 # banding provably fires (J=1 pairs collide in all 4 bands) on top of
 # the organic near-dups at every SF.
 #
-# Scale shape: band buckets are capped at _Q122_BAND_CAP docs — the
-# LSH analogue of _PAIR_DF_CAP (a degenerate bucket, e.g. the
-# all-identical-template shingle set at 100 TB, would otherwise go
-# quadratic); the cap is mirrored in the oracle. Signatures shuffle as
-# ONE 16-column row per doc; verification is the q83 r6 shape —
-# posting-list intersection semi-joined to candidate participants.
-# Bands/buckets move (long, int, 4x long) keys only.
+# Scale shape: band buckets are capped (_shingle._LSH_BAND_CAP, mirrored
+# in the oracle). Signatures shuffle as ONE 16-column row per doc;
+# bands/buckets move (long, int, 4x long) keys only.
 # ---------------------------------------------------------------------------
-
-_Q122_K = 16
-_Q122_BANDS = 4
-_Q122_R = 4
-_Q122_BAND_CAP = 64
-_Q122_P = 2_147_483_647  # 2^31 - 1, Mersenne
-
-
-def _q122_ab() -> list[tuple[int, int]]:
-    """Fixed universal-hash coefficients via a seeded LCG (portable:
-    plain integer arithmetic, embedded in both engines' plans)."""
-    out, x = [], 42
-    for _ in range(_Q122_K):
-        x = (1103515245 * x + 12345) % _Q122_P
-        a = x or 1
-        x = (1103515245 * x + 12345) % _Q122_P
-        out.append((a, x))
-    return out
-
-
-_Q122_AB = _q122_ab()
 
 
 def q122_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .classify import md5_prefix_int
-
-    sh = shingle_index(spark, sf_dir)
-    off = load(spark, sf_dir, "documents").agg(
-        (F.max("doc_id") + 1).cast("long").alias("off")
-    )
-    shd = sh.unionByName(
-        sh.join(F.broadcast(off)).select(  # 1-row scalar: dup-id offset
-            (F.col("doc_id") + F.col("off")).alias("doc_id"), "source", "n_sh", "s"
-        )
-    )
-    # hash ONCE per (doc, shingle) row, then derive all K permutations
-    # from the base column — and pin sigs/bands/cand with lazy
-    # localCheckpoints: each is consumed by 2-3 downstream branches
-    # (bands, both bucket-join sides, sa, sb), and without the pin the
-    # optimizer re-expands the md5 + 16-min-agg subtree into every
-    # branch (measured: 15 MiB task binaries, 49 s at sf0.01; with the
-    # pins the same query is ~3 s).
-    hashed = shd.select(
-        "doc_id", "source", "n_sh", md5_prefix_int(F.col("s"), 7).alias("base")
-    )
-    # n_sh rides the signature agg (r12): it is constant per doc, so
-    # F.first() in the same groupBy replaces the former separate
-    # nsh = shd.distinct() pass over the doubled index AND its two
-    # final joins — one fewer full index scan, two fewer joins in the
-    # assembly (plan: 7-join chain -> 5).
-    sigs = (
-        hashed.groupBy("doc_id", "source")
-        .agg(
-            F.first("n_sh").alias("n_sh"),
-            *[
-                F.min((F.lit(a) * F.col("base") + F.lit(b)) % _Q122_P).alias(f"mh{i}")
-                for i, (a, b) in enumerate(_Q122_AB)
-            ]
-        )
-        .localCheckpoint(eager=False)
-    )
-    bands = sigs.select(
-        "doc_id",
-        "source",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        *[
-                            F.col(f"mh{_Q122_R * b + r}").alias(f"r{r}")
-                            for r in range(_Q122_R)
-                        ],
-                    )
-                    for b in range(_Q122_BANDS)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "source", "bk.*").localCheckpoint(eager=False)
-    bkey = ["source", "band", "r0", "r1", "r2", "r3"]
-    keep = (
-        bands.groupBy(*bkey)
-        .agg(F.count(F.lit(1)).alias("bsz"))
-        .filter((F.col("bsz") >= 2) & (F.col("bsz") <= _Q122_BAND_CAP))
-        .select(*bkey)
-    )
-    bb = bands.join(keep, bkey)
+    shd = doubled_index(spark, sf_dir)
+    # pin sigs/bands/cand with lazy localCheckpoints: each is consumed
+    # by 2-3 downstream branches (bands, both bucket-join sides, sa,
+    # sb), and without the pin the optimizer re-expands the md5 +
+    # 16-min-agg subtree into every branch (measured: 15 MiB task
+    # binaries, 49 s at sf0.01; with the pins the same query is ~3 s).
+    # n_sh rides the signature agg (r12): one fewer full index scan and
+    # two fewer joins in the assembly than a separate distinct pass.
+    sigs = lsh_signatures(shd, "n_sh").localCheckpoint(eager=False)
+    bands = lsh_bands(sigs).localCheckpoint(eager=False)
+    bkey = _LSH_BAND_KEY
+    bb = lsh_capped_buckets(bands)
     cand = (
         bb.select(*bkey, F.col("doc_id").alias("id_a"))
         .join(bb.select(*bkey, F.col("doc_id").alias("id_b")), bkey)
@@ -1194,17 +1047,17 @@ def q122_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sa = sigs.select(
         F.col("doc_id").alias("id_a"),
         F.col("n_sh").alias("n_a"),
-        *[F.col(f"mh{i}").alias(f"a{i}") for i in range(_Q122_K)],
+        *[F.col(f"mh{i}").alias(f"a{i}") for i in range(_LSH_K)],
     )
     sb = sigs.select(
         F.col("doc_id").alias("id_b"),
         F.col("n_sh").alias("n_b"),
-        *[F.col(f"mh{i}").alias(f"b{i}") for i in range(_Q122_K)],
+        *[F.col(f"mh{i}").alias(f"b{i}") for i in range(_LSH_K)],
     )
     matches = F.expr(
         "CAST("
         + " + ".join(
-            f"(CASE WHEN a{i} = b{i} THEN 1 ELSE 0 END)" for i in range(_Q122_K)
+            f"(CASE WHEN a{i} = b{i} THEN 1 ELSE 0 END)" for i in range(_LSH_K)
         )
         + " AS BIGINT)"
     )
@@ -1218,7 +1071,7 @@ def q122_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "id_b",
             "n_bands",
             matches.alias("minhash_matches"),
-            (matches * 1_000_000 / F.lit(_Q122_K)).cast("long").alias("est_ppm"),
+            (matches * 1_000_000 / F.lit(_LSH_K)).cast("long").alias("est_ppm"),
             F.coalesce("n_common", F.lit(0)).cast("long").alias("n_common"),
             F.expr(
                 "CAST(COALESCE(n_common, 0) * 1000000 DIV "
@@ -1230,65 +1083,15 @@ def q122_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q122_sql() -> str:
-    from .classify import sql_md5_prefix_int
-
-    minexprs = ",\n         ".join(
-        f"MIN(({a} * base + {b}) % {_Q122_P}) AS mh{i}"
-        for i, (a, b) in enumerate(_Q122_AB)
-    )
-    bandsel = "\n  UNION ALL ".join(
-        "SELECT doc_id, source, {b} AS band, {rs} FROM sigs".format(
-            b=b,
-            rs=", ".join(
-                f"mh{_Q122_R * b + r} AS r{r}" for r in range(_Q122_R)
-            ),
-        )
-        for b in range(_Q122_BANDS)
-    )
     matches = " + ".join(
         f"(CASE WHEN sa.mh{i} = sb.mh{i} THEN 1 ELSE 0 END)"
-        for i in range(_Q122_K)
+        for i in range(_LSH_K)
     )
-    return rf"""
-WITH toks AS (
-  SELECT doc_id, source, string_split_regex(lower(text), '\s+') AS t
-  FROM documents
-),
-sh AS (
-  SELECT doc_id, source,
-         list_distinct(list_transform(range(1, greatest(len(t) - 1, 1)),
-           i -> concat_ws(' ', t[i], t[i+1], t[i+2]))) AS s
-  FROM toks
-  WHERE len(t) >= 3
-),
-inv0 AS (
-  SELECT doc_id, source, len(s) AS n_sh, UNNEST(s) AS shingle FROM sh
-),
-inv AS (
-  SELECT * FROM inv0
-  UNION ALL
-  SELECT doc_id + (SELECT MAX(doc_id) + 1 FROM documents), source, n_sh, shingle
-  FROM inv0
-),
-hashed AS (
-  SELECT doc_id, source, {sql_md5_prefix_int(7)} AS base
-  FROM (SELECT doc_id, source, md5(shingle) AS h FROM inv)
-),
-sigs AS (
-  SELECT doc_id, source,
-         {minexprs}
-  FROM hashed GROUP BY doc_id, source
-),
-bands AS (
-  {bandsel}
-),
-bkeep AS (
-  SELECT source, band, r0, r1, r2, r3 FROM bands
-  GROUP BY ALL HAVING COUNT(*) BETWEEN 2 AND {_Q122_BAND_CAP}
-),
-bb AS (
-  SELECT b.* FROM bands b JOIN bkeep USING (source, band, r0, r1, r2, r3)
-),
+    return f"""
+WITH {sql_doubled_index()},
+{sql_lsh_signatures()},
+{sql_lsh_bands()},
+{sql_lsh_capped_buckets()},
 cand AS (
   SELECT a.source, a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_bands
   FROM bb a JOIN bb b
@@ -1315,7 +1118,7 @@ nsh AS (
 SELECT c.source, c.id_a, c.id_b,
        CAST(c.n_bands AS BIGINT) AS n_bands,
        CAST({matches} AS BIGINT) AS minhash_matches,
-       CAST(({matches}) * 1000000 // {_Q122_K} AS BIGINT) AS est_ppm,
+       CAST(({matches}) * 1000000 // {_LSH_K} AS BIGINT) AS est_ppm,
        CAST(COALESCE(cm.n_common, 0) AS BIGINT) AS n_common,
        CAST(COALESCE(cm.n_common, 0) * 1000000
             // (na.n_sh + nb.n_sh - COALESCE(cm.n_common, 0)) AS BIGINT) AS exact_ppm
@@ -1360,7 +1163,7 @@ ORACLES["q122_minhash_lsh_pairs"] = _q122_sql()
 # block buckets move (long, int, int) rows and are capped at
 # _Q123_BLOCK_CAP (mirrored in the oracle) so a degenerate bucket —
 # e.g. 10^6 copies of one boilerplate page at 100 TB — is bounded,
-# exactly like _PAIR_DF_CAP / _Q122_BAND_CAP. Hamming verification is
+# exactly like _PAIR_DF_CAP / _shingle._LSH_BAND_CAP. Hamming verification is
 # one integer xor+popcount per candidate, computed in codegen.
 # ---------------------------------------------------------------------------
 

@@ -70,7 +70,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
-from ._shingle import shingle_index
+from ._shingle import shingle_index, sql_shingle_index
 from .classify import (
     log_bucket_expr,
     md5_prefix_int,
@@ -631,18 +631,8 @@ def _q148_sql() -> str:
          CAST(SUM(1::BIGINT << ({_FIELD + 1} - m_reg))
               + ({_M} - COUNT(*)) * {_S_SCALE}::BIGINT AS BIGINT) AS s_scaled"""
     corrected = sql_hll_estimate_case(_P)
-    return rf"""
-WITH toks AS (
-  SELECT doc_id, source, string_split_regex(lower(text), '\s+') AS t
-  FROM documents
-),
-sh AS (
-  SELECT doc_id, source,
-         list_distinct(list_transform(range(1, greatest(len(t) - 1, 1)),
-           i -> concat_ws(' ', t[i], t[i+1], t[i+2]))) AS s
-  FROM toks
-  WHERE len(t) >= 3
-),
+    return f"""
+WITH {sql_shingle_index()},
 rowd AS (
   SELECT DISTINCT source, shingle FROM (SELECT source, UNNEST(s) AS shingle FROM sh)
 ),

@@ -1510,8 +1510,7 @@ def st15_streaming_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..catalog import load
     from ..functions import text as TXT
-    from .classify import md5_prefix_int
-    from .dedup import _Q122_AB, _Q122_BANDS, _Q122_P, _Q122_R
+    from ._shingle import _LSH_BAND_KEY, lsh_bands, lsh_signatures
 
     work = tempfile.mkdtemp(prefix="stq15_")
     src, reg, dbs, ckpt = f"{work}/src", f"{work}/reg", f"{work}/dbs", f"{work}/ckpt"
@@ -1547,39 +1546,15 @@ def st15_streaming_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("text", T.StringType()),
         ]
     )
-    bkey = ["source", "band", "r0", "r1", "r2", "r3"]
+    bkey = _LSH_BAND_KEY
 
     def bands_of(df: DataFrame) -> DataFrame:
         sh = df.select(
             "doc_id", "source", TXT.shingles(F.col("text"), 3).alias("sh")
         ).filter(F.size("sh") > 0)
-        hashed = sh.select(
-            "doc_id", "source", F.explode("sh").alias("s")
-        ).select("doc_id", "source", md5_prefix_int(F.col("s"), 7).alias("base"))
-        sigs = hashed.groupBy("doc_id", "source").agg(
-            *[
-                F.min((F.lit(a) * F.col("base") + F.lit(b)) % _Q122_P).alias(f"mh{i}")
-                for i, (a, b) in enumerate(_Q122_AB)
-            ]
+        return lsh_bands(
+            lsh_signatures(sh.select("doc_id", "source", F.explode("sh").alias("s")))
         )
-        return sigs.select(
-            "doc_id",
-            "source",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"),
-                            *[
-                                F.col(f"mh{_Q122_R * b + r}").alias(f"r{r}")
-                                for r in range(_Q122_R)
-                            ],
-                        )
-                        for b in range(_Q122_BANDS)
-                    ]
-                )
-            ).alias("bk"),
-        ).select("doc_id", "source", "bk.*")
 
     def sink(batch: DataFrame, batch_id: int) -> None:
         b = bands_of(batch).localCheckpoint(eager=False)  # one sig pass, two sinks
@@ -1643,20 +1618,8 @@ def st15_streaming_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _st15_sql() -> str:
-    from .classify import sql_md5_prefix_int
-    from .dedup import _Q122_AB, _Q122_BANDS, _Q122_P, _Q122_R
+    from ._shingle import sql_lsh_bands, sql_lsh_signatures
 
-    minexprs = ",\n         ".join(
-        f"MIN(({a} * base + {b}) % {_Q122_P}) AS mh{i}"
-        for i, (a, b) in enumerate(_Q122_AB)
-    )
-    bandsel = "\n  UNION ALL ".join(
-        "SELECT doc_id, source, {b} AS band, {rs} FROM sigs".format(
-            b=b,
-            rs=", ".join(f"mh{_Q122_R * b + r} AS r{r}" for r in range(_Q122_R)),
-        )
-        for b in range(_Q122_BANDS)
-    )
     return rf"""
 WITH d0 AS (
   SELECT doc_id, source, text FROM documents
@@ -1676,18 +1639,8 @@ sh AS (
 inv AS (
   SELECT doc_id, source, UNNEST(s) AS shingle FROM sh
 ),
-hashed AS (
-  SELECT doc_id, source, {sql_md5_prefix_int(7)} AS base
-  FROM (SELECT doc_id, source, md5(shingle) AS h FROM inv)
-),
-sigs AS (
-  SELECT doc_id, source,
-         {minexprs}
-  FROM hashed GROUP BY doc_id, source
-),
-bands AS (
-  {bandsel}
-),
+{sql_lsh_signatures()},
+{sql_lsh_bands()},
 owners AS (
   SELECT source, band, r0, r1, r2, r3, MIN(doc_id) AS owner
   FROM bands GROUP BY ALL

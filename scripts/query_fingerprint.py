@@ -6,9 +6,9 @@ defining module missed edits to shared helpers like _shingle.py /
 operators/cms.py that other modules import) + the oracle text. A kept
 green ledger row whose fingerprint no longer matches is STALE (the
 implementation changed after it went green) and must re-run — the
-r6/r8 staleness discipline, shared by sf1_gate.py and
-sf10_spotcheck.py (ADVICE r8: the sf10 ledger previously kept MATCH
-rows forever).
+r6/r8 staleness discipline of sf1_gate.py's ledger (ADVICE r8: a
+ledger that keeps MATCH rows forever certifies code that has since
+changed).
 """
 
 from __future__ import annotations

@@ -58,35 +58,16 @@ def _iterative_components(con) -> None:
     recursive `reach` CTE defines (component id = min reachable id),
     in O(diameter) rounds of linear work."""
     from developing_img_etl_spark.queries import dedup
+    from developing_img_etl_spark.queries._shingle import sql_shingle_index
 
-    # the pair-generation cap MUST track the engine's (ADVICE r5): a
-    # hardcoded literal here would silently desynchronize this verifier
-    # from q30/q74 if _PAIR_DF_CAP ever changes
-    con.execute(rf"""
+    # the shingling and the pair-generation cap MUST track the engine's
+    # (ADVICE r5): a copy here would silently desynchronize this
+    # verifier from q30/q74 if either ever changes
+    con.execute(f"""
 CREATE OR REPLACE TEMP TABLE und AS
-WITH toks AS (
-  SELECT doc_id, source, string_split_regex(lower(text), '\s+') AS t FROM documents
-),
-sh AS (
-  SELECT doc_id, source,
-         list_distinct(list_transform(range(1, greatest(len(t) - 1, 1)),
-           i -> concat_ws(' ', t[i], t[i+1], t[i+2]))) AS s
-  FROM toks WHERE len(t) >= 3
-),
+WITH {sql_shingle_index()},
 inv AS (SELECT doc_id, source, UNNEST(s) AS shingle FROM sh),
-inv_df AS (
-  SELECT source, shingle FROM inv GROUP BY source, shingle
-  HAVING COUNT(*) BETWEEN 2 AND {dedup._PAIR_DF_CAP}
-),
-inv_k AS (
-  SELECT i.doc_id, i.source, i.shingle FROM inv i JOIN inv_df USING (source, shingle)
-),
-pairs AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM inv_k a JOIN inv_k b
-    ON a.source = b.source AND a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2 HAVING COUNT(*) >= 2
-)
+{dedup._sql_capped_pairs(2)}
 SELECT id_a AS u, id_b AS v FROM pairs
 UNION SELECT id_b, id_a FROM pairs
 """)
@@ -171,9 +152,9 @@ def main() -> int:
     oracle_utils.DUCK_TEMP_DIR = "/root/repo/tmp/duck-spill-sf1"
     # r11: bound the spill so a runaway oracle plan dies as its own
     # clean FAIL instead of filling the disk under every later query
-    # (the q39 sf10 cascade; see scripts/sf10_spotcheck.py)
+    # (the q39 cascade seen at sf10)
     oracle_utils.DUCK_MAX_TEMP_SIZE = "40GiB"
-    # r11: per-oracle subprocess isolation (see sf10_spotcheck.py) —
+    # r11: per-oracle subprocess isolation —
     # an in-process OOM degrades this process's allocator for every
     # later oracle; isolation also returns each oracle's memory to the
     # OS between queries instead of ratcheting the pass footprint.

@@ -41,12 +41,10 @@ def batch_equivalent(spark, sf_dir):
 
     from developing_img_etl_spark.catalog import load
     from developing_img_etl_spark.functions import text as TXT
-    from developing_img_etl_spark.queries.classify import md5_prefix_int
-    from developing_img_etl_spark.queries.dedup import (
-        _Q122_AB,
-        _Q122_BANDS,
-        _Q122_P,
-        _Q122_R,
+    from developing_img_etl_spark.queries._shingle import (
+        _LSH_BAND_KEY,
+        lsh_bands,
+        lsh_signatures,
     )
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "source", "text")
@@ -55,37 +53,13 @@ def batch_equivalent(spark, sf_dir):
     doubled = docs.unionByName(
         docs.select((F.col("doc_id") + F.lit(off)).alias("doc_id"), "source", "text")
     )
-    bkey = ["source", "band", "r0", "r1", "r2", "r3"]
+    bkey = _LSH_BAND_KEY
     sh = doubled.select(
         "doc_id", "source", TXT.shingles(F.col("text"), 3).alias("sh")
     ).filter(F.size("sh") > 0)
-    hashed = sh.select("doc_id", "source", F.explode("sh").alias("s")).select(
-        "doc_id", "source", md5_prefix_int(F.col("s"), 7).alias("base")
-    )
-    sigs = hashed.groupBy("doc_id", "source").agg(
-        *[
-            F.min((F.lit(a) * F.col("base") + F.lit(b)) % _Q122_P).alias(f"mh{i}")
-            for i, (a, b) in enumerate(_Q122_AB)
-        ]
-    )
-    bands = sigs.select(
-        "doc_id",
-        "source",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        *[
-                            F.col(f"mh{_Q122_R * b + r}").alias(f"r{r}")
-                            for r in range(_Q122_R)
-                        ],
-                    )
-                    for b in range(_Q122_BANDS)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "source", "bk.*").localCheckpoint(eager=False)
+    bands = lsh_bands(
+        lsh_signatures(sh.select("doc_id", "source", F.explode("sh").alias("s")))
+    ).localCheckpoint(eager=False)
     owners = bands.groupBy(*bkey).agg(F.min("doc_id").alias("owner"))
     verdict = (
         bands.join(owners, bkey)

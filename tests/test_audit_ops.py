@@ -5,6 +5,12 @@ the audit-specific algebra that a hash can't explain on its own."""
 
 from __future__ import annotations
 
+import os
+
+from pyspark.sql import functions as F
+
+from developing_img_etl_spark.catalog import load
+from developing_img_etl_spark.queries._shingle import doubled_index, shingle_index
 from developing_img_etl_spark.queries.audit import (
     _TRUTH_PPM_ALL,
     _TRUTH_PPM_STRONG,
@@ -13,6 +19,26 @@ from developing_img_etl_spark.queries.audit import (
     q154_split_leakage_audit,
     q155_jaccard_threshold_sweep,
 )
+
+
+def test_doubled_index_maps_each_doc_id_to_one_source_and_n_sh(spark, sf_dir):
+    """q122's and q152's F.first("n_sh") and q152's per-doc n_sh joins
+    read one (source, n_sh) per doc_id of the doubled index. That holds
+    because documents.doc_id is unique and non-negative and the copy
+    offset exceeds max(doc_id); checked here on the sf0.01 data."""
+    sf = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    n, n_ids, lo = (
+        load(spark, sf, "documents")
+        .agg(F.count(F.lit(1)), F.countDistinct("doc_id"), F.min("doc_id"))
+        .first()
+    )
+    assert n == n_ids and lo >= 0
+    per_id = doubled_index(spark, sf).groupBy("doc_id").agg(
+        F.countDistinct("source", "n_sh").alias("k")
+    )
+    assert per_id.filter(F.col("k") != 1).count() == 0
+    n_orig = shingle_index(spark, sf).select("doc_id").distinct().count()
+    assert n_orig > 0 and per_id.count() == 2 * n_orig
 
 
 def test_q152_confusion_algebra(spark, sf_dir):

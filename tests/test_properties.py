@@ -44,6 +44,66 @@ def test_shingles_match_python_reference(spark, toks):
     assert set(got) == expect
 
 
+# Hand-written edge cases for the cross-engine shingle check: fewer
+# than 3 tokens and exactly 3, repeated 3-grams, mixed case, leading/
+# trailing/repeated whitespace incl. tab and newline, the empty string,
+# whitespace only, and non-ASCII text.
+_SHINGLE_ROWS = [
+    (1, "s", ""),
+    (2, "s", "one"),
+    (3, "s", "one two"),
+    (4, "s", "one two three"),
+    (5, "s", "a b c a b c a b c"),
+    (6, "s", "The QUICK brown Fox jumps"),
+    (7, "s", "  lead and trail  "),
+    (8, "s", "tab\tsep\nnew  line   runs"),
+    (9, "s", "café naïve über straße"),
+    (10, "s", "日本 語 テキスト です"),
+    (11, "s", " \t\n "),
+    (12, "s", "İstanbul ΟΔΟΣ ΣΟΦΙΑ ok"),
+]
+
+
+def test_shingles_agree_across_engines(spark):
+    """TXT.shingles (Spark) and sql_shingle_index() (the oracles'
+    DuckDB CTEs) give the same shingle set per document, except the
+    known non-ASCII case-folding split, pinned exactly."""
+    import duckdb
+
+    from developing_img_etl_spark.queries._shingle import sql_shingle_index
+
+    df = spark.createDataFrame(
+        _SHINGLE_ROWS, "doc_id long, source string, text string"
+    )
+    got_spark = {
+        r.doc_id: set(r.s)
+        for r in df.select("doc_id", TXT.shingles(F.col("text"), 3).alias("s"))
+        .filter(F.size("s") > 0)
+        .collect()
+    }
+    with duckdb.connect() as con:
+        con.execute(
+            "CREATE TABLE documents (doc_id BIGINT, source VARCHAR, text VARCHAR)"
+        )
+        con.executemany("INSERT INTO documents VALUES (?, ?, ?)", _SHINGLE_ROWS)
+        got_duck = {
+            d: set(s)
+            for d, s in con.execute(
+                f"WITH {sql_shingle_index()} SELECT doc_id, s FROM sh"
+            ).fetchall()
+        }
+    # only 3+ token documents have shingles, on both sides
+    assert set(got_spark) == set(got_duck) == {4, 5, 6, 7, 8, 9, 10, 12}
+    assert got_spark[4] == {"one two three"}
+    assert got_spark[5] == {"a b c", "b c a", "c a b"}
+    assert got_spark[7] == {" lead and", "lead and trail", "and trail "}
+    # special-cased Unicode lowercasing differs: Spark maps İ to
+    # i + U+0307 and a word-final Σ to ς, DuckDB to i and σ
+    assert got_spark.pop(12) == {"i\u0307stanbul οδος σοφια", "οδος σοφια ok"}
+    assert got_duck.pop(12) == {"istanbul οδοσ σοφια", "οδοσ σοφια ok"}
+    assert got_spark == got_duck
+
+
 @given(words)
 @SET
 def test_token_count_matches_python(spark, toks):
