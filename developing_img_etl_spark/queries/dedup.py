@@ -86,22 +86,25 @@ ORDER BY canonical_id
 # word-3-gram shingles, threshold 0.2. Exact set-Jaccard — the
 # deterministic ground truth MinHash-LSH is recall-checked against.
 # ---------------------------------------------------------------------------
-def q14c_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Inverted-index formulation, NOT a block-wise array self-join: a join
-    # on `source` alone has ~20 keys (≤20 tasks, each shuffling every
-    # shingle array in the block, then one core grinding array_intersect
-    # per pair). Exploding to (source, shingle, doc) and self-joining on
-    # the high-cardinality (source, shingle) key keeps parallelism at
-    # shuffle-partition granularity and never moves an array — the only
-    # state per row is two longs. common/(|A|+|B|-common) == set Jaccard.
-    sh = shingle_index(spark, sf_dir)
+def _pair_overlaps(sh: DataFrame) -> DataFrame:
+    """(source, id_a < id_b, n_a, n_b, n_common) for every within-source
+    pair of a shingle index that could have Jaccard > 0.2.
+
+    Inverted-index formulation, NOT a block-wise array self-join: a join
+    on `source` alone has ~20 keys (≤20 tasks, each shuffling every
+    shingle array in the block, then one core grinding array_intersect
+    per pair). Self-joining the exploded (source, shingle, doc) rows on
+    the high-cardinality (source, shingle) key keeps parallelism at
+    shuffle-partition granularity and never moves an array — the only
+    state per row is two longs. n_common/(n_a+n_b-n_common) == set
+    Jaccard because `s` is distinct per doc."""
     a = sh.select(
-        F.col("source"), F.col("s"), F.col("doc_id").alias("id_a"), F.col("n_sh").alias("n_a")
+        "source", "s", F.col("doc_id").alias("id_a"), F.col("n_sh").alias("n_a")
     )
     b = sh.select(
-        F.col("source"), F.col("s"), F.col("doc_id").alias("id_b"), F.col("n_sh").alias("n_b")
+        "source", "s", F.col("doc_id").alias("id_b"), F.col("n_sh").alias("n_b")
     )
-    common = (
+    return (
         a.join(b, ["source", "s"])
         .filter(F.col("id_a") < F.col("id_b"))
         # PPJoin length filter (r9): jaccard = c/(n_a+n_b-c) with
@@ -118,12 +121,21 @@ def q14c_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("source", "id_a", "id_b", "n_a", "n_b")
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
+
+
+def _jaccard_pairs(sh: DataFrame) -> DataFrame:
+    """q14c's result over shingle index ``sh``: pairs at Jaccard > 0.2."""
     jac = F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
     return (
-        common.select("source", "id_a", "id_b", F.round(jac, 6).alias("jaccard"))
+        _pair_overlaps(sh)
+        .select("source", "id_a", "id_b", F.round(jac, 6).alias("jaccard"))
         .filter(F.col("jaccard") > 0.2)
         .orderBy("source", "id_a", "id_b")
     )
+
+
+def q14c_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _jaccard_pairs(shingle_index(spark, sf_dir))
 
 
 # Same inverted-index shape as the Spark query (VERDICT r2 #7): the
@@ -654,32 +666,9 @@ def q83_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
         )
         shr = sh.join(ids, ["source", "doc_id"], "left_semi")
-    # exact verification: q14c's intersection join over the (possibly
-    # semi-joined) index, with the AllPairs LENGTH filter (lossless for
-    # J > 0.2 strictly: J <= min/max, so 5*min(n_a, n_b) >
-    # max(n_a, n_b)) pruning size-skewed pairs inside the join
-    a_sh = shr.select(
-        "source", "s", F.col("doc_id").alias("id_a"), F.col("n_sh").alias("n_a")
-    )
-    b_sh = shr.select(
-        "source", "s", F.col("doc_id").alias("id_b"), F.col("n_sh").alias("n_b")
-    )
-    common = (
-        a_sh.join(b_sh, ["source", "s"])
-        .filter(
-            (F.col("id_a") < F.col("id_b"))
-            & (F.col("n_a") < 5 * F.col("n_b"))
-            & (F.col("n_b") < 5 * F.col("n_a"))
-        )
-        .groupBy("source", "id_a", "id_b", "n_a", "n_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    jac = F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
-    return (
-        common.select("source", "id_a", "id_b", F.round(jac, 6).alias("jaccard"))
-        .filter(F.col("jaccard") > 0.2)
-        .orderBy("source", "id_a", "id_b")
-    )
+    # exact verification: q14c's intersection join, with its length
+    # filter, over the (possibly semi-joined) index
+    return _jaccard_pairs(shr)
 
 
 QUERIES["q83_prefix_filter_jaccard"] = q83_prefix_filter_jaccard
@@ -837,19 +826,11 @@ _Q108_K = 8
 
 
 def _q108_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Candidate pairs at exact Jaccard > 0.2 off the shared index."""
-    sh = shingle_index(spark, sf_dir)
-    a = sh.select(
-        "source", "s", F.col("doc_id").alias("id_a"), F.col("n_sh").alias("n_a")
-    )
-    b = sh.select(
-        "source", "s", F.col("doc_id").alias("id_b"), F.col("n_sh").alias("n_b")
-    )
+    """Candidate pairs at exact Jaccard > 0.2 off the shared index. The
+    length filter in _pair_overlaps is lossless here: exact_ppm > 200000
+    implies J > 0.2."""
     return (
-        a.join(b, ["source", "s"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("source", "id_a", "id_b", "n_a", "n_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
+        _pair_overlaps(shingle_index(spark, sf_dir))
         .withColumn(
             "exact_ppm",
             F.expr("n_common * 1000000 div (n_a + n_b - n_common)"),

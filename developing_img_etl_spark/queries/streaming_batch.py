@@ -220,50 +220,95 @@ ORDER BY user_id, session_start
 # ---------------------------------------------------------------------------
 _STREAM_SRC_CACHE: dict[str, str] = {}
 
-# State-store partition count for the AvailableNow drains. Every state
-# partition writes its own delta + snapshot + commit files per micro-
-# batch, so 32 partitions over kilobytes of state is 8x the fixed I/O
-# of 4 with zero parallelism benefit (measured: 31s -> 10s across the
-# six drains at sf0.1). At real state volumes size this like any
-# shuffle — target ~100 MB of state per partition; the env override is
-# the deployment knob.
-_STREAM_PARTITIONS = int(os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "4"))
-
 
 @contextmanager
-def _stream_shuffle(spark: SparkSession):
-    """Scope spark.sql.shuffle.partitions (= streaming state partition
-    count) to _STREAM_PARTITIONS for the duration of a drain. The
-    checkpoint pins the count at first batch, so it must be set before
-    .start() and is safe to restore after termination."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(_STREAM_PARTITIONS))
+def _scoped_confs(spark: SparkSession, confs: dict[str, str]):
+    """Set session ``confs`` for the duration of a drain, then restore
+    each key — unsetting one that was unset before. A query reads them
+    at ``.start()`` (the checkpoint pins the state partition count at
+    its first batch), so they are safe to restore after termination."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
     try:
         yield
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
-def _await_drained(q, timeout_s: int = 300) -> None:
-    """``awaitTermination`` with the boolean return CHECKED (ADVICE r7):
-    a ``False`` return means the availableNow drain is still appending —
-    proceeding to read its output (or to replay a batch) would yield a
-    nondeterministic partial result instead of a clear failure. Stop the
-    query and fail loudly so a slow run reads as a timeout, not a
-    hash-mismatch."""
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(
-            f"streaming drain still active after {timeout_s}s — refusing "
-            "to read a partially-written registry"
+def _parquet_sink(out: str, write_mode: str = "append"):
+    """foreachBatch sink writing each micro-batch to parquet dir ``out``
+    (``overwrite`` for complete mode, where every batch carries the full
+    result). Writing through the executors, not a memory sink, keeps
+    the result distributed at any size."""
+
+    def sink(batch: DataFrame, batch_id: int) -> None:
+        batch.write.mode(write_mode).parquet(out)
+
+    return sink
+
+
+def _drain(
+    frame: DataFrame,
+    sink,
+    ckpt: str,
+    *,
+    mode: str = "append",
+    stateful: bool,
+    timeout_s: int = 300,
+) -> None:
+    """Drain streaming ``frame`` into foreachBatch ``sink`` with
+    Trigger.AvailableNow from checkpoint ``ckpt``, and wait for it.
+
+    ``stateful`` drains (a state store: windowed aggregation, dedup,
+    stream-stream join, custom state) scope spark.sql.shuffle.partitions
+    — the state partition count — to SPARK_GRAFT_STREAM_PARTITIONS
+    (default 4), read here at each drain. Every state partition writes
+    its own delta + snapshot + commit files per micro-batch, so 32
+    partitions over kilobytes of state is 8x the fixed I/O of 4 with
+    zero parallelism benefit (measured: 31s -> 10s across the six
+    drains at sf0.1). At real state volumes size this like any shuffle
+    — target ~100 MB of state per partition. Stateless drains keep the
+    session count: the pin would only throttle their per-batch jobs.
+
+    The await is checked: a drain still appending after ``timeout_s``
+    is stopped and raises TimeoutError — reading its output (or
+    replaying a batch) would yield a nondeterministic partial result
+    instead of a clear failure.
+
+    st10's ticks source is not drained here: a simple stream reader
+    reports only the end of its next read as the latest offset, so an
+    AvailableNow drain stops after the first step (1,000 of 5,000 rows)
+    and st10 keeps a processAllAvailable loop instead."""
+    confs = {}
+    if stateful:
+        confs["spark.sql.shuffle.partitions"] = os.environ.get(
+            "SPARK_GRAFT_STREAM_PARTITIONS", "4"
         )
+    with _scoped_confs(frame.sparkSession, confs):
+        q = (
+            frame.writeStream.foreachBatch(sink)
+            .outputMode(mode)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        if not q.awaitTermination(timeout_s):
+            q.stop()
+            raise TimeoutError(
+                f"streaming drain still active after {timeout_s}s — refusing "
+                "to read a partially-written registry"
+            )
 
 
 def _link_events_into(sf_dir: str, src: str, n_copies: int = 1) -> None:
     """Stage ``n_copies`` hardlinks (else copies) of the events table
     into stream-source dir ``src`` — the shared staging block for every
     drain that needs a (possibly doubled) file stream source."""
-    import os
     import shutil
 
     os.makedirs(src, exist_ok=True)
@@ -281,7 +326,6 @@ def _staged_stream_dir(sf_dir: str) -> str:
     built once per (process, sf_dir): hardlink when possible (zero
     copy), else a one-time copy."""
     if sf_dir not in _STREAM_SRC_CACHE:
-        import os
         import shutil
         import tempfile
 
@@ -339,24 +383,14 @@ def st1_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     tmp = tempfile.mkdtemp(prefix="stq_")
     stream = _raw_events_stream(spark, sf_dir, src)
     out = f"{tmp}/out"
-
-    def sink(batch, batch_id):
-        # complete mode: every batch carries the FULL result; the last
-        # overwrite is the finalized table. Writing through executors
-        # instead of a memory sink keeps the result off the driver —
-        # the scale-safe shape for arbitrarily many windows.
-        batch.write.mode("overwrite").parquet(out)
-
-    with _stream_shuffle(spark):
-        q = (
-            tumbling_counts(stream, watermark="0 seconds")
-            .writeStream.foreachBatch(sink)
-            .outputMode("complete")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_drained(q)
+    # complete mode: the last overwrite is the finalized table
+    _drain(
+        tumbling_counts(stream, watermark="0 seconds"),
+        _parquet_sink(out, "overwrite"),
+        f"{tmp}/ckpt",
+        mode="complete",
+        stateful=True,
+    )
     return spark.read.parquet(out).orderBy("w_start")
 
 
@@ -416,20 +450,13 @@ def st2_streaming_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     tmp = tempfile.mkdtemp(prefix="stq2_")
     stream = _raw_events_stream(spark, sf_dir, src)
     out = f"{tmp}/out"
-
-    def sink(batch, batch_id):
-        batch.write.mode("overwrite").parquet(out)
-
-    with _stream_shuffle(spark):
-        q = (
-            session_counts(stream)
-            .writeStream.foreachBatch(sink)
-            .outputMode("complete")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_drained(q)
+    _drain(
+        session_counts(stream),
+        _parquet_sink(out, "overwrite"),
+        f"{tmp}/ckpt",
+        mode="complete",
+        stateful=True,
+    )
     return spark.read.parquet(out).orderBy("user_id", "session_start")
 
 
@@ -515,12 +542,8 @@ def _st3_late_file(spark: SparkSession, sf_dir: str) -> str:
 
 
 def st3_streaming_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import copy
-    import os
     import shutil
     import tempfile
-
-    from pyspark.sql import types as T
 
     from ..streaming.windows import tumbling_counts
 
@@ -528,30 +551,19 @@ def st3_streaming_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = tempfile.mkdtemp(prefix="stq3_")
     src, out, ckpt = f"{work}/src", f"{work}/out", f"{work}/ckpt"
     _link_events_into(sf_dir, src)
+    windows = tumbling_counts(
+        _raw_events_stream(spark, sf_dir, src), window="7 days", watermark="1 day"
+    )
+    sink = _parquet_sink(out)
 
-    def drain():
-        stream = _raw_events_stream(spark, sf_dir, src)
-
-        def sink(batch, batch_id):
-            batch.write.mode("append").parquet(out)
-
-        with _stream_shuffle(spark):
-            q = (
-                tumbling_counts(stream, window="7 days", watermark="1 day")
-                .writeStream.foreachBatch(sink)
-                .outputMode("append")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            _await_drained(q)
-
-    drain()  # events only; checkpoints watermark = max ts - 1 day
+    # events only; checkpoints watermark = max ts - 1 day
+    _drain(windows, sink, ckpt, stateful=True)
     try:
         os.link(late_file, f"{src}/01-late.parquet")
     except OSError:
         shutil.copyfile(late_file, f"{src}/01-late.parquet")
-    drain()  # late rows below the persisted watermark are dropped
+    # late rows below the persisted watermark are dropped
+    _drain(windows, sink, ckpt, stateful=True)
     return spark.read.parquet(out).orderBy("w_start")
 
 
@@ -631,19 +643,7 @@ def st4_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("user_id", "view_id", "purchase_id", "view_ts", "purchase_ts")
 
     out = f"{tmp}/out"
-
-    def sink(batch, batch_id):
-        batch.write.mode("append").parquet(out)
-
-    with _stream_shuffle(spark):
-        q = (
-            joined.writeStream.foreachBatch(sink)
-            .outputMode("append")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_drained(q)
+    _drain(joined, _parquet_sink(out), f"{tmp}/ckpt", stateful=True)
     return spark.read.parquet(out).orderBy("view_id", "purchase_id")
 
 
@@ -687,16 +687,7 @@ def st5_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     def sink(batch, batch_id):
         batch.withColumn("batch_id", F.lit(batch_id)).write.mode("append").parquet(out)
 
-    with _stream_shuffle(spark):
-        q = (
-            user_totals(stream)
-            .writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_drained(q)
+    _drain(user_totals(stream), sink, f"{tmp}/ckpt", mode="update", stateful=True)
     w = Window.partitionBy("user_id").orderBy(F.desc("batch_id"))
     return (
         spark.read.parquet(out)
@@ -739,8 +730,6 @@ ORACLES["st5_stateful_user_totals"] = ST5_SQL
 # hash-mismatches.
 # ---------------------------------------------------------------------------
 def st6_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
     import tempfile
 
     from ._det import dsum
@@ -752,19 +741,7 @@ def st6_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _raw_events_stream(
         spark, sf_dir, src, max_files_per_trigger=1
     ).dropDuplicates(["event_id"])
-
-    def sink(batch, batch_id):
-        batch.write.mode("append").parquet(out)
-
-    with _stream_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_drained(q)
+    _drain(stream, _parquet_sink(out), ckpt, stateful=True)
     return (
         spark.read.parquet(out)
         .groupBy("event_type")
@@ -801,7 +778,6 @@ ORACLES["st6_streaming_dedup"] = ST6_SQL
 # ---------------------------------------------------------------------------
 def st7_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
-    from contextlib import contextmanager
 
     from pyspark.sql import Window
 
@@ -815,38 +791,17 @@ def st7_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     def sink(batch, batch_id):
         batch.withColumn("batch_id", F.lit(batch_id)).write.mode("append").parquet(out)
 
-    @contextmanager
-    def _rocksdb_state_store():
-        # transformWithState keeps each state variable in its own
-        # column family — only the RocksDB provider supports that
-        # (HDFSBacked raises STATE_STORE_MULTIPLE_COLUMN_FAMILIES).
-        # Scoped like _stream_shuffle: set before .start(), restored
-        # after the drain so the other st* queries keep the default.
-        key = "spark.sql.streaming.stateStore.providerClass"
-        prev = spark.conf.get(key, None)
-        spark.conf.set(
-            key,
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
+    # transformWithState keeps each state variable in its own column
+    # family — only the RocksDB provider supports that (HDFSBacked
+    # raises STATE_STORE_MULTIPLE_COLUMN_FAMILIES). Scoped to this
+    # drain so the other st* queries keep the default provider.
+    rocksdb = {
+        "spark.sql.streaming.stateStore.providerClass": (
+            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
         )
-        try:
-            yield
-        finally:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
-
-    with _stream_shuffle(spark), _rocksdb_state_store():
-        q = (
-            user_totals_tws(stream)
-            .writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_drained(q)
+    }
+    with _scoped_confs(spark, rocksdb):
+        _drain(user_totals_tws(stream), sink, f"{tmp}/ckpt", mode="update", stateful=True)
     w = Window.partitionBy("user_id").orderBy(F.desc("batch_id"))
     return (
         spark.read.parquet(out)
@@ -902,8 +857,6 @@ else:
 # doubled source (two files), so results are the 2× batch aggregate.
 # ---------------------------------------------------------------------------
 def st8_streaming_txlog_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
     import tempfile
 
     from ..sinks.txlog import TxLogFormat
@@ -917,15 +870,7 @@ def st8_streaming_txlog_exactly_once(spark: SparkSession, sf_dir: str) -> DataFr
     fmt = TxLogFormat()
     writer = exactly_once_batch_writer(fmt, table, "st8")
     stream = _raw_events_stream(spark, sf_dir, src, max_files_per_trigger=1)
-    with _stream_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(writer)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_drained(q)
+    _drain(stream, writer, ckpt, stateful=False)
 
     # the crash-replay case: batch 0 arrives again → marker no-op
     writer(fmt.read(spark, table).limit(50), 0)
@@ -967,13 +912,10 @@ ORACLES["st8_streaming_txlog_exactly_once"] = ST8_SQL
 # delta and every count in the doubled-source oracle goes wrong.
 # ---------------------------------------------------------------------------
 def st9_streaming_view_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
     import tempfile
 
     from ..sinks.txlog import TxLogFormat
     from ..streaming.txlog_sink import incremental_view_writer
-    from ._det import dec
 
     work = tempfile.mkdtemp(prefix="stq9_")
     src, view, ckpt = f"{work}/src", f"{work}/view", f"{work}/ckpt"
@@ -982,15 +924,7 @@ def st9_streaming_view_maintenance(spark: SparkSession, sf_dir: str) -> DataFram
     fmt = TxLogFormat()
     writer = incremental_view_writer(fmt, view, "st9", ["event_type"], ["value"])
     stream = _raw_events_stream(spark, sf_dir, src, max_files_per_trigger=1)
-    with _stream_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(writer)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_drained(q)
+    _drain(stream, writer, ckpt, stateful=False)
 
     # crash-replay of batch 0: the txn marker must make it a no-op —
     # otherwise the view double-counts and the oracle hash-mismatches
@@ -1047,28 +981,22 @@ def st10_custom_source_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     tmp = tempfile.mkdtemp(prefix="st10_")
     out = f"{tmp}/out"
 
-    def sink(batch, batch_id):
-        batch.write.mode("append").parquet(out)
-
-    def drain():
-        stream = (
-            spark.readStream.format("ticks")
-            .option("end", str(_TICKS_END))
-            .option("step", str(_TICKS_STEP))
-            .load()
-        )
+    stream = (
+        spark.readStream.format("ticks")
+        .option("end", str(_TICKS_END))
+        .option("step", str(_TICKS_STEP))
+        .load()
+    )
+    # not _drain: AvailableNow would stop after one step (see _drain)
+    for _ in range(2):  # the restart from the same checkpoint must be a no-op
         q = (
-            stream.writeStream.foreachBatch(sink)
+            stream.writeStream.foreachBatch(_parquet_sink(out))
             .option("checkpointLocation", f"{tmp}/ckpt")
             .start()
         )
         q.processAllAvailable()
         q.stop()
         q.awaitTermination(60)
-
-    with _stream_shuffle(spark):
-        drain()
-        drain()  # restart from the same checkpoint: must be a no-op
     return (
         spark.read.parquet(out)
         .groupBy("user_id")
@@ -1102,8 +1030,6 @@ ORACLES["st10_custom_source_stream"] = ST10_SQL
 # premature state eviction (or missed duplicate) breaks the hash.
 # ---------------------------------------------------------------------------
 def st11_streaming_dedup_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
     import tempfile
 
     from ._det import dsum
@@ -1117,19 +1043,7 @@ def st11_streaming_dedup_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("ts", "1 day")
         .dropDuplicatesWithinWatermark(["event_id"])
     )
-
-    def sink(batch, batch_id):
-        batch.write.mode("append").parquet(out)
-
-    with _stream_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_drained(q)
+    _drain(stream, _parquet_sink(out), ckpt, stateful=True)
     return (
         spark.read.parquet(out)
         .groupBy("event_type")
@@ -1184,19 +1098,7 @@ def st12_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _raw_events_stream(spark, sf_dir, src).join(
         F.broadcast(dim), "user_id", "left"
     )
-
-    def sink(batch, batch_id):
-        batch.write.mode("append").parquet(out)
-
-    with _stream_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_drained(q)
+    _drain(stream, _parquet_sink(out), ckpt, stateful=False)
     return (
         spark.read.parquet(out)
         .groupBy(F.coalesce("c_mktsegment", F.lit("<unmatched>")).alias("segment"))
@@ -1297,22 +1199,10 @@ def st13_streaming_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
         fmt.overwrite(regs, table)
 
     stream = _raw_events_stream(spark, sf_dir, src, max_files_per_trigger=1)
-    # no stateful operator in this drain (registry lives in files) —
-    # the _stream_shuffle state-partition pin would only throttle the
-    # per-batch aggregation to 4 tasks (VERDICT r10 #5 drain floor).
-    # r12 re-probe of VERDICT r11 #2 (driver saw 0.802 + anti-scaling
-    # after the r11 unpin): two paired 5-rep knob probes, opposite
-    # orders, pin-restored vs unpinned — mins 3.62 vs 3.63 s, medians
-    # split (4.22/4.51 vs 4.02/4.26). Parity: the r11 regression was
-    # driver-window drift, not the unpin. Unpinned shape retained.
-    q = (
-        stream.writeStream.foreachBatch(merge_registers)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_drained(q)
+    # registry lives in files: the drain holds no state. Two paired
+    # 5-rep knob probes, opposite orders, pinned vs unpinned: mins 3.62
+    # vs 3.63 s, medians split (4.22/4.51 vs 4.02/4.26).
+    _drain(stream, merge_registers, ckpt, stateful=False)
 
     # crash-replay: the ACTUAL first staged file (= batch 0 under
     # maxFilesPerTrigger=1) again — a no-op because max-merge is
@@ -1425,19 +1315,7 @@ def st14_stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame
     ).select("user_id", "view_id", "purchase_id", "view_ts", "purchase_ts")
 
     out = f"{tmp}/out"
-
-    def sink(batch, batch_id):
-        batch.write.mode("append").parquet(out)
-
-    with _stream_shuffle(spark):
-        q = (
-            joined.writeStream.foreachBatch(sink)
-            .outputMode("append")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_drained(q)
+    _drain(joined, _parquet_sink(out), f"{tmp}/ckpt", stateful=True)
     return spark.read.parquet(out).orderBy("view_id", "purchase_id")
 
 
@@ -1567,29 +1445,19 @@ def st15_streaming_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sf10 cost was micro-batch machinery, not plan): 2 files per
     # trigger halves the lifecycle count while still proving the
     # cross-batch registry merge (2 batches, each covering distinct
-    # doc ranges), and the _stream_shuffle 4-partition pin is skipped —
-    # it exists to fix the STATE-STORE partition count, and this drain
-    # has no stateful operator (dedup lives in the reg/dbs files), so
-    # the pin only throttled the per-batch signature aggregation to 4
-    # tasks. Measured at sf0.1: 9.0 s → 4.2 s, hash unchanged.
+    # doc ranges), and the drain is stateless (dedup lives in the
+    # reg/dbs files), so the 4-partition state pin is skipped — it
+    # only throttled the per-batch signature aggregation to 4 tasks.
+    # Measured at sf0.1: 9.0 s → 4.2 s, hash unchanged.
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 2)
         .parquet(src)
     )
-    def drain() -> None:
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_drained(q)
-
-    drain()
-    drain()  # restart from the checkpoint: must be a no-op (and any
-    #         replayed batch is absorbed by the min-on-read algebra)
+    _drain(stream, sink, ckpt, stateful=False)
+    # restart from the checkpoint: must be a no-op (and any replayed
+    # batch is absorbed by the min-on-read algebra)
+    _drain(stream, sink, ckpt, stateful=False)
 
     owners = (
         spark.read.parquet(reg)
@@ -1718,22 +1586,9 @@ def st16_streaming_cms_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).write.mode("append").parquet(reg)
 
     stream = _raw_events_stream(spark, sf_dir, src, max_files_per_trigger=1)
-
-    def drain() -> None:
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_drained(q)
-
-    # no stateful operator in this drain (registry lives in files) —
-    # the _stream_shuffle state-partition pin would only throttle the
-    # per-batch aggregation to 4 tasks (VERDICT r10 #5 drain floor)
-    drain()
-    drain()  # checkpoint restart: no new batches, registry untouched
+    # registry lives in files: the drain holds no state
+    _drain(stream, sink, ckpt, stateful=False)
+    _drain(stream, sink, ckpt, stateful=False)  # restart: no new batches
 
     # crash-replay: run batch 0's file through the sink AGAIN with the
     # same batch_id — the txn-marker reconciliation below must absorb it
@@ -1883,22 +1738,9 @@ def st17_streaming_exact_quantiles(spark: SparkSession, sf_dir: str) -> DataFram
         ).write.mode("append").parquet(reg)
 
     stream = _raw_events_stream(spark, sf_dir, src, max_files_per_trigger=1)
-
-    def drain() -> None:
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_drained(q)
-
-    # no stateful operator in this drain (registry lives in files) —
-    # the _stream_shuffle state-partition pin would only throttle the
-    # per-batch aggregation to 4 tasks (VERDICT r10 #5 drain floor)
-    drain()
-    drain()  # checkpoint restart: no new batches, registry untouched
+    # registry lives in files: the drain holds no state
+    _drain(stream, sink, ckpt, stateful=False)
+    _drain(stream, sink, ckpt, stateful=False)  # restart: no new batches
 
     # crash-replay: batch 0's file through the sink AGAIN with the same
     # batch_id — MAX-reconciliation below must absorb the duplicate
@@ -2017,22 +1859,9 @@ def st18_streaming_zonemap(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).write.mode("append").parquet(reg)
 
     stream = _raw_events_stream(spark, sf_dir, src, max_files_per_trigger=1)
-
-    def drain() -> None:
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_drained(q)
-
-    # no stateful operator in this drain (registry lives in files) —
-    # the _stream_shuffle state-partition pin would only throttle the
-    # per-batch aggregation to 4 tasks (VERDICT r10 #5 drain floor)
-    drain()
-    drain()  # checkpoint restart: no new batches
+    # registry lives in files: the drain holds no state
+    _drain(stream, sink, ckpt, stateful=False)
+    _drain(stream, sink, ckpt, stateful=False)  # restart: no new batches
 
     from ..catalog import normalize_event_ts
 
@@ -2193,22 +2022,9 @@ def st19_streaming_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).write.mode("append").parquet(reg)
 
     stream = _raw_events_stream(spark, sf_dir, src, max_files_per_trigger=1)
-
-    def drain() -> None:
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_drained(q)
-
-    # no stateful operator in this drain (registry lives in files) —
-    # the _stream_shuffle state-partition pin would only throttle the
-    # per-batch aggregation to 4 tasks (VERDICT r10 #5 drain floor)
-    drain()
-    drain()  # checkpoint restart: no new batches, registry untouched
+    # registry lives in files: the drain holds no state
+    _drain(stream, sink, ckpt, stateful=False)
+    _drain(stream, sink, ckpt, stateful=False)  # restart: no new batches
 
     # crash-replay: batch 0's ACTUAL input through the sink AGAIN, same
     # batch_id. The file set is derived from the FileStreamSource commit
@@ -2358,22 +2174,9 @@ def st20_streaming_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).write.mode("append").parquet(reg)
 
     stream = _raw_events_stream(spark, sf_dir, src, max_files_per_trigger=1)
-
-    def drain() -> None:
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_drained(q)
-
-    # no stateful operator in this drain (registry lives in files) —
-    # the _stream_shuffle state-partition pin would only throttle the
-    # per-batch aggregation to 4 tasks (VERDICT r10 #5 drain floor)
-    drain()
-    drain()  # checkpoint restart: no new batches, registry untouched
+    # registry lives in files: the drain holds no state
+    _drain(stream, sink, ckpt, stateful=False)
+    _drain(stream, sink, ckpt, stateful=False)  # restart: no new batches
 
     # crash-replay batch 0's ACTUAL file set (st19's commit-log rule)
     with open(f"{ckpt}/sources/0/0") as fh:

@@ -29,9 +29,41 @@ committed" is the idempotency predicate.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame
 
 from ..sinks.txlog import TxConflict, TxLogFormat
+
+
+def _commit_exactly_once(
+    fmt: TxLogFormat, path: str, app_id: str, batch_id: int, commit, max_retries: int
+) -> None:
+    """Commit batch ``batch_id`` of ``app_id`` at most once: skip it if
+    its txn marker is already in the log, else call
+    ``commit(txn=..., expected_version=...)`` and retry on TxConflict.
+    A version > 0 means the table already has a snapshot."""
+    for _ in range(max_retries):
+        # ORDER MATTERS: capture the expected version FIRST, then
+        # scan markers. The marker scan then covers every commit
+        # ≤ expected-1; any commit that lands after it (including a
+        # concurrent replay of THIS batch) claims `expected` and
+        # fails our CAS, forcing a marker re-read. Checking markers
+        # before the version read would leave a window where a
+        # freshly-committed duplicate passes both checks.
+        vs = fmt.versions(path)
+        expected = (vs[-1] + 1) if vs else 0
+        last = fmt.last_txn_batch(path, app_id)
+        if last is not None and batch_id <= last:
+            return  # replay of a committed batch: no-op
+        try:
+            commit(txn=(app_id, batch_id), expected_version=expected)
+            return
+        except TxConflict:
+            continue  # someone committed meanwhile — recheck markers
+    raise TxConflict(
+        f"{path}: batch {batch_id} lost the commit race {max_retries} times"
+    )
 
 
 def exactly_once_batch_writer(
@@ -49,31 +81,8 @@ def exactly_once_batch_writer(
     """
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
-        for _ in range(max_retries):
-            # ORDER MATTERS: capture the expected version FIRST, then
-            # scan markers. The marker scan then covers every commit
-            # ≤ expected-1; any commit that lands after it (including a
-            # concurrent replay of THIS batch) claims `expected` and
-            # fails our CAS, forcing a marker re-read. Checking markers
-            # before the version read would leave a window where a
-            # freshly-committed duplicate passes both checks.
-            vs = fmt.versions(path)
-            expected = (vs[-1] + 1) if vs else 0
-            last = fmt.last_txn_batch(path, app_id)
-            if last is not None and batch_id <= last:
-                return  # replay of a committed batch: no-op
-            try:
-                fmt.append(
-                    batch,
-                    path,
-                    txn=(app_id, batch_id),
-                    expected_version=expected,
-                )
-                return
-            except TxConflict:
-                continue  # someone committed meanwhile — recheck markers
-        raise TxConflict(
-            f"{path}: batch {batch_id} lost the commit race {max_retries} times"
+        _commit_exactly_once(
+            fmt, path, app_id, batch_id, partial(fmt.append, batch, path), max_retries
         )
 
     return write_batch
@@ -94,38 +103,17 @@ def incremental_view_writer(
     snapshot-isolated overwrite stamped by a txn marker. Readers of the
     view always see a complete consistent snapshot; a replayed batch is
     a marker no-op; a concurrent replay loses the version CAS and
-    discovers the marker on retry. The version is captured BEFORE the
-    marker check and pinned through the overwrite, so no commit can
-    slip into the gap unobserved (the txlog_sink race lesson)."""
+    discovers the marker on retry."""
     from ..operators.ivm import delta_aggregate, incremental_refresh
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
-        sess = batch.sparkSession
-        for _ in range(max_retries):
-            vs = fmt.versions(path)
-            expected = (vs[-1] + 1) if vs else 0
-            last = fmt.last_txn_batch(path, app_id)
-            if last is not None and batch_id <= last:
-                return
-            dagg = delta_aggregate(batch, group_cols, sum_cols)
-            if vs:
-                view = fmt.read(sess, path)
-                refreshed = incremental_refresh(view, dagg, group_cols, sum_cols)
-            else:
-                refreshed = dagg
-            try:
-                fmt.overwrite(
-                    refreshed,
-                    path,
-                    txn=(app_id, batch_id),
-                    expected_version=expected,
-                )
-                return
-            except TxConflict:
-                continue
-        raise TxConflict(
-            f"{path}: view refresh for batch {batch_id} lost the race "
-            f"{max_retries} times"
-        )
+        def refresh(*, txn, expected_version: int) -> None:
+            refreshed = delta_aggregate(batch, group_cols, sum_cols)
+            if expected_version:
+                view = fmt.read(batch.sparkSession, path)
+                refreshed = incremental_refresh(view, refreshed, group_cols, sum_cols)
+            fmt.overwrite(refreshed, path, txn=txn, expected_version=expected_version)
+
+        _commit_exactly_once(fmt, path, app_id, batch_id, refresh, max_retries)
 
     return write_batch

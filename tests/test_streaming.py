@@ -299,3 +299,80 @@ def test_ticks_source_offset_contract():
     # bounded source: reading at the end yields an empty batch, same offset
     rows, nxt = r.read({"i": 25})
     assert list(rows) == [] and nxt == {"i": 25}
+
+
+# -- the checked drain (queries/streaming_batch.py::_drain) -----------------
+
+_SHUFFLE = "spark.sql.shuffle.partitions"
+
+
+def _tiny_stream(spark, tmp_path):
+    src = str(tmp_path / "src")
+    spark.range(10).coalesce(1).write.parquet(src)
+    return spark.readStream.schema("id BIGINT").parquet(src)
+
+
+def test_drain_timeout_stops_query_and_restores_confs(spark, tmp_path, monkeypatch):
+    """A drain still running at its timeout raises TimeoutError instead
+    of letting the caller read a partial result, leaves no active query
+    behind, and restores the state partition count it scoped."""
+    import time
+
+    from developing_img_etl_spark.queries.streaming_batch import _drain
+
+    before = spark.conf.get(_SHUFFLE)
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_PARTITIONS", "3")
+
+    def slow_sink(batch, batch_id):
+        time.sleep(4)
+
+    with pytest.raises(TimeoutError):
+        _drain(
+            _tiny_stream(spark, tmp_path),
+            slow_sink,
+            str(tmp_path / "ckpt"),
+            stateful=True,
+            timeout_s=1,
+        )
+    assert spark.streams.active == []
+    assert spark.conf.get(_SHUFFLE) == before
+
+
+def test_drain_scopes_state_partitions_only_when_stateful(spark, tmp_path, monkeypatch):
+    """The knob is read at each drain (not at import), reaches the
+    query's micro-batches only for a stateful drain, and the session
+    count is back after either kind."""
+    from developing_img_etl_spark.queries.streaming_batch import _drain
+
+    before = spark.conf.get(_SHUFFLE)
+    stream = _tiny_stream(spark, tmp_path)
+    seen = []
+
+    def sink(batch, batch_id):
+        seen.append(batch.sparkSession.conf.get(_SHUFFLE))
+
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_PARTITIONS", "3")
+    _drain(stream, sink, str(tmp_path / "ck1"), stateful=True)
+    assert spark.conf.get(_SHUFFLE) == before
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_PARTITIONS", "5")
+    _drain(stream, sink, str(tmp_path / "ck2"), stateful=True)
+    _drain(stream, sink, str(tmp_path / "ck3"), stateful=False)
+    assert seen == ["3", "5", before]
+    assert spark.conf.get(_SHUFFLE) == before
+
+
+def test_scoped_confs_restore_when_the_block_raises(spark):
+    """Each scoped key gets its old value back — and a key that was
+    unset is unset again — also when the drain inside raises."""
+    from developing_img_etl_spark.queries.streaming_batch import _scoped_confs
+
+    unset_key = "spark.graft.test.scopedConf"
+    before = spark.conf.get(_SHUFFLE)
+    assert spark.conf.get(unset_key, None) is None
+    with pytest.raises(RuntimeError):
+        with _scoped_confs(spark, {_SHUFFLE: "3", unset_key: "on"}):
+            assert spark.conf.get(_SHUFFLE) == "3"
+            assert spark.conf.get(unset_key) == "on"
+            raise RuntimeError("drain failed")
+    assert spark.conf.get(_SHUFFLE) == before
+    assert spark.conf.get(unset_key, None) is None

@@ -570,3 +570,57 @@ def test_incremental_view_writer_exactly_once(spark, tmp_path):
     # the view's history is per-batch snapshots (time travel works)
     v0 = {r.g: r.n for r in fmt.read(spark, path, version=0).collect()}
     assert v0 == {"a": 1, "b": 1}
+
+
+@pytest.mark.parametrize("rival_app", ["etl", "other"])
+@pytest.mark.parametrize("kind", ["append", "view"])
+def test_commit_loop_retries_after_losing_the_cas(spark, tmp_path, kind, rival_app):
+    """A rival commit lands between the writer's version capture and
+    its commit, so the first commit loses the CAS. On retry the writer
+    finds its own marker (the rival was a concurrent replay of the same
+    batch) or commits at the next version (the rival was another app)."""
+    from developing_img_etl_spark.streaming.txlog_sink import (
+        exactly_once_batch_writer,
+        incremental_view_writer,
+    )
+
+    path = str(tmp_path / "t")
+    batch = spark.createDataFrame([("a", 10.0), ("b", 5.0)], "g STRING, x DOUBLE")
+    if kind == "append":
+        method = "append"
+
+        def make(f, app):
+            return exactly_once_batch_writer(f, path, app)
+    else:
+        method = "overwrite"
+
+        def make(f, app):
+            return incremental_view_writer(f, path, app, ["g"], ["x"])
+
+    fmt = TxLogFormat()
+    rival = make(TxLogFormat(), rival_app)
+    real = getattr(fmt, method)
+    attempts = []
+
+    def racing_commit(df, p, **kw):
+        attempts.append(kw["expected_version"])
+        if len(attempts) == 1:
+            rival(batch, 0)  # claims the version this commit expects
+        return real(df, p, **kw)
+
+    setattr(fmt, method, racing_commit)
+    make(fmt, "etl")(batch, 0)
+
+    assert fmt.txn_batches(path, "etl") == {0}
+    if rival_app == "etl":  # retry finds the marker: no second commit
+        assert attempts == [0] and fmt.versions(path) == [0]
+        copies = 1
+    else:  # retry commits at the next version
+        assert attempts == [0, 1] and fmt.versions(path) == [0, 1]
+        copies = 2
+    got = fmt.read(spark, path)
+    if kind == "append":
+        assert got.count() == 2 * copies
+    else:
+        rows = {r.g: (r.n, float(r.x)) for r in got.collect()}
+        assert rows == {"a": (copies, 10.0 * copies), "b": (copies, 5.0 * copies)}
