@@ -122,6 +122,21 @@ _FAKE_SQL_BASE = """
   FROM part
 """
 
+# Output dims of the paper's transform (image._recompress) over a `dims`
+# CTE: aspect-preserving downscale to the 1024 cap, int(dim * scale)
+# truncation clamped to 1 px. For positive values CAST(floor(x) AS INT)
+# == Python int() truncation.
+_SQL_RESIZED = """
+  SELECT *,
+         CASE WHEN greatest(w, h) > 1024
+              THEN greatest(CAST(floor(w * (1024.0 / greatest(w, h))) AS INT), 1)
+              ELSE w END AS w2,
+         CASE WHEN greatest(w, h) > 1024
+              THEN greatest(CAST(floor(h * (1024.0 / greatest(w, h))) AS INT), 1)
+              ELSE h END AS h2
+  FROM dims
+"""
+
 
 # --------------------------------------------------------------------------
 # M2/M3 — metadata extraction + unreadable guard through the pandas UDF.
@@ -170,18 +185,12 @@ def m1_image_compress(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("p_partkey")
 
 
-# int(dim*scale) truncation and int(w*h*0.65) body both mirror exactly:
-# positive values → CAST AS INT == Python int() truncation.
+# The int(w*h*0.65) body mirrors exactly like the dims: positive values →
+# CAST AS INT == Python int() truncation. FAKEIMG dims are at least
+# 32×24, so the 1 px clamp of `resized` never applies here.
 M1_SQL = f"""
 WITH dims AS ({_FAKE_SQL_BASE}),
-resized AS (
-  SELECT p_partkey, w, h,
-         CASE WHEN greatest(w, h) > 1024
-              THEN CAST(floor(w * (1024.0 / greatest(w, h))) AS INT) ELSE w END AS w2,
-         CASE WHEN greatest(w, h) > 1024
-              THEN CAST(floor(h * (1024.0 / greatest(w, h))) AS INT) ELSE h END AS h2
-  FROM dims
-)
+resized AS ({_SQL_RESIZED})
 SELECT p_partkey,
        CASE WHEN w IS NULL THEN 'unreadable' ELSE 'ok' END AS status,
        CASE WHEN w IS NULL THEN NULL
@@ -442,191 +451,6 @@ ORACLES["m11_video_frame_sample"] = M11_SQL
 
 
 # --------------------------------------------------------------------------
-# M12 — the REAL raster path (multimodal/bmp.py): generate actual
-# 24-bit BMP pixel data per part row, run decode → nearest-neighbor
-# downscale → lossless re-encode through the same compress_pipeline
-# surface, and let the oracle predict output dims AND byte size exactly
-# (BMP size is pure arithmetic: 54 + 4-byte-padded row stride × h).
-# Unlike m1 this is not a header-format seam — pixels really move.
-# Over-cap rows are kept short (h=8) so the corpus stays KB-sized.
-# --------------------------------------------------------------------------
-_gen_bmp = _generator("_gen_bmp", bmp.make_bmp)
-
-
-def _bmp_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # every 10th part: the pixel corpus exercises the codec fully at a
-    # tenth of the per-row Python cost (and keeps m14's per-pixel
-    # oracle bounded — same sampling there)
-    part = _widen(load(spark, sf_dir, "part").filter(F.col("p_partkey") % 10 == 0))
-    corrupt = F.col("p_partkey") % 97 == 0
-    w = F.when(F.col("p_size") > 48, 1200 + F.col("p_size")).otherwise(
-        16 + F.pmod(F.col("p_size"), F.lit(64))
-    )
-    h = F.when(F.col("p_size") > 48, F.lit(8)).otherwise(F.lit(12))
-    return part.select(
-        "p_partkey",
-        F.when(corrupt, F.lit(b"BMcorrupt"))
-        .otherwise(_gen_bmp(w, h, F.pmod(F.col("p_partkey"), F.lit(251))))
-        .alias("content"),
-    )
-
-
-def m12_bmp_compress(spark: SparkSession, sf_dir: str) -> DataFrame:
-    imgs = _bmp_corpus(spark, sf_dir)
-    out = compress_pipeline(imgs)
-    stats = with_image_stats(out, "content_out")
-    return _pin_for_sort(
-        stats.select(
-            "p_partkey",
-            "status",
-            "width",
-            "height",
-            F.length("content_out").cast("long").alias("out_bytes"),
-        )
-    ).orderBy("p_partkey")
-
-
-M12_SQL = """
-WITH dims AS (
-  SELECT p_partkey,
-         CASE WHEN p_partkey % 97 = 0 THEN NULL
-              WHEN p_size > 48 THEN 1200 + p_size
-              ELSE 16 + (p_size % 64) END AS w,
-         CASE WHEN p_partkey % 97 = 0 THEN NULL
-              WHEN p_size > 48 THEN 8 ELSE 12 END AS h
-  FROM part
-  WHERE p_partkey % 10 = 0
-),
-resized AS (
-  SELECT p_partkey, w, h,
-         CASE WHEN greatest(w, h) > 1024
-              THEN greatest(CAST(floor(w * (1024.0 / greatest(w, h))) AS INT), 1)
-              ELSE w END AS w2,
-         CASE WHEN greatest(w, h) > 1024
-              THEN greatest(CAST(floor(h * (1024.0 / greatest(w, h))) AS INT), 1)
-              ELSE h END AS h2
-  FROM dims
-)
-SELECT p_partkey,
-       CASE WHEN w IS NULL THEN 'unreadable' ELSE 'ok' END AS status,
-       w2 AS width,
-       h2 AS height,
-       -- exact BMP size: 14+40 header + stride(w)*h, stride padded to 4
-       CASE WHEN w IS NULL THEN NULL
-            ELSE CAST(54 + (CAST(floor((w2 * 3 + 3) / 4.0) AS INT) * 4) * h2 AS BIGINT)
-       END AS out_bytes
-FROM resized
-ORDER BY p_partkey
-"""
-
-QUERIES["m12_bmp_compress"] = m12_bmp_compress
-ORACLES["m12_bmp_compress"] = M12_SQL
-
-
-# --------------------------------------------------------------------------
-# M14 — PNG compress: the stdlib *compressed*-format pixel path
-# (multimodal/png.py). Same decode→resize→re-encode pipeline as m12,
-# but through inflate/unfilter and refilter/deflate. DEFLATE output
-# size is not arithmetic, so instead of byte counts the query emits a
-# position-weighted checksum of the DECODED OUTPUT pixels — the oracle
-# recomputes it in pure SQL from the gradient + nearest-neighbor index
-# arithmetic (min(floor(dst * src/dst), src-1), the reference's
-# truncation style). Any corrupted/moved/dropped byte anywhere in
-# generate → deflate → inflate → resize → deflate → inflate mismatches.
-# Corpus is every 10th part so the oracle's per-pixel UNNEST stays
-# bounded (~1.5 M rows at sf0.1).
-# --------------------------------------------------------------------------
-_gen_png = _generator("_gen_png", png.make_png)
-_png_pixel_checksum = _digest("_png_pixel_checksum", png.png_decode)
-
-
-def _png_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = _widen(load(spark, sf_dir, "part").filter(F.col("p_partkey") % 10 == 0))
-    corrupt = F.col("p_partkey") % 97 == 0
-    w = F.when(F.col("p_size") > 48, 1200 + F.col("p_size")).otherwise(
-        16 + F.pmod(F.col("p_size"), F.lit(48))
-    )
-    h = F.when(F.col("p_size") > 48, F.lit(8)).otherwise(12 + F.pmod(F.col("p_size"), F.lit(16)))
-    return part.select(
-        "p_partkey",
-        F.when(corrupt, F.lit(b"\x89PNG-corrupt"))
-        .otherwise(_gen_png(w, h, F.pmod(F.col("p_partkey"), F.lit(251))))
-        .alias("content"),
-    )
-
-
-def m14_png_compress(spark: SparkSession, sf_dir: str) -> DataFrame:
-    imgs = _png_corpus(spark, sf_dir)
-    out = compress_pipeline(imgs)
-    stats = with_image_stats(out, "content_out")
-    return _pin_for_sort(
-        stats.select(
-            "p_partkey",
-            "status",
-            "width",
-            "height",
-            _png_pixel_checksum(F.col("content_out")).alias("pixel_checksum"),
-        )
-    ).orderBy("p_partkey")
-
-
-M14_SQL = """
-WITH dims AS (
-  SELECT p_partkey,
-         p_partkey % 251 AS seed,
-         CASE WHEN p_partkey % 97 = 0 THEN NULL
-              WHEN p_size > 48 THEN 1200 + p_size
-              ELSE 16 + (p_size % 48) END AS w,
-         CASE WHEN p_partkey % 97 = 0 THEN NULL
-              WHEN p_size > 48 THEN 8
-              ELSE 12 + (p_size % 16) END AS h
-  FROM part
-  WHERE p_partkey % 10 = 0
-),
-resized AS (
-  SELECT p_partkey, seed, w, h,
-         CASE WHEN greatest(w, h) > 1024
-              THEN greatest(CAST(floor(w * (1024.0 / greatest(w, h))) AS INT), 1)
-              ELSE w END AS w2,
-         CASE WHEN greatest(w, h) > 1024
-              THEN greatest(CAST(floor(h * (1024.0 / greatest(w, h))) AS INT), 1)
-              ELSE h END AS h2
-  FROM dims
-),
-px AS (
-  SELECT p_partkey,
-         SUM(
-           -- source indices: the nn_resize gather, min(floor(dst*src/dst), src-1)
-           ((seed * 29 + least(CAST(floor(x2 * (w * 1.0 / w2)) AS BIGINT), w - 1)
-                       + least(CAST(floor(y2 * (h * 1.0 / h2)) AS BIGINT), h - 1)) % 256)
-             * ((y2 * w2 + x2) * 3 + 1)
-           + ((seed * 11 + least(CAST(floor(x2 * (w * 1.0 / w2)) AS BIGINT), w - 1) * 3
-                         + least(CAST(floor(y2 * (h * 1.0 / h2)) AS BIGINT), h - 1) * 5) % 256)
-             * ((y2 * w2 + x2) * 3 + 2)
-           + ((seed + least(CAST(floor(x2 * (w * 1.0 / w2)) AS BIGINT), w - 1) * 7
-                    + least(CAST(floor(y2 * (h * 1.0 / h2)) AS BIGINT), h - 1) * 13) % 256)
-             * ((y2 * w2 + x2) * 3 + 3)
-         ) AS pixel_checksum
-  FROM resized,
-       UNNEST(range(0, resized.h2)) AS ty(y2),
-       UNNEST(range(0, resized.w2)) AS tx(x2)
-  WHERE w IS NOT NULL
-  GROUP BY p_partkey
-)
-SELECT r.p_partkey,
-       CASE WHEN r.w IS NULL THEN 'unreadable' ELSE 'ok' END AS status,
-       r.w2 AS width,
-       r.h2 AS height,
-       px.pixel_checksum
-FROM resized r LEFT JOIN px ON r.p_partkey = px.p_partkey
-ORDER BY r.p_partkey
-"""
-
-QUERIES["m14_png_compress"] = m14_png_compress
-ORACLES["m14_png_compress"] = M14_SQL
-
-
-# --------------------------------------------------------------------------
 # M16 — the REAL audio path (multimodal/wav.py): generate actual
 # RIFF/WAV 16-bit PCM per document row, run decode → nearest-neighbor
 # resample to a quarter rate → lossless re-encode → decode again, and
@@ -767,230 +591,221 @@ ORACLES["m16_wav_resample"] = M16_SQL
 
 
 # --------------------------------------------------------------------------
-# M17 — the GIF/LZW path (multimodal/gif.py): generate real
-# palette-indexed GIF89a pixel data per part row, run decode →
-# nearest-neighbor downscale → LZW re-encode through the same
-# compress_pipeline surface, verify a position-weighted checksum of the
-# DECODED OUTPUT pixels (LZW output size, like DEFLATE's, is not
-# arithmetic). Third compression family through the pixel pipeline:
-# none (BMP, m12), DEFLATE (PNG, m14), dictionary coding (here).
-# Pixel slot c = (x*7 + y*13 + seed) % 64 with RGB = ((c*3+11)%256,
-# (c*5+1)%256, (c*7+3)%256) — replayed by the oracle through the same
-# nn-gather index arithmetic as m14. Corrupt rows carry a valid GIF
-# header whose body ends before any image descriptor — the guard
-# exercised INSIDE the block walker.
-# --------------------------------------------------------------------------
-_gen_gif = _generator("_gen_gif", gif.make_gif)
-_gif_pixel_checksum = _digest("_gif_pixel_checksum", gif.gif_decode)
-
-
-def _gif_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = _widen(load(spark, sf_dir, "part").filter(F.col("p_partkey") % 10 == 0))
-    corrupt = F.col("p_partkey") % 97 == 0
-    w = F.when(F.col("p_size") > 48, 1200 + F.col("p_size")).otherwise(
-        16 + F.pmod(F.col("p_size"), F.lit(40))
-    )
-    h = F.when(F.col("p_size") > 48, F.lit(8)).otherwise(12 + F.pmod(F.col("p_size"), F.lit(20)))
-    return part.select(
-        "p_partkey",
-        F.when(corrupt, F.lit(b"GIF89acorrupt"))
-        .otherwise(_gen_gif(w, h, F.pmod(F.col("p_partkey"), F.lit(251))))
-        .alias("content"),
-    )
-
-
-def m17_gif_compress(spark: SparkSession, sf_dir: str) -> DataFrame:
-    imgs = _gif_corpus(spark, sf_dir)
-    out = compress_pipeline(imgs)
-    stats = with_image_stats(out, "content_out")
-    return _pin_for_sort(
-        stats.select(
-            "p_partkey",
-            "status",
-            "width",
-            "height",
-            _gif_pixel_checksum(F.col("content_out")).alias("pixel_checksum"),
-        )
-    ).orderBy("p_partkey")
-
-
-M17_SQL = """
-WITH dims AS (
-  SELECT p_partkey,
-         p_partkey % 251 AS seed,
-         CASE WHEN p_partkey % 97 = 0 THEN NULL
-              WHEN p_size > 48 THEN 1200 + p_size
-              ELSE 16 + (p_size % 40) END AS w,
-         CASE WHEN p_partkey % 97 = 0 THEN NULL
-              WHEN p_size > 48 THEN 8
-              ELSE 12 + (p_size % 20) END AS h
-  FROM part
-  WHERE p_partkey % 10 = 0
-),
-resized AS (
-  SELECT p_partkey, seed, w, h,
-         CASE WHEN greatest(w, h) > 1024
-              THEN greatest(CAST(floor(w * (1024.0 / greatest(w, h))) AS INT), 1)
-              ELSE w END AS w2,
-         CASE WHEN greatest(w, h) > 1024
-              THEN greatest(CAST(floor(h * (1024.0 / greatest(w, h))) AS INT), 1)
-              ELSE h END AS h2
-  FROM dims
-),
-px AS (
-  SELECT p_partkey,
-         SUM(((c * 3 + 11) % 256) * ((y2 * w2 + x2) * 3 + 1)
-           + ((c * 5 + 1) % 256) * ((y2 * w2 + x2) * 3 + 2)
-           + ((c * 7 + 3) % 256) * ((y2 * w2 + x2) * 3 + 3)) AS pixel_checksum
-  FROM (
-    SELECT p_partkey, w2, x2, y2,
-           -- palette slot at the nn-gathered source pixel
-           (least(CAST(floor(x2 * (w * 1.0 / w2)) AS BIGINT), w - 1) * 7
-            + least(CAST(floor(y2 * (h * 1.0 / h2)) AS BIGINT), h - 1) * 13
-            + seed) % 64 AS c
-    FROM resized,
-         UNNEST(range(0, resized.h2)) AS ty(y2),
-         UNNEST(range(0, resized.w2)) AS tx(x2)
-    WHERE w IS NOT NULL
-  )
-  GROUP BY p_partkey
-)
-SELECT r.p_partkey,
-       CASE WHEN r.w IS NULL THEN 'unreadable' ELSE 'ok' END AS status,
-       r.w2 AS width,
-       r.h2 AS height,
-       px.pixel_checksum
-FROM resized r LEFT JOIN px ON r.p_partkey = px.p_partkey
-ORDER BY r.p_partkey
-"""
-
-QUERIES["m17_gif_compress"] = m17_gif_compress
-ORACLES["m17_gif_compress"] = M17_SQL
-
-
-# --------------------------------------------------------------------------
-# M18 — JPEG compress: the reference's ACTUAL corpus format through a
-# REAL baseline JFIF codec (multimodal/jpeg.py — Huffman entropy
-# decode, quantized 8×8 DCT, YCbCr, quality 65 re-encode; the
-# transform-coded fourth compression family after raster/DEFLATE/LZW).
-# JPEG is lossy, so decoded pixels are NOT SQL arithmetic — instead
-# the query certifies what IS exact: the resize-dimension contract
-# (header-parsed from the emitted JFIF bytes) and a FIDELITY GATE —
-# mean |decoded − expected| per image against the arithmetic gradient
-# the corpus was generated from, thresholded far below the ~85 a
-# mismatched image would score but above codec noise (measured worst
-# 17.0 across the corpus shapes for generate@Q80 → decode → resize →
-# re-encode@Q65 → decode; the sawtooth gradient is ringing-adversarial). A wrong DCT, quant table, Huffman code,
-# color transform or resize gather all blow the gate. The decoded
-# pixel arithmetic itself is pinned by pytest (uniform-block analytic
-# round-trip, real 4:2:0 reference-photo decode, PIL-gated
-# cross-check).
+# M12/M14/M17/M18 — the REAL still-image codecs through the paper's one
+# transform (decode → aspect-preserving nearest-neighbor downscale to the
+# 1024 cap → re-encode, test.py:44-59), one query per compression family,
+# all through m1's compress_pipeline surface, where pixels really move:
+#   m12 BMP (multimodal/bmp.py, raster, no compression);
+#   m14 PNG (png.py, inflate/unfilter and refilter/deflate);
+#   m17 GIF (gif.py, palette-indexed GIF89a, LZW dictionary coding);
+#   m18 JPEG (jpeg.py, the reference's ACTUAL corpus format through a
+#       real baseline JFIF codec: Huffman entropy decode, quantized 8×8
+#       DCT, YCbCr, quality 65 re-encode; transform coding).
+# Each row's generator UDF writes a real image from (w, h, seed =
+# p_partkey % 251); over-cap rows are kept short (h=8) so the corpus
+# stays KB-sized. Every 97th part carries the query's corrupt literal and
+# must come out 'unreadable'; each literal opens like its codec, so the
+# guard it hits is INSIDE that codec's parser, not a magic-byte shortcut
+# (table below). The oracle predicts status and output dims exactly (the
+# shared `resized` CTE); the last column is the codec's own verdict:
+#   m12: the output byte size, pure arithmetic for BMP (54 + 4-byte-padded
+#       row stride × h);
+#   m14, m17: DEFLATE and LZW output sizes are not arithmetic, so the
+#       query emits a position-weighted checksum of the DECODED OUTPUT
+#       pixels, which the oracle replays in SQL from the generator's
+#       pixel formula through the nn_resize gather (min(floor(dst *
+#       src/dst), src-1), the reference's truncation style): any
+#       corrupted/moved/dropped byte anywhere in generate → encode →
+#       decode → resize → encode → decode mismatches. A PNG pixel is a
+#       gradient of (x, y, seed); a GIF pixel is palette slot c = (x*7 +
+#       y*13 + seed) % 64 with RGB = ((c*3+11)%256, (c*5+1)%256,
+#       (c*7+3)%256);
+#   m18: JPEG is lossy, so decoded pixels are NOT SQL arithmetic; the
+#       query certifies the dims contract (parsed from the emitted JFIF
+#       header) and the FIDELITY GATE of `_matches_photo`. Its bound sits
+#       far below the ~85 a mismatched image scores but above codec noise
+#       (measured worst 17.0 across the corpus shapes for generate@Q80 →
+#       decode → resize → re-encode@Q65 → decode; the sawtooth gradient
+#       is ringing-adversarial). A wrong DCT, quant table, Huffman code,
+#       color transform or resize gather all blow the gate. The decoded
+#       pixel arithmetic itself is pinned by pytest (uniform-block
+#       analytic round-trip, real 4:2:0 reference-photo decode, PIL-gated
+#       cross-check).
+# Every 10th part: the pixel corpus exercises each codec fully at a tenth
+# of the per-row Python cost, and keeps the m14/m17 per-pixel oracles
+# bounded (~1.5 M pixels at sf0.1). m18 reads every 20th: the JPEG
+# chain runs FIVE codec passes per image, and half the corpus keeps the
+# declared query inside the driver's per-query budget with identical
+# coverage. Each corpus is widened before its generator, the query's
+# per-row Python work, runs (see _generator).
 # --------------------------------------------------------------------------
 _JPEG_GEN_QUALITY = 80
 _JPEG_FIDELITY_BOUND = 32.0
 
 
-_gen_jpeg = _generator(
-    "_gen_jpeg", lambda w, h, seed: jpeg.jpeg_encode(jpeg.make_photo(w, h, seed), _JPEG_GEN_QUALITY)
-)
+def _matches_photo(payload: bytes, w: int, h: int, seed: int) -> bool:
+    """The fidelity gate of m18 and m20-m23: `payload` decodes as JPEG and
+    its mean |decoded − make_photo(w, h, seed)| is at most
+    _JPEG_FIDELITY_BOUND. The photo is nearest-neighbor resized to the
+    decoded dims first where they differ (m18's downscaled rows)."""
+    dec = jpeg.jpeg_decode(payload)
+    if dec is None:
+        return False
+    expected = jpeg.make_photo(w, h, seed)
+    if dec.shape[:2] != expected.shape[:2]:
+        expected = bmp.nn_resize(expected, dec.shape[1], dec.shape[0])
+    err = float(np.abs(dec.astype(np.int64) - expected.astype(np.int64)).mean())
+    return err <= _JPEG_FIDELITY_BOUND
 
 
 @pandas_udf(T.BooleanType())
 def _jpeg_fidelity_ok(
     content: pd.Series, w: pd.Series, h: pd.Series, seed: pd.Series
 ) -> pd.Series:
-    def ok(args):
-        b, ow, oh, s = args
-        if b is None or pd.isna(ow):
-            return None
-        dec = jpeg.jpeg_decode(bytes(b))
-        if dec is None:
-            return False
-        expected = jpeg.make_photo(int(ow), int(oh), int(s))
-        eh, ew = dec.shape[0], dec.shape[1]
-        if (ew, eh) != (int(ow), int(oh)):
-            expected = bmp.nn_resize(expected, ew, eh)
-        err = float(
-            np.abs(dec.astype(np.int64) - expected.astype(np.int64)).mean()
-        )
-        return err <= _JPEG_FIDELITY_BOUND
-
     return pd.Series(
-        [ok(a) for a in zip(content, w, h, seed)], dtype=object
+        [
+            None if b is None or pd.isna(ow) else _matches_photo(bytes(b), int(ow), int(oh), int(s))
+            for b, ow, oh, s in zip(content, w, h, seed)
+        ],
+        dtype=object,
     )
 
 
-def _jpeg_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # every 20th part (vs m14's 10th): the JPEG chain runs FIVE codec
-    # passes per image — half the corpus keeps the declared query inside
-    # the driver's per-query budget with identical coverage
-    part = _widen(load(spark, sf_dir, "part").filter(F.col("p_partkey") % 20 == 0))
+def _sql_pixel_checksum(r: str, g: str, b: str) -> str:
+    """Oracle twin of png.pixel_checksum over one `resized` row: the sum
+    over output pixels i = y2·w2 + x2 of R·(3i+1) + G·(3i+2) + B·(3i+3).
+    r, g and b are channel formulas of the row's seed and the
+    nn-gathered source pixel, written with {sx} and {sy} placeholders.
+    NULL for a corrupt row. A list lambda, because DuckDB ran the same
+    sum as a correlated subquery 50x slower at sf0.1."""
+    # the nn_resize gather, min(floor(dst*src/dst), src-1)
+    sx = "least(CAST(floor(i % w2 * (w * 1.0 / w2)) AS BIGINT), w - 1)"
+    sy = "least(CAST(floor(i // w2 * (h * 1.0 / h2)) AS BIGINT), h - 1)"
+    r, g, b = (c.format(sx=sx, sy=sy) for c in (r, g, b))
+    return f"""list_sum(list_transform(range(0, w2 * h2), i ->
+           ({r}) * (i * 3 + 1) + ({g}) * (i * 3 + 2) + ({b}) * (i * 3 + 3)
+       )) AS pixel_checksum"""
+
+
+_png_pixel_checksum = _digest("_png_pixel_checksum", png.png_decode)
+_gif_pixel_checksum = _digest("_gif_pixel_checksum", gif.gif_decode)
+_GIF_SLOT = "({sx} * 7 + {sy} * 13 + seed) % 64"
+
+# query name: (part stride, width modulus, height modulus or None for a
+# fixed 12, generator UDF, corrupt literal, verdict column, verdict SQL
+# over `resized`). The literal and the column are built with the query.
+_IMAGE_FAMILY = {
+    "m12_bmp_compress": (
+        10, 64, None, _generator("_gen_bmp", bmp.make_bmp),
+        # BM magic on 9 bytes: the 54-byte header guard of the BMP parser
+        lambda: b"BMcorrupt",
+        lambda: F.length("content_out").cast("long").alias("out_bytes"),
+        """-- exact BMP size: 14+40 header + stride(w)*h, stride padded to 4
+       CASE WHEN w IS NULL THEN NULL
+            ELSE CAST(54 + (CAST(floor((w2 * 3 + 3) / 4.0) AS INT) * 4) * h2 AS BIGINT)
+       END AS out_bytes""",
+    ),
+    "m14_png_compress": (
+        10, 48, 16, _generator("_gen_png", png.make_png),
+        # PNG magic whose 8-byte signature breaks after it: the PNG
+        # parser's signature/IHDR guard
+        lambda: b"\x89PNG-corrupt",
+        lambda: _png_pixel_checksum(F.col("content_out")).alias("pixel_checksum"),
+        _sql_pixel_checksum(
+            "(seed * 29 + {sx} + {sy}) % 256",
+            "(seed * 11 + {sx} * 3 + {sy} * 5) % 256",
+            "(seed + {sx} * 7 + {sy} * 13) % 256",
+        ),
+    ),
+    "m17_gif_compress": (
+        10, 40, 20, _generator("_gen_gif", gif.make_gif),
+        # a valid GIF header and screen descriptor whose body ends before
+        # any image descriptor: the guard inside the block walker
+        lambda: b"GIF89acorrupt",
+        lambda: _gif_pixel_checksum(F.col("content_out")).alias("pixel_checksum"),
+        _sql_pixel_checksum(
+            f"({_GIF_SLOT} * 3 + 11) % 256",
+            f"({_GIF_SLOT} * 5 + 1) % 256",
+            f"({_GIF_SLOT} * 7 + 3) % 256",
+        ),
+    ),
+    "m18_jpeg_compress": (
+        20, 48, 16,
+        _generator(
+            "_gen_jpeg",
+            lambda w, h, seed: jpeg.jpeg_encode(jpeg.make_photo(w, h, seed), _JPEG_GEN_QUALITY),
+        ),
+        # SOI followed by a byte that opens no marker: the guard inside
+        # the JPEG marker walker
+        lambda: b"\xff\xd8-corrupt-jpeg-body",
+        lambda: _jpeg_fidelity_ok(
+            F.col("content_out"), F.col("orig_w"), F.col("orig_h"), F.col("seed")
+        ).alias("fidelity_ok"),
+        "CASE WHEN w IS NULL THEN NULL ELSE TRUE END AS fidelity_ok",
+    ),
+}
+
+
+def _image_corpus(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    stride, w_mod, h_mod, gen, corrupt_literal = _IMAGE_FAMILY[name][:5]
+    part = _widen(load(spark, sf_dir, "part").filter(F.col("p_partkey") % stride == 0))
     corrupt = F.col("p_partkey") % 97 == 0
-    w = F.when(F.col("p_size") > 48, 1200 + F.col("p_size")).otherwise(
-        16 + F.pmod(F.col("p_size"), F.lit(48))
+    size = F.col("p_size")
+    w = F.when(size > 48, 1200 + size).otherwise(16 + F.pmod(size, F.lit(w_mod)))
+    h = F.when(size > 48, F.lit(8)).otherwise(
+        F.lit(12) if h_mod is None else 12 + F.pmod(size, F.lit(h_mod))
     )
-    h = F.when(F.col("p_size") > 48, F.lit(8)).otherwise(12 + F.pmod(F.col("p_size"), F.lit(16)))
+    seed = F.pmod(F.col("p_partkey"), F.lit(251))
     return part.select(
         "p_partkey",
         F.when(corrupt, F.lit(None).cast("int")).otherwise(w).alias("orig_w"),
         F.when(corrupt, F.lit(None).cast("int")).otherwise(h).alias("orig_h"),
-        F.pmod(F.col("p_partkey"), F.lit(251)).alias("seed"),
-        F.when(corrupt, F.lit(b"\xff\xd8-corrupt-jpeg-body"))
-        .otherwise(_gen_jpeg(w, h, F.pmod(F.col("p_partkey"), F.lit(251))))
-        .alias("content"),
+        seed.alias("seed"),
+        F.when(corrupt, F.lit(corrupt_literal())).otherwise(gen(w, h, seed)).alias("content"),
     )
 
 
-def m18_jpeg_compress(spark: SparkSession, sf_dir: str) -> DataFrame:
-    imgs = _jpeg_corpus(spark, sf_dir)
-    out = compress_pipeline(imgs)
+def _image_compress(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    verdict = _IMAGE_FAMILY[name][5]
+    out = compress_pipeline(_image_corpus(spark, sf_dir, name))
     stats = with_image_stats(out, "content_out")
     return _pin_for_sort(
-        stats.select(
-            "p_partkey",
-            "status",
-            "width",
-            "height",
-            _jpeg_fidelity_ok(
-                F.col("content_out"), F.col("orig_w"), F.col("orig_h"), F.col("seed")
-            ).alias("fidelity_ok"),
-        )
+        stats.select("p_partkey", "status", "width", "height", verdict())
     ).orderBy("p_partkey")
 
 
-M18_SQL = """
+_IMAGE_SQL = """
 WITH dims AS (
   SELECT p_partkey,
+         p_partkey % 251 AS seed,
          CASE WHEN p_partkey % 97 = 0 THEN NULL
               WHEN p_size > 48 THEN 1200 + p_size
-              ELSE 16 + (p_size % 48) END AS w,
+              ELSE 16 + (p_size % {w_mod}) END AS w,
          CASE WHEN p_partkey % 97 = 0 THEN NULL
               WHEN p_size > 48 THEN 8
-              ELSE 12 + (p_size % 16) END AS h
+              ELSE {h_else} END AS h
   FROM part
-  WHERE p_partkey % 20 = 0
+  WHERE p_partkey % {stride} = 0
 ),
-resized AS (
-  SELECT p_partkey, w, h,
-         CASE WHEN greatest(w, h) > 1024
-              THEN greatest(CAST(floor(w * (1024.0 / greatest(w, h))) AS INT), 1)
-              ELSE w END AS w2,
-         CASE WHEN greatest(w, h) > 1024
-              THEN greatest(CAST(floor(h * (1024.0 / greatest(w, h))) AS INT), 1)
-              ELSE h END AS h2
-  FROM dims
-)
+resized AS ({resized})
 SELECT p_partkey,
        CASE WHEN w IS NULL THEN 'unreadable' ELSE 'ok' END AS status,
        w2 AS width,
        h2 AS height,
-       CASE WHEN w IS NULL THEN NULL ELSE TRUE END AS fidelity_ok
+       {verdict}
 FROM resized
 ORDER BY p_partkey
 """
 
-QUERIES["m18_jpeg_compress"] = m18_jpeg_compress
-ORACLES["m18_jpeg_compress"] = M18_SQL
+for _name, (_stride, _w_mod, _h_mod, _gen, _corrupt, _col, _sql) in _IMAGE_FAMILY.items():
+    QUERIES[_name] = functools.partial(_image_compress, name=_name)
+    ORACLES[_name] = _IMAGE_SQL.format(
+        stride=_stride,
+        w_mod=_w_mod,
+        h_else=12 if _h_mod is None else f"12 + (p_size % {_h_mod})",
+        resized=_SQL_RESIZED,
+        verdict=_sql,
+    )
 
 
 # --------------------------------------------------------------------------
@@ -1116,9 +931,9 @@ QUERIES["m19_phash_dedup"] = m19_phash_dedup
 # metadata (w/h/fps/n_frames from the container headers), the
 # sampled-index set (every_n = 2 → indices 0,2,4,..., count ceil(n/2),
 # sum k(k-1)), the per-frame dimension contract (JPEG SOF of each
-# emitted payload == container dims), and a per-frame FIDELITY GATE
-# (mean |decoded − expected photo| <= the m18 bound; measured max 8.0
-# on this corpus, a mismatched frame scores ~85). Pixel arithmetic
+# emitted payload == container dims), and m18's FIDELITY GATE per frame
+# (`_matches_photo` against the frame's own photo; measured max 8.0 on
+# this corpus, a mismatched frame scores ~85). Pixel arithmetic
 # itself is pinned by the container and jpeg pytest. The four makers
 # share make_avi's seed contract, so one frame-check UDF serves all.
 # Corrupt rows surface as 'unreadable' with zero sampled frames, never
@@ -1129,9 +944,6 @@ QUERIES["m19_phash_dedup"] = m19_phash_dedup
 # fidelity decode are ALL map-side (frame bytes never shuffle); the
 # only shuffles carry (video_id, small longs/bools).
 # --------------------------------------------------------------------------
-_AVI_FIDELITY_BOUND = 32.0
-
-
 @pandas_udf(
     T.StructType(
         [
@@ -1145,17 +957,10 @@ def _avi_frame_checks(
 ) -> pd.DataFrame:
     rows = []
     for b, ow, oh, v, i in zip(frame, w, h, vid, idx):
-        payload = bytes(b)
-        dims = jpeg.jpeg_dims(payload)
-        dims_ok = dims == (int(ow), int(oh))
-        dec = jpeg.jpeg_decode(payload)
-        if dec is None:
-            rows.append((dims_ok, False))
-            continue
+        payload, ow, oh = bytes(b), int(ow), int(oh)
         # the corpus seed is derived from the id (make_avi contract)
-        expected = jpeg.make_photo(int(ow), int(oh), (int(v) % 251 + 31 * int(i)) % 251)
-        err = float(np.abs(dec.astype(np.int64) - expected.astype(np.int64)).mean())
-        rows.append((dims_ok, err <= _AVI_FIDELITY_BOUND))
+        seed = (int(v) % 251 + 31 * int(i)) % 251
+        rows.append((jpeg.jpeg_dims(payload) == (ow, oh), _matches_photo(payload, ow, oh, seed)))
     return pd.DataFrame(rows, columns=["dims_ok", "fidelity_ok"])
 
 

@@ -9,7 +9,11 @@ same logic live in developing_img_etl_spark/streaming/.
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
+import tempfile
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -221,6 +225,21 @@ ORDER BY user_id, session_start
 _STREAM_SRC_CACHE: dict[str, str] = {}
 
 
+@functools.cache
+def _work_root() -> str:
+    root = tempfile.mkdtemp(prefix="st_work_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
+
+
+def _workdir(prefix: str) -> str:
+    """A fresh dir for one query's stream source, checkpoint or output,
+    under one root per process that an atexit hook removes. Cleanup
+    waits for interpreter exit because the returned frames read these
+    dirs lazily."""
+    return tempfile.mkdtemp(prefix=prefix, dir=_work_root())
+
+
 @contextmanager
 def _scoped_confs(spark: SparkSession, confs: dict[str, str]):
     """Set session ``confs`` for the duration of a drain, then restore
@@ -278,12 +297,7 @@ def _drain(
     The await is checked: a drain still appending after ``timeout_s``
     is stopped and raises TimeoutError — reading its output (or
     replaying a batch) would yield a nondeterministic partial result
-    instead of a clear failure.
-
-    st10's ticks source is not drained here: a simple stream reader
-    reports only the end of its next read as the latest offset, so an
-    AvailableNow drain stops after the first step (1,000 of 5,000 rows)
-    and st10 keeps a processAllAvailable loop instead."""
+    instead of a clear failure."""
     confs = {}
     if stateful:
         confs["spark.sql.shuffle.partitions"] = os.environ.get(
@@ -309,8 +323,6 @@ def _link_events_into(sf_dir: str, src: str, n_copies: int = 1) -> None:
     """Stage ``n_copies`` hardlinks (else copies) of the events table
     into stream-source dir ``src`` — the shared staging block for every
     drain that needs a (possibly doubled) file stream source."""
-    import shutil
-
     os.makedirs(src, exist_ok=True)
     for i in range(n_copies):
         try:
@@ -326,14 +338,11 @@ def _staged_stream_dir(sf_dir: str) -> str:
     built once per (process, sf_dir): hardlink when possible (zero
     copy), else a one-time copy."""
     if sf_dir not in _STREAM_SRC_CACHE:
-        import shutil
-        import tempfile
-
-        d = tempfile.mkdtemp(prefix="stsrc_")
         src = f"{sf_dir}/events.parquet"
         if os.path.isdir(src):
             _STREAM_SRC_CACHE[sf_dir] = src
             return src
+        d = _workdir("stsrc_")
         dst = f"{d}/events-0.parquet"
         try:
             os.link(src, dst)
@@ -370,8 +379,6 @@ def _raw_events_stream(
 
 
 def st1_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ..streaming.windows import tumbling_counts
 
     # FileStreamSource needs a DIRECTORY; the testdata table is a single
@@ -380,7 +387,7 @@ def st1_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     # table write as query time — VERDICT r1 #5). Only the checkpoint is
     # per-run (AvailableNow drains everything each time).
     src = _staged_stream_dir(sf_dir)
-    tmp = tempfile.mkdtemp(prefix="stq_")
+    tmp = _workdir("stq_")
     stream = _raw_events_stream(spark, sf_dir, src)
     out = f"{tmp}/out"
     # complete mode: the last overwrite is the finalized table
@@ -442,12 +449,10 @@ def st2_streaming_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     real Structured Streaming engine (AvailableNow drain, complete
     mode), compared against the SAME gaps-and-islands oracle — the
     streaming state store must finalize identical sessions."""
-    import tempfile
-
     from ..streaming.windows import session_counts
 
     src = _staged_stream_dir(sf_dir)
-    tmp = tempfile.mkdtemp(prefix="stq2_")
+    tmp = _workdir("stq2_")
     stream = _raw_events_stream(spark, sf_dir, src)
     out = f"{tmp}/out"
     _drain(
@@ -510,7 +515,6 @@ def _st3_late_file(spark: SparkSession, sf_dir: str) -> str:
     files share one stream schema."""
     if sf_dir not in _ST3_LATE_FILE_CACHE:
         import os
-        import tempfile
 
         from pyspark.sql import types as T
 
@@ -532,7 +536,7 @@ def _st3_late_file(spark: SparkSession, sf_dir: str) -> str:
             F.pmod(F.col("event_id"), F.lit(1000)) == 0
         )
         sentinel = raw.orderBy(F.desc("ts")).limit(1).withColumn("ts", sentinel_ts)
-        out = tempfile.mkdtemp(prefix="st3late_")
+        out = _workdir("st3late_")
         late.unionByName(sentinel).coalesce(1).write.mode("overwrite").parquet(out)
         part = next(
             p for p in os.listdir(out) if p.endswith(".parquet") and p.startswith("part-")
@@ -542,13 +546,10 @@ def _st3_late_file(spark: SparkSession, sf_dir: str) -> str:
 
 
 def st3_streaming_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ..streaming.windows import tumbling_counts
 
     late_file = _st3_late_file(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="stq3_")
+    work = _workdir("stq3_")
     src, out, ckpt = f"{work}/src", f"{work}/out", f"{work}/ckpt"
     _link_events_into(sf_dir, src)
     windows = tumbling_counts(
@@ -603,10 +604,8 @@ ORACLES["st3_streaming_late_data"] = ST3_SQL
 # plain SQL join.
 # ---------------------------------------------------------------------------
 def st4_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     src = _staged_stream_dir(sf_dir)
-    tmp = tempfile.mkdtemp(prefix="stq4_")
+    tmp = _workdir("stq4_")
 
     def read():
         return _raw_events_stream(spark, sf_dir, src)
@@ -673,14 +672,12 @@ ORACLES["st4_stream_stream_join"] = ST4_SQL
 # arithmetic mirrored literally.
 # ---------------------------------------------------------------------------
 def st5_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from pyspark.sql import Window
 
     from ..streaming.stateful import user_totals
 
     src = _staged_stream_dir(sf_dir)
-    tmp = tempfile.mkdtemp(prefix="stq5_")
+    tmp = _workdir("stq5_")
     stream = _raw_events_stream(spark, sf_dir, src).select("user_id", "value")
     out = f"{tmp}/out"
 
@@ -730,11 +727,9 @@ ORACLES["st5_stateful_user_totals"] = ST5_SQL
 # hash-mismatches.
 # ---------------------------------------------------------------------------
 def st6_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ._det import dsum
 
-    work = tempfile.mkdtemp(prefix="stq6_")
+    work = _workdir("stq6_")
     src, out, ckpt = f"{work}/src", f"{work}/out", f"{work}/ckpt"
     _link_events_into(sf_dir, src, n_copies=2)
 
@@ -777,14 +772,12 @@ ORACLES["st6_streaming_dedup"] = ST6_SQL
 # moving a fleet's stateful jobs to the new API.
 # ---------------------------------------------------------------------------
 def st7_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from pyspark.sql import Window
 
     from ..streaming.stateful import user_totals_tws
 
     src = _staged_stream_dir(sf_dir)
-    tmp = tempfile.mkdtemp(prefix="stq7_")
+    tmp = _workdir("stq7_")
     stream = _raw_events_stream(spark, sf_dir, src).select("user_id", "value")
     out = f"{tmp}/out"
 
@@ -857,13 +850,11 @@ else:
 # doubled source (two files), so results are the 2× batch aggregate.
 # ---------------------------------------------------------------------------
 def st8_streaming_txlog_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ..sinks.txlog import TxLogFormat
     from ..streaming.txlog_sink import exactly_once_batch_writer
     from ._det import dsum
 
-    work = tempfile.mkdtemp(prefix="stq8_")
+    work = _workdir("stq8_")
     src, table, ckpt = f"{work}/src", f"{work}/table", f"{work}/ckpt"
     _link_events_into(sf_dir, src, n_copies=2)
 
@@ -912,12 +903,10 @@ ORACLES["st8_streaming_txlog_exactly_once"] = ST8_SQL
 # delta and every count in the doubled-source oracle goes wrong.
 # ---------------------------------------------------------------------------
 def st9_streaming_view_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ..sinks.txlog import TxLogFormat
     from ..streaming.txlog_sink import incremental_view_writer
 
-    work = tempfile.mkdtemp(prefix="stq9_")
+    work = _workdir("stq9_")
     src, view, ckpt = f"{work}/src", f"{work}/view", f"{work}/ckpt"
     _link_events_into(sf_dir, src, n_copies=2)
 
@@ -973,12 +962,10 @@ _TICKS_STEP = 1_000
 
 
 def st10_custom_source_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ..sources.ticks_datasource import register_ticks_source
 
     register_ticks_source(spark)
-    tmp = tempfile.mkdtemp(prefix="st10_")
+    tmp = _workdir("st10_")
     out = f"{tmp}/out"
 
     stream = (
@@ -987,16 +974,8 @@ def st10_custom_source_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("step", str(_TICKS_STEP))
         .load()
     )
-    # not _drain: AvailableNow would stop after one step (see _drain)
     for _ in range(2):  # the restart from the same checkpoint must be a no-op
-        q = (
-            stream.writeStream.foreachBatch(_parquet_sink(out))
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination(60)
+        _drain(stream, _parquet_sink(out), f"{tmp}/ckpt", stateful=False)
     return (
         spark.read.parquet(out)
         .groupBy("user_id")
@@ -1030,11 +1009,9 @@ ORACLES["st10_custom_source_stream"] = ST10_SQL
 # premature state eviction (or missed duplicate) breaks the hash.
 # ---------------------------------------------------------------------------
 def st11_streaming_dedup_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ._det import dsum
 
-    work = tempfile.mkdtemp(prefix="stq11_")
+    work = _workdir("stq11_")
     src, out, ckpt = f"{work}/src", f"{work}/out", f"{work}/ckpt"
     _link_events_into(sf_dir, src, n_copies=2)
 
@@ -1082,12 +1059,10 @@ ORACLES["st11_streaming_dedup_ttl"] = ST11_SQL
 # enrichment doesn't silently drop facts.
 # ---------------------------------------------------------------------------
 def st12_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ._det import dsum
 
     src = _staged_stream_dir(sf_dir)
-    work = tempfile.mkdtemp(prefix="stq12_")
+    work = _workdir("stq12_")
     out, ckpt = f"{work}/out", f"{work}/ckpt"
 
     dim = (
@@ -1177,11 +1152,9 @@ def _st13_registers(df: DataFrame) -> DataFrame:
 
 
 def st13_streaming_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ..sinks.txlog import TxLogFormat
 
-    work = tempfile.mkdtemp(prefix="st13_")
+    work = _workdir("st13_")
     src, table, ckpt = f"{work}/src", f"{work}/table", f"{work}/ckpt"
     _link_events_into(sf_dir, src, n_copies=2)
     fmt = TxLogFormat()
@@ -1274,10 +1247,8 @@ ORACLES["st13_streaming_hll_registers"] = ST13_SQL
 
 
 def st14_stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     src = _staged_stream_dir(sf_dir)
-    tmp = tempfile.mkdtemp(prefix="stq14_")
+    tmp = _workdir("stq14_")
 
     def read():
         return _raw_events_stream(spark, sf_dir, src)
@@ -1382,15 +1353,13 @@ _ST15_FILES = 4
 
 
 def st15_streaming_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from pyspark.sql import types as T
 
     from ..catalog import load
     from ..functions import text as TXT
     from ._shingle import _LSH_BAND_KEY, lsh_bands, lsh_signatures
 
-    work = tempfile.mkdtemp(prefix="stq15_")
+    work = _workdir("stq15_")
     src, reg, dbs, ckpt = f"{work}/src", f"{work}/reg", f"{work}/dbs", f"{work}/ckpt"
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "source", "text")
@@ -1570,11 +1539,9 @@ _ST16_TOP = 20
 
 
 def st16_streaming_cms_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ..operators.cms import cms_build, cms_estimate
 
-    work = tempfile.mkdtemp(prefix="st16_")
+    work = _workdir("st16_")
     src, reg, ckpt = f"{work}/src", f"{work}/reg", f"{work}/ckpt"
     _link_events_into(sf_dir, src, n_copies=2)
 
@@ -1717,9 +1684,7 @@ _ST17_PCTS = (1, 5, 25, 50, 75, 95, 99)
 
 
 def st17_streaming_exact_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="st17_")
+    work = _workdir("st17_")
     src, reg, ckpt = f"{work}/src", f"{work}/reg", f"{work}/ckpt"
     _link_events_into(sf_dir, src, n_copies=2)
 
@@ -1835,9 +1800,7 @@ _ST18_PREDS = (  # (pred_id, lo, hi) — inclusive UTC timestamp ranges
 
 
 def st18_streaming_zonemap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="st18_")
+    work = _workdir("st18_")
     src, reg, ckpt = f"{work}/src", f"{work}/reg", f"{work}/ckpt"
     _link_events_into(sf_dir, src, n_copies=2)
 
@@ -1996,11 +1959,9 @@ ORACLES["st18_streaming_zonemap"] = _st18_sql()
 
 
 def st19_streaming_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from .training import _BENFORD_PPM
 
-    work = tempfile.mkdtemp(prefix="st19_")
+    work = _workdir("st19_")
     src, reg, ckpt = f"{work}/src", f"{work}/reg", f"{work}/ckpt"
     _link_events_into(sf_dir, src, n_copies=2)
 
@@ -2145,12 +2106,11 @@ ORACLES["st19_streaming_benford"] = _st19_sql()
 
 def st20_streaming_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json as _json
-    import tempfile
 
     from ..catalog import normalize_event_ts
     from .behavior import _Q149_H
 
-    work = tempfile.mkdtemp(prefix="st20_")
+    work = _workdir("st20_")
     src, reg, ckpt = f"{work}/src", f"{work}/reg", f"{work}/ckpt"
     _link_events_into(sf_dir, src, n_copies=2)
 

@@ -3,12 +3,14 @@ bounded, deterministic, offset-tracked tick source.
 
 S14 (xlsx) exercises the batch half of the Python DataSource API;
 this is the streaming half — `spark.readStream.format("ticks")` with
-real offset management: `initialOffset` / `read(start)` /
-`readBetweenOffsets` (the replay path the engine calls when a batch
-is re-executed after failure). Offsets are row indices, each batch
-covers [start, end) exactly once, and every row is a pure function of
-its index — so ANY duplication, loss or reorder introduced by the
-source/engine contract shows up against an arithmetic oracle.
+real offset management: `initialOffset` / `latestOffset` /
+`partitions(start, end)` / `read(partition)`. Offsets are row
+indices, a micro-batch covers [start, end) exactly once in
+`step`-row partitions, and every row is a pure function of its index
+— so ANY duplication, loss or reorder introduced by the source/engine
+contract shows up against an arithmetic oracle. The latest offset is
+the whole bounded range, so a Trigger.AvailableNow drain reads all
+of it, and a replayed batch re-plans the same partitions.
 
 This is the in-container stand-in for the Kafka/Kinesis-style sources
 a deployment plugs in: the engine-facing contract (offsets, replay,
@@ -19,12 +21,12 @@ of generating arithmetic rows.
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
-from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
+from pyspark.sql.datasource import DataSource, DataSourceStreamReader, InputPartition
 from pyspark.sql.types import StructType
 
 
 class TicksDataSource(DataSource):
-    """options: end (total rows), step (rows per micro-batch)."""
+    """options: end (total rows), step (rows per partition)."""
 
     @classmethod
     def name(cls) -> str:
@@ -33,7 +35,7 @@ class TicksDataSource(DataSource):
     def schema(self) -> str:
         return "i bigint, user_id int, v bigint"
 
-    def simpleStreamReader(self, schema: StructType):
+    def streamReader(self, schema: StructType):
         return _TicksStreamReader(self.options)
 
 
@@ -42,7 +44,7 @@ def _row(i: int) -> tuple[int, int, int]:
     return (i, i % 50, (i * i) % 97 + i % 13)
 
 
-class _TicksStreamReader(SimpleDataSourceStreamReader):
+class _TicksStreamReader(DataSourceStreamReader):
     def __init__(self, options):
         self.end = int(options.get("end", 10_000))
         self.step = int(options.get("step", 1_000))
@@ -50,14 +52,17 @@ class _TicksStreamReader(SimpleDataSourceStreamReader):
     def initialOffset(self) -> dict:
         return {"i": 0}
 
-    def read(self, start: dict):
-        s = int(start["i"])
-        e = min(s + self.step, self.end)
-        return iter([_row(i) for i in range(s, e)]), {"i": e}
+    def latestOffset(self) -> dict:
+        return {"i": self.end}
 
-    def readBetweenOffsets(self, start: dict, end: dict):
-        # failure-replay path: MUST reproduce the original rows exactly
-        return iter([_row(i) for i in range(int(start["i"]), int(end["i"]))])
+    def partitions(self, start: dict, end: dict) -> list[InputPartition]:
+        # also the failure-replay path: the same offsets give the same rows
+        s, e = int(start["i"]), int(end["i"])
+        return [InputPartition((i, min(i + self.step, e))) for i in range(s, e, self.step)]
+
+    def read(self, partition: InputPartition):
+        lo, hi = partition.value
+        return map(_row, range(lo, hi))
 
     def commit(self, end: dict) -> None:
         pass  # nothing to clean up — offsets are arithmetic

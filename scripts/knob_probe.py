@@ -1,11 +1,11 @@
 """Generic paired in-session env-knob A/B probe (r12).
 
 Times the named queries (bench methodology: toPandas) in ONE session,
-alternating the knob's values per repetition, and reports per-value
-min/median. Because the knob is read at query-build time (os.environ
-lookups inside the query code), flipping it in-process gives a true
-paired same-window comparison — the cluster.py three-variant-probe
-method from r11, generalized.
+after one untimed warm-up call each, alternating the knob's values per
+repetition, and reports per-value min/median. Because the knob is read
+at query-build time (os.environ lookups inside the query code),
+flipping it in-process gives a true paired same-window comparison —
+the cluster.py three-variant-probe method from r11, generalized.
 
 Usage:
   python scripts/knob_probe.py KNOB v0,v1 reps q30 q74 ...
@@ -44,6 +44,10 @@ def main() -> int:
 
     spark = get_spark("knob_probe")
     spark.range(1_000_000).selectExpr("sum(id)").collect()
+    # one untimed call per query, so its cold start (stream-source
+    # staging, first-use code paths) lands on no value's first rep
+    for fn in resolved.values():
+        fn(spark, sf_dir).toPandas()
     times: dict[str, dict[str, list[float]]] = {
         n: {v: [] for v in values} for n in resolved
     }

@@ -712,3 +712,50 @@ def test_compress_pipeline_keeps_unreadable_rows(joined_photos):
     n = len(statuses)
     assert statuses[n - 1] == "unreadable"
     assert all(s == "ok" for i, s in statuses.items() if i != n - 1)
+
+
+# ------------------------------------------------ the m12-m18 image family
+from developing_img_etl_spark.multimodal import gif, jpeg  # noqa: E402
+from developing_img_etl_spark.queries import multimodal as MM  # noqa: E402
+
+_OWN_DECODE = {
+    "m12_bmp_compress": bmp.bmp_decode,
+    "m14_png_compress": png.png_decode,
+    "m17_gif_compress": gif.gif_decode,
+    "m18_jpeg_compress": jpeg.jpeg_decode,
+}
+
+
+@pytest.mark.parametrize("name", list(MM._IMAGE_FAMILY))
+def test_image_corrupt_literal_abstains(name):
+    """Each m12-m18 corrupt literal opens like its codec, so it selects
+    that codec's `_CODECS` row; the row's decoder rejects it, and the
+    compress path makes it unreadable (a null payload)."""
+    literal = MM._IMAGE_FAMILY[name][4]()
+    row = IMG._codec(literal)
+    assert row is not None and row[2] is _OWN_DECODE[name]
+    assert row[2](literal) is None
+    assert IMG._recompress(literal, IMG.MAX_DIM, IMG.JPEG_QUALITY) is None
+
+
+def test_fidelity_gate_matches_own_photo_only():
+    """m18's gate, shared with the m20-m23 frame checks: an over-cap
+    still (Q80, downscaled and re-encoded at Q65) and a video frame (one
+    Q80 encode) each pass against their own photo and fail against
+    another corpus photo; a payload that does not decode fails."""
+    from developing_img_etl_spark.multimodal.avi import avi_frames, make_avi
+
+    w, h, seed = 1250, 8, 40
+    still = IMG._recompress(
+        jpeg.jpeg_encode(jpeg.make_photo(w, h, seed), MM._JPEG_GEN_QUALITY),
+        IMG.MAX_DIM,
+        IMG.JPEG_QUALITY,
+    )
+    assert jpeg.jpeg_dims(still) == (1024, 6)
+    vid, idx, fw, fh = 7, 2, 28, 20
+    frame = avi_frames(make_avi(fw, fh, 12, 3, seed=vid))[idx]
+    frame_seed = (vid + 31 * idx) % 251
+    for payload, pw, ph, s in ((still, w, h, seed), (frame, fw, fh, frame_seed)):
+        assert MM._matches_photo(payload, pw, ph, s)
+        assert not MM._matches_photo(payload, pw, ph, (s + 125) % 251)
+    assert not MM._matches_photo(b"\xff\xd8-corrupt-jpeg-body", w, h, seed)

@@ -272,33 +272,54 @@ def test_transform_with_state_matches_st5_oracle(spark, sf_dir):
 
 
 def test_ticks_source_offset_contract():
-    """S16 reader protocol: batches tile [0, end) exactly, the replay
-    path reproduces original rows bit-for-bit, and rows are pure
-    functions of their offset."""
+    """S16 reader protocol: the latest offset is the whole bounded range,
+    its partitions tile [start, end) exactly in `step`-row slices,
+    re-planning the same offsets (the replay path) reproduces the
+    original rows bit-for-bit, and rows are pure functions of their
+    offset."""
     from developing_img_etl_spark.sources.ticks_datasource import (
-        _TicksStreamReader,
         _row,
+        _TicksStreamReader,
     )
 
+    def rows(reader, start, end):
+        return [x for p in reader.partitions(start, end) for x in reader.read(p)]
+
     r = _TicksStreamReader({"end": "25", "step": "10"})
-    off = r.initialOffset()
-    seen = []
-    for _ in range(5):
-        rows, nxt = r.read(off)
-        rows = list(rows)
-        assert [x[0] for x in rows] == list(range(off["i"], nxt["i"]))
-        seen.extend(rows)
-        if nxt == off:
-            break
-        off = nxt
+    start, end = r.initialOffset(), r.latestOffset()
+    assert (start, end) == ({"i": 0}, {"i": 25})
+    assert [p.value for p in r.partitions(start, end)] == [(0, 10), (10, 20), (20, 25)]
+    seen = rows(r, start, end)
     assert [x[0] for x in seen] == list(range(25))  # exact tiling, no dupes
+    assert seen == [_row(i) for i in range(25)]
     # replay path must be byte-identical to the original read
-    assert list(r.readBetweenOffsets({"i": 7}, {"i": 19})) == [
-        _row(i) for i in range(7, 19)
-    ]
-    # bounded source: reading at the end yields an empty batch, same offset
-    rows, nxt = r.read({"i": 25})
-    assert list(rows) == [] and nxt == {"i": 25}
+    assert rows(r, start, end) == seen
+    assert rows(r, {"i": 7}, {"i": 19}) == [_row(i) for i in range(7, 19)]
+    # a fresh reader (a restarted query) plans the same rows
+    assert rows(_TicksStreamReader({"end": "25", "step": "10"}), {"i": 7}, {"i": 19}) == seen[7:19]
+    # bounded source: a drained range plans no partition
+    assert r.partitions(end, end) == []
+
+
+def test_workdir_shares_one_root_removed_at_exit(monkeypatch):
+    """Every st* work dir lives under one per-process root, and the
+    hook registered for interpreter exit removes that root."""
+    from developing_img_etl_spark.queries import streaming_batch as SB
+
+    hooks = []
+    monkeypatch.setattr(SB.atexit, "register", lambda fn, *a, **k: hooks.append((fn, a, k)))
+    SB._work_root.cache_clear()
+    try:
+        a, b = SB._workdir("st_a_"), SB._workdir("st_b_")
+    finally:
+        SB._work_root.cache_clear()
+    root = os.path.dirname(a)
+    assert os.path.dirname(b) == root and a != b
+    assert os.path.isdir(a) and os.path.isdir(b)
+    assert len(hooks) == 1
+    fn, args, kwargs = hooks[0]
+    fn(*args, **kwargs)
+    assert not os.path.exists(root)
 
 
 # -- the checked drain (queries/streaming_batch.py::_drain) -----------------
