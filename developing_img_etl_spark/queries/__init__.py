@@ -63,18 +63,17 @@ _MODULES = (
 
 
 # Driver-coverage rotation (VERDICT r4 #3): the round driver checks
-# only the FIRST 50 entries of queries() in registration order, so
-# across r1–r4 the union of CORRECTNESS artifacts covered just 70 of
-# 161 declared queries. The list below front-loads the 91 queries that
-# have NEVER appeared in a CORRECTNESS_r*.json (plus this round's
-# ADVICE-touched fixes first, so the driver certifies them), computed
-# from the r1–r4 artifacts. Names not listed keep module order after
-# these. Rotate next round: drop names once a CORRECTNESS artifact
-# shows them green, so the uncovered tail keeps surfacing.
+# only the FIRST 50 entries of queries() in registration order. The
+# list below front-loads what changed since the last CORRECTNESS
+# artifact (r12), so the next round certifies it, and fills the rest
+# of the 50 with the stalest certifications. Names not listed keep
+# module order after these. Rotate each round: drop names once a
+# CORRECTNESS artifact shows them green on their current code.
+# tests/test_oracle_queries.py checks every name is declared (or
+# gated) and listed once.
 _DRIVER_PRIORITY = (
-    # Certification first: the r12 JPEG/codec rework (a1a9a98, in no
-    # CORRECTNESS artifact since) and the queries whose driver-held
-    # frames now build as local relations.
+    # r12 leftovers: the JPEG/codec rework and the queries whose
+    # driver-held frames build as local relations
     "m1_image_compress",
     "m12_bmp_compress",
     "m14_png_compress",
@@ -83,36 +82,24 @@ _DRIVER_PRIORITY = (
     "q133_zonemap_skipping",
     "q145_kcore_peel",
     "st18_streaming_zonemap",
-    # r11 rotation: (a) queries NEW or REWORKED this round — q151
-    # composition flagship, the q17/q23 hash-promotions (VERDICT r10
-    # #6), the q147 top-K replan (ADVICE r10), the MKV unknown-size fix
-    # (m23), and the streaming drain-floor rework (st15 + the stateless
-    # registry drains); (b) the stalest driver-certified names (latest
-    # green artifact r5-r6 era) so staleness keeps cycling out.
-    # (a) new / reworked in r11
-    "q151_corpus_build",
-    "q152_lsh_recall_audit",
-    "q153_repetition_signals",
-    "q154_split_leakage_audit",
-    "q155_jaccard_threshold_sweep",
-    "m24_mp3_metadata",
-    "q17_approx_distinct",
-    "q23_approx_percentiles",
-    "q147_chi2_token_lang",
-    "m23_mkv_frame_sample",
-    "st15_streaming_lsh_dedup",
-    "st13_streaming_hll_registers",
-    "st16_streaming_cms_counts",
-    "st17_streaming_exact_quantiles",
-    "st19_streaming_benford",
-    "st20_streaming_ewma",
-    # (b) stalest driver certification first
-    "q4b_parts_with_sales",
-    "q6b_cube",
-    "q89_distribution_ranks",
-    "st10_custom_source_stream",
-    "st11_streaming_dedup_ttl",
-    "st12_stream_static_enrich",
+    # changed since r12 and outside its first 50: the still-image and
+    # video families, the exact-Jaccard pair join, the shingle index,
+    # and the checked streaming drain
+    "m17_gif_compress",
+    "m20_avi_frame_sample",
+    "m21_mov_frame_sample",
+    "m22_fmp4_frame_sample",
+    "q14c_ngram_jaccard_pairs",
+    "q83_prefix_filter_jaccard",
+    "q108_minhash_audit",
+    "q122_minhash_lsh_pairs",
+    "st7_transform_with_state",
+    "st14_stream_stream_left_outer",
+    # the shared st* bodies (registry drain, batch-0 replay rule,
+    # doubled staging, per-type aggregate, view/purchase join,
+    # lifetime totals) and the batch windows over streaming/windows.py
+    "q11a_tumbling_window",
+    "q11e_session_window",
     "st1_streaming_tumbling",
     "st2_streaming_session",
     "st3_streaming_late_data",
@@ -121,28 +108,30 @@ _DRIVER_PRIORITY = (
     "st6_streaming_dedup",
     "st8_streaming_txlog_exactly_once",
     "st9_streaming_view_maintenance",
-    "q25_grouped_map",
-    "q26_deterministic_sampling",
-    "q57_group_topk_sample",
-    "q78_correlated_scalar_subquery",
-    "q80_filtered_aggregates",
-    "q82_triangle_count",
-    "q90_sql_registered_udf",
-    "q104_stratified_quota_sample",
-    "q105_sliding_distinct_users",
-    "q106_benford_audit",
-    "q109_revenue_trend",
-    "q112_markov_transitions",
-    "q114_weekday_seasonality",
-    "q121_pq_adc_topk",
-    "q124_ivf_probe_topk",
-    "q126_matryoshka_rank_audit",
-    "q33_sequence_packing",
-    "q34_pii_redaction",
-    "q35_event_funnel",
+    "st11_streaming_dedup_ttl",
+    "st12_stream_static_enrich",
+    "st13_streaming_hll_registers",
+    "st16_streaming_cms_counts",
+    "st17_streaming_exact_quantiles",
+    "st19_streaming_benford",
+    "st20_streaming_ewma",
+    # changed since r12 and already inside its first 50
+    "m23_mkv_frame_sample",
+    "st10_custom_source_stream",
+    "st15_streaming_lsh_dedup",
+    "q152_lsh_recall_audit",
+    "q153_repetition_signals",
+    "q154_split_leakage_audit",
+    "q155_jaccard_threshold_sweep",
+    # stalest certifications (last green artifact r6)
     "q36_column_profile",
     "q37_merge_upsert",
     "q38_zorder_layout",
+    "q40_price_histogram",
+    "q41_grouping_sets",
+    "q42_oov_rate",
+    "q65_split_label_balance",
+    "q72_weighted_topk_sample",
 )
 
 

@@ -45,7 +45,3 @@ def davg(expr: str | Column, scale: int = 2) -> Column:
 
 def sql_dsum(sql_expr: str, scale: int = 2) -> str:
     return f"CAST(ROUND(SUM({sql_expr}), {scale}) AS DOUBLE)"
-
-
-def sql_dec(col: str) -> str:
-    return f"CAST({col} AS DECIMAL(12,4))"

@@ -3,14 +3,16 @@ the streaming surface (SURVEY.md §2.9 ST4, §2.3 J7).
 
 The reference's weekly grouping key `minggu` is a hand-rolled tumbling
 window (/root/reference/test.py:130); these queries are the general
-forms on the `events` table. The streaming (readStream) versions of the
-same logic live in developing_img_etl_spark/streaming/.
+forms on the `events` table. q11a and q11e run the aggregations of
+developing_img_etl_spark/streaming/windows.py, which the st* queries
+drain through the Structured Streaming engine.
 """
 
 from __future__ import annotations
 
 import atexit
 import functools
+import json
 import os
 import shutil
 import tempfile
@@ -22,7 +24,7 @@ from pyspark.sql import functions as F
 from ..catalog import load
 from ..operators.asof import asof_join, range_join_buckets
 from ..session import local_frame
-from ._det import davg, dsum
+from ._det import dsum
 
 WEEK_SECONDS = 7 * 86400
 
@@ -33,23 +35,11 @@ WEEK_SECONDS = 7 * 86400
 # arithmetic (no TIMESTAMPTZ — session-timezone-proof).
 # ---------------------------------------------------------------------------
 def q11a_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = load(spark, sf_dir, "events")
-    return (
-        events.groupBy(F.window("ts", "7 days").alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            dsum("value").alias("sum_value"),
-            davg("value").alias("avg_value"),
-        )
-        .select(
-            F.col("w.start").alias("w_start"),
-            F.col("w.end").alias("w_end"),
-            "n_events",
-            "sum_value",
-            "avg_value",
-        )
-        .orderBy("w_start")
-    )
+    from ..streaming.windows import tumbling_counts
+
+    # the streaming form's aggregation (st1, st3): on a batch frame the
+    # optimizer drops the watermark
+    return tumbling_counts(load(spark, sf_dir, "events")).orderBy("w_start")
 
 
 Q11A_SQL = f"""
@@ -174,18 +164,10 @@ ORDER BY bucket_id
 # Spark: F.session_window. Oracle: gaps-and-islands CTE.
 # ---------------------------------------------------------------------------
 def q11e_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = load(spark, sf_dir, "events")
-    return (
-        events.groupBy("user_id", F.session_window("ts", "1 hour").alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-        )
-        .orderBy("user_id", "session_start")
-    )
+    from ..streaming.windows import session_counts
+
+    # the streaming form's aggregation (st2), watermark dropped as in q11a
+    return session_counts(load(spark, sf_dir, "events")).orderBy("user_id", "session_start")
 
 
 Q11E_SQL = """
@@ -319,37 +301,54 @@ def _drain(
             )
 
 
+def _link(src: str, dst: str) -> None:
+    """Hardlink ``src`` to ``dst`` (zero copy), else copy it."""
+    try:
+        os.link(src, dst)
+    except OSError:
+        shutil.copyfile(src, dst)
+
+
 def _link_events_into(sf_dir: str, src: str, n_copies: int = 1) -> None:
-    """Stage ``n_copies`` hardlinks (else copies) of the events table
-    into stream-source dir ``src`` — the shared staging block for every
-    drain that needs a (possibly doubled) file stream source."""
+    """Stage ``n_copies`` links of the events table into stream-source
+    dir ``src`` — the shared staging block for every drain that needs a
+    (possibly doubled) file stream source."""
     os.makedirs(src, exist_ok=True)
     for i in range(n_copies):
-        try:
-            os.link(f"{sf_dir}/events.parquet", f"{src}/{i:02d}-events.parquet")
-        except OSError:
-            shutil.copyfile(
-                f"{sf_dir}/events.parquet", f"{src}/{i:02d}-events.parquet"
-            )
+        _link(f"{sf_dir}/events.parquet", f"{src}/{i:02d}-events.parquet")
 
 
 def _staged_stream_dir(sf_dir: str) -> str:
     """Directory wrapping the events table for the file stream source,
-    built once per (process, sf_dir): hardlink when possible (zero
-    copy), else a one-time copy."""
+    built once per (process, sf_dir)."""
     if sf_dir not in _STREAM_SRC_CACHE:
         src = f"{sf_dir}/events.parquet"
         if os.path.isdir(src):
             _STREAM_SRC_CACHE[sf_dir] = src
             return src
         d = _workdir("stsrc_")
-        dst = f"{d}/events-0.parquet"
-        try:
-            os.link(src, dst)
-        except OSError:
-            shutil.copyfile(src, dst)
+        _link(src, f"{d}/events-0.parquet")
         _STREAM_SRC_CACHE[sf_dir] = d
     return _STREAM_SRC_CACHE[sf_dir]
+
+
+def _batch_files(ckpt: str, batch_id: int) -> list[str]:
+    """The files that the file stream source of checkpoint ``ckpt``
+    committed to micro-batch ``batch_id`` (its commit log
+    ``{ckpt}/sources/0/{batch_id}``: a version line, then one JSON entry
+    per file).
+
+    Every crash-replay of a staged batch reads its input from here, never
+    from a hard-coded file name: which file lands in which batch is the
+    source's decision, and a replay of a DIFFERENT file under the same
+    batch_id would be silently blended into the replayed batch's
+    partials by a per-batch MAX reconcile, which only detects replays of
+    the SAME input."""
+    with open(f"{ckpt}/sources/0/{batch_id}") as fh:
+        files = [json.loads(line)["path"] for line in fh if line.startswith("{")]
+    if not files:
+        raise ValueError(f"empty file manifest for batch {batch_id} in {ckpt}")
+    return files
 
 
 def _raw_events_stream(
@@ -376,6 +375,15 @@ def _raw_events_stream(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return normalize_event_ts(reader.parquet(src))
+
+
+def _doubled_stream(spark: SparkSession, sf_dir: str, prefix: str):
+    """A fresh work dir (returned) whose ``src`` holds the events table
+    twice, and the stream over it read one file per micro-batch: every
+    event is delivered twice, in two different batches."""
+    work = _workdir(prefix)
+    _link_events_into(sf_dir, f"{work}/src", n_copies=2)
+    return work, _raw_events_stream(spark, sf_dir, f"{work}/src", max_files_per_trigger=1)
 
 
 def st1_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -559,10 +567,7 @@ def st3_streaming_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # events only; checkpoints watermark = max ts - 1 day
     _drain(windows, sink, ckpt, stateful=True)
-    try:
-        os.link(late_file, f"{src}/01-late.parquet")
-    except OSError:
-        shutil.copyfile(late_file, f"{src}/01-late.parquet")
+    _link(late_file, f"{src}/01-late.parquet")
     # late rows below the persisted watermark are dropped
     _drain(windows, sink, ckpt, stateful=True)
     return spark.read.parquet(out).orderBy("w_start")
@@ -594,7 +599,7 @@ ORACLES["st3_streaming_late_data"] = ST3_SQL
 
 
 # ---------------------------------------------------------------------------
-# ST6 — stream-stream join: views matched to the same user's purchases
+# ST4 — stream-stream join: views matched to the same user's purchases
 # within 30 minutes, through the real streaming join operator (state
 # store on both sides, watermark-bounded). Both sides carry watermarks
 # and the join has a two-sided time-range condition, so state eviction
@@ -603,15 +608,14 @@ ORACLES["st3_streaming_late_data"] = ST3_SQL
 # boundaries, so the result equals the batch join: the oracle is the
 # plain SQL join.
 # ---------------------------------------------------------------------------
-def st4_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _view_purchase_join(spark: SparkSession, sf_dir: str, prefix: str, how: str) -> DataFrame:
+    """Views joined to the same user's purchases within 30 minutes
+    through the streaming join operator, ``how`` = ``inner`` (st4) or
+    ``leftOuter`` (st14)."""
     src = _staged_stream_dir(sf_dir)
-    tmp = _workdir("stq4_")
-
-    def read():
-        return _raw_events_stream(spark, sf_dir, src)
-
+    tmp = _workdir(prefix)
     views = (
-        read()
+        _raw_events_stream(spark, sf_dir, src)
         .filter(F.col("event_type") == "view")
         .select(
             F.col("user_id"),
@@ -621,7 +625,7 @@ def st4_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("view_ts", "1 hour")
     )
     purchases = (
-        read()
+        _raw_events_stream(spark, sf_dir, src)
         .filter(F.col("event_type") == "purchase")
         .select(
             F.col("user_id").alias("p_user_id"),
@@ -639,11 +643,16 @@ def st4_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             purchase_ts <= view_ts + INTERVAL 30 MINUTES
             """
         ),
+        how,
     ).select("user_id", "view_id", "purchase_id", "view_ts", "purchase_ts")
 
     out = f"{tmp}/out"
     _drain(joined, _parquet_sink(out), f"{tmp}/ckpt", stateful=True)
     return spark.read.parquet(out).orderBy("view_id", "purchase_id")
+
+
+def st4_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _view_purchase_join(spark, sf_dir, "stq4_", "inner")
 
 
 ST4_SQL = """
@@ -662,7 +671,7 @@ ORACLES["st4_stream_stream_join"] = ST4_SQL
 
 
 # ---------------------------------------------------------------------------
-# ST7 — custom stateful operator (applyInPandasWithState) under the
+# ST5 — custom stateful operator (applyInPandasWithState) under the
 # driver's hash check: per-user lifetime totals through the real state
 # store. Emissions are update-mode (one row per touched user per
 # batch); the FINAL state per user — last emission by batch_id — is a
@@ -671,20 +680,25 @@ ORACLES["st4_stream_stream_join"] = ST4_SQL
 # streaming/stateful.py). Oracle = the batch groupBy with the cents
 # arithmetic mirrored literally.
 # ---------------------------------------------------------------------------
-def st5_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _lifetime_totals(
+    spark: SparkSession, sf_dir: str, prefix: str, operator, confs: dict[str, str]
+) -> DataFrame:
+    """Per-user lifetime totals: the events stream drained through the
+    stateful ``operator`` in update mode, with session ``confs`` scoped
+    to the drain, and each user's final state read back as its last
+    emission by batch_id (st5, st7)."""
     from pyspark.sql import Window
 
-    from ..streaming.stateful import user_totals
-
     src = _staged_stream_dir(sf_dir)
-    tmp = _workdir("stq5_")
+    tmp = _workdir(prefix)
     stream = _raw_events_stream(spark, sf_dir, src).select("user_id", "value")
     out = f"{tmp}/out"
 
     def sink(batch, batch_id):
         batch.withColumn("batch_id", F.lit(batch_id)).write.mode("append").parquet(out)
 
-    _drain(user_totals(stream), sink, f"{tmp}/ckpt", mode="update", stateful=True)
+    with _scoped_confs(spark, confs):
+        _drain(operator(stream), sink, f"{tmp}/ckpt", mode="update", stateful=True)
     w = Window.partitionBy("user_id").orderBy(F.desc("batch_id"))
     return (
         spark.read.parquet(out)
@@ -693,6 +707,12 @@ def st5_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("user_id", "n_events", "total_cents", "total_value")
         .orderBy("user_id")
     )
+
+
+def st5_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..streaming.stateful import user_totals
+
+    return _lifetime_totals(spark, sf_dir, "stq5_", user_totals, {})
 
 
 ST5_SQL = """
@@ -726,20 +746,11 @@ ORACLES["st5_stateful_user_totals"] = ST5_SQL
 # single-copy batch aggregate: any leaked duplicate doubles a count and
 # hash-mismatches.
 # ---------------------------------------------------------------------------
-def st6_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ._det import dsum
-
-    work = _workdir("stq6_")
-    src, out, ckpt = f"{work}/src", f"{work}/out", f"{work}/ckpt"
-    _link_events_into(sf_dir, src, n_copies=2)
-
-    stream = _raw_events_stream(
-        spark, sf_dir, src, max_files_per_trigger=1
-    ).dropDuplicates(["event_id"])
-    _drain(stream, _parquet_sink(out), ckpt, stateful=True)
+def _per_type_totals(df: DataFrame) -> DataFrame:
+    """Per event type: events, distinct users and the exact value sum —
+    the result st6, st8 and st11 check against ``_per_type_sql``."""
     return (
-        spark.read.parquet(out)
-        .groupBy("event_type")
+        df.groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.countDistinct("user_id").alias("n_users"),
@@ -749,18 +760,31 @@ def st6_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ST6_SQL = """
+def _per_type_sql(copies: int) -> str:
+    """``_per_type_totals`` of the events table delivered ``copies``
+    times: counts and sums scale with the copies, distinct users do
+    not."""
+    k = "" if copies == 1 else f"{copies} * "
+    return f"""
 SELECT event_type,
-       COUNT(*) AS n_events,
+       {k}COUNT(*) AS n_events,
        COUNT(DISTINCT user_id) AS n_users,
-       CAST(ROUND(SUM(CAST(value AS DECIMAL(12,4))), 2) AS DOUBLE) AS total_value
+       CAST(ROUND({k}SUM(CAST(value AS DECIMAL(12,4))), 2) AS DOUBLE) AS total_value
 FROM events
 GROUP BY event_type
 ORDER BY event_type
 """
 
+
+def st6_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    work, stream = _doubled_stream(spark, sf_dir, "stq6_")
+    out = f"{work}/out"
+    _drain(stream.dropDuplicates(["event_id"]), _parquet_sink(out), f"{work}/ckpt", stateful=True)
+    return _per_type_totals(spark.read.parquet(out))
+
+
 QUERIES["st6_streaming_dedup"] = st6_streaming_dedup
-ORACLES["st6_streaming_dedup"] = ST6_SQL
+ORACLES["st6_streaming_dedup"] = _per_type_sql(1)
 
 
 # ---------------------------------------------------------------------------
@@ -772,17 +796,7 @@ ORACLES["st6_streaming_dedup"] = ST6_SQL
 # moving a fleet's stateful jobs to the new API.
 # ---------------------------------------------------------------------------
 def st7_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     from ..streaming.stateful import user_totals_tws
-
-    src = _staged_stream_dir(sf_dir)
-    tmp = _workdir("stq7_")
-    stream = _raw_events_stream(spark, sf_dir, src).select("user_id", "value")
-    out = f"{tmp}/out"
-
-    def sink(batch, batch_id):
-        batch.withColumn("batch_id", F.lit(batch_id)).write.mode("append").parquet(out)
 
     # transformWithState keeps each state variable in its own column
     # family — only the RocksDB provider supports that (HDFSBacked
@@ -793,16 +807,7 @@ def st7_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
         )
     }
-    with _scoped_confs(spark, rocksdb):
-        _drain(user_totals_tws(stream), sink, f"{tmp}/ckpt", mode="update", stateful=True)
-    w = Window.partitionBy("user_id").orderBy(F.desc("batch_id"))
-    return (
-        spark.read.parquet(out)
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select("user_id", "n_events", "total_cents", "total_value")
-        .orderBy("user_id")
-    )
+    return _lifetime_totals(spark, sf_dir, "stq7_", user_totals_tws, rocksdb)
 
 
 def _tws_available() -> bool:
@@ -852,44 +857,21 @@ else:
 def st8_streaming_txlog_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sinks.txlog import TxLogFormat
     from ..streaming.txlog_sink import exactly_once_batch_writer
-    from ._det import dsum
 
-    work = _workdir("stq8_")
-    src, table, ckpt = f"{work}/src", f"{work}/table", f"{work}/ckpt"
-    _link_events_into(sf_dir, src, n_copies=2)
-
+    work, stream = _doubled_stream(spark, sf_dir, "stq8_")
+    table = f"{work}/table"
     fmt = TxLogFormat()
     writer = exactly_once_batch_writer(fmt, table, "st8")
-    stream = _raw_events_stream(spark, sf_dir, src, max_files_per_trigger=1)
-    _drain(stream, writer, ckpt, stateful=False)
+    _drain(stream, writer, f"{work}/ckpt", stateful=False)
 
     # the crash-replay case: batch 0 arrives again → marker no-op
     writer(fmt.read(spark, table).limit(50), 0)
 
-    return (
-        fmt.read(spark, table)
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.countDistinct("user_id").alias("n_users"),
-            dsum("value").alias("total_value"),
-        )
-        .orderBy("event_type")
-    )
+    return _per_type_totals(fmt.read(spark, table))
 
-
-ST8_SQL = """
-SELECT event_type,
-       2 * COUNT(*) AS n_events,
-       COUNT(DISTINCT user_id) AS n_users,
-       CAST(ROUND(2 * SUM(CAST(value AS DECIMAL(12,4))), 2) AS DOUBLE) AS total_value
-FROM events
-GROUP BY event_type
-ORDER BY event_type
-"""
 
 QUERIES["st8_streaming_txlog_exactly_once"] = st8_streaming_txlog_exactly_once
-ORACLES["st8_streaming_txlog_exactly_once"] = ST8_SQL
+ORACLES["st8_streaming_txlog_exactly_once"] = _per_type_sql(2)
 
 
 # ---------------------------------------------------------------------------
@@ -906,14 +888,11 @@ def st9_streaming_view_maintenance(spark: SparkSession, sf_dir: str) -> DataFram
     from ..sinks.txlog import TxLogFormat
     from ..streaming.txlog_sink import incremental_view_writer
 
-    work = _workdir("stq9_")
-    src, view, ckpt = f"{work}/src", f"{work}/view", f"{work}/ckpt"
-    _link_events_into(sf_dir, src, n_copies=2)
-
+    work, stream = _doubled_stream(spark, sf_dir, "stq9_")
+    view = f"{work}/view"
     fmt = TxLogFormat()
     writer = incremental_view_writer(fmt, view, "st9", ["event_type"], ["value"])
-    stream = _raw_events_stream(spark, sf_dir, src, max_files_per_trigger=1)
-    _drain(stream, writer, ckpt, stateful=False)
+    _drain(stream, writer, f"{work}/ckpt", stateful=False)
 
     # crash-replay of batch 0: the txn marker must make it a no-op —
     # otherwise the view double-counts and the oracle hash-mismatches
@@ -1009,42 +988,15 @@ ORACLES["st10_custom_source_stream"] = ST10_SQL
 # premature state eviction (or missed duplicate) breaks the hash.
 # ---------------------------------------------------------------------------
 def st11_streaming_dedup_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ._det import dsum
+    work, stream = _doubled_stream(spark, sf_dir, "stq11_")
+    out = f"{work}/out"
+    deduped = stream.withWatermark("ts", "1 day").dropDuplicatesWithinWatermark(["event_id"])
+    _drain(deduped, _parquet_sink(out), f"{work}/ckpt", stateful=True)
+    return _per_type_totals(spark.read.parquet(out))
 
-    work = _workdir("stq11_")
-    src, out, ckpt = f"{work}/src", f"{work}/out", f"{work}/ckpt"
-    _link_events_into(sf_dir, src, n_copies=2)
-
-    stream = (
-        _raw_events_stream(spark, sf_dir, src, max_files_per_trigger=1)
-        .withWatermark("ts", "1 day")
-        .dropDuplicatesWithinWatermark(["event_id"])
-    )
-    _drain(stream, _parquet_sink(out), ckpt, stateful=True)
-    return (
-        spark.read.parquet(out)
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.countDistinct("user_id").alias("n_users"),
-            dsum("value").alias("total_value"),
-        )
-        .orderBy("event_type")
-    )
-
-
-ST11_SQL = """
-SELECT event_type,
-       COUNT(*) AS n_events,
-       COUNT(DISTINCT user_id) AS n_users,
-       CAST(ROUND(SUM(CAST(value AS DECIMAL(12,4))), 2) AS DOUBLE) AS total_value
-FROM events
-GROUP BY event_type
-ORDER BY event_type
-"""
 
 QUERIES["st11_streaming_dedup_ttl"] = st11_streaming_dedup_ttl
-ORACLES["st11_streaming_dedup_ttl"] = ST11_SQL
+ORACLES["st11_streaming_dedup_ttl"] = _per_type_sql(1)
 
 
 # ---------------------------------------------------------------------------
@@ -1154,9 +1106,8 @@ def _st13_registers(df: DataFrame) -> DataFrame:
 def st13_streaming_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sinks.txlog import TxLogFormat
 
-    work = _workdir("st13_")
-    src, table, ckpt = f"{work}/src", f"{work}/table", f"{work}/ckpt"
-    _link_events_into(sf_dir, src, n_copies=2)
+    work, stream = _doubled_stream(spark, sf_dir, "st13_")
+    table, ckpt = f"{work}/table", f"{work}/ckpt"
     fmt = TxLogFormat()
 
     def merge_registers(batch_df: DataFrame, batch_id: int) -> None:
@@ -1171,16 +1122,14 @@ def st13_streaming_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         fmt.overwrite(regs, table)
 
-    stream = _raw_events_stream(spark, sf_dir, src, max_files_per_trigger=1)
     # registry lives in files: the drain holds no state. Two paired
     # 5-rep knob probes, opposite orders, pinned vs unpinned: mins 3.62
     # vs 3.63 s, medians split (4.22/4.51 vs 4.02/4.26).
     _drain(stream, merge_registers, ckpt, stateful=False)
 
-    # crash-replay: the ACTUAL first staged file (= batch 0 under
-    # maxFilesPerTrigger=1) again — a no-op because max-merge is
-    # idempotent (the registers, and so the hash, must not move)
-    merge_registers(spark.read.parquet(f"{src}/00-events.parquet"), 0)
+    # crash-replay: batch 0's input again — a no-op because max-merge
+    # is idempotent (the registers, and so the hash, must not move)
+    merge_registers(spark.read.parquet(*_batch_files(ckpt, 0)), 0)
 
     from .sketches import hll_estimate_frame
 
@@ -1247,47 +1196,7 @@ ORACLES["st13_streaming_hll_registers"] = ST13_SQL
 
 
 def st14_stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    src = _staged_stream_dir(sf_dir)
-    tmp = _workdir("stq14_")
-
-    def read():
-        return _raw_events_stream(spark, sf_dir, src)
-
-    views = (
-        read()
-        .filter(F.col("event_type") == "view")
-        .select(
-            F.col("user_id"),
-            F.col("event_id").alias("view_id"),
-            F.col("ts").alias("view_ts"),
-        )
-        .withWatermark("view_ts", "1 hour")
-    )
-    purchases = (
-        read()
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user_id"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "1 hour")
-    )
-    joined = views.join(
-        purchases,
-        F.expr(
-            """
-            user_id = p_user_id AND
-            purchase_ts >= view_ts AND
-            purchase_ts <= view_ts + INTERVAL 30 MINUTES
-            """
-        ),
-        "leftOuter",
-    ).select("user_id", "view_id", "purchase_id", "view_ts", "purchase_ts")
-
-    out = f"{tmp}/out"
-    _drain(joined, _parquet_sink(out), f"{tmp}/ckpt", stateful=True)
-    return spark.read.parquet(out).orderBy("view_id", "purchase_id")
+    return _view_purchase_join(spark, sf_dir, "stq14_", "leftOuter")
 
 
 ST14_SQL = """
@@ -1504,74 +1413,92 @@ ORACLES["st15_streaming_lsh_dedup"] = _st15_sql()
 
 
 # ---------------------------------------------------------------------------
-# ST16 — streaming ADDITIVE-sketch maintenance: a Count-Min frequency
-# sketch (q95's cells, user-keyed) kept current per micro-batch,
-# exactly-once BY TRANSACTION MARKERS.
+# ST16–ST20 — the ADDITIVE registry family: streaming state that is a
+# per-batch SUM, kept exactly-once BY TRANSACTION MARKERS.
 #
 # The deliberate contrast with st13: HLL registers are max-merged —
 # idempotent BY ALGEBRA, so crash-replayed batches are absorbed with
-# no bookkeeping. CMS counters are ADDITIVE: re-adding a replayed
-# batch's cells would double-count, so this is the state family that
-# NEEDS the st6/st8 transaction-marker discipline. Each micro-batch
-# appends its partial cells tagged with the batch_id; the read side
-# reconciles per (batch_id, r, c) with MAX (replayed partials are
-# bit-identical, and a torn append is healed by the replay that
-# follows a crash) and only then SUMs across batches — so a batch's
-# cells count ONCE no matter how many times the sink ran it.
+# no bookkeeping. Count-Min counters, value histograms, zone row
+# counts, first-digit counts and daily sums are ADDITIVE: re-adding a
+# replayed batch's cells would double-count, so this is the state
+# family that NEEDS the st6/st8 transaction-marker discipline. One
+# drain (_registry_drain) serves all five: each micro-batch appends
+# its partial cells tagged with the batch_id; the read side reconciles
+# per (batch_id, keys) with MAX (replayed partials are bit-identical,
+# and a torn append is healed by the replay that follows a crash) and
+# only then SUMs across batches (_reconciled) — so a batch's cells
+# count ONCE no matter how many times the sink ran it.
 #
 # Duplicate DELIVERY, by contrast, is two legitimate events and MUST
 # double the counters: the source is staged twice (n_copies = 2,
-# maxFilesPerTrigger = 1 → one batch per copy) and the oracle counts
-# every event twice — while the replay leg re-runs batch 0's file
-# through the sink once more and the result must NOT move. Both
-# semantics in one hash-checked answer.
+# maxFilesPerTrigger = 1 → one batch per copy) and every oracle counts
+# every event twice — while the drain restarts from its checkpoint
+# (no new batches) and the replay leg re-runs batch 0's input through
+# the sink once more, and the result must NOT move. Both semantics in
+# one hash-checked answer. The replayed input is the file set the
+# source's commit log names for batch 0 (_batch_files).
 #
-# Scale shape: per-batch cell extraction is one (user → count) agg +
-# a d-way explode over DISTINCT users (q95's build); the registry
-# grows d·w rows per batch — kilobytes — and the reconciliation
-# reads/aggregates that dim-scale frame. Probes (exact top-20 users)
-# attach estimates via a broadcast of the 192-cell frame.
+# Scale shape: per-batch cell extraction is one map-side-combined
+# aggregate; the registry grows by kilobytes per batch, and every
+# report reads the reconciled registry, never the event stream.
 # ---------------------------------------------------------------------------
 
+
+def _registry_drain(spark: SparkSession, sf_dir: str, prefix: str, cells):
+    """Drain the doubled events stream into an append-only registry of
+    ``cells(batch)`` partials, each tagged with its batch_id as the
+    first column; restart the drain from its checkpoint; then replay
+    batch 0's input through the same sink. Returns the registry frame
+    and the staged source dir."""
+    from ..catalog import normalize_event_ts
+
+    work, stream = _doubled_stream(spark, sf_dir, prefix)
+    reg, ckpt = f"{work}/reg", f"{work}/ckpt"
+
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        cells(batch_df).select(
+            F.lit(batch_id).cast("long").alias("batch_id"), "*"
+        ).write.mode("append").parquet(reg)
+
+    # registry lives in files: the drain holds no state
+    _drain(stream, sink, ckpt, stateful=False)
+    _drain(stream, sink, ckpt, stateful=False)  # restart: no new batches
+    sink(normalize_event_ts(spark.read.parquet(*_batch_files(ckpt, 0))), 0)
+    return spark.read.parquet(reg), f"{work}/src"
+
+
+def _reconciled(reg: DataFrame, keys: list[str], col: str) -> DataFrame:
+    """Registry column ``col`` per ``keys`` with each batch counted
+    once: MAX per (batch_id, keys) — replayed partials are identical —
+    then SUM across batches."""
+    return (
+        reg.groupBy("batch_id", *keys)
+        .agg(F.max(col).alias(col))
+        .groupBy(*keys)
+        .agg(F.sum(col).alias(col))
+    )
+
+
+# ST16 — a Count-Min frequency sketch (q95's cells, user-keyed). Per-
+# batch cell extraction is one (user → count) agg + a d-way explode
+# over DISTINCT users (q95's build); the registry grows d·w rows per
+# batch. Probes (exact top-20 users) attach estimates via a broadcast
+# of the 192-cell frame.
 _ST16_D = 3
 _ST16_W = 64
 _ST16_TOP = 20
 
 
 def st16_streaming_cms_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.cms import cms_build, cms_estimate
-
-    work = _workdir("st16_")
-    src, reg, ckpt = f"{work}/src", f"{work}/reg", f"{work}/ckpt"
-    _link_events_into(sf_dir, src, n_copies=2)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        counts = batch_df.groupBy("user_id").agg(F.count(F.lit(1)).alias("n"))
-        cells = cms_build(counts, "user_id", "n", depth=_ST16_D, width=_ST16_W)
-        cells.select(
-            F.lit(batch_id).cast("long").alias("batch_id"), "r", "c", "cnt"
-        ).write.mode("append").parquet(reg)
-
-    stream = _raw_events_stream(spark, sf_dir, src, max_files_per_trigger=1)
-    # registry lives in files: the drain holds no state
-    _drain(stream, sink, ckpt, stateful=False)
-    _drain(stream, sink, ckpt, stateful=False)  # restart: no new batches
-
-    # crash-replay: run batch 0's file through the sink AGAIN with the
-    # same batch_id — the txn-marker reconciliation below must absorb it
-    from ..catalog import normalize_event_ts
-
-    sink(normalize_event_ts(spark.read.parquet(f"{src}/00-events.parquet")), 0)
-
-    cells = (
-        spark.read.parquet(reg)
-        .groupBy("batch_id", "r", "c")
-        .agg(F.max("cnt").alias("cnt"))  # replayed partials are identical
-        .groupBy("r", "c")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
     from pyspark.sql import Window
 
+    from ..operators.cms import cms_build, cms_estimate
+
+    def cms_cells(batch_df: DataFrame) -> DataFrame:
+        counts = batch_df.groupBy("user_id").agg(F.count(F.lit(1)).alias("n"))
+        return cms_build(counts, "user_id", "n", depth=_ST16_D, width=_ST16_W)
+
+    reg, src = _registry_drain(spark, sf_dir, "st16_", cms_cells)
     exact = (
         spark.read.parquet(src)
         .groupBy("user_id")
@@ -1581,7 +1508,9 @@ def st16_streaming_cms_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = exact.withColumn("rk", F.row_number().over(w)).filter(
         F.col("rk") <= _ST16_TOP
     )
-    est = cms_estimate(probes, "user_id", cells, depth=_ST16_D, width=_ST16_W)
+    est = cms_estimate(
+        probes, "user_id", _reconciled(reg, ["r", "c"], "cnt"), depth=_ST16_D, width=_ST16_W
+    )
     return est.select(
         F.col("rk").cast("long").alias("rk"),
         F.col("user_id").cast("long").alias("user_id"),
@@ -1656,40 +1585,25 @@ ORACLES["st16_streaming_cms_counts"] = _st16_sql()
 # NOT additive-exact, so instead of a mergeable approximation this
 # uses the property the corpus actually has — values are cent-quantized
 # doubles, a BOUNDED INTEGER DOMAIN — and keeps the exact per-(type,
-# cent) histogram, which IS additive: per micro-batch the sink appends
-# partial (batch_id, event_type, value_cents, cnt) rows; the read side
-# reconciles per (batch_id, type, v) with MAX (the st16 txn-marker
-# discipline — replayed partials are bit-identical) then SUMs across
-# batches, and exact quantiles fall out of one cumulative window over
-# the bounded histogram: pct-th percentile = min v with cum(v) >=
-# ceil(pct·n/100) — the explicit rank definition, written out
-# IDENTICALLY in the oracle so no engine's percentile_disc semantics
-# are trusted.
-#
-# Same two-semantics contract as st16: duplicate DELIVERY (two staged
-# copies, one batch each) legitimately doubles every histogram count
-# (quantiles are invariant to uniform doubling — the oracle doubles
-# and the values must not move, which is itself a property check);
-# crash-REPLAY of batch 0 through the sink must be absorbed by the
-# marker reconciliation.
-#
-# Scale shape: per-batch cell extraction is one (type, cent) agg —
-# map-side combine does the heavy lifting; the registry grows
-# |distinct cents per type| rows per batch (~20k at sf0.1 —
-# kilobytes); quantile extraction windows over the bounded histogram,
-# never the event stream.
+# cent) histogram, which IS additive (the family's registry), and
+# exact quantiles fall out of one cumulative window over the bounded
+# histogram: pct-th percentile = min v with cum(v) >= ceil(pct·n/100)
+# — the explicit rank definition, written out IDENTICALLY in the
+# oracle so no engine's percentile_disc semantics are trusted.
+# Quantiles are invariant to the uniform doubling of duplicate
+# delivery — the oracle doubles and the values must not move, which is
+# itself a property check. The registry grows |distinct cents per
+# type| rows per batch (~20k at sf0.1 — kilobytes).
 # ---------------------------------------------------------------------------
 
 _ST17_PCTS = (1, 5, 25, 50, 75, 95, 99)
 
 
 def st17_streaming_exact_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    work = _workdir("st17_")
-    src, reg, ckpt = f"{work}/src", f"{work}/reg", f"{work}/ckpt"
-    _link_events_into(sf_dir, src, n_copies=2)
+    from pyspark.sql import Window
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        cells = (
+    def value_cells(batch_df: DataFrame) -> DataFrame:
+        return (
             batch_df.filter(F.col("value").isNotNull())
             .select(
                 "event_type",
@@ -1698,30 +1612,9 @@ def st17_streaming_exact_quantiles(spark: SparkSession, sf_dir: str) -> DataFram
             .groupBy("event_type", "v")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
-        cells.select(
-            F.lit(batch_id).cast("long").alias("batch_id"), "event_type", "v", "cnt"
-        ).write.mode("append").parquet(reg)
 
-    stream = _raw_events_stream(spark, sf_dir, src, max_files_per_trigger=1)
-    # registry lives in files: the drain holds no state
-    _drain(stream, sink, ckpt, stateful=False)
-    _drain(stream, sink, ckpt, stateful=False)  # restart: no new batches
-
-    # crash-replay: batch 0's file through the sink AGAIN with the same
-    # batch_id — MAX-reconciliation below must absorb the duplicate
-    from ..catalog import normalize_event_ts
-
-    sink(normalize_event_ts(spark.read.parquet(f"{src}/00-events.parquet")), 0)
-
-    from pyspark.sql import Window
-
-    hist = (
-        spark.read.parquet(reg)
-        .groupBy("batch_id", "event_type", "v")
-        .agg(F.max("cnt").alias("cnt"))  # replayed partials are identical
-        .groupBy("event_type", "v")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
+    reg, _ = _registry_drain(spark, sf_dir, "st17_", value_cells)
+    hist = _reconciled(reg, ["event_type", "v"], "cnt")
     cum = hist.select(
         "event_type",
         "v",
@@ -1781,14 +1674,13 @@ ORACLES["st17_streaming_exact_quantiles"] = _ST17_SQL
 # at commit time; this is that operator with the file = the daily
 # zone). Each batch appends its partial zone cells (batch_id, z,
 # n_rows, min_s, max_s); the read side MAX/MIN-reconciles per
-# (batch_id, z) — replayed partials are bit-identical, the st16
-# txn-marker discipline, needed because n_rows is ADDITIVE — then
-# merges across batches with the zone-map algebra (SUM n, MIN min,
-# MAX max) and evaluates q133's lossless prune test over a fixed
-# timestamp-range predicate suite. Doubled delivery doubles n_rows
-# and leaves min/max fixed (the algebraic/additive split inside ONE
-# state row); batch-0 crash-replay must not move the hash. Epochs are
-# floored per term (the q137 sub-second lesson).
+# (batch_id, z) — replayed partials are bit-identical, the family's
+# discipline, needed because n_rows is ADDITIVE — then merges across
+# batches with the zone-map algebra (SUM n, MIN min, MAX max) and
+# evaluates q133's lossless prune test over a fixed timestamp-range
+# predicate suite. Doubled delivery doubles n_rows and leaves min/max
+# fixed (the algebraic/additive split inside ONE state row). Epochs
+# are floored per term (the q137 sub-second lesson).
 # ---------------------------------------------------------------------------
 
 _ST18_PREDS = (  # (pred_id, lo, hi) — inclusive UTC timestamp ranges
@@ -1800,12 +1692,10 @@ _ST18_PREDS = (  # (pred_id, lo, hi) — inclusive UTC timestamp ranges
 
 
 def st18_streaming_zonemap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    work = _workdir("st18_")
-    src, reg, ckpt = f"{work}/src", f"{work}/reg", f"{work}/ckpt"
-    _link_events_into(sf_dir, src, n_copies=2)
+    from ..catalog import normalize_event_ts
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        cells = (
+    def zone_cells(batch_df: DataFrame) -> DataFrame:
+        return (
             batch_df.select(
                 F.expr("CAST(floor(unix_timestamp(ts)) AS BIGINT)").alias("s")
             )
@@ -1817,22 +1707,10 @@ def st18_streaming_zonemap(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.max("s").alias("max_s"),
             )
         )
-        cells.select(
-            F.lit(batch_id).cast("long").alias("batch_id"), "z", "n_rows", "min_s", "max_s"
-        ).write.mode("append").parquet(reg)
 
-    stream = _raw_events_stream(spark, sf_dir, src, max_files_per_trigger=1)
-    # registry lives in files: the drain holds no state
-    _drain(stream, sink, ckpt, stateful=False)
-    _drain(stream, sink, ckpt, stateful=False)  # restart: no new batches
-
-    from ..catalog import normalize_event_ts
-
-    sink(normalize_event_ts(spark.read.parquet(f"{src}/00-events.parquet")), 0)
-
+    reg, src = _registry_drain(spark, sf_dir, "st18_", zone_cells)
     zones = (
-        spark.read.parquet(reg)
-        .groupBy("batch_id", "z")
+        reg.groupBy("batch_id", "z")
         .agg(  # replayed partials are bit-identical
             F.max("n_rows").alias("n_rows"),
             F.min("min_s").alias("min_s"),
@@ -1941,34 +1819,21 @@ ORACLES["st18_streaming_zonemap"] = _st18_sql()
 # ---------------------------------------------------------------------------
 # ST19 — streaming Benford first-digit audit (r9): q106's fraud/anomaly
 # audit computed the way a monitoring pipeline actually computes it —
-# incrementally on the ingest path. The per-batch first-digit histogram
-# is ADDITIVE state (a crash-replayed batch would double-count), so the
-# registry uses the st16/st17/st18 txn-marker discipline: each micro-
-# batch appends (batch_id, digit, cnt) partials; the read side
-# MAX-reconciles per (batch_id, digit) — replayed partials are
-# bit-identical — then SUMs across batches. Duplicate DELIVERY (two
-# staged copies) legitimately doubles counts and the oracle counts
-# every event twice; obs_ppm is doubling-invariant (a property check in
-# itself) while total/chi_term scale with it. The batch-0 crash-replay
-# leg re-runs the sink and the hash must not move.
-#
-# Scale shape (100 TB): per-batch cell extraction is one map-side-
-# combined 9-row aggregate; the registry grows <= 9 rows per batch; the
-# Benford report runs on the reconciled 9-row frame.
+# incrementally on the ingest path. The per-batch first-digit
+# histogram is the family's ADDITIVE registry (<= 9 rows per batch).
+# obs_ppm is doubling-invariant under duplicate delivery (a property
+# check in itself) while total/chi_term scale with it. The Benford
+# report runs on the reconciled 9-row frame.
 # ---------------------------------------------------------------------------
 
 
 def st19_streaming_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .training import _BENFORD_PPM
 
-    work = _workdir("st19_")
-    src, reg, ckpt = f"{work}/src", f"{work}/reg", f"{work}/ckpt"
-    _link_events_into(sf_dir, src, n_copies=2)
-
     cents = F.round(F.col("value").cast("decimal(12,4)") * 100, 0).cast("long")
     digit = F.substring(F.col("cents").cast("string"), 1, 1).cast("int")
 
-    def _digits(df: DataFrame) -> DataFrame:
+    def digit_cells(df: DataFrame) -> DataFrame:
         return (
             df.select(cents.alias("cents"))
             .filter(F.col("cents") > 0)
@@ -1977,44 +1842,8 @@ def st19_streaming_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        _digits(batch_df).select(
-            F.lit(batch_id).cast("long").alias("batch_id"), "digit", "cnt"
-        ).write.mode("append").parquet(reg)
-
-    stream = _raw_events_stream(spark, sf_dir, src, max_files_per_trigger=1)
-    # registry lives in files: the drain holds no state
-    _drain(stream, sink, ckpt, stateful=False)
-    _drain(stream, sink, ckpt, stateful=False)  # restart: no new batches
-
-    # crash-replay: batch 0's ACTUAL input through the sink AGAIN, same
-    # batch_id. The file set is derived from the FileStreamSource commit
-    # log ({ckpt}/sources/0/0 — one JSON entry per file), NOT assumed:
-    # with maxFilesPerTrigger=1 batch 0 happens to be 00-events.parquet,
-    # but hardcoding that would silently blend partials from DIFFERENT
-    # files under the per-(batch_id, digit) MAX-reconcile if the trigger
-    # packing ever changed — the reconcile only detects replays of the
-    # SAME input.
-    import json as _json
-
-    from ..catalog import normalize_event_ts
-
-    with open(f"{ckpt}/sources/0/0") as fh:
-        batch0_files = [
-            _json.loads(line)["path"]
-            for line in fh
-            if line.startswith("{")
-        ]
-    assert batch0_files, "st19: empty batch-0 file manifest in checkpoint"
-    sink(normalize_event_ts(spark.read.parquet(*batch0_files)), 0)
-
-    obs = (
-        spark.read.parquet(reg)
-        .groupBy("batch_id", "digit")
-        .agg(F.max("cnt").alias("cnt"))  # replayed partials are identical
-        .groupBy("digit")
-        .agg(F.sum("cnt").alias("observed"))
-    )
+    reg, _ = _registry_drain(spark, sf_dir, "st19_", digit_cells)
+    obs = _reconciled(reg, ["digit"], "cnt").withColumnRenamed("cnt", "observed")
     tot = obs.agg(F.sum("observed").alias("total"))
     exp_map = F.create_map(
         *[F.lit(x) for kv in _BENFORD_PPM.items() for x in kv]
@@ -2078,25 +1907,20 @@ ORACLES["st19_streaming_benford"] = _st19_sql()
 
 # ---------------------------------------------------------------------------
 # ST20 — streaming EWMA level maintenance (the streaming counterpart
-# of q149, and the time-series member of the st16-st19 registry
-# family: CMS counts, exact quantiles, zonemaps, Benford — now the
-# smoothed level itself, the metric a monitoring dashboard actually
-# plots over the ingest path).
+# of q149, and the time-series member of the registry family: CMS
+# counts, exact quantiles, zonemaps, Benford — now the smoothed level
+# itself, the metric a monitoring dashboard actually plots over the
+# ingest path).
 #
 # The serial EWMA recurrence cannot be maintained incrementally
 # across out-of-order micro-batches; q149's truncated power-of-two
 # kernel CAN, because it makes the smoothed value a read-side
 # transform of PURELY ADDITIVE state: per-batch daily cents partials
-# (event_type, day, cents) append to the registry; the read side
-# MAX-reconciles per (batch_id, event_type, day) — replayed partials
-# of the SAME batch are identical, the st16-st19 exactly-once
-# discipline — SUMs across batches into the daily frame, and applies
-# the 16-day 2^(15-k) kernel there (explode + one hash agg, q149's
-# exact-integer shape). Duplicate DELIVERY (two staged copies)
+# (event_type, day, cents) are the family's registry, reconciled into
+# the daily frame, and the 16-day 2^(15-k) kernel runs there (explode
+# + one hash agg, q149's exact-integer shape). Duplicate DELIVERY
 # legitimately doubles every daily total, which scales ewma_cents by
 # exactly 2 (the kernel is linear) — a property check in itself.
-# Crash-replay of batch 0 (file set from the FileStreamSource commit
-# log, the st19 rule) must not move the hash.
 #
 # Scale: per-batch state is a <=|days x types| map-side agg; the
 # registry grows O(days x types) rows per batch; the kernel runs on
@@ -2105,18 +1929,11 @@ ORACLES["st19_streaming_benford"] = _st19_sql()
 
 
 def st20_streaming_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import json as _json
-
-    from ..catalog import normalize_event_ts
     from .behavior import _Q149_H
-
-    work = _workdir("st20_")
-    src, reg, ckpt = f"{work}/src", f"{work}/reg", f"{work}/ckpt"
-    _link_events_into(sf_dir, src, n_copies=2)
 
     cents = F.round(F.col("value").cast("decimal(12,4)") * 100, 0).cast("long")
 
-    def _daily(df: DataFrame) -> DataFrame:
+    def daily_cells(df: DataFrame) -> DataFrame:
         return (
             df.select(
                 "event_type", F.col("ts").cast("date").alias("day"), cents.alias("c")
@@ -2125,34 +1942,8 @@ def st20_streaming_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.sum("c").alias("cents"))
         )
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        _daily(batch_df).select(
-            F.lit(batch_id).cast("long").alias("batch_id"),
-            "event_type",
-            "day",
-            "cents",
-        ).write.mode("append").parquet(reg)
-
-    stream = _raw_events_stream(spark, sf_dir, src, max_files_per_trigger=1)
-    # registry lives in files: the drain holds no state
-    _drain(stream, sink, ckpt, stateful=False)
-    _drain(stream, sink, ckpt, stateful=False)  # restart: no new batches
-
-    # crash-replay batch 0's ACTUAL file set (st19's commit-log rule)
-    with open(f"{ckpt}/sources/0/0") as fh:
-        batch0_files = [
-            _json.loads(line)["path"] for line in fh if line.startswith("{")
-        ]
-    assert batch0_files, "st20: empty batch-0 file manifest in checkpoint"
-    sink(normalize_event_ts(spark.read.parquet(*batch0_files)), 0)
-
-    daily = (
-        spark.read.parquet(reg)
-        .groupBy("batch_id", "event_type", "day")
-        .agg(F.max("cents").alias("cents"))  # replayed partials identical
-        .groupBy("event_type", "day")
-        .agg(F.sum("cents").alias("cents"))
-    )
+    reg, _ = _registry_drain(spark, sf_dir, "st20_", daily_cells)
+    daily = _reconciled(reg, ["event_type", "day"], "cents")
     contrib = daily.select(
         "event_type",
         "cents",

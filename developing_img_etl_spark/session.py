@@ -38,6 +38,43 @@ def cpu_count() -> int:
     return int(env) if env else len(os.sched_getaffinity(0))
 
 
+# Where the host's memory limit is read: a cgroup limit (v2, then v1)
+# when the process runs under one, else the machine's MemTotal.
+_CGROUP_MEMORY_LIMITS = (
+    "/sys/fs/cgroup/memory.max",
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+)
+_MEMINFO = "/proc/meminfo"
+_MAX_DRIVER_MEM_MB = 48 * 1024
+
+
+def host_memory_bytes() -> int:
+    """The memory this process may use: the smallest cgroup limit that
+    is set, else the machine's MemTotal (an unset v2 limit reads "max";
+    an unset v1 limit reads a number far above MemTotal)."""
+    with open(_MEMINFO) as fh:
+        total = next(int(line.split()[1]) * 1024 for line in fh if line.startswith("MemTotal:"))
+    limits = [total]
+    for path in _CGROUP_MEMORY_LIMITS:
+        try:
+            with open(path) as fh:
+                limits.append(int(fh.read().strip()))
+        except (OSError, ValueError):
+            pass
+    return min(limits)
+
+
+def driver_memory() -> str:
+    """spark.driver.memory: SPARK_GRAFT_DRIVER_MEM when set, else half
+    the host's memory limit, capped at 48g. A heap sized past the host
+    lets the JVM grow until the kernel kills it: a one-session sf0.1
+    pass over every query on a 15 GB host was OOM-killed at 48g."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    return f"{min(host_memory_bytes() // 2 // 2**20, _MAX_DRIVER_MEM_MB)}m"
+
+
 def get_spark(app_name: str = "developing_img_etl_spark", *, cpus: int | None = None) -> SparkSession:
     """Build (or reuse) the engine SparkSession."""
     # transformWithStateInPandas needs google.protobuf in the PYTHON
@@ -59,7 +96,7 @@ def get_spark(app_name: str = "developing_img_etl_spark", *, cpus: int | None = 
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1024")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         # The ORACLE GATE materializes full results driver-side
         # (toPandas vs DuckDB fetchdf); at sf1 the widest result
         # (q15's ~5M-pair self-join) exceeds the 1g default. Queries

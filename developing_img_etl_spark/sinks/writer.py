@@ -18,8 +18,9 @@ travel — proving the protocol shape with zero dependencies.
 Why the parquet tier is "atomic enough" locally and not at fleet
 scale: overwrite is delete-then-write (a reader can observe the gap),
 append is visible file-by-file, and there is no writer-writer
-coordination. The rename-swap in compact.py and the localCheckpoint
-in overwrite() paper over the single-writer cases only.
+coordination. The localCheckpoint in overwrite() papers over the
+single-writer case only; compaction that doesn't race readers is
+`TxLogFormat.optimize`.
 """
 
 from __future__ import annotations

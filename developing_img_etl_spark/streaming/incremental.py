@@ -11,7 +11,10 @@ from the sha-check upsert sink (test.py:69-81). The Spark-native form:
   ST2  foreachBatch writer that anti-joins the batch against the sink
        table on the composite key before appending — idempotent under
        replays, the sha-compare PUT generalized.
-  ST3  dropDuplicatesWithinWatermark for in-stream dup keys.
+
+In-stream duplicate keys within a watermark horizon are the
+dropDuplicatesWithinWatermark operator that st11
+(queries/streaming_batch.py) checks against its oracle.
 """
 
 from __future__ import annotations
@@ -28,14 +31,6 @@ from ..sinks.writer import DEFAULT_FORMAT, TableFormat
 def read_photo_stream(spark: SparkSession, src_dir: str, schema: T.StructType) -> DataFrame:
     """ST1: the long-form photo-record stream (one row per photo)."""
     return spark.readStream.schema(schema).parquet(src_dir)
-
-
-def dedup_in_stream(photos: DataFrame, *, watermark_col: str = "ingest_ts",
-                    delay: str = "1 hour") -> DataFrame:
-    """ST3: drop same-key rows arriving within the watermark horizon."""
-    return photos.withWatermark(watermark_col, delay).dropDuplicatesWithinWatermark(
-        ["kode_proyek", "minggu", "nama_file"]
-    )
 
 
 def start_incremental_append(

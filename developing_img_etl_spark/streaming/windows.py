@@ -1,7 +1,9 @@
 """Event-time windows with late-data handling (SURVEY.md §2.9 ST4-ST5).
 
-The batch analogues (same aggregation logic, oracle-checked) are
-queries/streaming_batch.py q11a/q11e; these are the readStream forms.
+The batch queries q11a/q11e (queries/streaming_batch.py) run these
+same functions on the events table — on a batch frame the optimizer
+drops the watermark — and st1-st3 run them on the readStream forms,
+all against the same oracles.
 The reference's weekly `minggu` grouping (/root/reference/test.py:130)
 is a hand-rolled tumbling window; late rows there were silently
 processed "next run" — here the watermark makes the contract explicit.

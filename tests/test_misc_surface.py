@@ -272,61 +272,6 @@ def test_salted_distinct_count_exact(spark):
     assert got == {"hot": 37, "cold": 5}
 
 
-def test_compact_parquet_reduces_files_preserves_rows(spark, tmp_path):
-    """Compaction: many small append files -> few target-sized files,
-    byte-identical row set, original left intact on failure paths."""
-    from developing_img_etl_spark.sinks.compact import compact_parquet, file_count
-
-    path = str(tmp_path / "frag")
-    for i in range(8):
-        spark.range(i * 100, (i + 1) * 100).withColumnRenamed("id", "k").repartition(
-            4
-        ).write.mode("append").parquet(path)
-    before = file_count(spark, path)
-    assert before >= 32
-    total_before = spark.read.parquet(path).count()
-
-    compact_parquet(spark, path, target_file_mb=128)
-    after = file_count(spark, path)
-    assert after < before
-    out = spark.read.parquet(path)
-    assert out.count() == total_before
-    assert out.agg(F.sum("k")).collect()[0][0] == sum(range(800))
-
-
-def test_compact_parquet_single_partition_preserves_others(spark, tmp_path):
-    """The round-2 data-loss fix: compacting ONE hive partition must
-    leave every other partition's rows AND files physically untouched."""
-    import os
-
-    from developing_img_etl_spark.sinks.compact import compact_parquet, file_count
-
-    path = str(tmp_path / "ptab")
-    df = spark.createDataFrame(
-        [(i, "a" if i % 2 == 0 else "b") for i in range(400)], "k long, p string"
-    )
-    # Fragment both partitions with several appends.
-    for _ in range(4):
-        df.repartition(4).write.mode("append").partitionBy("p").parquet(path)
-    total_before = spark.read.parquet(path).count()
-    b_dir = os.path.join(path, "p=b")
-    b_files_before = sorted(os.listdir(b_dir))
-    a_files_before = file_count(spark, os.path.join(path, "p=a"))
-    assert a_files_before > 1
-
-    n_after = compact_parquet(spark, path, partition={"p": "a"}, target_file_mb=128)
-    assert n_after < a_files_before
-
-    # Untargeted partition: identical file listing, not just identical rows.
-    assert sorted(os.listdir(b_dir)) == b_files_before
-    out = spark.read.parquet(path)
-    assert out.count() == total_before
-    assert out.filter("p = 'b'").count() == 200 * 4
-    assert out.filter("p = 'a'").count() == 200 * 4
-    # Partition column still reads back correctly from the dir name.
-    assert out.select("p").distinct().count() == 2
-
-
 def test_table_format_seam_is_pluggable(spark, tmp_path):
     """S8 seam: a custom TableFormat (here: call-recording subclass of
     the parquet tier) drives both the catalog save and the streaming

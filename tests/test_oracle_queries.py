@@ -20,3 +20,16 @@ def test_query_matches_oracle(spark, sf_dir, name):
     else:
         # non-SQL-expressible: weaker rows-only check, mirroring the driver
         assert df.count() > 0
+
+
+def test_driver_priority_names_are_declared_once():
+    """A stale or misspelled priority name would silently drop out of
+    the driver's first 50 (queries() skips names it does not declare)."""
+    from developing_img_etl_spark.queries import _DRIVER_PRIORITY, streaming_batch
+
+    declared = set(QUERIES) | set(streaming_batch.GATED)
+    assert [n for n in _DRIVER_PRIORITY if n not in declared] == []
+    assert len(set(_DRIVER_PRIORITY)) == len(_DRIVER_PRIORITY)
+    assert list(QUERIES)[: len(_DRIVER_PRIORITY)] == [
+        n for n in _DRIVER_PRIORITY if n in QUERIES
+    ]

@@ -1,5 +1,6 @@
-"""Session sizing (the local master defaults to the host's usable CPUs)
-and driver-held frames built as local relations."""
+"""Session sizing (the local master defaults to the host's usable CPUs,
+the driver heap to half its memory limit) and driver-held frames built
+as local relations."""
 
 from __future__ import annotations
 
@@ -19,6 +20,40 @@ def test_cpu_count_defaults_to_affinity(monkeypatch):
 def test_cpu_count_env_override(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
     assert session.cpu_count() == 3
+
+
+def _fake_host(monkeypatch, tmp_path, mem_total_gb, cgroup_limit=None):
+    meminfo = tmp_path / "meminfo"
+    meminfo.write_text(f"MemFree: 1024 kB\nMemTotal: {mem_total_gb * 2**20} kB\n")
+    limits = [str(tmp_path / "absent")]
+    if cgroup_limit is not None:
+        (tmp_path / "memory.max").write_text(f"{cgroup_limit}\n")
+        limits.append(str(tmp_path / "memory.max"))
+    monkeypatch.setattr(session, "_MEMINFO", str(meminfo))
+    monkeypatch.setattr(session, "_CGROUP_MEMORY_LIMITS", tuple(limits))
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+
+
+def test_driver_memory_is_half_the_cgroup_limit(monkeypatch, tmp_path):
+    _fake_host(monkeypatch, tmp_path, 64, cgroup_limit=8 * 2**30)
+    assert session.driver_memory() == "4096m"
+
+
+@pytest.mark.parametrize("unset", ["max", None, 2**63 - 4096], ids=["v2-max", "absent", "v1-unset"])
+def test_driver_memory_falls_back_to_memtotal(monkeypatch, tmp_path, unset):
+    _fake_host(monkeypatch, tmp_path, 15, cgroup_limit=unset)
+    assert session.driver_memory() == f"{15 * 1024 // 2}m"
+
+
+def test_driver_memory_is_capped_at_48g(monkeypatch, tmp_path):
+    _fake_host(monkeypatch, tmp_path, 256)
+    assert session.driver_memory() == f"{48 * 1024}m"
+
+
+def test_driver_memory_env_override(monkeypatch, tmp_path):
+    _fake_host(monkeypatch, tmp_path, 15)
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "6g")
+    assert session.driver_memory() == "6g"
 
 
 _PARITY_SCHEMA = "id long, n int, x double, d date, s string"

@@ -322,6 +322,82 @@ def test_workdir_shares_one_root_removed_at_exit(monkeypatch):
     assert not os.path.exists(root)
 
 
+# -- the batch-0 replay rule and the additive registry ----------------------
+
+
+def test_batch_files_name_each_staged_file_once(spark, tmp_path):
+    """Two staged files drained one per trigger: the commit log names one
+    file per batch, different files, together the staged set, and each
+    batch's rows are its named file's rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from developing_img_etl_spark.queries import streaming_batch as SB
+
+    src, ckpt = tmp_path / "src", str(tmp_path / "ckpt")
+    src.mkdir()
+    staged = {}
+    for name, xs in (("a.parquet", [1, 2, 3]), ("b.parquet", [10, 20])):
+        pq.write_table(pa.table({"x": pa.array(xs, pa.int64())}), src / name)
+        staged[name] = xs
+    seen = {}
+
+    def sink(batch, batch_id):
+        seen[batch_id] = sorted(r.x for r in batch.collect())
+
+    stream = spark.readStream.schema("x long").option("maxFilesPerTrigger", 1).parquet(str(src))
+    SB._drain(stream, sink, ckpt, stateful=False)
+
+    f0, f1 = SB._batch_files(ckpt, 0), SB._batch_files(ckpt, 1)
+    assert len(f0) == 1 and len(f1) == 1 and f0 != f1
+    assert {os.path.basename(f) for f in f0 + f1} == set(staged)
+    for batch_id, files in ((0, f0), (1, f1)):
+        assert seen[batch_id] == staged[os.path.basename(files[0])]
+
+    empty = tmp_path / "empty" / "sources" / "0"
+    empty.mkdir(parents=True)
+    (empty / "0").write_text("v1\n")
+    with pytest.raises(ValueError, match="empty file manifest"):
+        SB._batch_files(str(tmp_path / "empty"), 0)
+
+
+def test_registry_drain_replays_batch_zero_input(spark, sf_dir):
+    """The registry holds each batch's partials tagged with its batch_id,
+    and the crash-replay leg re-runs batch 0's own input: tagging every
+    cell with its source file shows batch 0 read one file (drain and
+    replay alike) and batch 1 the other."""
+    from developing_img_etl_spark.queries import streaming_batch as SB
+
+    def file_cells(df):
+        return df.groupBy(F.input_file_name().alias("f")).agg(F.count(F.lit(1)).alias("cnt"))
+
+    reg, src = SB._registry_drain(spark, sf_dir, "st_test_", file_cells)
+    assert reg.columns == ["batch_id", "f", "cnt"]
+    rows = reg.collect()
+    files = {b: {os.path.basename(r.f) for r in rows if r.batch_id == b} for b in (0, 1)}
+    assert {r.batch_id for r in rows} == {0, 1}
+    assert len(files[0]) == 1 and len(files[1]) == 1 and files[0] != files[1]
+    assert files[0] | files[1] == set(os.listdir(src))
+    # the drain's batch 0 plus its replay: two identical partials
+    assert sorted(r.cnt for r in rows if r.batch_id == 0) == [
+        r.cnt for r in rows if r.batch_id == 1
+    ] * 2
+
+
+def test_reconciled_counts_each_batch_once(spark):
+    """Batch 0's partials written twice (drain + replay) plus batch 1:
+    MAX per (batch_id, keys), then SUM, counts each batch once."""
+    from developing_img_etl_spark.queries import streaming_batch as SB
+    from developing_img_etl_spark.session import local_frame
+
+    batch0 = [(0, "a", 3), (0, "b", 1)]
+    reg = local_frame(
+        spark, batch0 + batch0 + [(1, "a", 2), (1, "c", 5)], "batch_id long, k string, cnt long"
+    )
+    got = {r.k: r.cnt for r in SB._reconciled(reg, ["k"], "cnt").collect()}
+    assert got == {"a": 5, "b": 1, "c": 5}
+
+
 # -- the checked drain (queries/streaming_batch.py::_drain) -----------------
 
 _SHUFFLE = "spark.sql.shuffle.partitions"
