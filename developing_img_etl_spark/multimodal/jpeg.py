@@ -1127,14 +1127,20 @@ def jpeg_encode(arr: np.ndarray, quality: int = 65) -> bytes:
     return bytes(out)
 
 
+# How far one seed step moves make_photo's R, G and B channels (mod
+# 256): the photo of seed + d is the seed's photo shifted by d * SEED_STEP.
+SEED_STEP = (29, 11, 1)
+
+
 def make_photo(width: int, height: int, seed: int = 0) -> np.ndarray:
     """Deterministic gradient test pixels — the same per-channel
     arithmetic the PNG/BMP corpora use (oracle-replayable)."""
     xs = np.arange(width, dtype=np.int64)[None, :]
     ys = np.arange(height, dtype=np.int64)[:, None]
-    r = (seed * 29 + xs + ys) % 256
-    g = (seed * 11 + xs * 3 + ys * 5) % 256
-    b = (seed + xs * 7 + ys * 13) % 256
+    sr, sg, sb = SEED_STEP
+    r = (seed * sr + xs + ys) % 256
+    g = (seed * sg + xs * 3 + ys * 5) % 256
+    b = (seed * sb + xs * 7 + ys * 13) % 256
     return np.stack(
         [np.broadcast_to(c, (height, width)) for c in (r, g, b)], axis=2
     ).astype(np.uint8)

@@ -35,7 +35,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .similarity import _rerank_survivors
+from .similarity import _rerank_survivors, hash_sample_unit, unit_rows
 
 
 def pq_train_codebooks(
@@ -48,20 +48,12 @@ def pq_train_codebooks(
     iters: int = 10,
     seed: int = 42,
 ) -> np.ndarray:
-    """Per-subspace Lloyd's k-means (Euclidean, the PQ objective) on a
-    bounded deterministic hash-sample. Returns
+    """Per-subspace Lloyd's k-means (Euclidean, the PQ objective) on
+    ``hash_sample_unit``. Returns
     (n_subspaces, n_codes, dim // n_subspaces)."""
     assert dim % n_subspaces == 0, "dim must split evenly into subspaces"
     sub = dim // n_subspaces
-    n = emb.count()
-    step = max(1, n // sample_target)
-    sample_pd = (
-        emb.filter(F.pmod(F.xxhash64(F.col("vec_id")), F.lit(step)) == 0)
-        .select("embedding")
-        .toPandas()
-    )
-    x = np.array(sample_pd["embedding"].tolist(), dtype=np.float64)
-    x = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
+    x = hash_sample_unit(emb, sample_target)
     rng = np.random.default_rng(seed)
     books = np.empty((n_subspaces, n_codes, sub), dtype=np.float64)
     for s in range(n_subspaces):
@@ -89,8 +81,7 @@ def pq_encode(emb: DataFrame, codebooks: np.ndarray) -> DataFrame:
 
     @pandas_udf(T.ArrayType(T.IntegerType()))
     def encode(embedding: pd.Series) -> pd.Series:
-        m = np.array(embedding.tolist(), dtype=np.float64)
-        m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
+        m = unit_rows(np.array(embedding.tolist(), dtype=np.float64))
         codes = np.empty((len(m), n_subspaces), dtype="int32")
         for s in range(n_subspaces):
             xs = m[:, s * sub : (s + 1) * sub]
@@ -117,8 +108,7 @@ def pq_topk(
     )
     codes = pq_encode(emb, books)
     probes_pd = probes.select("vec_id", "embedding").toPandas()
-    pm = np.array(probes_pd["embedding"].tolist(), dtype=np.float64)
-    pm = pm / np.maximum(np.linalg.norm(pm, axis=1, keepdims=True), 1e-12)
+    pm = unit_rows(np.array(probes_pd["embedding"].tolist(), dtype=np.float64))
     probe_ids = probes_pd["vec_id"].to_numpy()
     n_probes = len(probe_ids)
     sub = dim // n_subspaces

@@ -1,21 +1,29 @@
-"""Approximate nearest neighbor over embedding columns (SURVEY.md §2.8
-M5 + training-data mandate).
+"""Nearest neighbours over embedding columns (SURVEY.md §2.8 M5 +
+training-data mandate).
 
-Four tiers:
-  1. brute_force_topk — Catalyst zip_with/aggregate fold (oracle path,
-     queries/similarity.py::q13). Exact, scales linearly, but the fold
-     is interpreted: right for small probe sets.
-  2. numpy_topk — mapInPandas with a broadcast probe matrix: each Arrow
-     batch does ONE numpy matmul (vectorized, no per-row Python). The
-     exact baseline at scale; shuffle-free (probes broadcast, top-k
-     merged per partition then globally).
+Exact tiers share one ranking contract — cosine rounded half away
+from zero to 6 places, row_number over (sim desc, vec_id) per probe,
+rows with rk <= k kept (``_ranked``):
+  1. cosine_ranking — Catalyst zip_with/aggregate fold against a
+     broadcast probe projection (``probe_projection``). The oracle
+     path: q13, q68's positive leg, the dense leg of q93/q110/q150 and
+     brute_force_topk are this one body. Exact, linear in the corpus,
+     but the fold is interpreted: right for small probe sets.
+  2. numpy_topk (m8, mapInPandas) and arrow_topk (m13, mapInArrow) —
+     one matmul per Arrow batch against the probe matrix, scored by one
+     numpy kernel (``_batch_topk``). Each keeps its own batch boundary,
+     which is what the two queries measure. Shuffle-free: per-partition
+     top-k, then the global tail.
+Approximate tiers, recall-checked against tier 1 in tests (never
+value-hashed); their survivors get the exact rerank
+``_rerank_survivors``:
   3. rp_lsh_topk — random-hyperplane LSH: sign-bit sketch → Hamming
-     bucket join → exact cosine only within buckets. Approximate;
-     recall-checked against tier 1/2 in tests (never value-hashed).
+     bucket join → exact cosine only within buckets.
   4. ivf_topk — k-means inverted lists (bounded driver-side training,
-     map-side assignment, nprobe-list search). Approximate;
-     recall-checked like tier 3. Prefer over LSH when embeddings are
-     genuinely clustered (fewer lists probed for the same recall).
+     map-side assignment, nprobe-list search). Prefer over LSH when
+     embeddings are genuinely clustered (fewer lists probed for the
+     same recall).
+  5. pq_topk (operators/pq.py) — product-quantized ADC scan.
 
 Embedding-cosine near-dup pairs (cosine ≥ τ) reuse tier 3's bucketing.
 """
@@ -43,6 +51,62 @@ def _maybe_broadcast(df: DataFrame, n_rows: int, budget: int) -> DataFrame:
     return F.broadcast(df) if n_rows <= budget else df
 
 
+def round6(x: np.ndarray) -> np.ndarray:
+    """Half-AWAY-FROM-ZERO to 6 places, like Catalyst F.round and DuckDB
+    ROUND (np.round is banker's half-to-even and can flip ties)."""
+    return np.sign(x) * np.floor(np.abs(x) * 1e6 + 0.5) / 1e6
+
+
+def unit_rows(m: np.ndarray) -> np.ndarray:
+    """Rows scaled to unit L2 norm; an all-zero row stays zero."""
+    return m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
+
+
+def _ranked(scored: DataFrame, k: int | None, rk: str = "rk") -> DataFrame:
+    """The ranking tail of every exact tier: ``rk`` = row_number over
+    (sim desc, vec_id) per probe; rows with rk <= k kept (all of them
+    when k is None)."""
+    w = Window.partitionBy("probe_id").orderBy(F.desc("sim"), "vec_id")
+    ranked = scored.withColumn(rk, F.row_number().over(w))
+    return ranked if k is None else ranked.filter(F.col(rk) <= k)
+
+
+def probe_projection(probes: DataFrame) -> DataFrame:
+    """(probe_id, probe_emb, probe_nrm): the probe side that
+    cosine_ranking broadcasts. q68 joins this same frame for its
+    negative leg, so that join reuses the broadcast."""
+    return probes.select(
+        F.col("vec_id").alias("probe_id"),
+        F.col("embedding").alias("probe_emb"),
+        norm(F.col("embedding")).alias("probe_nrm"),
+    )
+
+
+def cosine_ranking(
+    emb: DataFrame, probes: DataFrame, k: int | None = None, *, rk: str = "rk"
+) -> DataFrame:
+    """Exact cosine ranking (probe_id, vec_id, sim, rk) of every corpus
+    vector but the probe itself, for each row of ``probes`` (a
+    ``probe_projection``)."""
+    # Norms are materialized per side BELOW the join (projections don't
+    # collapse across a join), so each pair pays ONE interpreted
+    # aggregate-fold (the dot) instead of three — HOFs aren't codegen'd,
+    # the fold is the per-pair cost that dominates at scale.
+    cand = emb.select("vec_id", "embedding", norm(F.col("embedding")).alias("nrm"))
+    # Broadcast the tiny probe side; candidates stream map-side — no
+    # shuffle of the big embedding table, scales linearly with candidate
+    # count.
+    pairs = cand.crossJoin(F.broadcast(probes)).filter(F.col("vec_id") != F.col("probe_id"))
+    sim = dot(F.col("probe_emb"), F.col("embedding")) / (F.col("probe_nrm") * F.col("nrm"))
+    return _ranked(pairs.select("probe_id", "vec_id", F.round(sim, 6).alias("sim")), k, rk)
+
+
+def brute_force_topk(emb: DataFrame, probes: DataFrame, k: int = 5) -> DataFrame:
+    """Exact cosine top-k (probe_id, vec_id, sim): the recall tests'
+    ground truth."""
+    return cosine_ranking(emb, probe_projection(probes), k).drop("rk")
+
+
 def _rerank_survivors(
     emb: DataFrame, pairs: DataFrame, probes: DataFrame, *, k: int, n_probes: int
 ) -> DataFrame:
@@ -66,23 +130,38 @@ def _rerank_survivors(
         norm(F.col("probe_emb")) * norm(F.col("embedding"))
     )
     ranked = scored.select("probe_id", "vec_id", F.round(sim, 6).alias("sim"))
-    w = Window.partitionBy("probe_id").orderBy(F.desc("sim"), "vec_id")
-    return ranked.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k).drop("rk")
+    return _ranked(ranked, k).drop("rk")
 
 
-def brute_force_topk(emb: DataFrame, probes: DataFrame, k: int = 5) -> DataFrame:
-    """Exact cosine top-k, pure Catalyst (see queries/similarity.py)."""
-    cand = emb.select("vec_id", "embedding", norm(F.col("embedding")).alias("nrm"))
-    p = probes.select(
-        F.col("vec_id").alias("probe_id"),
-        F.col("embedding").alias("probe_emb"),
-        norm(F.col("embedding")).alias("probe_nrm"),
-    )
-    pairs = cand.crossJoin(F.broadcast(p)).filter(F.col("vec_id") != F.col("probe_id"))
-    sim = dot(F.col("probe_emb"), F.col("embedding")) / (F.col("probe_nrm") * F.col("nrm"))
-    scored = pairs.select("probe_id", "vec_id", F.round(sim, 6).alias("sim"))
-    w = Window.partitionBy("probe_id").orderBy(F.desc("sim"), "vec_id")
-    return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k).drop("rk")
+def _probe_matrix(probes_pd: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    """(unit probe matrix, probe ids) from a (vec_id, embedding) frame."""
+    pm = np.array(probes_pd["embedding"].tolist(), dtype=np.float64)
+    pm /= np.linalg.norm(pm, axis=1, keepdims=True)
+    return pm, probes_pd["vec_id"].to_numpy()
+
+
+def _batch_topk(
+    ids: np.ndarray, cm: np.ndarray, pm: np.ndarray, probe_ids: np.ndarray, k: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The per-batch kernel of numpy_topk and arrow_topk: normalize the
+    candidate rows ``cm`` in place, one matmul against the unit probe
+    matrix, then each probe's top ``k`` as (probe_id, vec_id, sim)
+    columns."""
+    cm /= np.linalg.norm(cm, axis=1, keepdims=True)
+    sims = cm @ pm.T  # (batch, n_probes)
+    out_pid, out_vid, out_sim = [], [], []
+    for j, pid in enumerate(probe_ids):
+        mask = ids != pid
+        # rank by (rounded sim desc, vec_id asc) — the same total order
+        # the Catalyst/oracle path uses, so per-partition pruning can
+        # never drop a global winner on a rounding tie
+        r = round6(sims[:, j][mask])
+        cand_ids = ids[mask]
+        order = np.lexsort((cand_ids, -r))[: min(k, len(r))]
+        out_pid.append(np.full(len(order), pid, dtype=np.int64))
+        out_vid.append(cand_ids[order])
+        out_sim.append(r[order])
+    return np.concatenate(out_pid), np.concatenate(out_vid), np.concatenate(out_sim)
 
 
 def numpy_topk(emb: DataFrame, probes_pd: pd.DataFrame, k: int = 5) -> DataFrame:
@@ -93,59 +172,26 @@ def numpy_topk(emb: DataFrame, probes_pd: pd.DataFrame, k: int = 5) -> DataFrame
     (same effect as a broadcast variable at this size); candidates are
     scanned once, map-side; per-partition top-k keeps the shuffle to
     k rows per probe per partition."""
-    pm = np.array(probes_pd["embedding"].tolist(), dtype=np.float64)
-    pm /= np.linalg.norm(pm, axis=1, keepdims=True)
-    probe_ids = probes_pd["vec_id"].to_numpy()
+    pm, probe_ids = _probe_matrix(probes_pd)
 
     out_schema = "probe_id long, vec_id long, sim double"
 
     def score(batches):
         for pdf in batches:
-            ids = pdf["vec_id"].to_numpy()
             cm = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            cm /= np.linalg.norm(cm, axis=1, keepdims=True)
-            sims = cm @ pm.T  # (batch, n_probes)
-            for j, pid in enumerate(probe_ids):
-                mask = ids != pid
-                # rank by (rounded sim desc, vec_id asc) — the same total
-                # order the Catalyst/oracle path uses, so per-partition
-                # pruning can never drop a global winner on a rounding tie.
-                # Half-AWAY-FROM-ZERO like Catalyst F.round / DuckDB ROUND
-                # (np.round is banker's half-to-even and can flip ties).
-                s = sims[:, j][mask]
-                r = np.sign(s) * np.floor(np.abs(s) * 1e6 + 0.5) / 1e6
-                cand_ids = ids[mask]
-                order = np.lexsort((cand_ids, -r))[: min(k, len(r))]
-                yield pd.DataFrame(
-                    {"probe_id": pid, "vec_id": cand_ids[order], "sim": r[order]}
-                )
+            pid, vid, sim = _batch_topk(pdf["vec_id"].to_numpy(), cm, pm, probe_ids, k)
+            yield pd.DataFrame({"probe_id": pid, "vec_id": vid, "sim": sim})
 
     partial = emb.select("vec_id", "embedding").mapInPandas(score, out_schema)
-    w = Window.partitionBy("probe_id").orderBy(F.desc("sim"), "vec_id")
-    return partial.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k).drop("rk")
+    return _ranked(partial, k).drop("rk")
 
 
 def rp_sketch(emb: DataFrame, *, bits: int = 8, dim: int = 64, seed: int = 42) -> DataFrame:
-    """Random-hyperplane sign sketch as a compact long, via ONE
-    vectorized pandas UDF (matmul per Arrow batch, map-side, no
-    shuffle). The plane matrix is a deterministic seeded RNG draw
-    closed over the UDF — identical on every executor. (A Catalyst
-    zip_with version was tried first: bits×dim literal nodes bloat the
-    plan and the interpreted fold costs more than the Arrow hop.)"""
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((bits, dim))
-    weights = (2 ** np.arange(bits)).astype(np.int64)
-
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql import types as T
-
-    @pandas_udf(T.LongType())
-    def sketch_udf(embedding: pd.Series) -> pd.Series:
-        m = np.array(embedding.tolist(), dtype=np.float64)
-        signs = (m @ planes.T) > 0
-        return pd.Series(signs @ weights)
-
-    return emb.withColumn("sketch", sketch_udf(F.col("embedding")))
+    """One random-hyperplane sign sketch as a compact long column
+    ``sketch``: rp_multi_sketch with a single table."""
+    return rp_multi_sketch(
+        emb, tables=1, bits=bits, dim=dim, seed=seed, out_col="sketch"
+    ).withColumn("sketch", F.col("sketch")[0])
 
 
 def rp_multi_sketch(
@@ -156,7 +202,11 @@ def rp_multi_sketch(
     (tables·bits × dim) matmul per Arrow batch, returned as
     `array<long>` of length `tables`. One corpus scan regardless of
     table count — the round-1 per-table loop cost 16 scans + 16 UDF
-    launches for the same information."""
+    launches for the same information. The plane matrix is a
+    deterministic seeded RNG draw closed over the UDF — identical on
+    every executor. (A Catalyst zip_with version was tried first:
+    bits×dim literal nodes bloat the plan and the interpreted fold
+    costs more than the Arrow hop.)"""
     rng = np.random.default_rng(seed)
     planes = rng.standard_normal((tables * bits, dim))
     weights = (2 ** np.arange(bits)).astype(np.int64)
@@ -247,24 +297,29 @@ def cosine_near_dup_pairs(
 # --------------------------------------------------------------------------
 # IVF (inverted-file) ANN — the k-means-bucketed tier
 # --------------------------------------------------------------------------
-def ivf_train_centroids(
-    emb: DataFrame, *, n_centroids: int = 16, dim: int = 64,
-    sample_target: int = 4096, iters: int = 10, seed: int = 42,
-) -> np.ndarray:
-    """Driver-side Lloyd's k-means on a deterministic hash-sample of the
-    corpus. The sample is bounded (≤ ~sample_target rows collected)
-    regardless of corpus size — training cost does not grow with the
-    data; only the assignment pass does, and that is one matmul per
-    Arrow batch. Deterministic: hash-based sampling + fixed seed."""
-    n = emb.count()
-    step = max(1, n // sample_target)
+def hash_sample_unit(emb: DataFrame, sample_target: int) -> np.ndarray:
+    """Unit rows of a deterministic hash-sample of about
+    ``sample_target`` embeddings — the training set of both IVF
+    centroids and PQ codebooks. The sample is bounded regardless of
+    corpus size, so training cost does not grow with the data; only the
+    map-side assignment pass does. xxhash64 on vec_id: the same sample
+    on every run."""
+    step = max(1, emb.count() // sample_target)
     sample_pd = (
         emb.filter(F.pmod(F.xxhash64(F.col("vec_id")), F.lit(step)) == 0)
         .select("embedding")
         .toPandas()
     )
-    x = np.array(sample_pd["embedding"].tolist(), dtype=np.float64)
-    x = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
+    return unit_rows(np.array(sample_pd["embedding"].tolist(), dtype=np.float64))
+
+
+def ivf_train_centroids(
+    emb: DataFrame, *, n_centroids: int = 16, dim: int = 64,
+    sample_target: int = 4096, iters: int = 10, seed: int = 42,
+) -> np.ndarray:
+    """Driver-side Lloyd's k-means (cosine) on ``hash_sample_unit``;
+    deterministic: hash-based sampling + fixed seed."""
+    x = hash_sample_unit(emb, sample_target)
     rng = np.random.default_rng(seed)
     cent = x[rng.choice(len(x), size=min(n_centroids, len(x)), replace=False)]
     for _ in range(iters):
@@ -286,8 +341,7 @@ def _assign_udf(centroids: np.ndarray, nprobe: int):
 
     @pandas_udf(T.ArrayType(T.IntegerType()))
     def assign(embedding: pd.Series) -> pd.Series:
-        m = np.array(embedding.tolist(), dtype=np.float64)
-        m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
+        m = unit_rows(np.array(embedding.tolist(), dtype=np.float64))
         sims = m @ centroids.T
         top = np.argsort(-sims, axis=1)[:, :nprobe].astype("int32")
         return pd.Series(list(top))
@@ -344,13 +398,11 @@ def arrow_topk(emb: DataFrame, probes_pd: pd.DataFrame, k: int = 5) -> DataFrame
     the Arrow ListArray's FLAT values buffer (one reshape, no
     per-row list materialization and no Arrow→pandas conversion) — the
     cheapest Python-side path Spark offers for dense vector math. Same
-    total order and rounding contract as numpy_topk/q13, so all three
-    share one oracle."""
+    kernel and tail as numpy_topk, so q13, m8 and m13 share one
+    oracle."""
     import pyarrow as pa
 
-    pm = np.array(probes_pd["embedding"].tolist(), dtype=np.float64)
-    pm /= np.linalg.norm(pm, axis=1, keepdims=True)
-    probe_ids = probes_pd["vec_id"].to_numpy()
+    pm, probe_ids = _probe_matrix(probes_pd)
 
     out_schema = "probe_id long, vec_id long, sim double"
 
@@ -361,28 +413,15 @@ def arrow_topk(emb: DataFrame, probes_pd: pd.DataFrame, k: int = 5) -> DataFrame
             if isinstance(col, pa.ChunkedArray):  # pragma: no cover
                 col = col.combine_chunks()
             flat = col.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
-            cm = flat.reshape(len(ids), -1)
-            cm /= np.linalg.norm(cm, axis=1, keepdims=True)
-            sims = cm @ pm.T
-            out_pid, out_vid, out_sim = [], [], []
-            for j, pid in enumerate(probe_ids):
-                mask = ids != pid
-                s = sims[:, j][mask]
-                r = np.sign(s) * np.floor(np.abs(s) * 1e6 + 0.5) / 1e6
-                cand_ids = ids[mask]
-                order = np.lexsort((cand_ids, -r))[: min(k, len(r))]
-                out_pid.append(np.full(len(order), pid, dtype=np.int64))
-                out_vid.append(cand_ids[order])
-                out_sim.append(r[order])
+            pid, vid, sim = _batch_topk(ids, flat.reshape(len(ids), -1), pm, probe_ids, k)
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array(np.concatenate(out_pid), type=pa.int64()),
-                    pa.array(np.concatenate(out_vid), type=pa.int64()),
-                    pa.array(np.concatenate(out_sim), type=pa.float64()),
+                    pa.array(pid, type=pa.int64()),
+                    pa.array(vid, type=pa.int64()),
+                    pa.array(sim, type=pa.float64()),
                 ],
                 names=["probe_id", "vec_id", "sim"],
             )
 
     partial = emb.select("vec_id", "embedding").mapInArrow(score, out_schema)
-    w = Window.partitionBy("probe_id").orderBy(F.desc("sim"), "vec_id")
-    return partial.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k).drop("rk")
+    return _ranked(partial, k).drop("rk")

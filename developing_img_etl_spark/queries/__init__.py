@@ -65,10 +65,12 @@ _MODULES = (
 # Driver-coverage rotation (VERDICT r4 #3): the round driver checks
 # only the FIRST 50 entries of queries() in registration order. The
 # list below front-loads what changed since the last CORRECTNESS
-# artifact (r12), so the next round certifies it, and fills the rest
-# of the 50 with the stalest certifications. Names not listed keep
-# module order after these. Rotate each round: drop names once a
-# CORRECTNESS artifact shows them green on their current code.
+# artifact (r12), so the next round certifies it, then lists the
+# stalest certifications (past the 50th name once the changed set
+# outgrows the sample; they lead again as it is rotated out). Names
+# not listed keep module order after these. Rotate each round: drop
+# names once a CORRECTNESS artifact shows them green on their current
+# code.
 # tests/test_oracle_queries.py checks every name is declared (or
 # gated) and listed once.
 _DRIVER_PRIORITY = (
@@ -123,6 +125,31 @@ _DRIVER_PRIORITY = (
     "q153_repetition_signals",
     "q154_split_leakage_audit",
     "q155_jaccard_threshold_sweep",
+    # the embedding queries over the shared exact-cosine, lexical and
+    # integer-vector bodies, and the queries whose sort pin moved. The
+    # first eight (names 43-50) are the ones whose oracle SQL or plan
+    # changed: q68's plan renames one alias; m8 and m13 reuse q13's
+    # oracle, and q126 and q131 changed only oracle whitespace. The rest
+    # keep their plans and oracles.
+    "q68_contrastive_triplets",
+    "q93_rrf_hybrid_retrieval",
+    "q110_retrieval_eval",
+    "q150_rbo_rankings",
+    "q13_brute_force_topk",
+    "q121_pq_adc_topk",
+    "q124_ivf_probe_topk",
+    "q96_semdedup",
+    "m8_numpy_topk",
+    "m13_arrow_topk",
+    "q126_matryoshka_rank_audit",
+    "q131_embedding_covariance",
+    "q31_cosine_near_dups",
+    "m6_ann_lsh_topk",
+    "m9_ann_ivf_topk",
+    "m15_ann_pq_topk",
+    "q24_udaf_grouped_agg",
+    "q25_grouped_map",
+    "m24_mp3_metadata",
     # stalest certifications (last green artifact r6)
     "q36_column_profile",
     "q37_merge_upsert",

@@ -8,9 +8,10 @@ lowercase, split on ``\\s+``, distinct word 3-grams joined by one
 space — and q122, q152 and st15 on one MinHash-LSH generator (Broder
 1997). Each query keeps its own candidate and verdict step; everything
 below is shared. Queries whose CTEs read another table or group by
-another key (the similarity trio over ``embeddings``, q97 by ``lang``,
-the corpus query over ``cur``, st15 over its doubled ``d0``) keep their
-own copy of the shingle CTEs.
+another key (q97 by ``lang``, the corpus query over ``cur``, st15 over
+its doubled ``d0``) keep their own copy of the shingle CTEs; the
+similarity trio (q93, q110, q150) filters ``sh`` to the embedding
+universe in ``similarity.sql_lexical_ranks``.
 
 Spark side:
 

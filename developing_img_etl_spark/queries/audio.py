@@ -28,6 +28,7 @@ from pyspark.sql.functions import pandas_udf
 
 from ..catalog import load
 from ..operators.dedup import _widen
+from ._pin import pin_for_sort
 
 
 @pandas_udf(T.BinaryType())
@@ -124,11 +125,9 @@ def _mp3_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def m24_mp3_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .multimodal import _pin_for_sort
-
     audio = _mp3_corpus(spark, sf_dir)
     meta = audio.select("audio_id", _mp3_meta(F.col("content")).alias("m"))
-    return _pin_for_sort(
+    return pin_for_sort(
         meta.select(
             F.col("audio_id").alias("p_partkey"),
             F.when(F.col("m.sample_rate").isNull(), F.lit("unreadable"))

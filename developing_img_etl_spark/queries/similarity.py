@@ -1,8 +1,21 @@
 """Q13 family — similarity search over embeddings (SURVEY.md §2.8 M5).
 
 Brute-force cosine top-k is the oracle-checkable baseline; the LSH /
-IVF scale paths live in operators/similarity.py and are recall-checked
-against this baseline (they are approximate — no value-hash oracle).
+IVF / PQ scale paths live in operators/ and are recall-checked against
+this baseline (they are approximate — no value-hash oracle).
+
+Each repeated decision has one body per engine, the DuckDB fragment
+next to its Spark twin:
+
+- exact cosine ranking: ``SIM.cosine_ranking`` ↔ ``sql_cosine_ranks``
+  (q13, q68, and the dense leg of q93/q110/q150);
+- shingle-overlap ranking: ``_lexical_ranking`` ↔ ``sql_lexical_ranks``
+  (the sparse leg of q93/q110/q150);
+- the planted near-dup corpus and the strip-chunked Gram rows (q31,
+  q96);
+- the integer vector kernel ``e6``/``sq_l2`` (functions/vectors.py;
+  q119, q121, q124, q126, q131) and the floor-mean codebook (q121,
+  q124).
 
 Cross-engine FP note: cosine values are computed as double folds on
 both sides and rounded to 6dp BEFORE ranking, so a sub-ulp accumulation
@@ -11,62 +24,63 @@ difference can neither flip a rank nor the output value.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
-from ..functions.vectors import dot, norm
+from ..functions.vectors import dot, e6, norm, sq_l2, sql_e6, sql_sq_l2
+from ..operators import similarity as SIM
 from ..session import local_frame
+from ._pin import pin_for_sort
+from ._shingle import shingle_index, sql_shingle_index
+from .classify import md5_prefix_int, sql_md5_prefix_int
 
 N_PROBES = 10
 TOP_K = 5
 
 
+def _probes(emb: DataFrame) -> DataFrame:
+    """The probe projection of vec_id < N_PROBES."""
+    return SIM.probe_projection(emb.filter(F.col("vec_id") < N_PROBES))
+
+
+def sql_cosine_ranks(limit: int | None = None) -> str:
+    """DuckDB twin of ``SIM.cosine_ranking`` over the N_PROBES probes:
+    the CTEs ``p(probe_id, pe)`` and ``vecr(probe_id, doc_id, sim,
+    vec_rk)``, keeping vec_rk <= limit (every candidate when limit is
+    None)."""
+    keep = "" if limit is None else f"\n  QUALIFY vec_rk <= {limit}"
+    return f"""p AS (
+  SELECT vec_id AS probe_id, CAST(embedding AS DOUBLE[]) AS pe
+  FROM embeddings WHERE vec_id < {N_PROBES}
+),
+vecr AS (
+  SELECT probe_id, doc_id, sim,
+         row_number() OVER (PARTITION BY probe_id ORDER BY sim DESC, doc_id) AS vec_rk
+  FROM (
+    SELECT p.probe_id, e.vec_id AS doc_id,
+           round(list_cosine_similarity(p.pe, CAST(e.embedding AS DOUBLE[])), 6) AS sim
+    FROM embeddings e CROSS JOIN p
+    WHERE e.vec_id != p.probe_id
+  ){keep}
+)"""
+
+
 def q13_brute_force_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
-    # Norms are materialized per side BELOW the join (projections don't
-    # collapse across a join), so each pair pays ONE interpreted
-    # aggregate-fold (the dot) instead of three — HOFs aren't codegen'd,
-    # the fold is the per-pair cost that dominates at scale.
-    cand = emb.select("vec_id", "embedding", norm(F.col("embedding")).alias("nrm"))
-    probes = cand.filter(F.col("vec_id") < N_PROBES).select(
-        F.col("vec_id").alias("probe_id"),
-        F.col("embedding").alias("probe_emb"),
-        F.col("nrm").alias("probe_nrm"),
-    )
-    # Broadcast the tiny probe side; candidates stream map-side — no shuffle
-    # of the big embedding table, scales linearly with candidate count.
-    pairs = cand.crossJoin(F.broadcast(probes)).filter(F.col("vec_id") != F.col("probe_id"))
-    sim = dot(F.col("probe_emb"), F.col("embedding")) / (F.col("probe_nrm") * F.col("nrm"))
-    scored = pairs.select("probe_id", "vec_id", F.round(sim, 6).alias("sim"))
-    w = Window.partitionBy("probe_id").orderBy(F.desc("sim"), "vec_id")
     return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
+        SIM.cosine_ranking(emb, _probes(emb), TOP_K)
         .select("probe_id", "vec_id", "sim", F.col("rk").cast("long").alias("rk"))
         .orderBy("probe_id", "rk")
     )
 
 
 Q13_SQL = f"""
-WITH p AS (
-  SELECT vec_id AS probe_id, CAST(embedding AS DOUBLE[]) AS pe
-  FROM embeddings WHERE vec_id < {N_PROBES}
-),
-s AS (
-  SELECT p.probe_id, e.vec_id,
-         round(list_cosine_similarity(p.pe, CAST(e.embedding AS DOUBLE[])), 6) AS sim
-  FROM embeddings e CROSS JOIN p
-  WHERE e.vec_id != p.probe_id
-),
-ranked AS (
-  SELECT probe_id, vec_id, sim,
-         row_number() OVER (PARTITION BY probe_id ORDER BY sim DESC, vec_id) AS rk
-  FROM s
-)
-SELECT probe_id, vec_id, sim, CAST(rk AS BIGINT) AS rk
-FROM ranked
-WHERE rk <= {TOP_K}
+WITH {sql_cosine_ranks(TOP_K)}
+SELECT probe_id, doc_id AS vec_id, sim, CAST(vec_rk AS BIGINT) AS rk
+FROM vecr
 ORDER BY probe_id, rk
 """
 
@@ -95,65 +109,79 @@ PLANT_EVERY = 10
 PLANT_OFFSET = 1_000_000
 
 
-def q31_cosine_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-    import pandas as pd
-
-    emb = load(spark, sf_dir, "embeddings")
+def _planted_corpus(emb: DataFrame) -> DataFrame:
+    """The embeddings plus a copy of every PLANT_EVERY-th vector under
+    vec_id + PLANT_OFFSET (q31's and q96's corpus)."""
     planted = emb.filter(F.col("vec_id") % PLANT_EVERY == 0).withColumn(
         "vec_id", F.col("vec_id") + F.lit(PLANT_OFFSET)
     )
-    corpus = emb.unionByName(planted).select("vec_id", "embedding", "label")
-
-    def block(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("vec_id", ignore_index=True)
-        ids = pdf["vec_id"].to_numpy()
-        x = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-        n = np.linalg.norm(x, axis=1)
-        # STRIP-CHUNKED matmul: the similarity matrix is computed in
-        # (chunk x n) strips, never materialized whole — a label block
-        # of 22k vectors at sf10 would otherwise be a 3.9 GB dense
-        # matrix PER TASK (measured: the full x @ x.T OOM-killed the
-        # 48g JVM at sf10). Work stays O(n^2) — this is the declared
-        # exact brute-force baseline; m6/m9/q96 are the sub-quadratic
-        # tiers — but memory is bounded by the strip.
-        chunk = 2048
-        cols: dict[str, list] = {"id_a": [], "id_b": [], "cosine": []}
-        for lo in range(0, len(ids), chunk):
-            hi = min(lo + chunk, len(ids))
-            s = (x[lo:hi] @ x.T) / np.outer(n[lo:hi], n)
-            # half-away-from-zero 6dp, matching F.round / DuckDB ROUND
-            # (np.round is banker's and can flip ties)
-            r = np.sign(s) * np.floor(np.abs(s) * 1e6 + 0.5) / 1e6
-            for k in range(hi - lo):
-                i = lo + k
-                row = r[k, i + 1 :]
-                sel = np.nonzero(row >= NEAR_DUP_THRESHOLD)[0]
-                if sel.size:
-                    cols["id_a"].extend([ids[i]] * sel.size)
-                    cols["id_b"].extend(ids[i + 1 + sel])
-                    cols["cosine"].extend(row[sel])
-        return pd.DataFrame(cols, columns=["id_a", "id_b", "cosine"]).astype(
-            {"id_a": "int64", "id_b": "int64", "cosine": "float64"}
-        )
-
-    return (
-        # pin before the global sort (r12): the range sampler would
-        # otherwise re-run the O(n^2) per-label matmul a second time
-        corpus.groupBy("label")
-        .applyInPandas(block, "id_a long, id_b long, cosine double")
-        .localCheckpoint(eager=False)
-        .orderBy("id_a", "id_b")
-    )
+    return emb.unionByName(planted)
 
 
-Q31_SQL = f"""
-WITH corpus AS (
+_SQL_PLANTED_CORPUS = f"""corpus AS (
   SELECT vec_id, embedding, label FROM embeddings
   UNION ALL
   SELECT vec_id + {PLANT_OFFSET} AS vec_id, embedding, label
   FROM embeddings WHERE vec_id % {PLANT_EVERY} = 0
-),
+)"""
+
+
+_GRAM_STRIP = 2048
+
+
+def _upper_cosine_rows(x: np.ndarray):
+    """(i, row) per vector i of ``x``: row[j] is the cosine of i and
+    i + 1 + j, rounded half away from zero to 6 places.
+
+    STRIP-CHUNKED matmul: the similarity matrix is computed in
+    (_GRAM_STRIP x n) strips, never materialized whole — a block of 22k
+    vectors at sf10 would otherwise be a 3.9 GB dense matrix PER TASK
+    (measured: the full x @ x.T OOM-killed the 48g JVM at sf10, and so
+    did the full matrix plus triu_indices' two n²/2 int64 arrays). Work
+    stays O(n^2) — this is the declared exact brute-force baseline;
+    m6/m9/q96 are the sub-quadratic tiers — but memory is bounded by
+    the strip."""
+    n = np.linalg.norm(x, axis=1)
+    for lo in range(0, len(x), _GRAM_STRIP):
+        hi = min(lo + _GRAM_STRIP, len(x))
+        r = SIM.round6((x[lo:hi] @ x.T) / np.outer(n[lo:hi], n))
+        for k in range(hi - lo):
+            yield lo + k, r[k, lo + k + 1 :]
+
+
+def _sorted_block(pdf: pd.DataFrame) -> tuple[pd.DataFrame, np.ndarray, np.ndarray]:
+    """(pdf sorted by vec_id, its ids, its embedding matrix)."""
+    pdf = pdf.sort_values("vec_id", ignore_index=True)
+    return pdf, pdf["vec_id"].to_numpy(), np.array(pdf["embedding"].tolist(), dtype=np.float64)
+
+
+def q31_cosine_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
+    corpus = _planted_corpus(load(spark, sf_dir, "embeddings")).select(
+        "vec_id", "embedding", "label"
+    )
+
+    def block(pdf: pd.DataFrame) -> pd.DataFrame:
+        _, ids, x = _sorted_block(pdf)
+        cols: dict[str, list] = {"id_a": [], "id_b": [], "cosine": []}
+        for i, row in _upper_cosine_rows(x):
+            sel = np.nonzero(row >= NEAR_DUP_THRESHOLD)[0]
+            if sel.size:
+                cols["id_a"].extend([ids[i]] * sel.size)
+                cols["id_b"].extend(ids[i + 1 + sel])
+                cols["cosine"].extend(row[sel])
+        return pd.DataFrame(cols, columns=["id_a", "id_b", "cosine"]).astype(
+            {"id_a": "int64", "id_b": "int64", "cosine": "float64"}
+        )
+
+    # pinned before the global sort: the range sampler would otherwise
+    # re-run the O(n^2) per-label matmul a second time
+    return pin_for_sort(
+        corpus.groupBy("label").applyInPandas(block, "id_a long, id_b long, cosine double")
+    ).orderBy("id_a", "id_b")
+
+
+Q31_SQL = f"""
+WITH {_SQL_PLANTED_CORPUS},
 scored AS (
   SELECT a.vec_id AS id_a, b.vec_id AS id_b,
          round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
@@ -287,34 +315,15 @@ _TRIPLET_SEED = 13
 
 
 def q68_contrastive_triplets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     emb = load(spark, sf_dir, "embeddings")
-    # norms materialized per side BELOW the cross join (q13 discipline:
-    # HOF folds aren't codegen'd — each pair must pay ONE fold, the dot,
-    # not three)
-    base = emb.select("vec_id", "embedding", norm(F.col("embedding")).alias("nrm"))
-    anchors = base.filter(F.col("vec_id") < N_PROBES).select(
-        F.col("vec_id").alias("anchor_id"),
-        F.col("embedding").alias("ae"),
-        F.col("nrm").alias("anrm"),
-    )
-    # positive: exact top-1 by cosine (q13 arithmetic)
-    scored = base.crossJoin(F.broadcast(anchors)).filter(
-        F.col("vec_id") != F.col("anchor_id")
-    )
-    sim = F.round(
-        dot(F.col("ae"), F.col("embedding")) / (F.col("anrm") * F.col("nrm")), 6
-    )
-    w = Window.partitionBy("anchor_id").orderBy(F.desc("sim"), "vec_id")
+    anchors = _probes(emb)
+    # positive: exact top-1 by cosine (q13's ranking)
     pos = (
-        scored.select("anchor_id", "vec_id", sim.alias("sim"))
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select("anchor_id", F.col("vec_id").alias("pos_id"), F.col("sim").alias("pos_sim"))
+        SIM.cosine_ranking(emb, anchors, 1)
+        .select("probe_id", F.col("vec_id").alias("pos_id"), F.col("sim").alias("pos_sim"))
     )
     n_df = emb.agg(F.count(F.lit(1)).alias("__n"))
-    cand = F.pmod(F.col("anchor_id") * _TRIPLET_K + _TRIPLET_SEED, F.col("__n"))
+    cand = F.pmod(F.col("probe_id") * _TRIPLET_K + _TRIPLET_SEED, F.col("__n"))
     picked = (
         pos.crossJoin(F.broadcast(n_df))
         .withColumn("c0", cand)
@@ -324,30 +333,32 @@ def q68_contrastive_triplets(spark: SparkSession, sf_dir: str) -> DataFrame:
     picked = picked.withColumn(
         "neg_id",
         F.when(
-            (F.col("c0") != F.col("anchor_id")) & (F.col("c0") != F.col("pos_id")),
+            (F.col("c0") != F.col("probe_id")) & (F.col("c0") != F.col("pos_id")),
             F.col("c0"),
         )
         .when(
-            (F.col("c1") != F.col("anchor_id")) & (F.col("c1") != F.col("pos_id")),
+            (F.col("c1") != F.col("probe_id")) & (F.col("c1") != F.col("pos_id")),
             F.col("c1"),
         )
         .otherwise(F.col("c2")),
-    ).select("anchor_id", "pos_id", "pos_sim", "neg_id")
-    neg_emb = base.select(
+    ).select("probe_id", "pos_id", "pos_sim", "neg_id")
+    # norms materialized BELOW the join (q13 discipline: each pair pays
+    # ONE fold, the dot, not three)
+    neg_emb = emb.select(
         F.col("vec_id").alias("neg_id"),
         F.col("embedding").alias("ne"),
-        F.col("nrm").alias("nnrm"),
+        norm(F.col("embedding")).alias("nnrm"),
     )
     out = (
         picked.join(neg_emb, "neg_id")
-        .join(F.broadcast(anchors), "anchor_id")
+        .join(F.broadcast(anchors), "probe_id")
         .select(
-            "anchor_id",
+            F.col("probe_id").alias("anchor_id"),
             "pos_id",
             "pos_sim",
             "neg_id",
             F.round(
-                dot(F.col("ae"), F.col("ne")) / (F.col("anrm") * F.col("nnrm")), 6
+                dot(F.col("probe_emb"), F.col("ne")) / (F.col("probe_nrm") * F.col("nnrm")), 6
             ).alias("neg_sim"),
         )
     )
@@ -358,27 +369,13 @@ def q68_contrastive_triplets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 Q68_SQL = f"""
 WITH n AS (SELECT COUNT(*) AS nn FROM embeddings),
-a AS (
-  SELECT vec_id AS anchor_id, CAST(embedding AS DOUBLE[]) AS ae
-  FROM embeddings WHERE vec_id < {N_PROBES}
-),
-s AS (
-  SELECT a.anchor_id, e.vec_id,
-         round(list_cosine_similarity(a.ae, CAST(e.embedding AS DOUBLE[])), 6) AS sim
-  FROM embeddings e CROSS JOIN a
-  WHERE e.vec_id != a.anchor_id
-),
-pos AS (
-  SELECT anchor_id, vec_id AS pos_id, sim AS pos_sim
-  FROM (SELECT *, row_number() OVER (PARTITION BY anchor_id ORDER BY sim DESC, vec_id) AS rk FROM s)
-  WHERE rk = 1
-),
+{sql_cosine_ranks(1)},
 picked AS (
-  SELECT anchor_id, pos_id, pos_sim,
-         (anchor_id * {_TRIPLET_K} + {_TRIPLET_SEED}) % nn AS c0,
-         ((anchor_id * {_TRIPLET_K} + {_TRIPLET_SEED}) % nn + 1) % nn AS c1,
-         ((anchor_id * {_TRIPLET_K} + {_TRIPLET_SEED}) % nn + 2) % nn AS c2
-  FROM pos CROSS JOIN n
+  SELECT probe_id AS anchor_id, doc_id AS pos_id, sim AS pos_sim,
+         (probe_id * {_TRIPLET_K} + {_TRIPLET_SEED}) % nn AS c0,
+         ((probe_id * {_TRIPLET_K} + {_TRIPLET_SEED}) % nn + 1) % nn AS c1,
+         ((probe_id * {_TRIPLET_K} + {_TRIPLET_SEED}) % nn + 2) % nn AS c2
+  FROM vecr CROSS JOIN n
 ),
 trip AS (
   SELECT anchor_id, pos_id, pos_sim,
@@ -386,14 +383,18 @@ trip AS (
               WHEN c1 <> anchor_id AND c1 <> pos_id THEN c1
               ELSE c2 END AS neg_id
   FROM picked
+),
+neg AS (
+  SELECT t.*,
+         round(list_cosine_similarity(p.pe, CAST(e.embedding AS DOUBLE[])), 6) AS neg_sim
+  FROM trip t
+  JOIN embeddings e ON e.vec_id = t.neg_id
+  JOIN p ON p.probe_id = t.anchor_id
 )
-SELECT t.anchor_id, t.pos_id, t.pos_sim, t.neg_id,
-       round(list_cosine_similarity(a.ae, CAST(e.embedding AS DOUBLE[])), 6) AS neg_sim,
-       round(t.pos_sim - round(list_cosine_similarity(a.ae, CAST(e.embedding AS DOUBLE[])), 6), 6) AS margin
-FROM trip t
-JOIN embeddings e ON e.vec_id = t.neg_id
-JOIN a ON a.anchor_id = t.anchor_id
-ORDER BY t.anchor_id
+SELECT anchor_id, pos_id, pos_sim, neg_id, neg_sim,
+       round(pos_sim - neg_sim, 6) AS margin
+FROM neg
+ORDER BY anchor_id
 """
 
 QUERIES["q68_contrastive_triplets"] = q68_contrastive_triplets
@@ -420,50 +421,61 @@ _RRF_K = 60
 _RRF_TOP = 5
 
 
-
-def _vector_ranking(emb: DataFrame) -> DataFrame:
+def _vector_ranking(emb: DataFrame, k: int | None = None) -> DataFrame:
     """Exact-cosine ranking of every candidate per probe — the dense
-    leg shared by q93 (RRF fusion) and q110 (evaluation ground truth):
-    (probe_id, doc_id, vec_rk). q13's broadcast-probe discipline."""
-    cand = emb.select("vec_id", "embedding", norm(F.col("embedding")).alias("nrm"))
-    probes = cand.filter(F.col("vec_id") < N_PROBES).select(
-        F.col("vec_id").alias("probe_id"),
-        F.col("embedding").alias("probe_emb"),
-        F.col("nrm").alias("probe_nrm"),
-    )
-    sim = dot(F.col("probe_emb"), F.col("embedding")) / (
-        F.col("probe_nrm") * F.col("nrm")
-    )
-    w_vec = Window.partitionBy("probe_id").orderBy(F.desc("sim"), "vec_id")
-    return (
-        cand.crossJoin(F.broadcast(probes))
-        .filter(F.col("vec_id") != F.col("probe_id"))
-        .select("probe_id", "vec_id", F.round(sim, 6).alias("sim"))
-        .withColumn("vec_rk", F.row_number().over(w_vec))
-        .select("probe_id", F.col("vec_id").alias("doc_id"), "vec_rk")
+    leg of q93 (RRF fusion), q110 (evaluation ground truth) and q150
+    (RBO): (probe_id, doc_id, vec_rk), vec_rk <= k when k is given."""
+    return SIM.cosine_ranking(emb, _probes(emb), k, rk="vec_rk").select(
+        "probe_id", F.col("vec_id").alias("doc_id"), "vec_rk"
     )
 
 
-def _lexical_ranking(spark: SparkSession, sf_dir: str, emb: DataFrame) -> DataFrame:
-    """Shingle-overlap ranking per probe (the sparse leg of q93/q110):
-    (probe_id, doc_id, lex_rk), restricted to the embedding universe,
-    riding the shared persisted shingle index."""
-    from ._shingle import shingle_index
-
+def _lexical_ranking(
+    spark: SparkSession, sf_dir: str, emb: DataFrame, k: int | None = None
+) -> DataFrame:
+    """Shingle-overlap ranking per probe (the sparse leg of q93/q110/
+    q150): (probe_id, doc_id, lex_rk) by (shared shingles desc, doc_id),
+    restricted to the embedding universe, riding the shared persisted
+    shingle index; lex_rk <= k when k is given."""
     ids = emb.select(F.col("vec_id").alias("doc_id"))
     sh = shingle_index(spark, sf_dir).join(F.broadcast(ids), "doc_id", "leftsemi")
     a = sh.filter(F.col("doc_id") < N_PROBES).select(
         F.col("doc_id").alias("probe_id"), "s"
     )
     w_lex = Window.partitionBy("probe_id").orderBy(F.desc("n_shared"), "doc_id")
-    return (
+    ranked = (
         a.join(sh.select("doc_id", "s"), "s")
         .filter(F.col("doc_id") != F.col("probe_id"))
         .groupBy("probe_id", "doc_id")
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .withColumn("lex_rk", F.row_number().over(w_lex))
-        .select("probe_id", "doc_id", "lex_rk")
     )
+    if k is not None:
+        ranked = ranked.filter(F.col("lex_rk") <= k)
+    return ranked.select("probe_id", "doc_id", "lex_rk")
+
+
+def sql_lexical_ranks(limit: int | None = None) -> str:
+    """DuckDB twin of ``_lexical_ranking``: ``sql_shingle_index()``,
+    ``inv(doc_id, shingle)`` over the embedding universe and
+    ``lexr(probe_id, doc_id, lex_rk)``, keeping lex_rk <= limit (every
+    candidate when limit is None)."""
+    keep = "" if limit is None else f"\n  QUALIFY lex_rk <= {limit}"
+    return f"""{sql_shingle_index()},
+inv AS (
+  SELECT doc_id, UNNEST(s) AS shingle FROM sh
+  WHERE doc_id IN (SELECT vec_id FROM embeddings)
+),
+lexr AS (
+  SELECT probe_id, doc_id,
+         row_number() OVER (PARTITION BY probe_id ORDER BY n_shared DESC, doc_id) AS lex_rk
+  FROM (
+    SELECT a.doc_id AS probe_id, b.doc_id, COUNT(*) AS n_shared
+    FROM inv a JOIN inv b ON a.shingle = b.shingle AND a.doc_id != b.doc_id
+    WHERE a.doc_id < {N_PROBES}
+    GROUP BY 1, 2
+  ){keep}
+)"""
 
 
 def q93_rrf_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -498,39 +510,9 @@ def q93_rrf_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("probe_id", "rk")
 
 
-Q93_SQL = rf"""
-WITH p AS (
-  SELECT vec_id AS probe_id, CAST(embedding AS DOUBLE[]) AS pe
-  FROM embeddings WHERE vec_id < {N_PROBES}
-),
-vecr AS (
-  SELECT probe_id, vec_id AS doc_id,
-         row_number() OVER (PARTITION BY probe_id
-                            ORDER BY round(list_cosine_similarity(pe, CAST(e.embedding AS DOUBLE[])), 6) DESC,
-                                     vec_id) AS vec_rk
-  FROM embeddings e CROSS JOIN p
-  WHERE e.vec_id != p.probe_id
-),
-toks AS (
-  SELECT d.doc_id, string_split_regex(lower(d.text), '\s+') AS t
-  FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id
-),
-sh AS (
-  SELECT doc_id, UNNEST(list_distinct(list_transform(range(1, greatest(len(t) - 1, 1)),
-           i -> concat_ws(' ', t[i], t[i+1], t[i+2])))) AS s
-  FROM toks WHERE len(t) >= 3
-),
-overlap AS (
-  SELECT a.doc_id AS probe_id, b.doc_id, COUNT(*) AS n_shared
-  FROM sh a JOIN sh b USING (s)
-  WHERE a.doc_id < {N_PROBES} AND b.doc_id != a.doc_id
-  GROUP BY 1, 2
-),
-lexr AS (
-  SELECT probe_id, doc_id,
-         row_number() OVER (PARTITION BY probe_id ORDER BY n_shared DESC, doc_id) AS lex_rk
-  FROM overlap
-),
+Q93_SQL = f"""
+WITH {sql_cosine_ranks()},
+{sql_lexical_ranks()},
 fused AS (
   SELECT v.probe_id, v.doc_id, v.vec_rk, l.lex_rk,
          1000000000 // ({_RRF_K} + v.vec_rk)
@@ -588,16 +570,8 @@ _SEM_K = 8
 
 
 def q96_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-    import pandas as pd
-
-    from .classify import md5_prefix_int
-
     emb = load(spark, sf_dir, "embeddings")
-    planted = emb.filter(F.col("vec_id") % PLANT_EVERY == 0).withColumn(
-        "vec_id", F.col("vec_id") + F.lit(PLANT_OFFSET)
-    )
-    corpus = emb.unionByName(planted).select("vec_id", "embedding")
+    corpus = _planted_corpus(emb).select("vec_id", "embedding")
 
     medoids = (
         emb.select(
@@ -627,26 +601,10 @@ def q96_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     members = corpus.join(cluster, "vec_id")
 
     def drops(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("vec_id", ignore_index=True)
-        ids = pdf["vec_id"].to_numpy()
-        x = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-        n = np.linalg.norm(x, axis=1)
-        # strip-chunked like q31: the full n x n similarity matrix PLUS
-        # triu_indices (two n²/2 int64 arrays) is gigabytes per task
-        # once clusters reach ~20k members (OOM-measured at sf10);
-        # strips bound memory while the work stays the declared
-        # exact-within-cluster O(n²)
-        chunk = 2048
+        pdf, ids, x = _sorted_block(pdf)
         hit = np.zeros(len(ids), dtype=bool)  # "has a smaller-id near-dup"
-        for lo in range(0, len(ids), chunk):
-            hi = min(lo + chunk, len(ids))
-            s = (x[lo:hi] @ x.T) / np.outer(n[lo:hi], n)
-            # half-away-from-zero 6dp (np.round is banker's — q31's rule)
-            r = np.sign(s) * np.floor(np.abs(s) * 1e6 + 0.5) / 1e6
-            for k in range(hi - lo):
-                i = lo + k
-                row = r[k, i + 1 :]
-                hit[i + 1 :] |= row >= NEAR_DUP_THRESHOLD
+        for i, row in _upper_cosine_rows(x):
+            hit[i + 1 :] |= row >= NEAR_DUP_THRESHOLD
         dropped = ids[hit]
         return pd.DataFrame(
             {
@@ -676,15 +634,8 @@ def q96_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from .classify import sql_md5_prefix_int  # noqa: E402  (portable hash idiom)
-
 Q96_SQL = f"""
-WITH corpus AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-  UNION ALL
-  SELECT vec_id + {PLANT_OFFSET} AS vec_id, CAST(embedding AS DOUBLE[]) AS e
-  FROM embeddings WHERE vec_id % {PLANT_EVERY} = 0
-),
+WITH {_SQL_PLANTED_CORPUS},
 med AS (
   SELECT vec_id AS medoid_id, CAST(embedding AS DOUBLE[]) AS m_emb
   FROM (
@@ -695,7 +646,7 @@ med AS (
 ),
 assign AS (
   SELECT c.vec_id, m.medoid_id,
-         round(list_cosine_similarity(c.e, m.m_emb), 6) AS sim
+         round(list_cosine_similarity(CAST(c.embedding AS DOUBLE[]), m.m_emb), 6) AS sim
   FROM corpus c CROSS JOIN med m
 ),
 cluster AS (
@@ -708,7 +659,7 @@ cluster AS (
   WHERE rk = 1
 ),
 mem AS (
-  SELECT c.vec_id, cl.cluster_id, c.e
+  SELECT c.vec_id, cl.cluster_id, CAST(c.embedding AS DOUBLE[]) AS e
   FROM corpus c JOIN cluster cl USING (vec_id)
 ),
 dropped AS (
@@ -869,15 +820,9 @@ def q110_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = emb.filter(F.col("vec_id") < N_PROBES).select(
         F.col("vec_id").alias("probe_id")
     )
-    truth = (
-        _vector_ranking(emb)
-        .filter(F.col("vec_rk") <= _Q110_K)
-        .select("probe_id", "doc_id")
-    )
-    system = (
-        _lexical_ranking(spark, sf_dir, emb)
-        .filter(F.col("lex_rk") <= _Q110_K)
-        .select("probe_id", "doc_id", F.col("lex_rk").alias("rk"))
+    truth = _vector_ranking(emb, _Q110_K).select("probe_id", "doc_id")
+    system = _lexical_ranking(spark, sf_dir, emb, _Q110_K).select(
+        "probe_id", "doc_id", F.col("lex_rk").alias("rk")
     )
 
     disc = F.create_map(*[F.lit(x) for kv in _Q110_DISC.items() for x in kv])
@@ -910,47 +855,13 @@ def q110_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _Q110_DISC_CASE = " ".join(f"WHEN {r} THEN {d}" for r, d in _Q110_DISC.items())
 
-Q110_SQL = rf"""
-WITH p AS (
-  SELECT vec_id AS probe_id, CAST(embedding AS DOUBLE[]) AS pe
-  FROM embeddings WHERE vec_id < {N_PROBES}
-),
-truth AS (
-  SELECT probe_id, vec_id AS doc_id FROM (
-    SELECT p.probe_id, e.vec_id,
-           row_number() OVER (
-             PARTITION BY p.probe_id
-             ORDER BY round(list_cosine_similarity(p.pe, CAST(e.embedding AS DOUBLE[])), 6) DESC,
-                      e.vec_id) AS t_rk
-    FROM embeddings e CROSS JOIN p
-    WHERE e.vec_id != p.probe_id
-  ) WHERE t_rk <= {_Q110_K}
-),
-toks AS (
-  SELECT doc_id, string_split_regex(lower(text), '\s+') AS t
-  FROM documents WHERE doc_id IN (SELECT vec_id FROM embeddings)
-),
-sh AS (
-  SELECT doc_id,
-         list_distinct(list_transform(range(1, greatest(len(t) - 1, 1)),
-           i -> concat_ws(' ', t[i], t[i+1], t[i+2]))) AS s
-  FROM toks WHERE len(t) >= 3
-),
-inv AS (SELECT doc_id, UNNEST(s) AS shingle FROM sh),
-system AS (
-  SELECT probe_id, doc_id, rk FROM (
-    SELECT a.doc_id AS probe_id, b.doc_id AS doc_id,
-           row_number() OVER (PARTITION BY a.doc_id
-                              ORDER BY COUNT(*) DESC, b.doc_id) AS rk
-    FROM inv a JOIN inv b ON a.shingle = b.shingle AND a.doc_id != b.doc_id
-    WHERE a.doc_id < {N_PROBES}
-    GROUP BY a.doc_id, b.doc_id
-  ) WHERE rk <= {_Q110_K}
-),
+Q110_SQL = f"""
+WITH {sql_cosine_ranks(_Q110_K)},
+{sql_lexical_ranks(_Q110_K)},
 hits AS (
-  SELECT s.probe_id, s.rk,
-         CASE s.rk {_Q110_DISC_CASE} END AS disc
-  FROM system s JOIN truth t ON s.probe_id = t.probe_id AND s.doc_id = t.doc_id
+  SELECT l.probe_id, l.lex_rk AS rk,
+         CASE l.lex_rk {_Q110_DISC_CASE} END AS disc
+  FROM lexr l JOIN vecr v USING (probe_id, doc_id)
 ),
 per_probe AS (
   SELECT probe_id, COUNT(*) AS n_hits, MIN(rk) AS first_hit_rk, SUM(disc) AS dcg
@@ -1011,13 +922,9 @@ _Q119_ROUNDS = 3
 
 def q119_kmeans_fixed_point(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
-    pts = emb.select(
-        "vec_id",
-        F.expr(
-            "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0"
-            " + 0.5d) AS BIGINT) + 1000000)"
-        ).alias("u"),
-    ).localCheckpoint(eager=False)  # re-scanned every round — pin once
+    pts = emb.select("vec_id", e6(shift=1_000_000).alias("u")).localCheckpoint(
+        eager=False
+    )  # re-scanned every round — pin once
     # seed = first K rows ordered by vec_id (NOT `vec_id < K`, which
     # KeyErrors on non-contiguous ids while the oracle silently starts
     # with fewer clusters — asymmetric failure modes; ADVICE r5)
@@ -1036,19 +943,18 @@ def q119_kmeans_fixed_point(spark: SparkSession, sf_dir: str) -> DataFrame:
             # the skipped rounds change nothing in the result.
             break
         prev_cents = cents
-        dist_exprs = ", ".join(
-            "aggregate(zip_with(u, array("
-            + ",".join(f"CAST({v} AS BIGINT)" for v in c)
-            + "), (a, b) -> (a - b) * (a - b)), CAST(0 AS BIGINT),"
-            " (acc, x) -> acc + x)"
-            for c in cents
-        )
         # materialize the K-distance array ONCE per row; the projection
         # below references `dists` 3x, and CollapseProject keeps a
         # non-cheap multi-referenced expression in its own projection,
         # so the interpreted higher-order aggregate runs 1x, not 3x
+        dists = F.array(
+            *[
+                sq_l2("u", "array(" + ",".join(f"CAST({v} AS BIGINT)" for v in c) + ")")
+                for c in cents
+            ]
+        )
         assigned = (
-            pts.withColumn("dists", F.expr(f"array({dist_exprs})"))
+            pts.withColumn("dists", dists)
             .select(
                 "vec_id",
                 "u",
@@ -1098,10 +1004,7 @@ def _q119_sql() -> str:
     k, rounds = _Q119_K, _Q119_ROUNDS
     parts = [
         f"""WITH pts AS (
-  SELECT vec_id,
-         list_transform(embedding,
-           x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT) + 1000000) AS u
-  FROM embeddings
+  SELECT vec_id, {sql_e6(shift=1_000_000)} AS u FROM embeddings
 ),
 exploded AS (
   SELECT vec_id, UNNEST(u) AS val, UNNEST(range(1, len(u) + 1)) AS d FROM pts
@@ -1117,9 +1020,7 @@ cent0 AS (
     for r in range(1, rounds + 1):
         parts.append(f""",
 dist{r} AS (
-  SELECT p.vec_id, c.cluster,
-         list_sum(list_transform(list_zip(p.u, c.c),
-           t -> (t[1] - t[2]) * (t[1] - t[2]))) AS dist
+  SELECT p.vec_id, c.cluster, {sql_sq_l2("p.u", "c.c")} AS dist
   FROM pts p CROSS JOIN cent{r - 1} c
 ),
 assign{r} AS (
@@ -1188,53 +1089,56 @@ _Q121_J = 8     # codewords per subspace
 _Q121_TOPK = 20
 
 
-def q121_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
-    j, s, topk = _Q121_J, _Q121_S, _Q121_TOPK
-    emb = load(spark, sf_dir, "embeddings")
-    q = emb.select(
-        "vec_id",
-        F.expr(
-            "transform(embedding, x ->"
-            " CAST(floor(CAST(x AS DOUBLE) * 1000000.0D + 0.5D) AS BIGINT))"
-        ).alias("u"),
-    )
-    comp = q.select(
-        "vec_id",
-        (F.col("vec_id") % j).alias("j"),
-        F.posexplode("u").alias("p", "val"),
-    ).select("vec_id", "j", F.expr("p DIV 16").alias("s"), (F.col("p") % 16).alias("dd"), "val")
-    cb = (
-        comp.groupBy("s", "j", "dd")
+def _floor_mean_codebook(comp: DataFrame, keys: tuple[str, ...], pos: str) -> DataFrame:
+    """Codewords from (keys..., pos, val) component rows: per ``keys``
+    group, the array ``c`` of floor(mean(val)) ordered by ``pos`` —
+    q121's PQ codebook and q124's coarse quantizer."""
+    return (
+        comp.groupBy(*keys, pos)
         .agg(
             F.expr(
                 "CAST(floor(CAST(SUM(val) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE))"
                 " AS BIGINT)"
             ).alias("cval")
         )
-        .groupBy("s", "j")
+        .groupBy(*keys)
         .agg(
             F.expr(
-                "transform(array_sort(collect_list(struct(dd, cval))), x -> x.cval)"
+                f"transform(array_sort(collect_list(struct({pos}, cval))), x -> x.cval)"
             ).alias("c")
         )
     )
+
+
+def _sql_floor_mean_codebook(name: str, keys: str, pos: str) -> str:
+    """DuckDB twin of ``_floor_mean_codebook``: the CTE ``name(keys...,
+    c)`` over an upstream ``comp``."""
+    return f"""{name} AS (
+  SELECT {keys}, list(cval ORDER BY {pos}) AS c FROM (
+    SELECT {keys}, {pos},
+           CAST(floor(CAST(SUM(val) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)) AS BIGINT) AS cval
+    FROM comp GROUP BY {keys}, {pos}
+  ) GROUP BY {keys}
+)"""
+
+
+def q121_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    j, s, topk = _Q121_J, _Q121_S, _Q121_TOPK
+    emb = load(spark, sf_dir, "embeddings")
+    q = emb.select("vec_id", e6().alias("u"))
+    comp = q.select(
+        "vec_id",
+        (F.col("vec_id") % j).alias("j"),
+        F.posexplode("u").alias("p", "val"),
+    ).select("vec_id", "j", F.expr("p DIV 16").alias("s"), (F.col("p") % 16).alias("dd"), "val")
+    cb = _floor_mean_codebook(comp, ("s", "j"), "dd")
     sub = q.select(
         "vec_id", F.explode(F.sequence(F.lit(0), F.lit(s - 1))).alias("s"), "u"
     ).select("vec_id", "s", F.expr("slice(u, s * 16 + 1, 16)").alias("v"))
-    ad = sub.join(F.broadcast(cb), "s").select(
-        "vec_id",
-        "s",
-        "j",
-        F.expr(
-            "aggregate(zip_with(v, c, (a, b) -> (a - b) * (a - b)),"
-            " CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-        ).alias("dist"),
-    )
+    ad = sub.join(F.broadcast(cb), "s").select("vec_id", "s", "j", sq_l2("v", "c").alias("dist"))
     codes = (
         ad.withColumn(
-            "rn", F.row_number().over(W.partitionBy("vec_id", "s").orderBy("dist", "j"))
+            "rn", F.row_number().over(Window.partitionBy("vec_id", "s").orderBy("dist", "j"))
         )
         .filter(F.col("rn") == 1)
         .select("vec_id", "s", "j")
@@ -1249,13 +1153,7 @@ def q121_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = (
         q.filter(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(q.filter(F.col("vec_id") == 0).select(F.col("u").alias("pu"))))
-        .select(
-            "vec_id",
-            F.expr(
-                "aggregate(zip_with(u, pu, (a, b) -> (a - b) * (a - b)),"
-                " CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-            ).alias("exact_d"),
-        )
+        .select("vec_id", sq_l2("u", "pu").alias("exact_d"))
     )
     return (
         approx.join(exact, "vec_id")
@@ -1267,32 +1165,20 @@ def q121_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 Q121_SQL = f"""
 WITH q AS (
-  SELECT vec_id,
-         list_transform(embedding,
-           x -> CAST(floor(x::DOUBLE * 1000000.0 + 0.5) AS BIGINT)) AS u
-  FROM embeddings
+  SELECT vec_id, {sql_e6()} AS u FROM embeddings
 ),
 comp AS (
   SELECT vec_id, vec_id % {_Q121_J} AS j,
          (d - 1) // 16 AS s, (d - 1) % 16 AS dd, u[d] AS val
   FROM q, (SELECT UNNEST(range(1, 65)) AS d)
 ),
-cbc AS (
-  SELECT s, j, dd,
-         CAST(floor(CAST(SUM(val) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)) AS BIGINT) AS cval
-  FROM comp GROUP BY s, j, dd
-),
-cb AS (
-  SELECT s, j, list(cval ORDER BY dd) AS c FROM cbc GROUP BY s, j
-),
+{_sql_floor_mean_codebook("cb", "s, j", "dd")},
 sub AS (
   SELECT vec_id, sp.s AS s, u[sp.s * 16 + 1 : sp.s * 16 + 16] AS v
   FROM q, (SELECT UNNEST(range(0, {_Q121_S})) AS s) sp
 ),
 ad AS (
-  SELECT sub.vec_id, sub.s, cb.j,
-         CAST(list_sum(list_transform(range(1, 17),
-           i -> (sub.v[i] - cb.c[i]) * (sub.v[i] - cb.c[i]))) AS BIGINT) AS dist
+  SELECT sub.vec_id, sub.s, cb.j, {sql_sq_l2("sub.v", "cb.c")} AS dist
   FROM sub JOIN cb USING (s)
 ),
 codes AS (
@@ -1311,9 +1197,7 @@ approx AS (
   GROUP BY c.vec_id
 ),
 exact AS (
-  SELECT q.vec_id,
-         CAST(list_sum(list_transform(range(1, 65),
-           i -> (q.u[i] - p.u[i]) * (q.u[i] - p.u[i]))) AS BIGINT) AS exact_d
+  SELECT q.vec_id, {sql_sq_l2("q.u", "p.u")} AS exact_d
   FROM q, (SELECT u FROM q WHERE vec_id = 0) p
   WHERE q.vec_id <> 0
 )
@@ -1354,43 +1238,18 @@ _Q124_TOPK = 5
 
 
 def q124_ivf_probe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
     k, nq, npr, topk = _Q124_K, _Q124_NQ, _Q124_NPROBE, _Q124_TOPK
     emb = load(spark, sf_dir, "embeddings")
-    q = emb.select(
-        "vec_id",
-        F.expr(
-            "transform(embedding, x ->"
-            " CAST(floor(CAST(x AS DOUBLE) * 1000000.0D + 0.5D) AS BIGINT))"
-        ).alias("u"),
-    ).localCheckpoint(eager=False)  # pinned: centroids, corpus, probes all read it
+    # pinned: centroids, corpus, probes all read it
+    q = emb.select("vec_id", e6().alias("u")).localCheckpoint(eager=False)
     comp = q.select(
         (F.col("vec_id") % k).alias("cell"), F.posexplode("u").alias("p", "val")
     )
-    cent = (
-        comp.groupBy("cell", "p")
-        .agg(
-            F.expr(
-                "CAST(floor(CAST(SUM(val) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE))"
-                " AS BIGINT)"
-            ).alias("cval")
-        )
-        .groupBy("cell")
-        .agg(
-            F.expr(
-                "transform(array_sort(collect_list(struct(p, cval))), x -> x.cval)"
-            ).alias("c")
-        )
-    )
-    dist = F.expr(
-        "aggregate(zip_with(u, c, (a, b) -> (a - b) * (a - b)),"
-        " CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-    )
+    cent = _floor_mean_codebook(comp, ("cell",), "p")
     # inverted list: map-side argmin over the broadcast centroids;
     # min(struct) is partial-aggregatable (no per-vector sort/window)
     paired = q.join(F.broadcast(cent), F.lit(True)).select(
-        "vec_id", "cell", dist.alias("cdist")
+        "vec_id", "cell", sq_l2("u", "c").alias("cdist")
     )
     assign = (
         paired.filter(F.col("vec_id") >= nq)
@@ -1404,7 +1263,7 @@ def q124_ivf_probe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn(
             "pr",
             F.row_number().over(
-                W.partitionBy("vec_id").orderBy("cdist", "cell")
+                Window.partitionBy("vec_id").orderBy("cdist", "cell")
             ),
         )
         .filter(F.col("pr") <= npr)
@@ -1417,21 +1276,13 @@ def q124_ivf_probe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = (
         assign.join(F.broadcast(probes), "cell")
         .join(q, "vec_id")
-        .select(
-            "query_id",
-            "vec_id",
-            "cell",
-            F.expr(
-                "aggregate(zip_with(u, qu, (a, b) -> (a - b) * (a - b)),"
-                " CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-            ).alias("dist"),
-        )
+        .select("query_id", "vec_id", "cell", sq_l2("u", "qu").alias("dist"))
     )
     return (
         cand.withColumn(
             "rk",
             F.row_number()
-            .over(W.partitionBy("query_id").orderBy("dist", "vec_id"))
+            .over(Window.partitionBy("query_id").orderBy("dist", "vec_id"))
             .cast("long"),
         )
         .filter(F.col("rk") <= topk)
@@ -1442,26 +1293,15 @@ def q124_ivf_probe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 Q124_SQL = f"""
 WITH q AS (
-  SELECT vec_id,
-         list_transform(embedding,
-           x -> CAST(floor(x::DOUBLE * 1000000.0 + 0.5) AS BIGINT)) AS u
-  FROM embeddings
+  SELECT vec_id, {sql_e6()} AS u FROM embeddings
 ),
 comp AS (
   SELECT vec_id % {_Q124_K} AS cell, d AS p, u[d] AS val
   FROM q, (SELECT UNNEST(range(1, 65)) AS d)
 ),
-cent AS (
-  SELECT cell, list(cval ORDER BY p) AS c FROM (
-    SELECT cell, p,
-           CAST(floor(CAST(SUM(val) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)) AS BIGINT) AS cval
-    FROM comp GROUP BY cell, p
-  ) GROUP BY cell
-),
+{_sql_floor_mean_codebook("cent", "cell", "p")},
 paired AS (
-  SELECT q.vec_id, cent.cell,
-         CAST(list_sum(list_transform(range(1, 65),
-           i -> (q.u[i] - cent.c[i]) * (q.u[i] - cent.c[i]))) AS BIGINT) AS cdist
+  SELECT q.vec_id, cent.cell, {sql_sq_l2("q.u", "cent.c")} AS cdist
   FROM q, cent
 ),
 assign AS (
@@ -1480,9 +1320,7 @@ probes AS (
   WHERE p.pr <= {_Q124_NPROBE}
 ),
 cand AS (
-  SELECT pr.query_id, a.vec_id, a.cell,
-         CAST(list_sum(list_transform(range(1, 65),
-           i -> (q.u[i] - pr.qu[i]) * (q.u[i] - pr.qu[i]))) AS BIGINT) AS dist
+  SELECT pr.query_id, a.vec_id, a.cell, {sql_sq_l2("q.u", "pr.qu")} AS dist
   FROM assign a JOIN probes pr USING (cell) JOIN q ON a.vec_id = q.vec_id
 )
 SELECT query_id, CAST(rk AS BIGINT) AS rk, vec_id, cell, dist FROM (
@@ -1532,17 +1370,9 @@ _Q126_TOPK = 50
 
 
 def q126_matryoshka_rank_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
     nq, dt, topk = _Q126_NQ, _Q126_DTRUNC, _Q126_TOPK
     emb = load(spark, sf_dir, "embeddings")
-    q = emb.select(
-        "vec_id",
-        F.expr(
-            "transform(embedding, x ->"
-            " CAST(floor(CAST(x AS DOUBLE) * 1000000.0D + 0.5D) AS BIGINT))"
-        ).alias("u"),
-    )
+    q = emb.select("vec_id", e6().alias("u"))
     probes = q.filter(F.col("vec_id") < nq).select(
         F.col("vec_id").alias("query_id"), F.col("u").alias("qu")
     )
@@ -1560,8 +1390,8 @@ def q126_matryoshka_rank_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         dot(dt).alias("dot_t"),
         dot(64).alias("dot_f"),
     )
-    wt = W.partitionBy("query_id").orderBy(F.desc("dot_t"), "vec_id")
-    wf = W.partitionBy("query_id").orderBy(F.desc("dot_f"), "vec_id")
+    wt = Window.partitionBy("query_id").orderBy(F.desc("dot_t"), "vec_id")
+    wf = Window.partitionBy("query_id").orderBy(F.desc("dot_f"), "vec_id")
     ranked = scored.select(
         "query_id",
         "vec_id",
@@ -1605,10 +1435,7 @@ def q126_matryoshka_rank_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 Q126_SQL = f"""
 WITH q AS (
-  SELECT vec_id,
-         list_transform(embedding,
-           x -> CAST(floor(x::DOUBLE * 1000000.0 + 0.5) AS BIGINT)) AS u
-  FROM embeddings
+  SELECT vec_id, {sql_e6()} AS u FROM embeddings
 ),
 probes AS (
   SELECT vec_id AS query_id, u AS qu FROM q WHERE vec_id < {_Q126_NQ}
@@ -1692,13 +1519,7 @@ _Q131_D = 16
 def q131_embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _Q131_D
     emb = load(spark, sf_dir, "embeddings")
-    u = emb.select(
-        F.expr(
-            f"transform(slice(embedding, 1, {d}), x ->"
-            " CAST(floor(CAST(x AS DOUBLE) * 1000000.0D + 0.5D) AS BIGINT)"
-            " + 1000000)"
-        ).alias("u")
-    )
+    u = emb.select(e6(f"slice(embedding, 1, {d})", shift=1_000_000).alias("u"))
     aggs = [F.count(F.lit(1)).alias("n")]
     aggs += [F.sum(F.expr(f"u[{i}]")).alias(f"s{i}") for i in range(d)]
     aggs += [
@@ -1744,10 +1565,7 @@ def _q131_sql() -> str:
     )
     return f"""
 WITH q AS (
-  SELECT list_transform(embedding[1:{d}],
-           x -> CAST(floor(x::DOUBLE * 1000000.0 + 0.5) AS BIGINT) + 1000000)
-           AS u
-  FROM embeddings
+  SELECT {sql_e6(f"embedding[1:{d}]", shift=1_000_000)} AS u FROM embeddings
 ),
 agg AS (
   SELECT COUNT(*) AS n,
@@ -1816,8 +1634,8 @@ def q150_rbo_rankings(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = emb.filter(F.col("vec_id") < N_PROBES).select(
         F.col("vec_id").alias("probe_id")
     )
-    a = _lexical_ranking(spark, sf_dir, emb).filter(F.col("lex_rk") <= _Q150_D)
-    b = _vector_ranking(emb).filter(F.col("vec_rk") <= _Q150_D)
+    a = _lexical_ranking(spark, sf_dir, emb, _Q150_D)
+    b = _vector_ranking(emb, _Q150_D)
     cmap = F.create_map(
         *[F.lit(x) for kv in _Q150_C.items() for x in kv]
     )
@@ -1849,47 +1667,13 @@ def q150_rbo_rankings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q150_sql() -> str:
     c_case = " ".join(f"WHEN {m} THEN {c}" for m, c in _Q150_C.items())
-    return rf"""
-WITH p AS (
-  SELECT vec_id AS probe_id, CAST(embedding AS DOUBLE[]) AS pe
-  FROM embeddings WHERE vec_id < {N_PROBES}
-),
-vec AS (
-  SELECT probe_id, vec_id AS doc_id, t_rk AS vec_rk FROM (
-    SELECT p.probe_id, e.vec_id,
-           row_number() OVER (
-             PARTITION BY p.probe_id
-             ORDER BY round(list_cosine_similarity(p.pe, CAST(e.embedding AS DOUBLE[])), 6) DESC,
-                      e.vec_id) AS t_rk
-    FROM embeddings e CROSS JOIN p
-    WHERE e.vec_id != p.probe_id
-  ) WHERE t_rk <= {_Q150_D}
-),
-toks AS (
-  SELECT doc_id, string_split_regex(lower(text), '\s+') AS t
-  FROM documents WHERE doc_id IN (SELECT vec_id FROM embeddings)
-),
-sh AS (
-  SELECT doc_id,
-         list_distinct(list_transform(range(1, greatest(len(t) - 1, 1)),
-           i -> concat_ws(' ', t[i], t[i+1], t[i+2]))) AS s
-  FROM toks WHERE len(t) >= 3
-),
-inv AS (SELECT doc_id, UNNEST(s) AS shingle FROM sh),
-lex AS (
-  SELECT probe_id, doc_id, rk AS lex_rk FROM (
-    SELECT a.doc_id AS probe_id, b.doc_id AS doc_id,
-           row_number() OVER (PARTITION BY a.doc_id
-                              ORDER BY COUNT(*) DESC, b.doc_id) AS rk
-    FROM inv a JOIN inv b ON a.shingle = b.shingle AND a.doc_id != b.doc_id
-    WHERE a.doc_id < {N_PROBES}
-    GROUP BY a.doc_id, b.doc_id
-  ) WHERE rk <= {_Q150_D}
-),
+    return f"""
+WITH {sql_cosine_ranks(_Q150_D)},
+{sql_lexical_ranks(_Q150_D)},
 matched AS (
   SELECT l.probe_id,
          CASE GREATEST(l.lex_rk, v.vec_rk) {c_case} END AS c
-  FROM lex l JOIN vec v ON l.probe_id = v.probe_id AND l.doc_id = v.doc_id
+  FROM lexr l JOIN vecr v USING (probe_id, doc_id)
 ),
 per_probe AS (
   SELECT probe_id, COUNT(*) AS n_common, SUM(c) AS rbo_scaled

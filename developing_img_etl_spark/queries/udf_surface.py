@@ -37,6 +37,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from ..catalog import load
+from ._pin import pin_for_sort
 
 
 # half-away-from-zero cents, mirrored literally in the oracle SQL —
@@ -64,10 +65,8 @@ def _n_over_median_cents(price: pd.Series) -> int:
 
 
 def q24_udaf_grouped_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .multimodal import _pin_for_sort
-
     lineitem = load(spark, sf_dir, "lineitem")
-    return _pin_for_sort(
+    return pin_for_sort(
         lineitem.groupBy("l_returnflag").agg(
             _sum_cents(F.col("l_extendedprice")).alias("sum_cents"),
             _n_over_median_cents(F.col("l_extendedprice")).alias("n_over_median"),
@@ -111,9 +110,7 @@ def q25_grouped_map(spark: SparkSession, sf_dir: str) -> DataFrame:
         pdf["rk"] = np.arange(1, len(pdf) + 1, dtype=np.int64)
         return pdf[["source", "doc_id", "n_chars", "rk"]]
 
-    from .multimodal import _pin_for_sort
-
-    return _pin_for_sort(
+    return pin_for_sort(
         docs.select("source", "doc_id", "n_chars")
         .groupBy("source")
         .applyInPandas(rank_in_source, "source string, doc_id long, n_chars long, rk long")

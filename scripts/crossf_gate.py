@@ -28,14 +28,15 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SFS = [
     ("0.01", "/root/testdata/sf0.01"),
     ("0.1", "/root/testdata/sf0.1"),
-    ("1", "/root/repo/testdata/sf1"),
+    ("1", os.path.join(ROOT, "testdata/sf1")),
 ]
-OUT = "/root/repo/CROSS_SF.json"
+OUT = os.path.join(ROOT, "CROSS_SF.json")
 BEGIN = "<!-- CROSSSF:BEGIN (generated by scripts/crossf_gate.py) -->"
 END = "<!-- CROSSSF:END -->"
 PASSES = 2
@@ -219,7 +220,7 @@ def regenerate_scale_md(results: dict) -> None:
         f"{ratios[k]:.2f}x (sf{k})" for k, _ in SFS if k in ratios
     )
     lines += [f"Ratio trend: {trend}.", "", END]
-    with open("/root/repo/SCALE.md") as f:
+    with open(os.path.join(ROOT, "SCALE.md")) as f:
         content = f.read()
     block = "\n".join(lines)
     if BEGIN in content:
@@ -228,7 +229,7 @@ def regenerate_scale_md(results: dict) -> None:
         content = pre + block + post
     else:
         content = content.rstrip() + "\n\n" + block + "\n"
-    with open("/root/repo/SCALE.md", "w") as f:
+    with open(os.path.join(ROOT, "SCALE.md"), "w") as f:
         f.write(content)
     print("SCALE.md cross-SF section regenerated")
 

@@ -23,7 +23,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entrymod
 from developing_img_etl_spark.session import get_spark
@@ -33,7 +34,7 @@ SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 
 
 def _latest_artifact(pattern: str) -> tuple[str | None, dict]:
-    paths = sorted(glob.glob(f"/root/repo/{pattern}"))
+    paths = sorted(glob.glob(os.path.join(ROOT, pattern)))
     if not paths:
         return None, {}
     with open(paths[-1]) as f:
@@ -82,7 +83,7 @@ def _write_manifest(statuses: dict[str, str], oracles: dict[str, str]) -> None:
     from developing_img_etl_spark.queries import streaming_batch
 
     manifest["gated"] = dict(sorted(streaming_batch.GATED.items()))
-    with open("/root/repo/MANIFEST.json", "w") as f:
+    with open(os.path.join(ROOT, "MANIFEST.json"), "w") as f:
         json.dump(manifest, f, indent=1)
     print(
         f"MANIFEST.json: {len(statuses)} declared, "

@@ -2,20 +2,68 @@
 
 For every declared query, prints: scan pushdown (PushedFilters /
 ReadSchema width), join strategies chosen, exchange (shuffle) count,
-and whole-stage-codegen span count. Run after any plan-shape change.
+and whole-stage-codegen span count, then the sha256 of its masked
+analyzed, optimized and pre-execution physical plans. Run after any
+plan-shape change; equal hashes before and after a refactor mean the
+plans are unchanged.
 
 Usage: python scripts/explain_audit.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
+import hashlib
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from developing_img_etl_spark.queries import all_queries
 from developing_img_etl_spark.session import get_spark
+
+# What differs between two builds of the same plan: expression ids
+# (`vec_id#12L`), lambda variables (`lambda x_17#40`: a session-global
+# name counter and an id), exchange plan ids, RDD ids and file paths.
+# Expression and plan ids are renumbered in order of first appearance,
+# not flattened, so each reference keeps the attribute it binds to: a
+# join that reads a column from the wrong side hashes differently. A
+# lambda variable binds by name inside its lambdafunction, so its id is
+# masked whole: two equal lambdas that do or do not share variable ids
+# hash the same.
+_MASKS = (
+    (re.compile(r"(lambda [A-Za-z]\w*?)(?:_\d+)?#\d+"), r"\1#N"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+    (re.compile(r"(?:file:)?/[^\s,\]\)]*/[^\s,\]\)]*"), "<path>"),
+)
+_RENUMBERED = (re.compile(r"(#)\d+"), re.compile(r"(plan_id=)\d+"))
+
+
+def mask_plan(text: str) -> str:
+    for pattern, repl in _MASKS:
+        text = pattern.sub(repl, text)
+    for pattern in _RENUMBERED:
+        seen: dict[str, int] = {}
+        text = pattern.sub(
+            lambda m: f"{m.group(1)}{seen.setdefault(m.group(0), len(seen))}", text
+        )
+    return text
+
+
+def plan_hashes(df) -> dict[str, str]:
+    """sha256 of the masked analyzed, optimized and pre-execution
+    physical plans of ``df`` (nothing is executed)."""
+    qe = df._jdf.queryExecution()
+    plans = {
+        "analyzed": qe.analyzed(),
+        "optimized": qe.optimizedPlan(),
+        "physical": qe.executedPlan(),
+    }
+    return {
+        phase: hashlib.sha256(mask_plan(plan.toString()).encode()).hexdigest()
+        for phase, plan in plans.items()
+    }
 
 
 def audit(name: str, plan: str) -> str:
@@ -52,6 +100,8 @@ def main() -> int:
             )
             n_codegen = formatted.count("WholeStageCodegen")
             print(audit(name, plan) + f" wholeStageCodegen={n_codegen}")
+            hashes = plan_hashes(df)
+            print(f"  {name}: " + " ".join(f"{k}={v}" for k, v in hashes.items()))
         except Exception as e:  # noqa: BLE001
             print(f"{name}: AUDIT-ERROR {str(e)[:120]}")
     return 0

@@ -39,7 +39,7 @@ layout (the shipped single-row-group files serialize the scan into
 one task, which under-reports Spark at larger SFs).
 
 Usage: python scripts/gen_testdata.py <sf> <outdir>
-       python scripts/gen_testdata.py 1 /root/repo/testdata/sf1
+       python scripts/gen_testdata.py 1 testdata/sf1
 """
 
 from __future__ import annotations

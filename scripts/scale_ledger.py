@@ -14,7 +14,10 @@ Usage:
 from __future__ import annotations
 
 import json
+import os
 import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 BEGIN = "<!-- LEDGER:BEGIN (generated by scripts/scale_ledger.py) -->"
 END = "<!-- LEDGER:END -->"
@@ -118,7 +121,7 @@ def main() -> int:
         ]
     lines += ["", END]
 
-    with open("/root/repo/SCALE.md") as f:
+    with open(os.path.join(ROOT, "SCALE.md")) as f:
         doc = f.read()
     if BEGIN in doc:
         pre = doc.split(BEGIN)[0]
@@ -126,7 +129,7 @@ def main() -> int:
         doc = pre + "\n".join(lines) + post
     else:
         doc = doc.rstrip() + "\n\n## Bench ledger vs DuckDB (generated)\n\n" + "\n".join(lines) + "\n"
-    with open("/root/repo/SCALE.md", "w") as f:
+    with open(os.path.join(ROOT, "SCALE.md"), "w") as f:
         f.write(doc)
     print(f"SCALE.md ledger: {len(over)} queries >2x, subset ratio {s_tot / d_tot:.2f}")
     return 0

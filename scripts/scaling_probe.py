@@ -14,10 +14,12 @@ Usage: python scripts/scaling_probe.py
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from developing_img_etl_spark.queries import all_queries
 from developing_img_etl_spark.session import get_spark
@@ -94,7 +96,7 @@ def main() -> int:
         END,
     ]
 
-    with open("/root/repo/SCALE.md") as f:
+    with open(os.path.join(ROOT, "SCALE.md")) as f:
         doc = f.read()
     if BEGIN in doc:
         pre, rest = doc.split(BEGIN, 1)
@@ -102,7 +104,7 @@ def main() -> int:
         doc = pre + "\n".join(lines) + post
     else:
         doc = doc.rstrip() + "\n\n## Cross-SF scaling probe (generated)\n\n" + "\n".join(lines) + "\n"
-    with open("/root/repo/SCALE.md", "w") as f:
+    with open(os.path.join(ROOT, "SCALE.md"), "w") as f:
         f.write(doc)
     print("SCALE.md scaling section updated")
     return 0

@@ -20,18 +20,20 @@ Usage: python scripts/sf1_gate.py
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/scripts")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.join(ROOT, "scripts"))
 
 import __spark_entry__ as entrymod
 from developing_img_etl_spark.session import get_spark
 from tests import oracle_utils
 from tests.oracle_utils import OracleTimeout, assert_matches
 
-SF = "/root/repo/testdata/sf1"
+SF = os.path.join(ROOT, "testdata/sf1")
 CAP_S = 180.0
 # per-oracle cap overrides: q103's oracle is a BOUNDED unrolled round
 # chain (not a runaway recursion) that legitimately costs ~180-210 s at
@@ -149,7 +151,7 @@ def main() -> int:
     # which is box-fatal when two JVMs are resident; sf1 oracles fit
     # comfortably in 24 GB with spill as the escape hatch.
     oracle_utils.DUCK_MEMORY_LIMIT = "24GB"
-    oracle_utils.DUCK_TEMP_DIR = "/root/repo/tmp/duck-spill-sf1"
+    oracle_utils.DUCK_TEMP_DIR = os.path.join(ROOT, "tmp/duck-spill-sf1")
     # r11: bound the spill so a runaway oracle plan dies as its own
     # clean FAIL instead of filling the disk under every later query
     # (the q39 cascade seen at sf10)
@@ -175,7 +177,7 @@ def main() -> int:
     # queries not yet recorded re-run (a full-from-scratch pass =
     # delete SF1_CORRECTNESS.json first)
     statuses: dict[str, str] = {}
-    out_path = "/root/repo/SF1_CORRECTNESS.json"
+    out_path = os.path.join(ROOT, "SF1_CORRECTNESS.json")
     if os.path.exists(out_path):
         with open(out_path) as f:
             prev_doc = json.load(f)
@@ -218,7 +220,7 @@ def main() -> int:
             statuses[name] = f"FAIL: {type(e).__name__}: {e}"
             failures.append(name)
         print(f"  {name}: {statuses[name]}  [{time.time() - t0:.1f}s]", flush=True)
-    with open("/root/repo/SF1_CORRECTNESS.json", "w") as f:
+    with open(os.path.join(ROOT, "SF1_CORRECTNESS.json"), "w") as f:
         json.dump(
             {
                 "sf_dir": SF,

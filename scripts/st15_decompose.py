@@ -23,13 +23,15 @@ Writes ST15_DECOMP.json. Usage: python scripts/st15_decompose.py [sf_dir]
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-SF = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/testdata/sf10"
-OUT = "/root/repo/ST15_DECOMP.json"
+SF = sys.argv[1] if len(sys.argv) > 1 else os.path.join(ROOT, "testdata/sf10")
+OUT = os.path.join(ROOT, "ST15_DECOMP.json")
 
 
 def batch_equivalent(spark, sf_dir):
@@ -84,12 +86,10 @@ def batch_equivalent(spark, sf_dir):
 
 
 def main() -> int:
-    import os
-
     from developing_img_etl_spark.queries import all_queries
     from developing_img_etl_spark.session import get_spark
 
-    os.environ.setdefault("SPARK_GRAFT_LOCAL_DIR", "/root/repo/tmp/spark-local")
+    os.environ.setdefault("SPARK_GRAFT_LOCAL_DIR", os.path.join(ROOT, "tmp/spark-local"))
     spark = get_spark("st15-decompose", cpus=32)
     spark.conf.set("spark.sql.shuffle.partitions", "64")  # probe parity
     spark.range(1_000_000).selectExpr("sum(id)").collect()  # JVM warm

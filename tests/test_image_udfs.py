@@ -759,3 +759,23 @@ def test_fidelity_gate_matches_own_photo_only():
         assert MM._matches_photo(payload, pw, ph, s)
         assert not MM._matches_photo(payload, pw, ph, (s + 125) % 251)
     assert not MM._matches_photo(b"\xff\xd8-corrupt-jpeg-body", w, h, seed)
+
+
+def test_fidelity_gate_rejects_neighbour_seed():
+    """A neighbour seed's photo differs from the seed's own by less
+    than the error bound, so the bound alone let a seed+1 payload pass;
+    the gate must name the own seed only."""
+    w, h, seed = 1250, 8, 40
+    still = IMG._recompress(
+        jpeg.jpeg_encode(jpeg.make_photo(w, h, seed + 1), MM._JPEG_GEN_QUALITY),
+        IMG.MAX_DIM,
+        IMG.JPEG_QUALITY,
+    )
+    assert MM._matches_photo(still, w, h, seed + 1)
+    assert not MM._matches_photo(still, w, h, seed)
+    # the gate's seven photos: the seed's own, shifted per seed step
+    photo = jpeg.make_photo(w, h, seed)
+    assert all(
+        np.array_equal(photo + shift, jpeg.make_photo(w, h, seed + d))
+        for d, shift in zip((0, *MM._NEIGHBOUR_SEEDS), MM._SEED_SHIFTS)
+    )

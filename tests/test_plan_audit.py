@@ -333,3 +333,64 @@ def test_filter_pushdown_reaches_scan(plans, name):
 
     pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", text)
     assert any(p.strip() for p in pushed), f"{name}: no pushed filters in\n{text[:500]}"
+
+
+@pytest.fixture
+def explain_audit(monkeypatch):
+    import os
+
+    monkeypatch.syspath_prepend(
+        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts")
+    )
+    import explain_audit
+
+    return explain_audit
+
+
+def test_masked_plan_hashes_are_stable_and_local(spark, explain_audit, monkeypatch):
+    """scripts/explain_audit.py's masked plan hashes: two builds of a
+    query in one session hash equal (expression ids, lambda-variable
+    suffixes and plan ids are masked), and changing one query's
+    constant moves that query's hashes and no other's."""
+    from developing_img_etl_spark.queries import similarity
+
+    names = [
+        "q13_brute_force_topk",
+        "q56_embedding_stats",
+        "q68_contrastive_triplets",
+        "q100_int8_quantization",
+        "q131_embedding_covariance",
+    ]
+    queries = all_queries()
+
+    def hashes():
+        return {n: explain_audit.plan_hashes(queries[n](spark, SF_DIR)) for n in names}
+
+    first = hashes()
+    assert hashes() == first
+    monkeypatch.setattr(similarity, "TOP_K", similarity.TOP_K + 1)
+    patched = hashes()
+    moved = {n: [p for p in first[n] if patched[n][p] != first[n][p]] for n in names}
+    assert moved == {
+        n: (["analyzed", "optimized", "physical"] if n == "q13_brute_force_topk" else [])
+        for n in names
+    }
+
+
+def test_masked_plan_hashes_keep_join_sides(spark, explain_audit):
+    """Expression ids are renumbered, not flattened: in a self-join,
+    where both sides carry the same column names, swapping the sides of
+    the join condition or reading the other side's column moves every
+    hash."""
+    from pyspark.sql import functions as F
+
+    df = spark.range(4).select(F.col("id").alias("k"), (F.col("id") * 2).alias("v"))
+    l, r = df.alias("l"), df.alias("r")
+
+    def hashes(cond, out):
+        return explain_audit.plan_hashes(l.join(r, F.col(cond[0]) == F.col(cond[1])).select(out))
+
+    base = hashes(("l.k", "r.v"), "l.v")
+    assert hashes(("l.k", "r.v"), "l.v") == base
+    for variant in (hashes(("r.k", "l.v"), "l.v"), hashes(("l.k", "r.v"), "r.v")):
+        assert all(variant[p] != base[p] for p in base), variant

@@ -51,3 +51,30 @@ def test_script_imports_resolve(path, monkeypatch):
     # scripts import query_fingerprint as a sibling module
     monkeypatch.syspath_prepend(_SCRIPTS)
     assert _unresolved(path) == []
+
+
+def _hardcoded_roots(path: str) -> list[str]:
+    """String constants that name this checkout by absolute path, and
+    sys.path entries given as string constants: either makes a copy of
+    the tree run (or overwrite) another checkout's files."""
+    tree = ast.parse(open(path, encoding="utf-8").read(), filename=path)
+    found = [
+        node.value
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Constant) and isinstance(node.value, str)
+        and (node.value == _ROOT or node.value.startswith(_ROOT + os.sep))
+    ]
+    found += [
+        ast.unparse(node)
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call) and ast.unparse(node.func) == "sys.path.insert"
+        and any(isinstance(a, ast.Constant) for a in node.args[1:])
+    ]
+    return found
+
+
+@pytest.mark.parametrize("path", _FILES, ids=os.path.basename)
+def test_script_root_comes_from_its_own_path(path):
+    # run from a copy of the tree, a script must import that copy's
+    # package and write that copy's artifacts
+    assert _hardcoded_roots(path) == []
