@@ -269,11 +269,3 @@ def contaminated_ids(
         .select("doc_id")
         .distinct()
     )
-
-
-def decontaminate(
-    docs: DataFrame, probes: DataFrame, *, min_common: int = 5, n: int = 3, **kw
-) -> DataFrame:
-    """Drop contaminated documents (anti-join on the flagged id set)."""
-    flagged = contaminated_ids(docs, probes, min_common=min_common, n=n, **kw)
-    return docs.join(flagged, "doc_id", "left_anti")

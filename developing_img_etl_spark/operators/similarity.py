@@ -186,17 +186,8 @@ def numpy_topk(emb: DataFrame, probes_pd: pd.DataFrame, k: int = 5) -> DataFrame
     return _ranked(partial, k).drop("rk")
 
 
-def rp_sketch(emb: DataFrame, *, bits: int = 8, dim: int = 64, seed: int = 42) -> DataFrame:
-    """One random-hyperplane sign sketch as a compact long column
-    ``sketch``: rp_multi_sketch with a single table."""
-    return rp_multi_sketch(
-        emb, tables=1, bits=bits, dim=dim, seed=seed, out_col="sketch"
-    ).withColumn("sketch", F.col("sketch")[0])
-
-
 def rp_multi_sketch(
-    emb: DataFrame, *, tables: int = 16, bits: int = 4, dim: int = 64, seed: int = 42,
-    out_col: str = "sketches",
+    emb: DataFrame, *, tables: int = 16, bits: int = 4, dim: int = 64, seed: int = 42
 ) -> DataFrame:
     """ALL `tables` sign sketches in ONE pandas-UDF pass: a single
     (tables·bits × dim) matmul per Arrow batch, returned as
@@ -220,7 +211,7 @@ def rp_multi_sketch(
         signs = (m @ planes.T).reshape(len(m), tables, bits) > 0
         return pd.Series(list(signs @ weights))
 
-    return emb.withColumn(out_col, sketch_udf(F.col("embedding")))
+    return emb.withColumn("sketches", sketch_udf(F.col("embedding")))
 
 
 def rp_lsh_topk(
@@ -270,28 +261,6 @@ def rp_lsh_topk(
         .distinct()
     )
     return _rerank_survivors(emb, pairs, probes, k=k, n_probes=n_probes)
-
-
-def cosine_near_dup_pairs(
-    emb: DataFrame, *, threshold: float = 0.9, bits: int = 8, dim: int = 64
-) -> DataFrame:
-    """Embedding-cosine near-dup pairs: bucket by sketch, exact cosine
-    within buckets only (all-pairs never materialized)."""
-    sk = rp_sketch(emb, bits=bits, dim=dim).select("vec_id", "embedding", "sketch")
-    a = sk.select(
-        F.col("sketch"), F.col("vec_id").alias("id_a"), F.col("embedding").alias("emb_a")
-    )
-    b = sk.select(
-        F.col("sketch"), F.col("vec_id").alias("id_b"), F.col("embedding").alias("emb_b")
-    )
-    pairs = a.join(b, "sketch").filter(F.col("id_a") < F.col("id_b"))
-    sim = dot(F.col("emb_a"), F.col("emb_b")) / (
-        norm(F.col("emb_a")) * norm(F.col("emb_b"))
-    )
-    return (
-        pairs.select("id_a", "id_b", F.round(sim, 6).alias("cosine"))
-        .filter(F.col("cosine") >= threshold)
-    )
 
 
 # --------------------------------------------------------------------------

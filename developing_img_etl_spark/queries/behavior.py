@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from .classify import epoch_day, sql_epoch_day
 
 WEEK_SECONDS = 7 * 86400
 DAY_SECONDS = 86400
@@ -307,8 +308,6 @@ def _daily_revenue(spark: SparkSession, sf_dir: str, *, epoch_days: bool = False
     z-test, q109 OLS trend, q114 seasonality, q116 MAD). One Spark
     home; _sql_daily is its one SQL mirror. ``epoch_days`` selects an
     integer epoch-day column ``d`` instead of a DATE column ``day``."""
-    from .classify import epoch_day
-
     orders = load(spark, sf_dir, "orders")
     cust = load(spark, sf_dir, "customer")
     day = (
@@ -330,7 +329,7 @@ def _daily_revenue(spark: SparkSession, sf_dir: str, *, epoch_days: bool = False
 def _sql_daily(*, epoch_days: bool = False) -> str:
     """DuckDB mirror of _daily_revenue (a CTE body)."""
     day = (
-        "date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)) AS d"
+        f"{sql_epoch_day('o_orderdate')} AS d"
         if epoch_days
         else "CAST(o_orderdate AS DATE) AS day"
     )
@@ -474,8 +473,6 @@ ORACLES["q102_zscore_anomalies"] = Q102_SQL
 
 
 def q105_sliding_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .classify import epoch_day
-
     ev = load(spark, sf_dir, "events").select(
         epoch_day(F.col("ts")).alias("d"),
         "user_id",
@@ -506,9 +503,9 @@ def q105_sliding_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-Q105_SQL = """
+Q105_SQL = f"""
 WITH ev AS (
-  SELECT date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS d, user_id
+  SELECT {sql_epoch_day('ts')} AS d, user_id
   FROM events
 ),
 bounds AS (SELECT MIN(d) AS d_min, MAX(d) AS d_max FROM ev),
@@ -1443,8 +1440,6 @@ ORACLES["q140_gini_concentration"] = Q140_SQL
 
 
 def q141_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .classify import epoch_day
-
     ev = load(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", epoch_day(F.col("ts")).alias("d")
@@ -1492,10 +1487,10 @@ def q141_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-Q141_SQL = """
+Q141_SQL = f"""
 WITH daily AS (
   SELECT event_type,
-         date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS d,
+         {sql_epoch_day('ts')} AS d,
          COUNT(*) AS x
   FROM events
   GROUP BY 1, 2

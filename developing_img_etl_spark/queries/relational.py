@@ -1311,14 +1311,13 @@ def q99_interval_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from .classify import sql_md5_prefix_int as _sql_md5  # noqa: E402
+from .classify import sql_epoch_day, sql_md5_prefix_int as _sql_md5  # noqa: E402
 
 Q99_SQL = rf"""
 WITH o_iv AS (
   SELECT o_orderkey, c_mktsegment AS segment,
-         date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)) AS o_start,
-         date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE))
-           + 1 + o_orderkey % 14 AS o_end
+         {sql_epoch_day('o_orderdate')} AS o_start,
+         {sql_epoch_day('o_orderdate')} + 1 + o_orderkey % 14 AS o_end
   FROM orders JOIN customer ON o_custkey = c_custkey
 ),
 seg AS (SELECT DISTINCT c_mktsegment AS segment FROM customer),
@@ -1506,11 +1505,11 @@ def q115_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-Q115_SQL = """
+Q115_SQL = f"""
 WITH pts AS (
   SELECT c_mktsegment AS segment, o_orderkey,
          CAST(round(CAST(o_totalprice AS DECIMAL(12,4)) * 100, 0) AS BIGINT) AS price_cents,
-         date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)) AS day
+         {sql_epoch_day('o_orderdate')} AS day
   FROM orders JOIN customer ON o_custkey = c_custkey
 ),
 flagged AS (

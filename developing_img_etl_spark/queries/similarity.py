@@ -94,10 +94,9 @@ ORDER BY probe_id, rk
 #
 # Blocking key = label (the corpus's partition column); within each
 # block one numpy Gram matrix per group via applyInPandas — vectorized,
-# Arrow-batched, no per-row Python. This is the exact/oracle tier: the
-# sub-quadratic scale path over an UNBLOCKED corpus is
-# operators/similarity.py::cosine_near_dup_pairs (sketch-bucketed,
-# recall-checked), same contract as q13 ↔ m6/m9.
+# Arrow-batched, no per-row Python. This is the exact/oracle tier; over
+# an UNBLOCKED corpus the sub-quadratic candidates come from the
+# sketch/IVF tiers (m6/m9), same contract as q13 ↔ m6/m9.
 #
 # Cross-engine FP: cosines are rounded to 6dp half-away-from-zero on
 # BOTH sides before the threshold compare; the data's closest approach

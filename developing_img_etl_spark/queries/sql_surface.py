@@ -136,8 +136,8 @@ def q21_dependency_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
             # regressed 0.777 and it reproduced at 8 cores — at small
             # SF each lazy-checkpoint level pays a block
             # materialization plus lost codegen fusion. The r12
-            # four-variant probe (scripts/q21_pin_probe.py, min-of-4
-            # paired, identical checksums): none 2.32 s / alt 2.58 s /
+            # four-variant probe (min-of-4 paired, identical
+            # checksums): none 2.32 s / alt 2.58 s /
             # all 2.92 s / persist 2.98 s at sf0.1. Pinning alternate
             # levels keeps the join count ~1.5x linear (an unpinned
             # arm re-expands at most one extra join back to the last

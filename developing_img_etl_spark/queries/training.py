@@ -887,8 +887,8 @@ ORACLES["q46_fk_integrity"] = Q46_SQL
 
 
 # ---------------------------------------------------------------------------
-# Q47 — join-key skew profiler: the diagnosis that decides when
-# operators/skew.py's salting is worth its scatter cost. For a join
+# Q47 — join-key skew profiler: the diagnosis of which keys AQE's
+# skew-join splitter (on in every session) will have to split. For a join
 # key, report the heaviest keys and what share of all rows the top-10
 # carry — share as integer parts-per-million (exact division of exact
 # counts, cross-engine stable).

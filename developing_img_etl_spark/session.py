@@ -27,7 +27,10 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+# The directory that holds the package. Python UDF closures reference
+# package functions by module, so the workers must import this tree
+# whatever the driver's working directory is.
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def cpu_count() -> int:
@@ -75,6 +78,15 @@ def driver_memory() -> str:
     return f"{min(host_memory_bytes() // 2 // 2**20, _MAX_DRIVER_MEM_MB)}m"
 
 
+def add_worker_path(path: str) -> None:
+    """Put ``path`` first on the PYTHONPATH that the Python workers
+    inherit. Local-mode workers take the JVM's environment, so only a
+    JVM started after the call sees it."""
+    pp = os.environ.get("PYTHONPATH", "")
+    if path not in pp.split(os.pathsep):
+        os.environ["PYTHONPATH"] = path + os.pathsep + pp if pp else path
+
+
 def get_spark(app_name: str = "developing_img_etl_spark", *, cpus: int | None = None) -> SparkSession:
     """Build (or reuse) the engine SparkSession."""
     # transformWithStateInPandas needs google.protobuf in the PYTHON
@@ -84,6 +96,7 @@ def get_spark(app_name: str = "developing_img_etl_spark", *, cpus: int | None = 
     from .vendor import ensure_protobuf
 
     ensure_protobuf()
+    add_worker_path(_ROOT)
     n = cpus or cpu_count()
     shuffle_parts = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "8")
     builder = (

@@ -52,8 +52,3 @@ def read_catalog(
     """Read the catalog, or an empty frame on first run
     (test.py:99-111 'if exists' semantics)."""
     return fmt.read(spark, path, schema)
-
-
-def path_exists(spark: SparkSession, path: str) -> bool:
-    """Hadoop-FS existence probe (works for any supported scheme)."""
-    return DEFAULT_FORMAT.exists(spark, path)

@@ -4,7 +4,7 @@ commits, optimistic writer-writer conflict detection, and time travel,
 on nothing but a filesystem — the Delta-lake commit-protocol shape
 (an ordered log of add/remove file actions; the log, not the
 directory listing, is the table) implemented against the same four-
-method seam as ParquetFormat/OrcFormat.
+method seam as ParquetFormat.
 
 Protocol (public knowledge — the Delta Lake paper, VLDB 2020):
 

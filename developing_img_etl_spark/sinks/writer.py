@@ -84,31 +84,4 @@ class ParquetFormat:
         return bool(fs.exists(p))
 
 
-class OrcFormat(ParquetFormat):
-    """ORC implementation (S13) — the second real TableFormat, proving
-    the seam is a seam: same columnar properties as parquet (predicate
-    pushdown, column pruning, stripe-level stats), chosen when the
-    surrounding stack is ORC-native (Hive/Trino warehouses). Inherits
-    the parquet tier's existence-probe and overwrite-lineage handling —
-    only the physical codec differs."""
-
-    def append(
-        self, df: DataFrame, path: str, *, partition_cols: list[str] | None = None
-    ) -> None:
-        w = df.write.mode("append")
-        if partition_cols:
-            w = w.partitionBy(*partition_cols)
-        w.orc(path)
-
-    def overwrite(self, df: DataFrame, path: str) -> None:
-        df.localCheckpoint(eager=True).write.mode("overwrite").orc(path)
-
-    def read(self, spark: SparkSession, path: str, schema: str | None = None) -> DataFrame:
-        if self.exists(spark, path):
-            return spark.read.schema(schema).orc(path) if schema else spark.read.orc(path)
-        if schema is None:
-            raise FileNotFoundError(path)
-        return local_frame(spark, [], schema)
-
-
 DEFAULT_FORMAT: TableFormat = ParquetFormat()

@@ -17,9 +17,9 @@ reference parity, not as a data-scale sink.
 
 Output is minimal OOXML: one worksheet, header row = column names,
 strings as inline strings (``t="inlineStr"`` — no sharedStrings table
-needed), numbers as native numeric cells. Both in-repo readers
-(sources/excel.py stdlib parser, sources/xlsx_datasource.py) and
-openpyxl read it back identically; tests/test_reference_parity.py
+needed), numbers as native numeric cells. The in-repo reader
+(sources/excel.py stdlib parser) and openpyxl read it back
+identically; tests/test_reference_parity.py
 proves the golden-file round trip.
 """
 

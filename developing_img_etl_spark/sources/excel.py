@@ -101,21 +101,6 @@ def _parse_row(row: ET.Element, shared: list[str]) -> list[str | None]:
     return [cells.get(i) for i in range(width)]
 
 
-def read_xlsx_header(path: str, sheet_name: int | str = 0) -> list[str]:
-    """Header row only: stream-parse the worksheet and stop at the
-    first </row> (ADVICE r3 — schema inference previously parsed the
-    entire workbook driver-side just to read one row). Shared strings
-    are still loaded (header cells may reference them)."""
-    with zipfile.ZipFile(path) as z:
-        shared = _load_shared_strings(z)
-        with z.open(_sheet_member(z, sheet_name)) as f:
-            for _event, elem in ET.iterparse(f):
-                if elem.tag == f"{_NS}row":
-                    row0 = _parse_row(elem, shared)
-                    return [h if h is not None else f"col{i}" for i, h in enumerate(row0)]
-    return []
-
-
 def _read_xlsx_stdlib(path: str, sheet_name: int | str = 0) -> tuple[list[str], list[list[str | None]]]:
     """Parse one worksheet into (header, rows) of strings."""
     with zipfile.ZipFile(path) as z:

@@ -12,7 +12,12 @@ driver-coverage gaps are loud: CORRECTNESS_r03 silently checked only
 judge — sees at a glance which green claims are driver-verified vs
 locally verified (VERDICT r3 #5).
 
-Usage: python scripts/driver_sim.py [sf_dir]
+Given query names (a name or its prefix before the first `_`, e.g.
+`q21`), it checks only those, the same way, and writes no manifest:
+the fast inner loop while changing a query. `check` is the one
+per-query gate; scripts/sf1_gate.py runs it too.
+
+Usage: python scripts/driver_sim.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
@@ -29,8 +34,6 @@ sys.path.insert(0, ROOT)
 import __spark_entry__ as entrymod
 from developing_img_etl_spark.session import get_spark
 from tests.oracle_utils import assert_matches
-
-SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 
 
 def _latest_artifact(pattern: str) -> tuple[str | None, dict]:
@@ -54,12 +57,12 @@ def _bench_query_names(bench: dict) -> set[str]:
     return set(re.findall(r'"([a-z]+\w*)":\s*[\d.]+', bench.get("tail") or ""))
 
 
-def _write_manifest(statuses: dict[str, str], oracles: dict[str, str]) -> None:
+def _write_manifest(sf: str, statuses: dict[str, str], oracles: dict[str, str]) -> None:
     corr_name, corr = _latest_artifact("CORRECTNESS_r*.json")
     bench_name, bench = _latest_artifact("BENCH_r*.json")
     bench_queries = _bench_query_names(bench)
     manifest = {
-        "generated_at_sf": SF,
+        "generated_at_sf": sf,
         "latest_correctness_artifact": corr_name,
         "latest_bench_artifact": bench_name,
         "n_declared": len(statuses),
@@ -92,37 +95,54 @@ def _write_manifest(statuses: dict[str, str], oracles: dict[str, str]) -> None:
     )
 
 
+def check(df, oracle: str | None, sf: str) -> str:
+    """One query's gate: MATCH against its oracle, or at least one row
+    where it has none. An empty result fails either way."""
+    if oracle is not None:
+        assert_matches(df, oracle, sf, require_rows=True)
+        return "MATCH"
+    n = df.count()
+    assert n > 0, "no rows"
+    return f"rows-only ({n})"
+
+
+def _select(queries: dict, wanted: list[str]) -> dict:
+    picked = {}
+    for a in wanted:
+        full = [k for k in queries if k == a or k.startswith(a + "_")]
+        assert len(full) == 1, (a, full)
+        picked[full[0]] = queries[full[0]]
+    return picked
+
+
 def main() -> int:
-    spark = get_spark("driver-sim", cpus=8)
-
-    t0 = time.time()
-    rows = entrymod.entry(spark).collect()
-    print(f"entry(): {len(rows)} rows, schema stable, {time.time() - t0:.1f}s")
-    assert len(rows) >= 0
-
+    sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    wanted = sys.argv[2:]
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
+    if wanted:
+        queries = _select(queries, wanted)
+    spark = get_spark("driver-sim", cpus=8)
+
+    if not wanted:
+        t0 = time.time()
+        rows = entrymod.entry(spark).collect()
+        print(f"entry(): {len(rows)} rows, schema stable, {time.time() - t0:.1f}s")
     print(f"{len(queries)} queries, {len(oracles)} oracles")
     failures = []
     statuses: dict[str, str] = {}
     for name, fn in sorted(queries.items()):
         t0 = time.time()
         try:
-            df = fn(spark, SF)
-            if name in oracles:
-                assert_matches(df, oracles[name], SF, require_rows=True)
-                status = "MATCH"
-            else:
-                n = df.count()
-                assert n > 0
-                status = f"rows-only ({n})"
+            status = check(fn(spark, sf), oracles.get(name), sf)
             statuses[name] = status
             print(f"  {name}: {status}  [{time.time() - t0:.1f}s]")
         except Exception as e:  # noqa: BLE001
             failures.append(name)
             statuses[name] = f"FAIL: {str(e)[:120]}"
             print(f"  {name}: FAIL — {str(e)[:300]}")
-    _write_manifest(statuses, oracles)
+    if not wanted:
+        _write_manifest(sf, statuses, oracles)
     if failures:
         print(f"FAILED: {failures}")
         return 1

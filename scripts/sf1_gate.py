@@ -1,8 +1,8 @@
 """Full correctness pass at sf1 (VERDICT r4 #2's companion evidence).
 
-Runs every declared query at the self-generated sf1 and hash-compares
-against its oracle exactly like scripts/driver_sim.py, with ONE
-relaxation: a per-oracle wall cap (oracle_utils.ORACLE_CAP_S). The
+Runs every declared query at the self-generated sf1 through
+scripts/driver_sim.py's per-query `check`, with ONE relaxation: a
+per-oracle wall cap (oracle_utils.ORACLE_CAP_S). The
 DuckDB recursive-CTE closure oracles (q30/q74: `reach` materializes
 every reachable pair per component and iterates to the component
 diameter) stop terminating at 50k docs — those surface as recorded
@@ -29,9 +29,11 @@ sys.path.insert(0, ROOT)
 sys.path.insert(0, os.path.join(ROOT, "scripts"))
 
 import __spark_entry__ as entrymod
+from developing_img_etl_spark.catalog import TABLES
 from developing_img_etl_spark.session import get_spark
+from driver_sim import check
 from tests import oracle_utils
-from tests.oracle_utils import OracleTimeout, assert_matches
+from tests.oracle_utils import OracleTimeout
 
 SF = os.path.join(ROOT, "testdata/sf1")
 CAP_S = 180.0
@@ -48,10 +50,6 @@ CAP_OVERRIDES = {
     # terminating, ~180-260 s at sf1 — same borderline flap
     "q123_simhash_hamming_pairs": 600.0,
 }
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
 
 
 def _iterative_components(con) -> None:
@@ -143,8 +141,6 @@ FROM ranked GROUP BY source ORDER BY source
 
 
 def main() -> int:
-    import os
-
     oracle_utils.ORACLE_CAP_S = CAP_S
     # bound the oracle beside the gate's own Spark JVM (and any
     # concurrent sf10 pass): uncapped DuckDB defaults to ~80 % of RAM,
@@ -204,18 +200,12 @@ def main() -> int:
         oracle_utils.ORACLE_CAP_S = CAP_OVERRIDES.get(name, CAP_S)
         try:
             df = fn(spark, SF)
-            if name in oracles:
-                try:
-                    assert_matches(df, oracles[name], SF)
-                    statuses[name] = "MATCH"
-                except OracleTimeout:
-                    _closure_oracle(name, df)
-                    cap = CAP_OVERRIDES.get(name, CAP_S)
-                    statuses[name] = f"ORACLE-DNF(>{cap:.0f}s), iterative-verified"
-            else:
-                n = df.count()
-                statuses[name] = f"rows-only ({n})"
-                assert n >= 0
+            try:
+                statuses[name] = check(df, oracles.get(name), SF)
+            except OracleTimeout:
+                _closure_oracle(name, df)
+                cap = CAP_OVERRIDES.get(name, CAP_S)
+                statuses[name] = f"ORACLE-DNF(>{cap:.0f}s), iterative-verified"
         except Exception as e:  # noqa: BLE001
             statuses[name] = f"FAIL: {type(e).__name__}: {e}"
             failures.append(name)

@@ -95,16 +95,6 @@ def test_numpy_equals_brute_force(emb):
     assert a == b
 
 
-def test_cosine_near_dup_pairs_finds_planted(spark, emb):
-    """Plant an exact duplicate vector — the bucketed near-dup op must
-    find it (cosine 1.0 ⇒ identical sketch ⇒ same bucket always)."""
-    v = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
-    planted = spark.createDataFrame([(10**6, v, 0)], "vec_id long, embedding array<float>, label int")
-    pairs = SIM.cosine_near_dup_pairs(emb.unionByName(planted), threshold=0.999)
-    hits = [(r.id_a, r.id_b) for r in pairs.collect()]
-    assert (0, 10**6) in hits
-
-
 def test_ivf_recall_vs_brute_force(emb):
     probes = emb.filter(F.col("vec_id") < 10)
     truth = {
@@ -191,16 +181,26 @@ def test_ann_broadcast_overflow_fallback(spark, emb, monkeypatch):
         monkeypatch.undo()
 
 
-def test_decontaminate_removes_flagged_only(docs):
-    """decontaminate = docs minus contaminated_ids, nothing else; a doc
-    identical to a probe must always be flagged."""
-    from developing_img_etl_spark.operators.dedup import contaminated_ids, decontaminate
+def test_decontaminate_removes_flagged_only(spark, sf_dir, docs):
+    """q27's decontamination counts exactly the contaminated_ids docs
+    as contaminated and every other doc as clean; a doc identical to a
+    probe (under a new id) must always be flagged."""
+    from developing_img_etl_spark.operators.dedup import contaminated_ids
+    from developing_img_etl_spark.queries.dedup import q27_decontamination
 
     probes = docs.filter(F.col("doc_id") % 97 == 0)
-    flagged = {r.doc_id for r in contaminated_ids(docs, probes, min_common=5).collect()}
-    clean = {r.doc_id for r in decontaminate(docs, probes, min_common=5).select("doc_id").collect()}
-    all_ids = {r.doc_id for r in docs.select("doc_id").collect()}
-    assert clean == all_ids - flagged
+    flagged = contaminated_ids(docs, probes, min_common=5)
+    per_source = {
+        r.source: (r.n_docs, r.n_contaminated)
+        for r in docs.join(flagged.withColumn("hit", F.lit(1)), "doc_id", "left")
+        .groupBy("source")
+        .agg(F.count(F.lit(1)).alias("n_docs"), F.count("hit").alias("n_contaminated"))
+        .collect()
+    }
+    got = {r.source: r for r in q27_decontamination(spark, sf_dir).collect()}
+    assert {s: (r.n_docs, r.n_contaminated) for s, r in got.items()} == per_source
+    assert all(r.n_clean == r.n_docs - r.n_contaminated for r in got.values())
+    assert sum(n for _, n in per_source.values()) > 0
     # an exact copy of a probe (new id) must be flagged
     copies = probes.limit(1).withColumn("doc_id", F.col("doc_id") + 10_000_000)
     flagged2 = {

@@ -1,4 +1,4 @@
-"""UDTF, Excel-source gating, unpivot operator unit tests."""
+"""Excel-source gating, unpivot operator unit tests."""
 
 from __future__ import annotations
 
@@ -6,22 +6,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from developing_img_etl_spark.operators.unpivot import unpivot_groups
-
-
-def test_udtf_photo_pairs(spark):
-    from developing_img_etl_spark.functions.udtf import ExplodePhotoPairs
-
-    df = spark.createDataFrame(
-        [("k1", "u1", None, "d1", "d2")],
-        "k string, f1 string, f2 string, g1 string, g2 string",
-    )
-    spark.udtf.register("explode_photo_pairs", ExplodePhotoPairs)
-    df.createOrReplaceTempView("photos_wide")
-    out = spark.sql(
-        "SELECT k, p.* FROM photos_wide, "
-        "LATERAL explode_photo_pairs(f1, f2, g1, g2) p"
-    ).collect()
-    assert [(r.k, r.pos, r.url, r.description) for r in out] == [("k1", 1, "u1", "d1")]
 
 
 def test_unpivot_groups_rejects_ragged(spark):
@@ -213,65 +197,6 @@ def test_bucketed_join_has_no_shuffle(spark, sf_dir, tmp_path):
         spark.sql("DROP TABLE IF EXISTS b_lineitem")
 
 
-def test_salted_join_equals_plain_join(spark):
-    """Salting must be invisible in the result: row-identical to the
-    plain join on a fixture with one hot key (90% of facts)."""
-    from developing_img_etl_spark.operators.skew import salted_join
-
-    facts = spark.createDataFrame(
-        [(1 if i % 10 else i, i) for i in range(1000)], "k long, fact_id long"
-    )
-    dim = spark.createDataFrame([(i, f"d{i}") for i in range(0, 1000, 7)], "k long, label string")
-    plain = {(r.k, r.fact_id, r.label) for r in facts.join(dim, ["k"]).collect()}
-    salted = {(r.k, r.fact_id, r.label) for r in salted_join(facts, dim, ["k"]).collect()}
-    assert salted == plain
-    left_plain = {(r.k, r.fact_id, r.label) for r in facts.join(dim, ["k"], "left").collect()}
-    left_salted = {(r.k, r.fact_id, r.label) for r in salted_join(facts, dim, ["k"], how="left").collect()}
-    assert left_salted == left_plain
-
-
-def test_salted_join_salt_is_retry_deterministic(spark):
-    """The salt must be a pure function of row content: recomputing it
-    after a different upstream partitioning (what a task retry can see)
-    yields the identical per-row salt — F.rand(seed) fails this."""
-    from developing_img_etl_spark.operators.skew import _content_salt
-
-    facts = spark.createDataFrame(
-        [(i % 7, i) for i in range(500)], "k long, fact_id long"
-    )
-    salt = _content_salt(["k", "fact_id"], 16, 42)
-    a = {r.fact_id: r.s for r in facts.withColumn("s", salt).collect()}
-    b = {
-        r.fact_id: r.s
-        for r in facts.repartition(13).withColumn("s", salt).collect()
-    }
-    assert a == b
-    assert 0 <= min(a.values()) and max(a.values()) < 16
-    assert len(set(a.values())) > 8  # actually spreads across salts
-
-
-def test_salted_join_rejects_outer_modes(spark):
-    from developing_img_etl_spark.operators.skew import salted_join
-
-    facts = spark.createDataFrame([(1, 1)], "k long, fact_id long")
-    dim = spark.createDataFrame([(1, "d")], "k long, label string")
-    with pytest.raises(ValueError, match="inner"):
-        salted_join(facts, dim, ["k"], how="full")
-    with pytest.raises(ValueError, match="inner"):
-        salted_join(facts, dim, ["k"], how="right")
-
-
-def test_salted_distinct_count_exact(spark):
-    from developing_img_etl_spark.operators.skew import salted_distinct_count
-
-    df = spark.createDataFrame(
-        [("hot", i % 37) for i in range(500)] + [("cold", i) for i in range(5)],
-        "g string, v long",
-    )
-    got = {r.g: r.n_distinct for r in salted_distinct_count(df, "g", "v").collect()}
-    assert got == {"hot": 37, "cold": 5}
-
-
 def test_table_format_seam_is_pluggable(spark, tmp_path):
     """S8 seam: a custom TableFormat (here: call-recording subclass of
     the parquet tier) drives both the catalog save and the streaming
@@ -437,43 +362,6 @@ def test_training_shards_deterministic(spark, tmp_path):
     sizes = [len(v) for v in c1.values()]
     assert max(sizes) <= 2 * (2000 / 8)
 
-
-def test_orc_format_round_trip(spark, tmp_path):
-    """S8 seam, second real implementation: OrcFormat writes/reads ORC
-    files with the same append/overwrite/read/exists contract —
-    including the empty-frame-on-first-run read and the read-union-
-    overwrite lineage handling the parquet tier pioneered."""
-    from developing_img_etl_spark.sinks.writer import OrcFormat, TableFormat
-
-    fmt = OrcFormat()
-    assert isinstance(fmt, TableFormat)
-    path = str(tmp_path / "orc_table")
-    schema = "k INT, name STRING"
-
-    # first-run read: no files yet -> empty frame with the schema
-    assert not fmt.exists(spark, path)
-    assert fmt.read(spark, path, schema).count() == 0
-
-    fmt.append(spark.createDataFrame([(1, "a"), (2, "b")], schema), path)
-    assert fmt.exists(spark, path)
-    import os
-
-    assert any(f.endswith(".orc") or "part-" in f for f in os.listdir(path))
-
-    # read -> union -> overwrite of the SAME path (the catalog lineage)
-    merged = fmt.read(spark, path).unionByName(
-        spark.createDataFrame([(3, "c")], schema)
-    )
-    fmt.overwrite(merged, path)
-    got = {r["k"]: r["name"] for r in fmt.read(spark, path).collect()}
-    assert got == {1: "a", 2: "b", 3: "c"}
-
-    # partitioned append keeps hive layout
-    part_path = str(tmp_path / "orc_part")
-    fmt.append(
-        spark.createDataFrame([(1, "x"), (2, "y")], schema), part_path, partition_cols=["k"]
-    )
-    assert fmt.read(spark, part_path).select("k").distinct().count() == 2
 
 
 def test_chunk_starts_contract(spark):

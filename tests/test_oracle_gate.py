@@ -9,6 +9,8 @@ pairing — these tests pin that behavior so the checker can't regress.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from tests.oracle_utils import assert_matches, duckdb_run
@@ -43,3 +45,19 @@ def test_hugeint_fetchdf_assumption():
     """
     df = duckdb_run("SELECT SUM(CAST(3 AS BIGINT)) AS x", "/root/testdata/sf0.001")
     assert str(df["x"].dtype) == "float64"
+
+
+def test_driver_sim_check_fails_empty_results(spark, sf_dir, monkeypatch):
+    """driver_sim's one per-query gate (the full pass, a named subset and
+    sf1_gate) fails a vacuous query, with or without an oracle."""
+    import os
+
+    monkeypatch.syspath_prepend(os.path.join(os.path.dirname(os.path.dirname(__file__)), "scripts"))
+    from driver_sim import check
+
+    empty = spark.range(0).selectExpr("CAST(id AS BIGINT) AS x")
+    with pytest.raises(AssertionError, match="no rows"):
+        check(empty, "SELECT CAST(1 AS BIGINT) AS x WHERE false", sf_dir)
+    with pytest.raises(AssertionError, match="no rows"):
+        check(empty, None, sf_dir)
+    assert check(spark.range(2), None, sf_dir) == "rows-only (2)"

@@ -150,46 +150,14 @@ def test_pil_resize_contract_matches_fake_arithmetic():
     assert IMG._decode_dims(out) == (1024, 768)
 
 
-def test_xlsx_datasource_matches_driver_side_reader(spark, ref):
-    """S14: the registered `xlsx` Python data source reads the REAL
-    reference workbook identically to the S1 driver-side loader —
-    same header-derived schema, same stringly rows — while parsing on
-    executors (one InputPartition per file)."""
-    from developing_img_etl_spark.sources.excel import read_excel
-    from developing_img_etl_spark.sources.xlsx_datasource import register_xlsx_source
-
-    register_xlsx_source(spark)
-
-    xlsx = ref[0]
-    driver_df = read_excel(spark, xlsx)
-    ds_df = spark.read.format("xlsx").load(xlsx)  # schema inferred from header
-    assert [f.name for f in ds_df.schema.fields] == [
-        f.name for f in driver_df.schema.fields
-    ]
-    key = driver_df.columns[0]
-    a = [tuple(str(v) if v is not None else None for v in r) for r in
-         sorted(driver_df.collect(), key=lambda r: str(r[key]))]
-    b = [tuple(str(v) if v is not None else None for v in r) for r in
-         sorted(ds_df.collect(), key=lambda r: str(r[key]))]
-    assert a == b and len(a) > 0
-
-    # explicit schema selects + reorders columns by header name
-    two = spark.read.format("xlsx").schema(
-        f"`{driver_df.columns[1]}` string, `{driver_df.columns[0]}` string"
-    ).load(xlsx)
-    assert two.columns == [driver_df.columns[1], driver_df.columns[0]]
-    assert two.count() == len(a)
-
-
 def test_xlsx_write_back_round_trip(spark, tmp_path, ref):
     """S8 write-back parity (/root/reference/test.py:200-201 —
     `final_df.to_excel(METADATA_FILE, index=False)`): catalog → stdlib
-    xlsx writer → read back via BOTH the S1 driver-side reader and the
-    S14 data source → equals the original golden workbook, including
-    after the reference's append-then-rewrite cycle."""
+    xlsx writer → read back via the S1 driver-side reader → equals the
+    original golden workbook, including after the reference's
+    append-then-rewrite cycle."""
     from developing_img_etl_spark.sinks.xlsx_writer import write_xlsx
     from developing_img_etl_spark.sources.excel import read_excel
-    from developing_img_etl_spark.sources.xlsx_datasource import register_xlsx_source
 
     golden = read_excel(spark, ref[0])
     out = str(tmp_path / "foto_metadata_copy.xlsx")
@@ -203,11 +171,6 @@ def test_xlsx_write_back_round_trip(spark, tmp_path, ref):
     back_s1 = read_excel(spark, out)
     assert back_s1.columns == golden.columns
     assert rows(back_s1) == rows(golden)
-
-    register_xlsx_source(spark)
-    back_s14 = spark.read.format("xlsx").load(out)
-    assert back_s14.columns == golden.columns
-    assert rows(back_s14) == rows(golden)
 
     # the reference's SAVE & MERGE cycle: append new records, rewrite
     new = golden.limit(2).withColumn(

@@ -1,6 +1,6 @@
-"""The scripts that stay (sf1_gate, crossf_gate, driver_sim,
-oracle_check, ...) import private names from the package, the tests
-helpers and each other; nothing else runs them. This parses every
+"""The scripts that stay (sf1_gate, crossf_gate, driver_sim, ...)
+import private names from the package, the tests helpers and each
+other; nothing else runs them. This parses every
 ``scripts/*.py`` and ``bench.py`` and checks that each such
 ``from ... import name`` still resolves, so moving an internal name
 cannot silently break a script. No Spark session is started."""
@@ -19,7 +19,7 @@ _FILES = sorted(
     [os.path.join(_SCRIPTS, f) for f in os.listdir(_SCRIPTS) if f.endswith(".py")]
     + [os.path.join(_ROOT, "bench.py")]
 )
-_CHECKED = ("developing_img_etl_spark", "tests", "query_fingerprint")
+_CHECKED = ("developing_img_etl_spark", "tests", "query_fingerprint", "driver_sim")
 
 
 def _internal_imports(path: str) -> list[tuple[str, str]]:
@@ -48,7 +48,7 @@ def _unresolved(path: str) -> list[str]:
 
 @pytest.mark.parametrize("path", _FILES, ids=os.path.basename)
 def test_script_imports_resolve(path, monkeypatch):
-    # scripts import query_fingerprint as a sibling module
+    # scripts import query_fingerprint and driver_sim as sibling modules
     monkeypatch.syspath_prepend(_SCRIPTS)
     assert _unresolved(path) == []
 

@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import datetime
 import os
+import subprocess
+import sys
 
 import pytest
 
@@ -88,3 +90,31 @@ def test_local_frame_rejects_what_classic_rejects(spark, bad):
         spark.createDataFrame([bad], _PARITY_SCHEMA)
     with pytest.raises(type(classic.value)):
         session.local_frame(spark, [bad], _PARITY_SCHEMA)
+
+
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# Run from outside the tree: a UDF whose closure names a package function
+# makes the Python worker import the package by module.
+_OUTSIDE_SCRIPT = f"""
+import sys
+sys.path.insert(0, {_ROOT!r})
+from pyspark.sql import functions as F
+from developing_img_etl_spark.multimodal.phash import hamming64
+from developing_img_etl_spark.session import get_spark
+
+spark = get_spark("outside-cwd", cpus=1)
+row = spark.range(1).select(F.udf(lambda i: hamming64(i, 7), "int")("id")).first()
+print("BITS", row[0])
+"""
+
+
+def test_workers_import_the_package_from_any_working_directory(tmp_path):
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
+    paths = env.get("PYTHONPATH", "").split(os.pathsep)
+    env["PYTHONPATH"] = os.pathsep.join(p for p in paths if p and os.path.abspath(p) != _ROOT)
+    out = subprocess.run(
+        [sys.executable, "-c", _OUTSIDE_SCRIPT],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert "BITS 3" in out.stdout, out.stderr[-3000:]
